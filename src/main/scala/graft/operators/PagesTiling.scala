@@ -51,9 +51,16 @@ object PagesTiling {
 
   /** Tile table for one raster: grid windows + world bounds + covering cells
     * (exploded). Tiny relative to pages; Catalyst broadcasts it. */
-  def tileCells(spark: SparkSession, meta: RasterMeta, cfg: TilingConfig): DataFrame = {
+  def tileCells(spark: SparkSession, meta: RasterMeta, cfg: TilingConfig): DataFrame =
+    tileCellsOf(spark, meta, cfg, gridWindows(meta, cfg))
+
+  private def gridWindows(meta: RasterMeta, cfg: TilingConfig): Seq[TileGrid.GridCell] =
+    TileGrid.squareWindows(cfg.size, cfg.step, meta.width, meta.height, cfg.mode)
+
+  /** The tile table over the given grid windows only. */
+  private def tileCellsOf(spark: SparkSession, meta: RasterMeta, cfg: TilingConfig,
+                          cells: Seq[TileGrid.GridCell]): DataFrame = {
     import spark.implicits._
-    val cells = TileGrid.squareWindows(cfg.size, cfg.step, meta.width, meta.height, cfg.mode)
     val tiles = spark.createDataset(cells.map(c =>
       (meta.raster_id, c.i, c.j, c.window.colOff, c.window.rowOff,
         c.window.width, c.window.height)))
@@ -89,11 +96,18 @@ object PagesTiling {
   def extractChips(spark: SparkSession, pages: Dataset[Page], meta: RasterMeta,
                    labels: Option[Seq[(Array[Byte], String)]] = None,
                    aoiWkb: Option[Array[Byte]] = None,
-                   cfg: TilingConfig = TilingConfig()): DataFrame = {
+                   cfg: TilingConfig = TilingConfig()): DataFrame =
+    chipsOf(spark, pages, meta, labels, aoiWkb, cfg, gridWindows(meta, cfg))
+
+  /** [[extractChips]] over the given grid windows only. */
+  private def chipsOf(spark: SparkSession, pages: Dataset[Page], meta: RasterMeta,
+                      labels: Option[Seq[(Array[Byte], String)]],
+                      aoiWkb: Option[Array[Byte]], cfg: TilingConfig,
+                      windows: Seq[TileGrid.GridCell]): DataFrame = {
     import spark.implicits._
     val affine = Affine(meta.a, meta.b, meta.c, meta.d, meta.e, meta.f)
     val pagesGeo = geotagged(spark, pages, cfg.cellRes)
-    var tiles = tileCells(spark, meta, cfg)
+    var tiles = tileCellsOf(spark, meta, cfg, windows)
 
     // AOI filter on tiles (F1) — tile side is tiny, do it pre-join
     aoiWkb.foreach { wkb =>
@@ -161,10 +175,18 @@ object PagesTiling {
   /** Flagship with the north rule's bookkeeping: chips are committed to an
     * Iceberg-style table with one manifest row per tile, a lineage row
     * mapping each output tile to its input snapshot + covering cell range,
-    * and per-stage metrics. A rerun anti-joins the committed manifest and
-    * computes ONLY missing tiles (satproc skip-existing at job level;
-    * within-job retry is Spark-native task retry). Returns the number of
-    * chips committed in this run. */
+    * and per-stage metrics. Returns the number of chips committed in this
+    * run.
+    *
+    * Skip-existing is decided once, on the tile grid, before any pages
+    * work (satproc checks each window before reading it,
+    * satproc/chips.py:227-233): the grid's tile keys
+    * (`<raster_id>_<i>_<j>`) are anti-joined against the committed manifest
+    * and the pending windows collected to the driver — never more than the
+    * grid it already holds. With none pending the call returns 0 without
+    * touching `pages`; otherwise the tile table is built from the pending
+    * windows only, so pages are joined, binned and masked for those tiles
+    * alone. Within-job retry is Spark-native task retry. */
   def extractChipsResumable(spark: SparkSession, pages: Dataset[Page],
                             meta: RasterMeta, table: graft.sources.IcebergLite,
                             labels: Option[Seq[(Array[Byte], String)]] = None,
@@ -173,44 +195,54 @@ object PagesTiling {
     import org.apache.spark.sql.functions.{col => c, _}
     import spark.implicits._
     val t0 = System.currentTimeMillis()
-    val chips = extractChips(spark, pages, meta, labels, None, cfg)
+    val grid = gridWindows(meta, cfg)
+    def tileKey(w: TileGrid.GridCell) = s"${meta.raster_id}_${w.i}_${w.j}"
+    val open = table.pendingWork(grid.map(tileKey).toDF("tile_key"), "tile_key")
+      .as[String].collect().toSet
+    val windows = grid.filter(w => open(tileKey(w)))
+    if (windows.isEmpty) return 0L
+
+    val pending = chipsOf(spark, pages, meta, labels, None, cfg, windows)
       .withColumn("tile_key", concat_ws("_", c("raster_id"), c("i"), c("j")))
-    val pending = table.pendingWork(chips, "tile_key")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val n = pending.count()
-    if (n > 0) {
-      val inputSnapshot = table.currentSnapshot()
-      val manifest = pending.select(c("tile_key").as("part_key"),
-        c("n_pages"), c("bad_text"))
-      table.commit(Some((pending.drop("tile_key"), "chips")), manifest, "chips-append")
-      // lineage: output tile → input snapshot + covering cells at cfg.cellRes
-      val lineage = pending.select(c("tile_key"), c("i"), c("j"))
-        .withColumn("input_snapshot", lit(inputSnapshot))
-        .withColumn("cell_res", lit(cfg.cellRes))
-      table.appendLineage(lineage)
-      // metrics (SURVEY §7.4 north-rule field list): per-partition detail
-      // rows (partition, rows_in = pages binned into the partition's tiles,
-      // rows_out = tiles, checksum over tile keys, skew salt) + one summary
-      // row (partition = -1, stage "chips") — single schema for the
-      // append-only side-table
-      val wall = System.currentTimeMillis() - t0
+    try {
+      // metrics (SURVEY §7.4 north-rule field list), one schema for the
+      // append-only side-table: a detail row per partition (rows_in = pages
+      // binned into the partition's tiles, rows_out = tiles, checksum over
+      // tile keys) and a summary row (partition = -1) summing them. The
+      // detail has at most one row per partition; collecting it also
+      // materializes `pending` and counts its chips. The summary is summed
+      // on the driver, where `addExact` raises on overflow as ANSI `sum` does.
       val detail = pending
-        .withColumn("partition", spark_partition_id())
-        .groupBy("partition")
+        .groupBy(spark_partition_id().as("partition"))
         .agg(sum(c("n_pages")).as("rows_in"), count(lit(1)).as("rows_out"),
           sum(hash(c("tile_key")).cast("long")).as("checksum"))
-      val summary = detail.agg(lit(-1).as("partition"),
-        sum(c("rows_in")).as("rows_in"), sum(c("rows_out")).as("rows_out"),
-        sum(c("checksum")).as("checksum"))
-      table.appendMetrics(
-        detail.withColumn("stage", lit("chips.partitions"))
-          .unionByName(summary.withColumn("stage", lit("chips")))
+        .as[(Int, Long, Long, Long)].collect()
+      val (rowsIn, n, checksum) = detail.foldLeft((0L, 0L, 0L)) {
+        case ((in, out, ck), (_, i, o, k)) =>
+          (Math.addExact(in, i), Math.addExact(out, o), Math.addExact(ck, k))
+      }
+      if (n > 0) {
+        val inputSnapshot = table.currentSnapshot()
+        val manifest = pending.select(c("tile_key").as("part_key"),
+          c("n_pages"), c("bad_text"))
+        table.commit(Some((pending.drop("tile_key"), "chips")), manifest, "chips-append")
+        // lineage: output tile → input snapshot + covering cells at cfg.cellRes
+        val lineage = pending.select(c("tile_key"), c("i"), c("j"))
+          .withColumn("input_snapshot", lit(inputSnapshot))
+          .withColumn("cell_res", lit(cfg.cellRes))
+        table.appendLineage(lineage)
+        val wall = System.currentTimeMillis() - t0
+        val rows = detail.toSeq.map { case (p, i, o, k) => (p, i, o, k, "chips.partitions") } :+
+          ((-1, rowsIn, n, checksum, "chips"))
+        table.appendMetrics(rows.toDF("partition", "rows_in", "rows_out", "checksum", "stage")
           .withColumn("job_id", lit(jobId))
           .withColumn("wall_ms", lit(wall))
-          .withColumn("skew_salt", lit(cfg.salt)))
-    }
-    pending.unpersist()
-    n
+          .withColumn("skew_salt", lit(cfg.salt))
+          .coalesce(1))
+      }
+      n
+    } finally pending.unpersist()
   }
 
   case class Bin(py: Int, px: Int, n: Long)

@@ -25,9 +25,16 @@ object Streaming {
     * shuffle partition of a stateful operator is a state-store instance
     * paying per-batch snapshot/commit files, so the right width tracks the
     * STATE volume, not the core count. 4 is the measured fixture-scale
-    * optimum; a deployment raises it with actual state volume. */
+    * optimum; a deployment raises it with actual state volume. A value that
+    * is not a positive integer is rejected, naming the variable. */
   def defaultStatePartitions: Int =
-    sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").flatMap(_.toIntOption).getOrElse(4)
+    statePartitions(sys.env.get("SPARK_GRAFT_STATE_PARTITIONS"))
+
+  private[operators] def statePartitions(setting: Option[String]): Int =
+    setting.fold(4) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_STATE_PARTITIONS must be a positive integer, got '$v'"))
+    }
 
   /** Scope the streaming state-store provider around `f` and restore it.
     * "hdfs" (the Spark default) keeps all state as JVM objects in executor

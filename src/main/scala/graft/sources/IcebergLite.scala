@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
@@ -27,9 +27,16 @@ import scala.jdk.CollectionConverters._
   * files and manifest rows stay invisible forever (snapshot isolation for
   * append-only workloads): a torn commit's id is consumed by SEQ and never
   * appears in VERSION, and the retry runs under a new id, so no replay can
-  * resurrect orphans. The manifest table doubles as the resume mechanism:
-  * work already present for a committed snapshot is anti-joined away
-  * (satproc's skip-existing, F6, reference: satproc/chips.py:227-233).
+  * resurrect orphans. The snapshot row's `rows` is observed on the
+  * manifest write, not counted in a second pass.
+  *
+  * The manifest table doubles as the resume mechanism ([[pendingWork]]):
+  * work units whose key a committed snapshot already holds are anti-joined
+  * away (satproc's skip-existing, F6, reference: satproc/chips.py:227-233).
+  * Callers decide at the granularity of their work unit, before the work:
+  * `PagesTiling.extractChipsResumable` anti-joins the raster's tile keys
+  * against the manifest on the driver-held grid and reads pages only for
+  * the tiles still open.
   */
 class IcebergLite(root: String, spark: SparkSession) {
   private val metaDir = s"$root/metadata"
@@ -94,9 +101,13 @@ class IcebergLite(root: String, spark: SparkSession) {
     data.foreach { case (df, sub) =>
       df.write.mode(SaveMode.Append).parquet(s"$root/data/$sub/snapshot_id=$snap")
     }
+    // the snapshot row's count is observed on the manifest write itself,
+    // not counted in a second pass; an empty manifest records 0
+    val written = Observation()
     manifest.withColumn("snapshot_id", lit(snap))
+      .observe(written, count(lit(1)).as("rows"))
       .write.mode(SaveMode.Append).parquet(s"$metaDir/manifests")
-    val rows = manifest.count()
+    val rows = written.get.get("rows").fold(0L)(_.asInstanceOf[Long])
     import spark.implicits._
     Seq((snap, System.currentTimeMillis(), operation, rows))
       .toDF("snapshot_id", "ts_ms", "operation", "rows")
@@ -162,17 +173,19 @@ class IcebergLite(root: String, spark: SparkSession) {
     else committedOnly(spark.read.parquet(s"$metaDir/manifests"), visible)
 
   /** Resume filter: drop work units whose part_key is already committed
-    * (anti-join against the manifest — satproc skip-existing semantics). */
+    * (anti-join against the manifest — satproc skip-existing semantics).
+    * The manifest side is not deduplicated: duplicate build rows cannot
+    * change an anti-join, and a `distinct` would cost a shuffle. */
   def pendingWork(work: DataFrame, keyCol: String): DataFrame =
     if (committedSnapshots().isEmpty) work
-    else work.join(manifests().select(col("part_key").as(keyCol)).distinct(),
+    else work.join(manifests().select(col("part_key").as(keyCol)),
       Seq(keyCol), "left_anti")
 
   /** The pending-work set as a worker would have computed it right after
     * snapshot `snap` published — replays a historical resume decision for
     * audit/lineage ("which tiles were still open when job J started?"). */
   def pendingWorkAsOf(work: DataFrame, keyCol: String, snap: Long): DataFrame =
-    work.join(manifestsAsOf(snap).select(col("part_key").as(keyCol)).distinct(),
+    work.join(manifestsAsOf(snap).select(col("part_key").as(keyCol)),
       Seq(keyCol), "left_anti")
 
   /** Maintenance: snapshot expiry + manifest compaction (single-writer op,

@@ -1,17 +1,26 @@
 package graft.operators
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 
 import graft.core.Geom
 import graft.sources.{Fixtures, IcebergLite}
+import graft.sources.Model.Page
 
 /** North-rule end-to-end on the flagship: first run commits all tiles with
   * manifest + lineage + metrics; a crash-rerun commits nothing new; after
   * invalidating part of the manifest, resume recomputes ONLY the missing
-  * tiles and the final table equals a from-scratch run. */
+  * tiles and the final table equals a from-scratch run. The skip-existing
+  * decision is made on the tile grid, so a resume over a fully committed
+  * table reads no pages at all. */
 class FlagshipResumeSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.get
 
@@ -50,5 +59,97 @@ class FlagshipResumeSpec extends AnyFunSuite {
     val b = final2.select("raster_id", "i", "j", "n_pages").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3))).toSet
     assert(a == b)
+  }
+
+  private lazy val labels = Fixtures.labelGeoms().map { case (g, c) => (Geom.toWkb(g), c) }
+
+  /** Jobs `f` submits, counted by a listener on its own job group. */
+  private def countJobs[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"flagship-resume-${System.nanoTime()}"
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "count jobs")
+      val a = try f finally sc.clearJobGroup()
+      org.apache.spark.graft.ListenerBusFlush.flush(sc)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def deleteTree(p: Path): Unit = {
+    val s = Files.walk(p)
+    try s.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+    finally s.close()
+  }
+
+  test("resume over a fully committed table: returns 0, reads no pages file, at most 3 jobs") {
+    import spark.implicits._
+    val pagesDir = Files.createTempDirectory("flagship-pages")
+    Fixtures.pages(spark, 20000, partitions = 4).write.mode("overwrite").parquet(pagesDir.toString)
+    val pages = spark.read.parquet(pagesDir.toString).as[Page]
+    val table = new IcebergLite(Files.createTempDirectory("flagship-full").toString, spark)
+    assert(PagesTiling.extractChipsResumable(spark, pages, Fixtures.luxMeta(), table, Some(labels)) == 8)
+
+    // any scan of `pages` now fails on the missing files
+    deleteTree(pagesDir)
+    val (resumed, jobs) = countJobs(
+      PagesTiling.extractChipsResumable(spark, pages, Fixtures.luxMeta(), table, Some(labels)))
+    assert(resumed == 0)
+    assert(jobs <= 3, s"resume over a committed table ran $jobs jobs")
+    assert(table.committedSnapshots().size == 1)
+  }
+
+  test("snapshot rows equal each snapshot's manifest row count, empty manifests included") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("flagship-rows").toString
+    val table = new IcebergLite(root, spark)
+    def commitWithin(manifest: org.apache.spark.sql.DataFrame): Long =
+      Await.result(Future(table.commit(None, manifest, "append")), 2.minutes)
+    commitWithin(spark.range(0, 7, 1, 3).select(col("id").cast("string").as("part_key")))
+    commitWithin(Seq.empty[String].toDF("part_key"))
+    commitWithin(spark.range(0, 50, 1, 4).where(col("id") < 0)
+      .select(col("id").cast("string").as("part_key")))
+    PagesTiling.extractChipsResumable(spark, Fixtures.pages(spark, 20000),
+      Fixtures.luxMeta(), table, Some(labels))
+
+    val recorded = spark.read.parquet(s"$root/metadata/snapshots")
+      .select("snapshot_id", "rows").as[(Long, Long)].collect().toMap
+    val manifestRows = table.manifests().groupBy("snapshot_id").count()
+      .as[(Long, Long)].collect().toMap
+    val snaps = table.committedSnapshots()
+    assert(snaps.size == 4)
+    assert(snaps.map(recorded) == Seq(7L, 0L, 0L, 8L))
+    assert(snaps.map(s => manifestRows.getOrElse(s, 0L)) == snaps.map(recorded))
+  }
+
+  test("metrics side-table: fixed schema; the summary row sums the detail rows") {
+    val root = Files.createTempDirectory("flagship-metrics").toString
+    val table = new IcebergLite(root, spark)
+    assert(PagesTiling.extractChipsResumable(spark, Fixtures.pages(spark, 20000),
+      Fixtures.luxMeta(), table, Some(labels), jobId = "metrics-spec") == 8)
+    val m = table.metrics()
+    assert(m.schema.map(f => (f.name, f.dataType)) == Seq(
+      "partition" -> IntegerType, "rows_in" -> LongType, "rows_out" -> LongType,
+      "checksum" -> LongType, "stage" -> StringType, "job_id" -> StringType,
+      "wall_ms" -> LongType, "skew_salt" -> IntegerType))
+    val rows = m.collect()
+    val (summary, detail) = rows.partition(_.getAs[Int]("partition") == -1)
+    assert(summary.length == 1 && summary.head.getAs[String]("stage") == "chips")
+    assert(detail.nonEmpty && detail.forall(_.getAs[String]("stage") == "chips.partitions"))
+    assert(detail.map(_.getAs[Int]("partition")).distinct.length == detail.length)
+    for (k <- Seq("rows_in", "rows_out", "checksum"))
+      assert(summary.head.getAs[Long](k) == detail.map(_.getAs[Long](k)).sum, k)
+    assert(summary.head.getAs[Long]("rows_out") == 8)
+    assert(summary.head.getAs[Long]("rows_in") ==
+      table.manifests().agg(sum("n_pages")).head().getLong(0))
+    assert(rows.forall(r => r.getAs[String]("job_id") == "metrics-spec" &&
+      r.getAs[Int]("skew_salt") == 1))
+    assert(rows.map(_.getAs[Long]("wall_ms")).distinct.length == 1)
   }
 }

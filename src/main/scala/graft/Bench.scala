@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{count, lit, sum}
+
+import graft.sources.Model.Page
 
 /** Benchmark main (driver contract): prints ONE JSON line. The flagship
   * metric is BASELINE.json's "tiles+chips emitted per second": the
@@ -13,8 +15,9 @@ import org.apache.spark.sql.functions.{count, lit, sum}
   * the 4→16 pair is the fair single-box proxy). */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val conf = Config.fromEnv
+    val sfDir = conf.sfDir
+    val cpus = conf.cpus
     // shuffle accounting: the north-rule scaling argument rests on the
     // flagship's shuffle volume being bounded (pre-combined two-level agg,
     // broadcast tile cover) — report it so the claim is measured, not said
@@ -24,62 +27,20 @@ object Bench {
         if (e.taskMetrics != null)
           shuffleWrite.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // SPARK_GRAFT_AQE=0 turns adaptive re-planning off for scaling runs:
-      // the flagship's reduce stages are tiny and AQE's per-stage re-plan is
-      // pure driver-side fixed cost that anti-scales the 4N level
-      .config("spark.sql.adaptive.enabled",
-        (!sys.env.get("SPARK_GRAFT_AQE").contains("0")).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      // SPARK_GRAFT_SPLIT_MB shrinks input splits below the 128 MB default:
-      // at high parallelism the scan stage's last wave idles cores while
-      // stragglers finish (184 splits / 32 threads ≈ 5.75 waves); finer
-      // splits cut that tail. Same knob a cluster deployment would set.
-      .config("spark.sql.files.maxPartitionBytes",
-        s"${sys.env.getOrElse("SPARK_GRAFT_SPLIT_MB", "128")}m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_AQE=0 turns adaptive re-planning off for scaling runs:
+    // the flagship's reduce stages are tiny and AQE's per-stage re-plan is
+    // pure driver-side fixed cost that anti-scales the 4N level
+    val spark = Config.session(cpus,
+      Map("spark.sql.adaptive.enabled" -> conf.aqe.toString))
 
     // ---- flagship: pages → tiles spatial join + chip extraction ----------
-    val sf = sfDir.split("sf").last.toDoubleOption.getOrElse(0.1)
-    val nPages = sys.env.get("SPARK_GRAFT_PAGES").map(_.toLong)
-      .getOrElse(math.max(20000L, (20000000L * sf).toLong)) // sf0.1 → 2M pages
-    val labels = sources.Fixtures.labelGeoms().map { case (g, c) =>
-      (core.Geom.toWkb(g), c)
-    }
-
-    // materialize the pages table once (shared across parallelism levels so
-    // both scaling runs read identical input files). SPARK_GRAFT_CODEC=zstd
-    // stores the scan-heavy table ~2× smaller: on a single box the disk
-    // floor is the one non-scaling resource, and trading it for
-    // decompression CPU (which parallelizes) is the right call for a table
-    // that is always scanned in full — same choice a real deployment makes
-    val codec = sys.env.getOrElse("SPARK_GRAFT_CODEC", "snappy")
-    val pagesDir = s"/tmp/graft_pages_$nPages" +
-      (if (codec != "snappy") s"_$codec" else "")
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(pagesDir, "_SUCCESS"))) {
-      sources.Fixtures.pages(spark, nPages, partitions = 64)
-        .write.mode("overwrite").option("compression", codec).parquet(pagesDir)
-    }
-    val pages = spark.read.parquet(pagesDir).as[sources.Model.Page](
-      org.apache.spark.sql.Encoders.product[sources.Model.Page])
-
-    // NOTE: each timed run builds a FRESH DataFrame — re-executing one plan
-    // object would reuse ShuffleExchangeExec's cached shuffle RDD (skipped
-    // map stages) and measure nothing. Codegen compilation is cached by
-    // source text, so the warm-up covers it; with AQE off the remaining
-    // per-run driver overhead is analysis+optimization (~0.2 s).
-    def flagshipAgg() = operators.PagesTiling.extractChips(spark, pages,
-      sources.Fixtures.luxMeta(), labels = Some(labels))
-      .agg(sum("n_pages"), count(lit(1)), sum("bad_text"))
+    val nPages = flagshipPageCount(conf, sfDir)
+    val pages = flagshipPages(spark, nPages)
 
     // warm up untimed: populates the OS page cache and compiles the codegen
     // — the timed run then measures engine compute, which is what the
     // N-vs-4N scaling efficiency target is about
-    flagshipAgg().head()
+    flagshipTotals(spark, pages).head()
 
     // best-of-3: single-JVM local mode has high GC/JIT variance; the metric
     // targets steady-state engine throughput
@@ -88,7 +49,7 @@ object Bench {
     var agg: org.apache.spark.sql.Row = null
     val runs = (1 to 3).map { _ =>
       val t0 = System.nanoTime()
-      agg = flagshipAgg().head()
+      agg = flagshipTotals(spark, pages).head()
       (System.nanoTime() - t0) / 1e9
     }
     spark.sparkContext.removeSparkListener(listener)
@@ -100,7 +61,7 @@ object Bench {
 
     // ---- headline catalog queries ----------------------------------------
     // SPARK_GRAFT_FLAGSHIP_ONLY=1 skips them (used by pinned scaling runs)
-    val headline = if (sys.env.contains("SPARK_GRAFT_FLAGSHIP_ONLY")) Seq.empty[String] else Seq("q1_agg", "q3_join_topk", "q_window_rank", "spatial_join_tiles",
+    val headline = if (conf.flagshipOnly) Seq.empty[String] else Seq("q1_agg", "q3_join_topk", "q_window_rank", "spatial_join_tiles",
       "cell_id", "knn", "knn_large", "dedup_exact", "dedup_minhash_lsh", "dedup_simhash_pairs",
       "dedup_ngram_jaccard", "dedup_embedding", "ann_topk", "ann_ivf", "token_count", "lang_id",
       "text_quality", "doc_fingerprint", "extract_chips", "filter_chips",
@@ -130,28 +91,12 @@ object Bench {
     // whole round's recorded artifact. Two samples spaced a full catalog
     // apart make a burst visible instead of fatal; the min is the engine
     // number. SPARK_GRAFT_QUERY_RUNS overrides (1 restores single-shot).
-    val queryRuns = sys.env.getOrElse("SPARK_GRAFT_QUERY_RUNS", "2").toInt
-    // a FAILED pass must not poison the min with its fast crash wall (a
-    // regression would read as a speedup in the recorded artifact) — it
-    // returns None; a query with NO successful pass is published as -1.0,
-    // an unmistakable failure marker, never a time
-    def timeQuery(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      val q0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-               catch { case e: Throwable =>
-                 System.err.println(s"[bench] query failed: ${e.getMessage}"); false }
-      val dt = (System.nanoTime() - q0) / 1e9
-      // drop the query's persisted blocking intermediates (dedup/
-      // similarity persist several DataFrames each) so later queries
-      // aren't timed under accumulated cache pressure
-      spark.catalog.clearCache()
-      if (ok) Some(dt) else None
-    }
+    val queryRuns = conf.queryRuns
     // pass p runs the whole catalog before pass p+1 re-times any query, so
     // the two samples of one query never share a congestion burst
     val samples = (1 to queryRuns).map { _ =>
       headline.flatMap(name =>
-        SparkEntry.queries.get(name).map(fn => name -> timeQuery(fn)))
+        SparkEntry.queries.get(name).map(fn => name -> timeQuery(spark, sfDir)(fn)))
     }
     val results = samples.flatten.groupBy(_._1).view
       .mapValues { ss =>
@@ -173,7 +118,7 @@ object Bench {
       if (headline.isEmpty) flagshipStartSec
       else (1 to 2).map { _ =>
         val s0 = System.nanoTime()
-        flagshipAgg().head()
+        flagshipTotals(spark, pages).head()
         (System.nanoTime() - s0) / 1e9
       }.min
     val flagshipSec = math.min(flagshipStartSec, sentinelSec)
@@ -193,4 +138,61 @@ object Bench {
       f"""{"metric":"tiles+chips emitted per second","value":$throughput%.1f,"unit":"tiles+chips/sec","flagship_sec":$flagshipSec%.3f,"flagship_start_sec":$flagshipStartSec%.3f,"flagship_sentinel_sec":$sentinelSec%.3f,"window":"$window","query_runs":$queryRuns,"flagship_pages":$nPages,"tiles_assigned":$tilesAssigned,"chips":$nChips,"bad_text":$badText,"parallelism":$cpus,"shuffle_write_mb":$shuffleMb%.1f,"total_sec":$total%.3f,"queries":$qs,"sf":"$sfDir"}""")
     spark.stop()
   }
+
+  /** One timed pass of a catalog query: `count()` over a FRESH DataFrame,
+    * then `clearCache`. A FAILED pass must not poison the min with its fast
+    * crash wall (a regression would read as a speedup in the recorded
+    * artifact) — it returns None; a query with NO successful pass is
+    * published as -1.0, an unmistakable failure marker, never a time. */
+  def timeQuery(spark: SparkSession, sfDir: String)(
+      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
+    val q0 = System.nanoTime()
+    val ok = try { fn(spark, sfDir).count(); true }
+             catch { case e: Throwable =>
+               System.err.println(s"[bench] query failed: ${e.getMessage}"); false }
+    val dt = (System.nanoTime() - q0) / 1e9
+    // drop the query's persisted blocking intermediates (dedup/
+    // similarity persist several DataFrames each) so later queries
+    // aren't timed under accumulated cache pressure
+    spark.catalog.clearCache()
+    if (ok) Some(dt) else None
+  }
+
+  /** Flagship page count: `SPARK_GRAFT_PAGES`, else scaled from the sf dir
+    * name (sf0.1 → 2M pages, never below 20k). */
+  def flagshipPageCount(conf: Config, sfDir: String): Long = {
+    val sf = sfDir.split("sf").last.toDoubleOption.getOrElse(0.1)
+    conf.pages.getOrElse(math.max(20000L, (20000000L * sf).toLong))
+  }
+
+  /** The flagship's input table: `nPages` Fixtures pages materialized once
+    * at `/tmp/graft_pages_<nPages>` (untimed — the north rule's input is a
+    * table, not a generator; shared across runs and parallelism levels so
+    * every run reads identical input files), read back as `Dataset[Page]`. */
+  def flagshipPages(spark: SparkSession, nPages: Long): Dataset[Page] = {
+    val pagesDir = s"/tmp/graft_pages_$nPages"
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(pagesDir, "_SUCCESS")))
+      sources.Fixtures.pages(spark, nPages, partitions = 64)
+        .write.mode("overwrite").parquet(pagesDir)
+    spark.read.parquet(pagesDir).as[Page](Encoders.product[Page])
+  }
+
+  private lazy val flagshipLabels = sources.Fixtures.labelGeoms().map { case (g, c) =>
+    (core.Geom.toWkb(g), c)
+  }
+
+  /** The flagship query: pages → tiles spatial join + chip extraction with
+    * label masks. */
+  def flagshipChips(spark: SparkSession, pages: Dataset[Page]): DataFrame =
+    operators.PagesTiling.extractChips(spark, pages, sources.Fixtures.luxMeta(),
+      labels = Some(flagshipLabels))
+
+  /** The flagship's timed action: (pages assigned, chips, bad_text) totals.
+    * Each timed run builds a FRESH DataFrame — re-executing one plan object
+    * would reuse ShuffleExchangeExec's cached shuffle RDD (skipped map
+    * stages) and measure nothing. Codegen compilation is cached by source
+    * text, so a warm-up covers it; with AQE off the remaining per-run driver
+    * overhead is analysis+optimization (~0.2 s). */
+  def flagshipTotals(spark: SparkSession, pages: Dataset[Page]): DataFrame =
+    flagshipChips(spark, pages).agg(sum("n_pages"), count(lit(1)), sum("bad_text"))
 }

@@ -352,29 +352,6 @@ object QueryCatalog {
   private val IntraPhrase =
     "subscribe banner cookie notice accept decline newsletter promo advert close"
 
-  /** One duplicate-pair-mass probe per sf dir, shared by the three blocked
-    * dedup queries (each would otherwise pay its own groupBy(md5(text))
-    * pass); resolves to a forced collapse decision for [[Dedup]]'s
-    * `collapseThreshold` parameter (output is decision-invariant). */
-  private val dupProbeCache = scala.collection.concurrent.TrieMap.empty[(String, Long), Double]
-  private def memoizedCollapse(s: SparkSession, dir: String): Double = {
-    // cache key includes the table's mtime: a regenerated fixture at the
-    // same path re-probes instead of keeping a stale collapse decision
-    // (output would be unaffected either way — both paths are
-    // equivalence-pinned — but the cost decision would be wrong)
-    val mtime = {
-      val p = java.nio.file.Paths.get(s"$dir/documents.parquet")
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.getLastModifiedTime(p).toMillis
-      else 0L
-    }
-    val pairsPerDoc = dupProbeCache.getOrElseUpdate((dir, mtime), {
-      val (mass, n) = Dedup.dupPairMass(docs(s, dir))
-      if (n == 0) 0.0 else mass / n
-    })
-    if (pairsPerDoc > Dedup.CollapsePairsPerDoc) -1.0 else Double.PositiveInfinity
-  }
-
   // Deterministic lat/lon derived from doc_id (same arithmetic in oracles).
   private val dLat: Column = lit(-85.0) + (col("doc_id") * lit(104729L) % lit(17000L)).cast("double") / lit(100.0)
   private val dLon: Column = lit(-180.0) + (col("doc_id") * lit(7919L) % lit(36000L)).cast("double") / lit(100.0)
@@ -672,22 +649,17 @@ object QueryCatalog {
     // ---- dedup family ------------------------------------------------------
     "dedup_exact" -> ((s, dir) => Dedup.exact(docs(s, dir))),
     "dedup_minhash" -> ((s, dir) => Dedup.minhashSignatures(docs(s, dir))),
-    "dedup_minhash_lsh" -> ((s, dir) => Dedup.minhashLsh(docs(s, dir), minJaccard = 0.4,
-      collapseThreshold = memoizedCollapse(s, dir))),
-    "dedup_ngram_jaccard" -> ((s, dir) => Dedup.ngramJaccard(docs(s, dir), w = 5, minJaccard = 0.25,
-      collapseThreshold = memoizedCollapse(s, dir))),
+    "dedup_minhash_lsh" -> ((s, dir) => Dedup.minhashLsh(docs(s, dir), minJaccard = 0.4)),
+    "dedup_ngram_jaccard" -> ((s, dir) => Dedup.ngramJaccard(docs(s, dir), w = 5, minJaccard = 0.25)),
     "dedup_simhash" -> ((s, dir) => Dedup.simhash(docs(s, dir))),
-    "dedup_simhash_pairs" -> ((s, dir) => Dedup.simhashPairs(docs(s, dir), maxHamming = 12,
-      collapseThreshold = memoizedCollapse(s, dir))),
+    "dedup_simhash_pairs" -> ((s, dir) => Dedup.simhashPairs(docs(s, dir), maxHamming = 12)),
     // pairs → keepers: connected components over the simhash near-dup
     // graph (min-label propagation); every doc maps to its component's min
     // doc_id, singletons to themselves
     "dedup_clusters" -> ((s, dir) => {
-      val pairs = Dedup.simhashPairs(docs(s, dir), maxHamming = 12,
-        collapseThreshold = memoizedCollapse(s, dir))
-      val cc = Dedup.connectedComponents(pairs)
+      val cc = Dedup.connectedComponents(Dedup.simhashPairs(docs(s, dir), maxHamming = 12))
       docsPlain(s, dir).select(col("doc_id"))
-        .join(cc.select(col("node").as("doc_id"), col("label")), Seq("doc_id"), "left")
+        .join(broadcast(cc.select(col("node").as("doc_id"), col("label"))), Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster_rep"))
     }),
 
@@ -697,11 +669,9 @@ object QueryCatalog {
     // broadcast build re-exchange/collect immediately, so the spread hop
     // is pure cost there (the simhash pipeline input keeps the spread)
     "dedup_keep_best" -> ((s, dir) => {
-      val pairs = Dedup.simhashPairs(docs(s, dir), maxHamming = 12,
-        collapseThreshold = memoizedCollapse(s, dir))
-      val cc = Dedup.connectedComponents(pairs)
+      val cc = Dedup.connectedComponents(Dedup.simhashPairs(docs(s, dir), maxHamming = 12))
       val clusters = docsPlain(s, dir).select(col("doc_id"))
-        .join(cc.select(col("node").as("doc_id"), col("label")), Seq("doc_id"), "left")
+        .join(broadcast(cc.select(col("node").as("doc_id"), col("label"))), Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster_rep"))
       Dedup.keepBest(clusters, docsPlain(s, dir))
     }),

@@ -27,14 +27,9 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, usage)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .appName(s"graft-${args.head}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val conf = graft.Config.fromEnv
+    val spark = graft.Config.session(conf.cpus,
+      Map("spark.app.name" -> s"graft-${args.head}"), master = conf.master)
     try run(spark, args.head, parse(args.tail.toIndexedSeq))
     finally spark.stop()
   }

@@ -384,7 +384,7 @@ object CellOps {
         col("cell").as("doc_b")), Seq("nxi", "nyi"))
       .select("doc_a", "doc_b")
     val cc = Dedup.connectedComponents(edges)
-    dense.join(cc.select(col("node").as("cell"), col("label")), Seq("cell"), "left")
+    dense.join(broadcast(cc.select(col("node").as("cell"), col("label"))), Seq("cell"), "left")
       .select(coalesce(col("label"), col("cell")).as("cluster"), col("x"))
       .groupBy("cluster")
       .agg(count(lit(1)).as("n_cells"), sum("x").as("mass"))

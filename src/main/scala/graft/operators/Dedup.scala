@@ -261,7 +261,7 @@ object Dedup {
   private def dropHotKeys(rows: DataFrame, keyCols: Seq[String], cap: Int,
                           rowLimit: Long, probe: () => Long): DataFrame = {
     // rowLimit = Long.MaxValue disables the skew probe entirely (callers
-    // that know their corpus, and A/B measurement in tools.DedupProfile);
+    // that know their corpus);
     // `probe` is a thunk so call sites can short-circuit it for free when a
     // cheap upper bound (e.g. total band rows = nBands × |docs|) already
     // rules the degenerate regime out — fixture-scale runs pay zero for the
@@ -281,7 +281,7 @@ object Dedup {
   }
 
   /** Shingle-blocked candidate pairs with the DF cap applied — exposed so
-    * the planted hot-shingle scale test and tools.DedupBench can measure
+    * the planted hot-shingle scale test and `Measure dedup-guard` can measure
     * the candidate count (the blowup is invisible in the verified output). */
   private[graft] def ngramCandidates(docs: DataFrame, w: Int, dfCap: Int,
                                      rowLimit: Long = HotKeyWindowRowLimit): DataFrame =
@@ -455,7 +455,13 @@ object Dedup {
     * silently emitting unconverged labels.
     *
     * pairs: (doc_a, doc_b); returns (node, label) for every node in pairs,
-    * label = min doc_id of its component. */
+    * label = min doc_id of its component. The labels carry no join hint:
+    * both paths end in a checkpoint with UNKNOWN stats, so a caller joining
+    * them against a corpus-sized id column hints `broadcast` at that join
+    * (otherwise it gets a SortMergeJoin that shuffles the corpus). Below
+    * `localEdgeLimit` the label table is ≤ 2× that many rows, a measured-
+    * small broadcast at any corpus size; non-join consumers stay free of
+    * hint warnings. */
   /** Edge-count ceiling for [[connectedComponents]]'s single-task
     * union-find fast path. 2M symmetric edges ≈ a few hundred MB of
     * hash-map state in one task — far under executor memory — while the
@@ -535,17 +541,7 @@ object Dedup {
           col("label").cast(idType).as("label"))
         .localCheckpoint(true) // edges' cached blocks are about to go away
       edges.unpersist()
-      // broadcast-hint the labels: a localCheckpoint is an ExistingRDD with
-      // UNKNOWN stats, so a caller joining the (small) label table against a
-      // corpus-sized id column gets a SortMergeJoin that shuffles the CORPUS
-      // (measured: dedup_clusters' final join was SMJ + 2 exchanges + 2
-      // sorts). This path guarantees ≤ localEdgeLimit edges → ≤ 2× that in
-      // label rows (two ids each ≈ tens of MB at the 2M default) — a safe,
-      // measured-small broadcast at ANY corpus size, and strictly cheaper
-      // than exchanging the big side (guide §3.1: pick the strategy
-      // deliberately). The distributed-loop path below keeps no hint: its
-      // graphs are unbounded.
-      return broadcast(out)
+      return out
     }
 
     val sessionParts = caller.conf.get("spark.sql.shuffle.partitions").toInt
@@ -635,7 +631,7 @@ object Dedup {
     * doc_id) used to ride through both the token distinct and the bit-sum
     * aggregation, doubling each exchange's row width for a value that is
     * per-DOC, not per-token (measured at sf0.1: distinct 0.65→0.31 s,
-    * agg 0.46→0.23 s — see tools/SimhashProfile). */
+    * agg 0.46→0.23 s). */
   private def simhashOf(docs: DataFrame): DataFrame = {
     val tok = docs.select(col("doc_id"), explode(toks(col("text"))).as("tok"))
       .distinct()

@@ -18,8 +18,7 @@ object Streaming {
     * `SPARK_GRAFT_STATE_STORE=rocksdb|hdfs` (default hdfs — the sandbox
     * fixtures have tiny state and the HDFS-backed store has the lower
     * fixed cost per micro-batch). */
-  def defaultStateStore: String =
-    sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "hdfs")
+  def defaultStateStore: String = graft.Config.fromEnv.stateStore
 
   /** Default stateful-shuffle width (`SPARK_GRAFT_STATE_PARTITIONS`): every
     * shuffle partition of a stateful operator is a state-store instance
@@ -27,14 +26,11 @@ object Streaming {
     * STATE volume, not the core count. 4 is the measured fixture-scale
     * optimum; a deployment raises it with actual state volume. A value that
     * is not a positive integer is rejected, naming the variable. */
-  def defaultStatePartitions: Int =
-    statePartitions(sys.env.get("SPARK_GRAFT_STATE_PARTITIONS"))
+  def defaultStatePartitions: Int = graft.Config.fromEnv.statePartitions
 
+  /** The same setting parsed from an explicit value (None = unset). */
   private[operators] def statePartitions(setting: Option[String]): Int =
-    setting.fold(4) { v =>
-      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_STATE_PARTITIONS must be a positive integer, got '$v'"))
-    }
+    new graft.Config(setting.map("SPARK_GRAFT_STATE_PARTITIONS" -> _).toMap).statePartitions
 
   /** Scope the streaming state-store provider around `f` and restore it.
     * "hdfs" (the Spark default) keeps all state as JVM objects in executor

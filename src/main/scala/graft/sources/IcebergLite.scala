@@ -223,19 +223,16 @@ class IcebergLite(root: String, spark: SparkSession) {
       if (df.schema.nonEmpty)
         df.write.mode(SaveMode.Append).parquet(s"$root/data/$sub/snapshot_id=$snap")
     }
+    // the compacted manifest's row count is observed on its write, as in
+    // [[commit]]; a table with no manifest rows records 0
     val mf = manifests()
     val mfRows =
       if (mf.schema.nonEmpty) {
-        val compacted = mf.drop("snapshot_id").withColumn("snapshot_id", lit(snap))
-        // ORDERING CONTRACT: count BEFORE the append below — the count's scan
-        // lists the manifest directory at action time, so counting after the
-        // append would scan the freshly written file too and depend on the
-        // committed-ids filter (built before `snap` existed) to exclude it.
-        // The write itself is safe: its read-side file index is resolved at
-        // job planning, before any output file commits.
-        val n = compacted.count()
-        compacted.coalesce(1).write.mode(SaveMode.Append).parquet(s"$metaDir/manifests")
-        n
+        val written = Observation()
+        mf.drop("snapshot_id").withColumn("snapshot_id", lit(snap))
+          .observe(written, count(lit(1)).as("rows"))
+          .coalesce(1).write.mode(SaveMode.Append).parquet(s"$metaDir/manifests")
+        written.get.get("rows").fold(0L)(_.asInstanceOf[Long])
       } else 0L
     Seq((snap, System.currentTimeMillis(), "compact", mfRows))
       .toDF("snapshot_id", "ts_ms", "operation", "rows")

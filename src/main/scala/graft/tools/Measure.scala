@@ -1,0 +1,301 @@
+package graft.tools
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+
+import graft.{Bench, Config, SparkEntry}
+import graft.operators.{Dedup, PagesTiling}
+import graft.sources.Fixtures
+
+/** The one measurement main (not part of the driver contract — the frozen
+  * [[graft.Bench]] is). Named scenarios, each in a session from
+  * [[Config.session]]:
+  *
+  *   runMain graft.tools.Measure queries [reps] name...
+  *   runMain graft.tools.Measure scaling [nPages] [rounds] [base]
+  *   runMain graft.tools.Measure skew [nPages]
+  *   runMain graft.tools.Measure dedup-guard [nDocs]
+  *   runMain graft.tools.Measure explain [name|flagship...]
+  *
+  * Catalog queries read `SPARK_GRAFT_SF_DIR`; sessions run at
+  * `SPARK_GRAFT_CPUS` cores (see [[Config]]). */
+object Measure {
+  private val usage: String =
+    "usage: graft.tools.Measure queries [reps] name... | scaling [nPages] [rounds] [base]" +
+      " | skew [nPages] | dedup-guard [nDocs] | explain [name|flagship...]"
+
+  def main(args: Array[String]): Unit = {
+    val conf = Config.fromEnv
+    args.toList match {
+      case "queries" :: rest =>
+        val reps = rest.headOption.flatMap(_.toIntOption)
+        val names = if (reps.isDefined) rest.tail else rest
+        withSession(conf.cpus)(queries(_, conf.sfDir, reps.getOrElse(3), names))
+          .flatMap(_.lines).foreach(println)
+      case "scaling" :: rest =>
+        println(scaling(rest.headOption.fold(2000000L)(_.toLong),
+          rest.lift(1).fold(3)(_.toInt),
+          rest.lift(2).fold(math.max(1, conf.cpus / 4))(_.toInt)))
+      case "skew" :: rest =>
+        // broadcast off forces the shuffle join; AQE off isolates OUR salting
+        println(withSession(conf.cpus, Map(
+            "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+            "spark.sql.adaptive.enabled" -> "false"))(
+          skew(_, rest.headOption.fold(4000000L)(_.toLong))))
+      case "dedup-guard" :: rest =>
+        println(withSession(conf.cpus)(dedupGuard(_, rest.headOption.fold(100000L)(_.toLong))))
+      case "explain" :: names =>
+        withSession(conf.cpus)(explain(_, conf.sfDir, names,
+            Bench.flagshipPageCount(conf, conf.sfDir)))
+          .foreach { case (name, plan) =>
+            println(s"\n===================== $name =====================")
+            println(plan)
+          }
+      case _ =>
+        System.err.println(usage)
+        sys.exit(2)
+    }
+  }
+
+  private def withSession[A](cpus: Int, extra: Map[String, String] = Map.empty)(
+      f: SparkSession => A): A = {
+    val spark = Config.session(cpus, extra)
+    try f(spark) finally spark.stop()
+  }
+
+  // ---- queries ------------------------------------------------------------
+
+  /** One completed stage: labelled by its first graft call site (broadcast
+    * builds all read withThreadLocalCaptured otherwise), with its wall,
+    * task count and cumulative task run/CPU/GC/deserialize time. */
+  final case class Stage(site: String, wallMs: Long, tasks: Int, runMs: Long,
+                         cpuMs: Long, gcMs: Long, deserMs: Long)
+
+  /** A query's passes (None = a failed pass, never a time) and the stages
+    * of its last pass. No passes at all: the name is not in the catalog. */
+  final case class QueryTiming(name: String, walls: Seq[Option[Double]], stages: Seq[Stage]) {
+    def lines: Seq[String] =
+      if (walls.isEmpty) Seq(s"QB $name UNKNOWN")
+      else {
+        val best = walls.flatten.minOption.fold("FAILED")(w => f"$w%6.3f")
+        val all = walls.map(_.fold("fail")(w => f"$w%.3f")).mkString(",")
+        f"QB $name%-24s min=$best  all=$all" +: stages.sortBy(-_.wallMs).take(12).map(s =>
+          f"QB-STAGE ${s.wallMs}%6d ms wall  ${s.tasks}%4d tasks  ${s.runMs}%7d run  ${s.cpuMs}%7d cpu  ${s.gcMs}%5d gc  ${s.deserMs}%5d deser  ${s.site}")
+      }
+  }
+
+  /** Per-query min-of-`reps`, each pass timed by [[Bench.timeQuery]] (fresh
+    * DataFrame, `clearCache` after, a failed pass is no time), plus the
+    * slowest stages of the last pass — where a query spends its time,
+    * without the UI. */
+  def queries(spark: SparkSession, sfDir: String, reps: Int,
+              names: Seq[String]): Seq[QueryTiming] = {
+    require(reps > 0, s"reps must be a positive integer, got $reps")
+    val sc = spark.sparkContext
+    val stages = new ConcurrentLinkedQueue[Stage]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val i = e.stageInfo
+        val wall = (for (a <- i.completionTime; b <- i.submissionTime) yield a - b)
+          .getOrElse(0L)
+        val site = i.details.linesIterator.find(_.contains("graft."))
+          .getOrElse(i.name.linesIterator.next()).trim.take(110)
+        stages.add(Stage(site, wall, i.numTasks, i.taskMetrics.executorRunTime,
+          i.taskMetrics.executorCpuTime / 1000000L, i.taskMetrics.jvmGCTime,
+          i.taskMetrics.executorDeserializeTime))
+      }
+    }
+    sc.addSparkListener(listener)
+    try names.map { name =>
+      SparkEntry.queries.get(name).fold(QueryTiming(name, Nil, Nil)) { fn =>
+        val walls = (1 to reps).map { _ =>
+          Bridge.drainListenerBus(sc)
+          stages.clear()
+          Bench.timeQuery(spark, sfDir)(fn)
+        }
+        Bridge.drainListenerBus(sc)
+        QueryTiming(name, walls, stages.asScala.toSeq)
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  // ---- scaling ------------------------------------------------------------
+
+  /** Two-cluster-size scaling evidence with noise control: the flagship at
+    * local[base] and local[4·base] ALTERNATING in one JVM (shared JIT + page
+    * cache, adjacent in time — host throughput drifts ±15% between windows,
+    * so only adjacent pairs compare like-for-like), min wall per level over
+    * `rounds` rounds, as one JSON line. On a 4-core host the only N→4N pair
+    * is base 1 (the default: a quarter of the cores). */
+  def scaling(nPages: Long, rounds: Int, base: Int): String = {
+    val quad = base * 4
+    def stop(s: SparkSession): Unit = {
+      s.stop()
+      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+    }
+    // materialize input once
+    { val s = Config.session(quad); Bench.flagshipPages(s, nPages); stop(s) }
+
+    def flagship(s: SparkSession): (Double, Long) = {
+      val pages = Bench.flagshipPages(s, nPages)
+      val t0 = System.nanoTime()
+      val agg = Bench.flagshipTotals(s, pages).head()
+      ((System.nanoTime() - t0) / 1e9, agg.getLong(0) + agg.getLong(1))
+    }
+
+    val walls = scala.collection.mutable.Map(base -> List.empty[Double], quad -> List.empty[Double])
+    var emitted = 0L
+    for (r <- 1 to rounds; cpus <- Seq(base, quad)) {
+      val s = Config.session(cpus)
+      if (r == 1) flagship(s) // warm-up per level, untimed
+      val (w, e) = flagship(s)
+      walls(cpus) = w :: walls(cpus)
+      emitted = e
+      stop(s)
+      // measurement hygiene: a controlled same-window A/B showed the shared
+      // JVM taxes the 4N level ~15% (heap aging across levels); a full GC
+      // between levels reclaims the previous level's tenured garbage so the
+      // next level starts closer to fresh-JVM state
+      System.gc(); Thread.sleep(500); System.gc()
+      System.err.println(f"ROUND $r cpus=$cpus wall=$w%.2f s")
+    }
+    val wB = walls(base).min; val wQ = walls(quad).min
+    val thrB = emitted / wB; val thrQ = emitted / wQ
+    val eff = (thrQ / thrB) / 4.0
+    // per-round pairwise efficiencies: adjacent in time, so each pair saw
+    // the same host window — the spread between pairs measures host drift
+    val pairEffs = walls(base).reverse.zip(walls(quad).reverse)
+      .map { case (b, q) => b / (4.0 * q) }
+    f"""{"metric":"scaling efficiency $base->$quad","emitted":$emitted,"wall${base}_best":$wB%.3f,"wall${quad}_best":$wQ%.3f,"throughput$base":$thrB%.1f,"throughput$quad":$thrQ%.1f,"efficiency":$eff%.3f,"pair_effs":${pairEffs.map(x => f"$x%.3f").mkString("[", ",", "]")},"all$base":${walls(base).map(x => f"$x%.2f").mkString("[", ",", "]")},"all$quad":${walls(quad).map(x => f"$x%.2f").mkString("[", ",", "]")}}"""
+  }
+
+  // ---- skew ---------------------------------------------------------------
+
+  /** Hot-cell skew evidence: 90% of pages land in ONE res-16 cell. The
+    * flagship's default broadcast join is skew-immune (the pages side never
+    * shuffles by cell, and the two-level aggregation pre-combines
+    * map-side), so `spark` must have broadcast OFF, forcing the shuffle join
+    * path; compares salt=1 (hot key on one reducer) vs salt=8 (hot key
+    * split 8 ways) plus the max task time, as one JSON line. */
+  def skew(spark: SparkSession, n: Long): String = {
+    val dir = s"/tmp/graft_skewed_$n"
+    // isolate the JOIN: materialize the geotagged table once (the html
+    // extract is embarrassingly parallel and would otherwise mask the
+    // join-stage skew entirely)
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS")))
+      PagesTiling.geotagged(spark, Fixtures.skewedPages(spark, n), res = 16)
+        .write.mode("overwrite").parquet(dir)
+    val geo = spark.read.parquet(dir)
+
+    val maxTaskMs = new AtomicLong()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          maxTaskMs.getAndUpdate(m => math.max(m, e.taskMetrics.executorRunTime))
+    })
+
+    def run(salt: Int): (Double, Long, Long) = {
+      val cfg = PagesTiling.TilingConfig(salt = salt, cellRes = 16)
+      val tiles = PagesTiling.tileCells(spark, Fixtures.luxMeta(), cfg)
+      def total() = PagesTiling.assignTiles(geo, tiles, cfg)
+        .groupBy("i", "j").agg(count(lit(1)).as("n"))
+        .agg(sum("n")).head()
+      total() // warm-up
+      maxTaskMs.set(0)
+      val t0 = System.nanoTime()
+      val agg = total()
+      val wall = (System.nanoTime() - t0) / 1e9
+      Bridge.drainListenerBus(spark.sparkContext)
+      (wall, agg.getLong(0), maxTaskMs.get())
+    }
+
+    val (w1, e1, m1) = run(salt = 1)
+    val (w8, e8, m8) = run(salt = 8)
+    require(e1 == e8, s"salted join must not change results: $e1 vs $e8")
+    f"""{"metric":"hot-cell skew (shuffle-join path, broadcast off)","pages":$n,"emitted":$e1,"wall_salt1":$w1%.3f,"wall_salt8":$w8%.3f,"max_task_ms_salt1":$m1,"max_task_ms_salt8":$m8,"speedup":${w1 / w8}%.2f}"""
+  }
+
+  // ---- dedup-guard --------------------------------------------------------
+
+  /** Deterministic corpus shaped like real crawl text: ids in duplicate
+    * groups — per 125-id block, the 50 ids with id%5<2 (40% of ids) share
+    * the block leader's text, so they collapse into one 50-copy group per
+    * block — 10 content words derived from the group leader, and a 5-token
+    * boilerplate footer on every 4th group. */
+  private def dedupCorpus(spark: SparkSession, n: Long): DataFrame = {
+    val leader = when(col("id") % 5 < 2, col("id") - col("id") % 125)
+      .otherwise(col("id"))
+    val words = (0 until 10).map(k =>
+      concat(lit(s"w$k"), ((col("leader") * (2 * k + 3) + k) % 99991).cast("string")))
+    val text = concat_ws(" ", words: _*)
+    spark.range(0, n).select(col("id").as("doc_id"), leader.as("leader"))
+      .select(col("doc_id"),
+        when(col("leader") % 4 === 0,
+          concat(text, lit(" all rights reserved contact us today")))
+          .otherwise(text).as("text"))
+  }
+
+  /** The dedup guards on [[dedupCorpus]], with measured counts and walls,
+    * as one JSON line:
+    *   1. the duplicate-mass probe flips the exact-dup collapse ON for this
+    *      corpus (it stays OFF on the low-dup sf fixtures);
+    *   2. the blocking-key DF cap cuts the boilerplate-shingle candidate
+    *      quadratic (candidate counts capped vs uncapped);
+    *   3. end-to-end ngramJaccard wall at corpus scale. */
+  def dedupGuard(spark: SparkSession, n: Long): String = {
+    val docs = dedupCorpus(spark, n).persist()
+    val nDocs = docs.count()
+
+    val (mass, total) = Dedup.dupPairMass(docs)
+    val collapses = mass > Dedup.CollapsePairsPerDoc * total
+
+    // candidate counts, capped vs uncapped, on a bounded slice (the
+    // uncapped count is the quadratic being demonstrated — size it so the
+    // demonstration itself terminates)
+    val slice = docs.where(col("doc_id") < math.min(n, 20000L))
+    def timed[T](f: => T): (T, Double) = {
+      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
+    }
+    val (candUncapped: Long, tUncapped: Double) =
+      timed(Dedup.ngramCandidates(slice, 3, Int.MaxValue).count())
+    val (candCapped: Long, tCapped: Double) =
+      timed(Dedup.ngramCandidates(slice, 3, Dedup.ShingleDfCap).count())
+
+    // end-to-end blocked+verified pairs at full size, default guards
+    val (nPairs: Long, tFull: Double) =
+      timed(Dedup.ngramJaccard(docs, w = 3, minJaccard = 0.5).count())
+
+    f"""{"n_docs":$nDocs,"dup_pair_mass":$mass%.0f,"collapse_engaged":$collapses,""" +
+      f""""cand_uncapped_20k":$candUncapped,"cand_capped_20k":$candCapped,""" +
+      f""""cand_cut":${candUncapped.toDouble / math.max(candCapped, 1)}%.1f,""" +
+      f""""wall_uncapped_20k_sec":$tUncapped%.2f,"wall_capped_20k_sec":$tCapped%.2f,""" +
+      f""""ngram_pairs_full":$nPairs,"wall_full_sec":$tFull%.2f}"""
+  }
+
+  // ---- explain ------------------------------------------------------------
+
+  /** Formatted physical plans for plan review (pushdown / pruning /
+    * broadcast / codegen spans), one per name; "flagship" is the flagship
+    * query over its shared `nPages` pages table, and a name in neither is
+    * reported as unknown. No names: the usual review set. */
+  def explain(spark: SparkSession, sfDir: String, names: Seq[String],
+              nPages: Long): Seq[(String, String)] = {
+    val toExplain = if (names.nonEmpty) names
+      else Seq("q1_agg", "spatial_join_tiles", "knn", "knn_large",
+        "dedup_minhash_lsh", "ann_topk", "url_dedup", "pii_redact")
+    toExplain.map { name =>
+      val df = SparkEntry.queries.get(name).map(_(spark, sfDir)).orElse(
+        if (name == "flagship")
+          Some(Bench.flagshipChips(spark, Bench.flagshipPages(spark, nPages)))
+        else None)
+      name -> df.fold("unknown query")(_.queryExecution.explainString(FormattedMode))
+    }
+  }
+}

@@ -19,8 +19,9 @@ object Bench {
     val sfDir = conf.sfDir
     val cpus = conf.cpus
     // shuffle accounting: the north-rule scaling argument rests on the
-    // flagship's shuffle volume being bounded (pre-combined two-level agg,
-    // broadcast tile cover) — report it so the claim is measured, not said
+    // flagship's shuffle volume being bounded (map-side combined per-tile
+    // pixel counts, broadcast tile cover) — report it so the claim is
+    // measured, not said
     val shuffleWrite = new java.util.concurrent.atomic.AtomicLong()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =

@@ -3,7 +3,9 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graft.Bridge
@@ -82,6 +84,84 @@ case class KRingExpr(cell: Expression, k: Expression, res: Expression)
     copy(cell = f, k = s, res = t)
 }
 
+/** Dense per-pixel counts of one tile: the flagship's density-chip
+  * histogram as ONE aggregate keyed on the tile. `pix` is the row-major
+  * pixel index inside the tile, in [0, area); the buffer is a dense `Int`
+  * per pixel, `update` adds 1 at `pix` and `merge` adds element-wise, so a
+  * task holds one `area`-sized array per tile it touches instead of one
+  * hash-map entry per (tile, pixel). The result is the dense array.
+  *
+  * A partial ships as the smaller of two encodings: the dense array when
+  * at least half the pixels are non-zero, else sorted (pix, count) pairs
+  * — never more than min(8·nnz, 4·area) bytes plus a 4-byte header, so a
+  * task touching many tiles with a few pages each stays cheap to shuffle. */
+case class PixelCountsAgg(pix: Expression, area: Int,
+                          mutableAggBufferOffset: Int = 0,
+                          inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[Array[Int]] with UnaryLike[Expression] {
+  override def child: Expression = pix
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+
+  override def createAggregationBuffer(): Array[Int] = new Array[Int](area)
+
+  override def update(buffer: Array[Int], input: InternalRow): Array[Int] = {
+    val v = pix.eval(input)
+    if (v != null) buffer(v.asInstanceOf[Int]) += 1
+    buffer
+  }
+
+  override def merge(buffer: Array[Int], input: Array[Int]): Array[Int] = {
+    var k = 0
+    while (k < area) { buffer(k) += input(k); k += 1 }
+    buffer
+  }
+
+  override def eval(buffer: Array[Int]): Any = UnsafeArrayData.fromPrimitiveArray(buffer)
+
+  /** Header `-1` then `area` counts (dense), or header `nnz` then nnz
+    * ascending (pix, count) pairs (sparse). */
+  override def serialize(buffer: Array[Int]): Array[Byte] = {
+    var nnz = 0
+    var k = 0
+    while (k < area) { if (buffer(k) != 0) nnz += 1; k += 1 }
+    if (2 * nnz >= area) {
+      val out = java.nio.ByteBuffer.allocate(4 + 4 * area)
+      out.putInt(-1)
+      out.asIntBuffer().put(buffer)
+      out.array()
+    } else {
+      val out = java.nio.ByteBuffer.allocate(4 + 8 * nnz)
+      out.putInt(nnz)
+      k = 0
+      while (k < area) {
+        if (buffer(k) != 0) out.putInt(k).putInt(buffer(k))
+        k += 1
+      }
+      out.array()
+    }
+  }
+
+  override def deserialize(bytes: Array[Byte]): Array[Int] = {
+    val in = java.nio.ByteBuffer.wrap(bytes)
+    val buffer = new Array[Int](area)
+    val header = in.getInt()
+    if (header < 0) in.asIntBuffer().get(buffer)
+    else {
+      var n = 0
+      while (n < header) { val k = in.getInt(); buffer(k) = in.getInt(); n += 1 }
+    }
+    buffer
+  }
+
+  override def withNewMutableAggBufferOffset(offset: Int): PixelCountsAgg =
+    copy(mutableAggBufferOffset = offset)
+  override def withNewInputAggBufferOffset(offset: Int): PixelCountsAgg =
+    copy(inputAggBufferOffset = offset)
+  override protected def withNewChildInternal(c: Expression): PixelCountsAgg = copy(pix = c)
+  override def prettyName: String = "pixel_counts"
+}
+
 object CellFunctions {
   def cell_id(lat: Column, lon: Column, res: Column): Column =
     Bridge.column(CellIdExpr(expression(lat), expression(lon), expression(res)))
@@ -90,6 +170,10 @@ object CellFunctions {
       expression(maxLat), expression(maxLon), expression(res)))
   def k_ring(cell: Column, k: Column, res: Column): Column =
     Bridge.column(KRingExpr(expression(cell), expression(k), expression(res)))
+  /** Dense per-pixel counts over a group ([[PixelCountsAgg]]); `pix` is an
+    * int column in [0, area). */
+  def pixel_counts(pix: Column, area: Int): Column =
+    Bridge.column(PixelCountsAgg(expression(pix), area).toAggregateExpression())
 
   private def expression(c: Column): Expression = Bridge.expression(c)
 

@@ -3,9 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Affine, Geom, Rasterize, RasterMath, TileGrid, Window}
+import graft.core.{Affine, Geom, TileGrid}
 import graft.functions.CellFunctions
-import graft.sources.Fixtures
 import graft.sources.Model.{Page, RasterMeta}
 
 /** The web-scale graft (BASELINE.json north rule): assign Common-Crawl-style
@@ -21,12 +20,15 @@ import graft.sources.Model.{Page, RasterMeta}
   *     → tile_windows generator → bbox columns → explode(cell_cover)  [G2]
   *   join on cell (broadcast when tile side is small; salted equi-join
   *   otherwise) → exact point-in-window refine on plain columns
-  *     → partial agg (tile, py, px) — map-side combine caps shuffle volume
-  *       at 16k rows/tile regardless of page count (skew-proof)
-  *     → final per-tile assembly of the dense density chip + rescale + masks
+  *     → pixel index pix = py·width + px, a plain int column
+  *     → ONE aggregate keyed on the tile index t: dense per-pixel counts
+  *       (`pixel_counts`, an Int per pixel) + page and bad-text counts;
+  *       the map-side partial ships at most one tile-sized record per
+  *       (task, tile) regardless of page count (skew-proof)
+  *     → per-tile rescale of the counts into the chip + masks
   *
-  * At 100 TB the only wide stages are the cell join and the two-level
-  * aggregation; both shuffle pre-combined, fixed-size records.
+  * At 100 TB the only wide stages are the cell join and the tile
+  * aggregation; both shuffle pre-combined, bounded-size records.
   */
 object PagesTiling {
 
@@ -52,19 +54,20 @@ object PagesTiling {
   /** Tile table for one raster: grid windows + world bounds + covering cells
     * (exploded). Tiny relative to pages; Catalyst broadcasts it. */
   def tileCells(spark: SparkSession, meta: RasterMeta, cfg: TilingConfig): DataFrame =
-    tileCellsOf(spark, meta, cfg, gridWindows(meta, cfg))
+    tileCellsOf(spark, meta, cfg, gridWindows(meta, cfg)).drop("t")
 
   private def gridWindows(meta: RasterMeta, cfg: TilingConfig): Seq[TileGrid.GridCell] =
     TileGrid.squareWindows(cfg.size, cfg.step, meta.width, meta.height, cfg.mode)
 
-  /** The tile table over the given grid windows only. */
+  /** The tile table over the given grid windows only; `t` is each tile's
+    * index in `cells`. */
   private def tileCellsOf(spark: SparkSession, meta: RasterMeta, cfg: TilingConfig,
                           cells: Seq[TileGrid.GridCell]): DataFrame = {
     import spark.implicits._
-    val tiles = spark.createDataset(cells.map(c =>
-      (meta.raster_id, c.i, c.j, c.window.colOff, c.window.rowOff,
-        c.window.width, c.window.height)))
-      .toDF("raster_id", "i", "j", "col_off", "row_off", "width", "height")
+    val tiles = spark.createDataset(cells.zipWithIndex.map { case (c, t) =>
+      (t, meta.raster_id, c.i, c.j, c.window.colOff, c.window.rowOff,
+        c.window.width, c.window.height)
+    }).toDF("t", "raster_id", "i", "j", "col_off", "row_off", "width", "height")
       .withColumn("minx", lit(meta.c) + col("col_off") * lit(meta.a))
       .withColumn("maxx", lit(meta.c) + (col("col_off") + col("width")) * lit(meta.a))
       .withColumn("maxy", lit(meta.f) + col("row_off") * lit(meta.e))
@@ -128,47 +131,45 @@ object PagesTiling {
     val px = floor((col("lon") - lit(meta.c)) / lit(meta.a)).cast("int") - col("col_off")
     val py = floor((col("lat") - lit(meta.f)) / lit(meta.e)).cast("int") - col("row_off")
 
-    // two-level aggregation: (tile, py, px) partial counts (map-side
-    // combine) → dense chip assembly. Bounded by 16k rows per tile.
-    val binned = assigned
+    // one aggregation keyed on the tile index: dense per-pixel counts
+    // (map-side partial, at most one tile-sized record per task and tile).
+    // `pix` is a projected column so the aggregate reads a plain int.
+    val counted = assigned
       .withColumn("px", px).withColumn("py", py)
       .where(col("px") >= 0 && col("px") < col("width") &&
              col("py") >= 0 && col("py") < col("height"))
-      .groupBy(col("raster_id"), col("i"), col("j"), col("col_off"), col("row_off"),
-        col("width"), col("height"), col("py"), col("px"))
-      .agg(count(lit(1)).as("n"), sum(when(col("text_ok"), 0L).otherwise(1L)).as("bad_text"))
+      .select(col("t"), (col("py") * col("width") + col("px")).as("pix"), col("text_ok"))
+      .groupBy(col("t"))
+      .agg(CellFunctions.pixel_counts(col("pix"), cfg.size * cfg.size),
+        count(lit(1)), sum(when(col("text_ok"), 0L).otherwise(1L)))
 
     val labelsLocal = labels
-    val sizeLocal = cfg.size
-    val chips = binned
-      .groupBy("raster_id", "i", "j", "col_off", "row_off", "width", "height")
-      .agg(collect_list(struct(col("py"), col("px"), col("n"))).as("bins"),
-        sum(col("n")).as("n_pages"), sum(col("bad_text")).as("bad_text"))
-      .as[BinnedTile]
-      .map { bt =>
-        val dense = new Array[Int](bt.width * bt.height)
-        bt.bins.foreach(b => dense(b.py * bt.width + b.px) = b.n.toInt)
-        // density → uint8 chip, skimage-style rescale to 1..255 over (0, max)
-        val mx = math.max(1, dense.max)
-        val img = new Array[Byte](dense.length)
-        var k = 0
-        while (k < dense.length) {
-          img(k) = ((dense(k).toDouble / mx) * 254.0 + 1.0).toInt.toByte
-          k += 1
-        }
-        // extent mask from labels (M4) on this tile's window
-        val win = Window(bt.col_off, bt.row_off, bt.width, bt.height)
-        val mask: Array[Byte] = labelsLocal match {
-          case None => Array.empty[Byte]
-          case Some(ls) =>
-            ChipPipeline.maskFromPolygons(ls.map(p => Geom.fromWkb(p._1)),
-              win, affine.forWindow(win), extentNoBorder = false,
-              wantBoundary = false, wantDistance = false)._1
-        }
-        val (minx, miny, maxx, maxy) = win.bounds(affine)
-        ChipOut(bt.raster_id, bt.i, bt.j, bt.n_pages, bt.bad_text,
-          s"${bt.raster_id}_${bt.i}_${bt.j}.tif", minx, miny, maxx, maxy, img, mask)
+    val windowsLocal = windows.toArray
+    val rasterId = meta.raster_id
+    val chips = counted.as[(Int, Array[Int], Long, Long)].map { case (t, counts, nPages, badText) =>
+      val cell = windowsLocal(t)
+      val win = cell.window
+      // density → uint8 chip, skimage-style rescale to 1..255 over (0, max);
+      // counts past a narrower window's area stay 0
+      val mx = math.max(1, counts.max)
+      val img = new Array[Byte](win.width * win.height)
+      var k = 0
+      while (k < img.length) {
+        img(k) = ((counts(k).toDouble / mx) * 254.0 + 1.0).toInt.toByte
+        k += 1
       }
+      // extent mask from labels (M4) on this tile's window
+      val mask: Array[Byte] = labelsLocal match {
+        case None => Array.empty[Byte]
+        case Some(ls) =>
+          ChipPipeline.maskFromPolygons(ls.map(p => Geom.fromWkb(p._1)),
+            win, affine.forWindow(win), extentNoBorder = false,
+            wantBoundary = false, wantDistance = false)._1
+      }
+      val (minx, miny, maxx, maxy) = win.bounds(affine)
+      ChipOut(rasterId, cell.i, cell.j, nPages, badText,
+        s"${rasterId}_${cell.i}_${cell.j}.tif", minx, miny, maxx, maxy, img, mask)
+    }
     chips.toDF()
   }
 
@@ -245,10 +246,6 @@ object PagesTiling {
     } finally pending.unpersist()
   }
 
-  case class Bin(py: Int, px: Int, n: Long)
-  case class BinnedTile(raster_id: String, i: Int, j: Int, col_off: Int,
-                        row_off: Int, width: Int, height: Int,
-                        bins: Seq[Bin], n_pages: Long, bad_text: Long)
   case class ChipOut(raster_id: String, i: Int, j: Int, n_pages: Long,
                      bad_text: Long, filename: String,
                      minx: Double, miny: Double, maxx: Double, maxy: Double,

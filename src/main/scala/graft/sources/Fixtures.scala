@@ -1,6 +1,9 @@
 package graft.sources
 
+import com.fasterxml.jackson.core.io.NumberInput
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.locationtech.jts.geom.Geometry
 
 import graft.core.{Affine, Geom, SplitMix64, TileGrid, Window}
@@ -281,12 +284,8 @@ object Fixtures {
     val p1 = if (p0 < 0) -1 else indexOfBytes(html, PCloseBytes, p0 + 3)
     val ok = p0 >= 0 && p1 >= 0 && {
       val n = p1 - (p0 + 3)
-      text.numBytes == n && {
-        var i = 0
-        var eq = true
-        while (eq && i < n) { eq = text.getByte(i) == html(p0 + 3 + i); i += 1 }
-        eq
-      }
+      text.numBytes == n && ByteArrayMethods.arrayEquals(text.getBaseObject,
+        text.getBaseOffset, html, Platform.BYTE_ARRAY_OFFSET + p0 + 3, n)
     }
     (lat, lon, ok)
   }
@@ -329,11 +328,13 @@ object Fixtures {
     -1
   }
 
-  /** Exactly Double.parseDouble of the ASCII slice (same rounding as the
-    * String path — the slice is tiny, so the one small alloc is fine). */
+  /** Exactly Double.parseDouble of the ASCII slice: jackson-core's fast
+    * parser accepts the same syntax and rounds identically, without the
+    * JDK's big-integer slow path on 17-digit values (the slice is tiny, so
+    * the one small String alloc is fine). */
   private def asciiToDouble(b: Array[Byte], from: Int, until: Int): Double =
-    java.lang.Double.parseDouble(new String(b, from, until - from,
-      java.nio.charset.StandardCharsets.US_ASCII))
+    NumberInput.parseDouble(new String(b, from, until - from,
+      java.nio.charset.StandardCharsets.US_ASCII), true)
 
   /** html[from, until) equals `text`'s UTF-8 BYTES? text_ok is
     * byte-equality-defined — identical to the codegen UTF8String path, so a

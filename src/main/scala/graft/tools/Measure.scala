@@ -180,7 +180,7 @@ object Measure {
 
   /** Hot-cell skew evidence: 90% of pages land in ONE res-16 cell. The
     * flagship's default broadcast join is skew-immune (the pages side never
-    * shuffles by cell, and the two-level aggregation pre-combines
+    * shuffles by cell, and the per-tile pixel counts pre-combine
     * map-side), so `spark` must have broadcast OFF, forcing the shuffle join
     * path; compares salt=1 (hot key on one reducer) vs salt=8 (hot key
     * split 8 ways) plus the max task time, as one JSON line. */

@@ -75,10 +75,21 @@ class PlanShapeSpec extends AnyFunSuite {
       Fixtures.luxMeta(), labels = Some(labels))
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"), "cell join must broadcast the tile cover")
-    // two-level density agg: a partial HashAggregate must exist below the
-    // exchange (map-side combine bounds shuffle rows at 16k/tile)
+    // density agg: a partial aggregate must exist below the exchange
+    // (map-side combine bounds shuffle records at one per task and tile)
     assert("HashAggregate".r.findAllIn(p).size >= 2, "partial+final aggregation expected")
     assert(!p.contains("NestedLoop"))
+    // the pixel histogram is one tile-keyed aggregate: no aggregate groups
+    // on the pixel coordinates, and the only shuffle besides the tile
+    // cover's broadcast is the one into that aggregate
+    val aggKeys = "HashAggregate\\(keys=\\[([^\\]]*)\\]".r.findAllMatchIn(p).map(_.group(1)).toSeq
+    assert(aggKeys.nonEmpty, p.take(3000))
+    assert(aggKeys.forall(k => "\\bp[xy]#".r.findFirstIn(k).isEmpty),
+      s"aggregate grouped on a pixel coordinate: ${aggKeys.mkString(" | ")}")
+    val exchanges = p.linesIterator.filter(_.contains("Exchange")).toSeq
+    assert(exchanges.count(_.contains("BroadcastExchange")) == 1, exchanges.mkString("\n"))
+    assert(exchanges.count(!_.contains("BroadcastExchange")) == 1,
+      "expected ONE shuffle exchange:\n" + exchanges.mkString("\n"))
   }
 
   test("semdedup: cluster-local pairs via bucket equi-join, never all-pairs") {

@@ -48,6 +48,44 @@ class GeoExtractFuzzSpec extends AnyFunSuite {
     assert(la == -12.25 && lo == 33.5 && !ok)
   }
 
+  test("odd numeric literals: lat/lon are the JDK's parseDouble of the tag slice, bit for bit") {
+    // an oracle independent of the shared tag parser: the JDK itself, with
+    // NaN for both coordinates wherever it throws on either slice
+    val odd = Seq(" 1.5", "1.5 ", "\t2.25\n", "+1.5", "-0", "-0.0", "0", "1e5", "1E-5",
+      "-2.5e+3", "1e", "e5", "0x1p3", "0x1.8p1", "-0X.8P-2", "0x", "0x1.8", "NaN", "-NaN",
+      "Infinity", "-Infinity", "+Infinity", "infinity", "1.5d", "1.5f", "2D", "3F", "1.5dd",
+      "4.9e-324", "2.4703282292062327e-324", "2.2250738585072011e-308", "1e-400", "1e400",
+      "-1e400", "", ".", "1.", ".5", "1..2", "--1", "1_000", "abc", "1.5\u00e9",
+      "0.30000000000000004", "9007199254740993", "179769313486231580793728971405303415079e270")
+    val mantissas = Seq("50.109582385123456", "6.0012345678901234", "1.2345678901234567890",
+      "123456789012345678", "1234567890123456789", "-12.3456789012345678",
+      "2.50000000000000000001", "0.1000000000000000055511151231257827") ++ {
+      val r = new scala.util.Random(7)
+      Seq.fill(300) {
+        val digits = Seq.fill(17 + r.nextInt(3))(('0' + r.nextInt(10)).toChar).mkString
+        val dot = r.nextInt(digits.length + 1)
+        val sign = if (r.nextBoolean()) "-" else ""
+        val exp = if (r.nextInt(3) == 0) s"e${r.nextInt(40) - 20}" else ""
+        s"$sign${digits.take(dot)}.${digits.drop(dot)}$exp"
+      }
+    }
+    def jdk(s: String): Option[Double] =
+      try Some(java.lang.Double.parseDouble(s)) catch { case _: NumberFormatException => None }
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+    for (x <- odd ++ mantissas; (lat, lon) <- Seq((x, "6.125"), ("50.0625", x))) {
+      val html = s"""<meta name="geo.position" content="$lat;$lon"><p>t</p>"""
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val (wantLat, wantLon) = (jdk(lat), jdk(lon)) match {
+        case (Some(a), Some(b)) => (a, b)
+        case _ => (Double.NaN, Double.NaN)
+      }
+      for ((gotLat, gotLon, _) <- Seq(Fixtures.extractGeoAndCheck(html, "t"),
+             Fixtures.extractGeoAndCheckU8(html, UTF8String.fromString("t"))))
+        assert(bits(gotLat) == bits(wantLat) && bits(gotLon) == bits(wantLon),
+          s"tag '$lat;$lon': got ($gotLat, $gotLon), the JDK reads ($wantLat, $wantLon)")
+    }
+  }
+
   test("random byte soup: never throws, variants agree") {
     for (_ <- 1 to 2000) {
       val n = rng.nextInt(200)

@@ -30,8 +30,10 @@ final class Config(env: Map[String, String]) {
   val aqe: Boolean = !env.get("SPARK_GRAFT_AQE").contains("0")
   /** `SPARK_GRAFT_FLAGSHIP_ONLY` (any value): Bench skips the catalog. */
   val flagshipOnly: Boolean = env.contains("SPARK_GRAFT_FLAGSHIP_ONLY")
-  /** `SPARK_GRAFT_ONLY=q1,q2`: Verify dumps only the named queries. */
-  val only: Option[Set[String]] = env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+  /** `SPARK_GRAFT_ONLY=q1,q2`: Verify dumps only the named queries and
+    * their oracles (names trimmed, empty names dropped). */
+  val only: Option[Set[String]] =
+    env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
   /** `SPARK_GRAFT_MASTER`: the CLI's master URL (default `local[cpus]`). */
   val master: Option[String] = env.get("SPARK_GRAFT_MASTER")
 

@@ -158,11 +158,6 @@ object QueryCatalog {
          |JOIN a$iters a ON a.node = n.node""".stripMargin
   }
 
-  /** Convex-fill oracle: the identical bbox index bounds (computed by the
-    * same driver arithmetic), the identical half-plane trees over cell
-    * CENTERS, and a direct xi/yi interleave where the engine re-encodes
-    * the center through cell_id — equal because a center sits 0.5 index
-    * units from every floor boundary. */
   /** Shared IVFADC oracle CTE chain (coarse assign, residual encode,
     * ADC lut with the sub-0 |r_q|² bias, scored + ranked as `rk`) — the
     * ivfpq_topk and ivfpq_rerank oracles both build on it. */
@@ -229,71 +224,43 @@ object QueryCatalog {
          |  row_number() OVER (PARTITION BY qid ORDER BY dist_u, vec_id) AS rank
          | FROM sc)""".stripMargin
 
-  private def polygonFillSql(res: Int): String = {
-    import graft.core.CellIndex
-    val lons = pipPentagon.map(_._1); val lats = pipPentagon.map(_._2)
-    val x0 = CellIndex.xIndex(lons.min, res); val x1 = CellIndex.xIndex(lons.max, res)
-    val y0 = CellIndex.yIndex(lats.max, res); val y1 = CellIndex.yIndex(lats.min, res)
-    val w = x1 - x0 + 1; val h = y1 - y0 + 1
+  /** Polygon-fill oracle: every cell of the res grid (no bbox, no cover
+    * machinery) whose CENTER passes [[insideSql]], encoded by a direct
+    * xi/yi interleave where the engine re-encodes the center through
+    * cell_id — equal because a center sits 0.5 index units from every
+    * floor boundary. */
+  private def polygonFillSql(poly: Seq[(Double, Double)], res: Int): String = {
     val n = (1L << res).toDouble
-    val ring = pipPentagon :+ pipPentagon.head
-    val conds = ring.sliding(2).map { case Seq((ax, ay), (bx, by)) =>
-      s"((($bx) - ($ax)) * (latc - ($ay)) - (($by) - ($ay)) * (lonc - ($ax))) > 0.0"
-    }.mkString("\n   AND ")
-    s"""WITH g AS (SELECT $x0 + (i.i % $w) AS xi, $y0 + (i.i // $w) AS yi
-       | FROM range(0, ${w * h}) i(i)),
-       |c AS (SELECT xi, yi,
+    s"""WITH c AS (SELECT xi, yi,
        |  (CAST(xi AS DOUBLE) + 0.5) / $n * 360.0 - 180.0 AS lonc,
-       |  90.0 - (CAST(yi AS DOUBLE) + 0.5) / $n * 180.0 AS latc FROM g),
-       |f AS (SELECT xi, yi FROM c
-       | WHERE $conds)
-       |SELECT ${sqlInterleave("xi", "yi", res)} AS cell FROM f""".stripMargin
+       |  90.0 - (CAST(yi AS DOUBLE) + 0.5) / $n * 180.0 AS latc
+       | FROM range(0, ${1L << res}) xs(xi), range(0, ${1L << res}) ys(yi))
+       |SELECT ${sqlInterleave("xi", "yi", res)} AS cell FROM c
+       |WHERE ${insideSql(poly, "latc", "lonc")}""".stripMargin
   }
 
-  /** Concave-fill oracle: the SAME driver-side ear-clipping triangulation
-    * ([[graft.operators.CellOps.triangulate]] — a pure function of the
-    * literal ring) emits per-triangle half-plane conjunctions (ring edges
-    * strict, internal diagonals closed), OR-ed over triangles; every
-    * operand is the identical double literal, so both engines evaluate
-    * the same IEEE trees. */
-  private def polygonFillConcaveSql(poly: Seq[(Double, Double)], res: Int): String = {
-    import graft.core.CellIndex
-    val lons = poly.map(_._1); val lats = poly.map(_._2)
-    val x0 = CellIndex.xIndex(lons.min, res); val x1 = CellIndex.xIndex(lons.max, res)
-    val y0 = CellIndex.yIndex(lats.max, res); val y1 = CellIndex.yIndex(lats.min, res)
-    val w = x1 - x0 + 1; val h = y1 - y0 + 1
-    val n = (1L << res).toDouble
-    def edge(a: (Double, Double), b: (Double, Double), orig: Boolean): String = {
-      val op = if (orig) ">" else ">="
-      s"(((${b._1}) - (${a._1})) * (latc - (${a._2})) - ((${b._2}) - (${a._2})) * (lonc - (${a._1}))) $op 0.0"
-    }
-    val conds = graft.operators.CellOps.triangulate(poly).map { t =>
-      s"""(${edge(t.a, t.b, t.origAB)}
-         |   AND ${edge(t.b, t.c, t.origBC)}
-         |   AND ${edge(t.c, t.a, t.origCA)})""".stripMargin
-    }.mkString("\n  OR ")
-    s"""WITH g AS (SELECT $x0 + (i.i % $w) AS xi, $y0 + (i.i // $w) AS yi
-       | FROM range(0, ${w * h}) i(i)),
-       |c AS (SELECT xi, yi,
-       |  (CAST(xi AS DOUBLE) + 0.5) / $n * 360.0 - 180.0 AS lonc,
-       |  90.0 - (CAST(yi AS DOUBLE) + 0.5) / $n * 180.0 AS latc FROM g),
-       |f AS (SELECT xi, yi FROM c
-       | WHERE $conds)
-       |SELECT ${sqlInterleave("xi", "yi", res)} AS cell FROM f""".stripMargin
-  }
-
-  /** Strict-interior SQL predicate for a point (`latE`, `lonE`) in `poly`
-    * — the SQL twin of [[graft.operators.CellOps.insidePredicate]]: the
-    * same deterministic triangulation, the same strict/closed edge
-    * classes, identical IEEE trees. */
+  /** Strict-interior SQL predicate for a point (`latE`, `lonE`) in the
+    * simple ring `poly`, written from the textbook definitions alone:
+    * the parity of the ring's crossings strictly right of the point on its
+    * latitude (PNPOLY: an edge counts iff exactly one endpoint lies above
+    * the point), and NOT on any edge (zero cross product inside the
+    * edge's bounding box). Vertices are DOUBLE literals, so DuckDB and the
+    * JVM subtract the same doubles. */
   private def insideSql(poly: Seq[(Double, Double)], latE: String, lonE: String): String = {
-    def edge(a: (Double, Double), b: (Double, Double), orig: Boolean): String = {
-      val op = if (orig) ">" else ">="
-      s"(((${b._1}) - (${a._1})) * ($latE - (${a._2})) - ((${b._2}) - (${a._2})) * ($lonE - (${a._1}))) $op 0.0"
-    }
-    graft.operators.CellOps.triangulate(poly).map { t =>
-      s"(${edge(t.a, t.b, t.origAB)} AND ${edge(t.b, t.c, t.origBC)} AND ${edge(t.c, t.a, t.origCA)})"
-    }.mkString("(", "\n  OR ", ")")
+    def d(v: Double) = s"CAST('$v' AS DOUBLE)"
+    val edges = (poly :+ poly.head).sliding(2).map { case Seq((x0, y0), (x1, y1)) =>
+      (d(x0), d(y0), d(x1), d(y1))
+    }.toSeq
+    val crossings = edges.map { case (x0, y0, x1, y1) =>
+      s"CASE WHEN ($y0 > $latE) <> ($y1 > $latE)" +
+        s" AND $lonE < $x0 + ($latE - $y0) / ($y1 - $y0) * ($x1 - $x0) THEN 1 ELSE 0 END"
+    }.mkString("\n   + ")
+    val onEdge = edges.map { case (x0, y0, x1, y1) =>
+      s"(($x1 - $x0) * ($latE - $y0) = ($y1 - $y0) * ($lonE - $x0)" +
+        s" AND $lonE BETWEEN LEAST($x0, $x1) AND GREATEST($x0, $x1)" +
+        s" AND $latE BETWEEN LEAST($y0, $y1) AND GREATEST($y0, $y1))"
+    }.mkString("\n   OR ")
+    s"(($crossings) % 2 = 1\n AND NOT ($onEdge))"
   }
 
   /** Unrolled cover-compaction oracle: per level, parents with all 4
@@ -517,20 +484,17 @@ object QueryCatalog {
       out.select("res", "cell", "n")
     }),
 
-    // convex polygon → cell fill (H3 polygonToCells, center-containment
-    // rule): bbox grid enumerated as one distributed range, half-plane
-    // inside test, centers re-encoded through the cell_id codegen path
-    "polygon_fill" -> ((s, _) => CellOps.convexFill(s, pipPentagon, res = 6)),
-
-    // concave (simple) polygon → cell fill: driver-side ear-clipping
-    // triangulation, then ONE bbox-grid scan testing the OR-of-triangles
-    // half-plane disjunction — closes the convex-only contract gap
+    // polygon → cell fill (H3 polygonToCells, center-containment rule):
+    // each bbox row's boundary crossings become column intervals on the
+    // driver, exploded into cells re-encoded through the cell_id codegen
+    // path — one scanline for the convex pentagon and the concave L
+    "polygon_fill" -> ((s, _) => CellOps.polygonFill(s, pipPentagon, res = 6)),
     "polygon_fill_concave" -> ((s, _) => CellOps.polygonFill(s, concaveL, res = 6)),
 
     // ---- G12: cell-indexed PIP join (cover classify + boundary sliver) ---
     // the production spatial-join pattern: the polygon's cover cells are
     // classified interior/boundary and broadcast; the corpus pays ONE cell
-    // equi-join, and the exact half-plane predicate runs only on points in
+    // equi-join, and the exact crossing predicate runs only on points in
     // boundary cells (the O(perimeter) sliver) — pip_aoi's whole-scan
     // predicate becomes index work. Result set is exactly the strict
     // interior regardless of the cover (coverClassify's margin guard), so
@@ -1610,7 +1574,7 @@ object QueryCatalog {
 
   /** Concave AOI fixture for polygon_fill_concave: an L-shaped CCW ring
     * with one reflex vertex — the shape class (admin boundaries,
-    * coastlines) the convex fill's contract excludes. Coordinates are
+    * coastlines) a convex-only fill would over-fill. Coordinates are
     * deliberately off any res-6 cell-center lattice line. */
   val concaveL: Seq[(Double, Double)] = Seq(
     (-130.271, -52.613), (110.438, -52.613), (110.438, 10.927),
@@ -1823,14 +1787,9 @@ object QueryCatalog {
          | ${sqlInterleave("nx", "ny", 8)} AS nbr
          |FROM nbrs""".stripMargin,
 
-    "pip_aoi" -> {
-      // convex polygon: interior = same side of every edge (CCW ⇒ cross > 0)
-      val pts = pipPentagon :+ pipPentagon.head
-      val edges = pts.sliding(2).map { case Seq((x1, y1), (x2, y2)) =>
-        s"(($x2 - $x1) * ($sqlLat - $y1) - ($y2 - $y1) * ($sqlLon - $x1)) > 0"
-      }.mkString(" AND ")
-      s"SELECT doc_id FROM documents WHERE $edges"
-    },
+    // JTS `contains` is the strict interior
+    "pip_aoi" ->
+      s"SELECT doc_id FROM documents WHERE ${insideSql(pipPentagon, sqlLat, sqlLon)}",
 
     "spatial_join_tiles" ->
       s"""WITH grid AS ($sqlTileGrid)
@@ -3029,9 +2988,9 @@ object QueryCatalog {
 
     "cell_compact" -> cellCompactSql(8, 4),
 
-    "polygon_fill" -> polygonFillSql(6),
+    "polygon_fill" -> polygonFillSql(pipPentagon, 6),
 
-    "polygon_fill_concave" -> polygonFillConcaveSql(concaveL, 6),
+    "polygon_fill_concave" -> polygonFillSql(concaveL, 6),
 
     // Independent check of the cell-indexed join: a plain whole-table
     // predicate scan — the cover/boundary machinery must be invisible in

@@ -12,11 +12,11 @@ object Verify {
     val conf = Config.fromEnv
     val spark = Config.session(conf.cpus)
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=q1,q2 restricts the dump to named queries — a fast
-    // targeted loop while iterating (the driver never sets it: full dump)
-    val only = conf.only
+    // SPARK_GRAFT_ONLY=q1,q2 restricts the dump and oracle_sql.json to the
+    // named queries — a fast targeted loop while iterating (unset: all)
+    def wanted(name: String): Boolean = conf.only.forall(_.contains(name))
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => wanted(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -41,6 +41,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => wanted(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -35,8 +35,39 @@ object Rasterize {
       }
   }
 
+  /** Sorted x positions where the closed `rings` cross the horizontal line
+    * y = `yc` — the one polygon-interior kernel (Raptor-style: boundary
+    * crossings per row, turned into intervals by the caller). An edge
+    * counts iff its endpoints straddle `yc` half-open (y0 <= yc < y1 or
+    * y1 <= yc < y0), so a vertex shared by two edges counts once, or twice
+    * at a local minimum, and horizontal edges never count; the count is
+    * therefore even and a point off the boundary is inside iff it lies
+    * between crossings 2k and 2k+1 (even-odd, holes included). */
+  def rowCrossings(rings: Seq[Array[(Double, Double)]], yc: Double): Array[Double] = {
+    var xs = new Array[Double](8)
+    var n = 0
+    rings.foreach { coords =>
+      var i = 0
+      while (i < coords.length - 1) {
+        val (x0, y0) = coords(i)
+        val (x1, y1) = coords(i + 1)
+        if ((y0 <= yc && y1 > yc) || (y1 <= yc && y0 > yc)) {
+          if (n == xs.length) xs = java.util.Arrays.copyOf(xs, 2 * n)
+          xs(n) = x0 + (yc - y0) / (y1 - y0) * (x1 - x0)
+          n += 1
+        }
+        i += 1
+      }
+    }
+    val out = java.util.Arrays.copyOf(xs, n)
+    java.util.Arrays.sort(out)
+    out
+  }
+
   /** Even-odd scanline fill: all rings of ONE polygon participate together,
-    * so holes un-fill (GDAL passes all rings of a polygon as one part set). */
+    * so holes un-fill (GDAL passes all rings of a polygon as one part set).
+    * Row `row` samples y = row + 0.5 and burns the pixels whose center x
+    * lies in [xA, xB) for each crossing pair. */
   private def burnRings(rings: Seq[LineString], t: Affine, w: Int, h: Int,
                         value: Byte, out: Array[Byte]): Unit = {
     // ring coords → pixel space
@@ -45,33 +76,13 @@ object Rasterize {
     }
     var row = 0
     while (row < h) {
-      val yc = row + 0.5
-      val xs = scala.collection.mutable.ArrayBuffer.empty[Double]
-      parts.foreach { coords =>
-        var i = 0
-        while (i < coords.length - 1) {
-          val (x0, y0) = coords(i)
-          val (x1, y1) = coords(i + 1)
-          // half-open rule on y so shared vertices count once
-          if ((y0 <= yc && y1 > yc) || (y1 <= yc && y0 > yc)) {
-            xs += x0 + (yc - y0) / (y1 - y0) * (x1 - x0)
-          }
-          i += 1
-        }
-      }
-      if (xs.nonEmpty) {
-        val sorted = xs.sorted
-        var k = 0
-        while (k + 1 < sorted.length) {
-          // burn pixels with center in [xA, xB)
-          val xA = sorted(k); val xB = sorted(k + 1)
-          var col = math.ceil(xA - 0.5).toInt
-          val end = math.ceil(xB - 0.5).toInt
-          if (col < 0) col = 0
-          val stop = math.min(end, w)
-          while (col < stop) { out(row * w + col) = value; col += 1 }
-          k += 2
-        }
+      val xs = rowCrossings(parts, row + 0.5)
+      var k = 0
+      while (k + 1 < xs.length) {
+        var col = math.max(math.ceil(xs(k) - 0.5).toInt, 0)
+        val stop = math.min(math.ceil(xs(k + 1) - 0.5).toInt, w)
+        while (col < stop) { out(row * w + col) = value; col += 1 }
+        k += 2
       }
       row += 1
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.CellIndex
+import graft.core.{CellIndex, Rasterize}
 
 /** Relational operators over the hierarchical cell index
   * ([[graft.core.CellIndex]]) beyond per-row encode/cover/ring — the
@@ -19,165 +19,130 @@ object CellOps {
     }.sum / 2.0
   }
 
-  /** Normalize a ring to CCW winding via the shoelace sign, so the strict
-    * cross > 0 half-plane tests below always mean INSIDE — a clockwise
-    * input is reversed instead of silently yielding an empty fill
-    * (round-7 advice); a degenerate zero-area ring fails loudly. */
-  private def ccw(poly: Seq[(Double, Double)]): Seq[(Double, Double)] = {
-    val a = signedArea(poly)
-    require(a != 0.0, "polygon ring has zero signed area")
-    if (a > 0) poly else poly.reverse
+  /** The closed form of a simple ring; a ring with fewer than 3 vertices
+    * or zero signed area fails loudly. Winding is free: the even-odd
+    * scanline reads CW and CCW rings alike. */
+  private def closedRing(poly: Seq[(Double, Double)]): Array[(Double, Double)] = {
+    require(poly.size >= 3, "need a polygon")
+    require(signedArea(poly) != 0.0, "polygon ring has zero signed area")
+    (poly :+ poly.head).toArray
   }
 
-  /** One ear-clipped triangle (vertices CCW). origAB/origBC/origCA mark
-    * whether that edge lies on the ORIGINAL ring (strict half-plane — the
-    * boundary-exclusive center rule) or is an internal diagonal (closed
-    * half-plane: a center exactly on a shared diagonal is strictly inside
-    * the polygon and must be claimed by the triangles the diagonal bounds,
-    * not dropped between two strict interiors). With that closure the
-    * union of triangle tests is EXACTLY the strict interior of the
-    * polygon — within a triangle, the line through a ring edge intersects
-    * the triangle only along the edge segment itself, so the strict test
-    * never excludes an interior point. */
-  final case class Tri(a: (Double, Double), b: (Double, Double), c: (Double, Double),
-                       origAB: Boolean, origBC: Boolean, origCA: Boolean)
-
-  /** Deterministic ear-clipping triangulation of a SIMPLE ring (no holes,
-    * no repeated closing vertex): always clips the first valid ear in ring
-    * order, so the triangle list — and therefore the SQL the oracle
-    * generator derives from it — is a pure function of the input. AOIs are
-    * small by contract (tens of vertices), so the O(n³) driver cost is
-    * noise; the distributed work downstream is unchanged. Consecutive
-    * collinear vertices are rejected: clipping one would replace two ring
-    * edges by a diagonal lying ON the boundary, and the strict/closed edge
-    * classification would misread it. */
-  def triangulate(polyIn: Seq[(Double, Double)]): Seq[Tri] = {
-    val poly = ccw(polyIn)
-    val n = poly.size
-    require(n >= 3, "need a polygon")
-    def cross(a: (Double, Double), b: (Double, Double), p: (Double, Double)): Double =
-      (b._1 - a._1) * (p._2 - a._2) - (b._2 - a._2) * (p._1 - a._1)
-    def isOrig(i: Int, j: Int): Boolean = (i + 1) % n == j
-    val idx = scala.collection.mutable.ArrayBuffer.range(0, n)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Tri]
-    while (idx.size > 3) {
-      val m = idx.size
-      var clipped = false
-      var k = 0
-      while (k < m && !clipped) {
-        val ip = idx((k + m - 1) % m); val ic = idx(k); val in2 = idx((k + 1) % m)
-        val (a, b, c) = (poly(ip), poly(ic), poly(in2))
-        val cr = cross(a, b, c)
-        require(cr != 0.0,
-          s"triangulate: collinear consecutive vertices at ring index $ic")
-        if (cr > 0) {
-          // a convex corner is an ear iff no other remaining vertex sits in
-          // the CLOSED candidate triangle (closed so touching reflex
-          // vertices block the clip instead of producing a crossing edge)
-          val blocked = idx.exists { j =>
-            j != ip && j != ic && j != in2 && {
-              val p = poly(j)
-              cross(a, b, p) >= 0 && cross(b, c, p) >= 0 && cross(c, a, p) >= 0
-            }
-          }
-          if (!blocked) {
-            out += Tri(a, b, c, isOrig(ip, ic), isOrig(ic, in2), isOrig(in2, ip))
-            idx.remove(k)
-            clipped = true
-          }
-        }
-        k += 1
-      }
-      require(clipped, "triangulate: no ear found (ring is not simple)")
+  /** The index cells of a polygon's bbox at `res`, capped by MaxCoverCells,
+    * with the driver twins of the center Columns in [[centerCell]]. */
+  private final class Grid(poly: Seq[(Double, Double)], res: Int) {
+    val n: Double = (1L << res).toDouble
+    val x0: Long = CellIndex.xIndex(poly.map(_._1).min, res)
+    val x1: Long = CellIndex.xIndex(poly.map(_._1).max, res)
+    val y0: Long = CellIndex.yIndex(poly.map(_._2).max, res)
+    val y1: Long = CellIndex.yIndex(poly.map(_._2).min, res)
+    require((x1 - x0 + 1) * (y1 - y0 + 1) <= CellIndex.MaxCoverCells,
+      s"polygon fill: bbox covers ${(x1 - x0 + 1) * (y1 - y0 + 1)} cells at res=$res " +
+        s"(cap ${CellIndex.MaxCoverCells})")
+    def lonC(xi: Long): Double = (xi + 0.5) / n * 360.0 - 180.0
+    def latC(yi: Long): Double = 90.0 - (yi + 0.5) / n * 180.0
+    /** The first bbox column whose center longitude is > `v` (≥ `v` when
+      * not `strict`), x1 + 1 if none — exact against [[lonC]]. */
+    def colAbove(v: Double, strict: Boolean): Long = {
+      def above(xi: Long) = if (strict) lonC(xi) > v else lonC(xi) >= v
+      var xi = math.min(math.max(CellIndex.xIndex(v, res), x0), x1 + 1)
+      while (xi > x0 && above(xi - 1)) xi -= 1
+      while (xi <= x1 && !above(xi)) xi += 1
+      xi
     }
-    val (i0, i1, i2) = (idx(0), idx(1), idx(2))
-    out += Tri(poly(i0), poly(i1), poly(i2),
-      isOrig(i0, i1), isOrig(i1, i2), isOrig(i2, i0))
-    out.toSeq
+    /** The bbox columns whose centers lie in the closed range [lo, hi]. */
+    def colsIn(lo: Double, hi: Double): (Long, Long) =
+      (colAbove(lo, strict = false), colAbove(hi, strict = true) - 1)
   }
 
-  /** The bbox candidate grid of a polygon at `res` plus the exact center
-    * coordinates — xi/yi enumerated as ONE distributed range (no
-    * cartesian), capped by MaxCoverCells. Shared by the convex and
-    * concave fills. */
-  private def bboxGrid(spark: SparkSession, poly: Seq[(Double, Double)],
-                       res: Int): (DataFrame, Column, Column) = {
-    val lons = poly.map(_._1); val lats = poly.map(_._2)
-    val x0 = CellIndex.xIndex(lons.min, res); val x1 = CellIndex.xIndex(lons.max, res)
-    val y0 = CellIndex.yIndex(lats.max, res); val y1 = CellIndex.yIndex(lats.min, res)
-    val w = x1 - x0 + 1; val h = y1 - y0 + 1
-    require(w * h <= CellIndex.MaxCoverCells,
-      s"polygon fill: bbox covers ${w * h} cells at res=$res (cap ${CellIndex.MaxCoverCells})")
+  /** The cell id of the center of cell (`xi`, `yi`) at `res`, re-encoded
+    * through the cell_id codegen Expression — the center sits 0.5 index
+    * units from every floor boundary, ~1e13 ulps of headroom, so the
+    * round-trip is bit-safe. */
+  private def centerCell(res: Int): Column = {
     val n = (1L << res).toDouble
-    val grid = spark.range(w * h).select(
-      (lit(x0) + col("id") % w).as("xi"),
-      (lit(y0) + expr(s"id div $w")).as("yi"))
     val lonC = (col("xi").cast("double") + lit(0.5)) / lit(n) * lit(360.0) - lit(180.0)
     val latC = lit(90.0) - (col("yi").cast("double") + lit(0.5)) / lit(n) * lit(180.0)
-    (grid, lonC, latC)
+    graft.functions.CellFunctions.cell_id(latC, lonC, lit(res))
   }
 
-  /** Fill a CONVEX polygon with index cells at `res` — the polygon form
-    * of [[graft.core.CellIndex.cellCover]] (H3 polygonToCells): the cells
-    * whose CENTER lies strictly inside the polygon, which is the standard
-    * center-containment fill rule. Candidates enumerate the bbox index
-    * grid as ONE distributed range (xi = x0 + id % w, yi = y0 + id div w
-    * — no cartesian), the inside test is the half-plane conjunction of
-    * the (CCW-normalized — see [[signedArea]]) ring (cross > 0 per edge;
-    * every operand is a literal or exactly-rounded IEEE arithmetic, so
-    * the oracle evaluates the identical tree), and surviving centers
-    * re-encode through the cell_id codegen Expression — the center sits
-    * 0.5 index units from every floor boundary, ~1e13 ulps of headroom,
-    * so the round-trip is bit-safe. Composes with [[compactCells]] for
-    * mixed-res covers of large AOIs. Convex-only by contract (concave
-    * AOIs use [[polygonFill]]); boundary-touching centers are excluded by
-    * the strict test on both engines. */
-  def convexFill(spark: SparkSession, poly: Seq[(Double, Double)],
-                 res: Int): DataFrame = {
-    require(poly.size >= 3, "need a polygon")
-    val ring0 = ccw(poly)
-    val (grid, lonC, latC) = bboxGrid(spark, ring0, res)
-    val ring = ring0 :+ ring0.head
-    val inside = ring.sliding(2).map { case Seq((ax, ay), (bx, by)) =>
-      ((lit(bx) - lit(ax)) * (latC - lit(ay)) -
-        (lit(by) - lit(ay)) * (lonC - lit(ax))) > lit(0.0)
-    }.reduce(_ && _)
-    grid.where(inside)
-      .select(graft.functions.CellFunctions.cell_id(latC, lonC, lit(res)).as("cell"))
+  /** Integer column intervals minus integer column intervals. */
+  private def subtract(spans: Seq[(Long, Long)], cuts: Seq[(Long, Long)]): Seq[(Long, Long)] =
+    cuts.filter(c => c._1 <= c._2).foldLeft(spans.filter(s => s._1 <= s._2)) {
+      case (acc, (c0, c1)) => acc.flatMap { case (s, e) =>
+        Seq((s, math.min(e, c0 - 1)), (math.max(s, c1 + 1), e)).filter(t => t._1 <= t._2)
+      }
+    }
+
+  /** Strict-interior cell centers of a closed ring, row by row: for each
+    * bbox row the crossings of its center latitude
+    * ([[graft.core.Rasterize.rowCrossings]]) pair into odd spans, a span
+    * (a, b) keeps the columns whose center is strictly inside it, and the
+    * centers ON the boundary at that latitude are cut out — horizontal
+    * edges and vertices, including a peak vertex that no edge counts as a
+    * crossing. Returns (yi, [(xlo, xhi)]) column intervals. */
+  private def insideSpans(ring: Array[(Double, Double)], g: Grid): Seq[(Long, Seq[(Long, Long)])] =
+    (g.y0 to g.y1).map { yi =>
+      val yc = g.latC(yi)
+      val spans = Rasterize.rowCrossings(Seq(ring), yc).grouped(2).map { ab =>
+        (g.colAbove(ab(0), strict = true), g.colAbove(ab(1), strict = false) - 1)
+      }.toSeq
+      val onRow = ring.sliding(2).flatMap { e =>
+        val xs = e.filter(_._2 == yc).map(_._1)
+        if (xs.isEmpty) None else Some(g.colsIn(xs.min, xs.max))
+      }.toSeq
+      yi -> subtract(spans, onRow)
+    }
+
+  /** One row per cell of (yi, xlo, xhi, interior) interval rows. */
+  private def explodeIntervals(spark: SparkSession, rows: Seq[(Long, Long, Long, Boolean)],
+                               res: Int): DataFrame = {
+    import spark.implicits._
+    rows.toDF("yi", "xlo", "xhi", "interior")
+      .select(col("yi"), explode(sequence(col("xlo"), col("xhi"))).as("xi"), col("interior"))
+      .select(centerCell(res).as("cell"), col("interior"))
+  }
+
+  /** Fill a SIMPLE polygon (concave included — admin boundaries,
+    * coastlines) with index cells at `res` — the polygon form of
+    * [[graft.core.CellIndex.cellCover]] (H3 polygonToCells): the cells
+    * whose CENTER lies strictly inside the polygon, the standard
+    * center-containment rule; centers on an edge or a vertex are excluded
+    * (JTS `contains`). Raptor-style: no per-cell polygon test — the driver
+    * turns each bbox row's boundary crossings into column intervals
+    * ([[insideSpans]]; cost O(rows × edges), AOIs are small by contract),
+    * and the (yi, xlo, xhi) rows explode into cells re-encoded at their
+    * centers. Composes with [[compactCells]] for mixed-res covers of large
+    * AOIs. */
+  def polygonFill(spark: SparkSession, poly: Seq[(Double, Double)],
+                  res: Int): DataFrame = {
+    val rows = for {
+      (yi, spans) <- insideSpans(closedRing(poly), new Grid(poly, res))
+      (lo, hi) <- spans
+    } yield (yi, lo, hi, true)
+    explodeIntervals(spark, rows, res).select("cell")
   }
 
   /** Strict-interior membership of point (`lat`, `lon`) in a SIMPLE
-    * polygon, as a Column predicate: the disjunction over the
-    * [[triangulate]]d triangles of their half-plane conjunctions (ring
-    * edges strict, internal diagonals closed — see [[Tri]]; the union is
-    * exactly the strict interior). Every operand is a literal or
-    * exactly-rounded IEEE arithmetic, so a SQL oracle can evaluate the
-    * identical tree. Shared by [[polygonFill]] (over cell centers) and
-    * the cell-indexed PIP join (over boundary-cell points). */
+    * polygon, as a Column predicate: the crossing number of the ray to
+    * +lon with the crossings of [[graft.core.Rasterize.rowCrossings]] (the
+    * same half-open straddle rule and the same crossing expression, so a
+    * cell center gets the same answer as in [[polygonFill]]), odd = inside,
+    * and any point on the boundary — a crossing equal to `lon`, a vertex,
+    * a horizontal edge — is outside. */
   def insidePredicate(poly: Seq[(Double, Double)], lat: Column, lon: Column): Column = {
-    def edge(a: (Double, Double), b: (Double, Double), orig: Boolean): Column = {
-      val cr = (lit(b._1) - lit(a._1)) * (lat - lit(a._2)) -
-        (lit(b._2) - lit(a._2)) * (lon - lit(a._1))
-      if (orig) cr > lit(0.0) else cr >= lit(0.0)
-    }
-    triangulate(poly).map { t =>
-      edge(t.a, t.b, t.origAB) && edge(t.b, t.c, t.origBC) && edge(t.c, t.a, t.origCA)
-    }.reduce(_ || _)
-  }
-
-  /** Fill an arbitrary SIMPLE polygon (concave included — admin
-    * boundaries, coastlines) with index cells at `res`: driver-side
-    * ear-clipping triangulation ([[triangulate]] — AOIs are small by
-    * contract), then ONE bbox-grid scan testing [[insidePredicate]] on
-    * cell centers. Same scale shape as [[convexFill]]: the triangle count
-    * multiplies the per-row predicate cost, never the row count, and the
-    * single distributed range replaces any per-triangle union —
-    * no rescans, no dedup join. */
-  def polygonFill(spark: SparkSession, poly: Seq[(Double, Double)],
-                  res: Int): DataFrame = {
-    val (grid, lonC, latC) = bboxGrid(spark, poly, res)
-    grid.where(insidePredicate(poly, latC, lonC))
-      .select(graft.functions.CellFunctions.cell_id(latC, lonC, lit(res)).as("cell"))
+    val edges = closedRing(poly).sliding(2).map(e => (e(0), e(1))).toSeq
+    val (crossings, onBoundary) = edges.map { case ((x0, y0), (x1, y1)) =>
+      if (y0 == y1)
+        (lit(0), lat === lit(y0) && lon.between(math.min(x0, x1), math.max(x0, x1)))
+      else {
+        val straddles = (lit(y0) <= lat && lit(y1) > lat) || (lit(y1) <= lat && lit(y0) > lat)
+        val x = lit(x0) + (lat - lit(y0)) / lit(y1 - y0) * lit(x1 - x0)
+        (when(straddles && x > lon, 1).otherwise(0),
+          (straddles && x === lon) || (lat === lit(y0) && lon === lit(x0)))
+      }
+    }.unzip
+    crossings.reduce(_ + _) % 2 === 1 && !onBoundary.reduce(_ || _)
   }
 
   /** Classified cell cover of a SIMPLE polygon at `res` — the index-side
@@ -190,60 +155,51 @@ object CellOps {
     * test on only the O(perimeter) boundary sliver — the corpus never
     * evaluates the polygon predicate row by row.
     *
-    * Soundness under IEEE rounding is margin-guarded by `eps`: a cell is
-    * marked interior only when all 4 corners clear every edge of some
-    * one triangle by > eps, and kept as a candidate whenever any corner
-    * comes within eps of any triangle (per-edge max-corner separating
-    * test + bbox overlap with eps slack). The cross terms are products
-    * of |coords| ≤ 360 doubles (absolute rounding error ≲ 1e-10), so
-    * eps = 1e-6 means misrounding can only demote interior cells to
-    * boundary (extra exact tests) or keep outside cells as candidates
-    * (filtered by the exact test) — never change the result set. The
-    * result set is therefore EXACTLY the strict interior, independent of
-    * the cover construction, which is what lets an oracle check the join
-    * with a plain whole-table predicate scan.
+    * Boundary cells are those an edge grown by `eps` passes through: per
+    * cell row band the edge's y-range is clipped to the band (± eps), the
+    * edge's x over that clip (± eps) gives a column interval. Interior
+    * cells are the [[polygonFill]] centers outside every boundary cell: a
+    * cell no edge touches lies wholly on its center's side. Soundness under
+    * IEEE rounding is margin-guarded by `eps`: the crossing and index
+    * arithmetic on |coords| ≤ 360 doubles is off by ≲ 1e-10, so eps = 1e-6
+    * means misrounding can only demote interior cells to boundary (extra
+    * exact tests) or keep outside cells as candidates (filtered by the
+    * exact test) — never change the result set. The result set is
+    * therefore EXACTLY the strict interior, independent of the cover
+    * construction, which is what lets an oracle check the join with a
+    * plain whole-table predicate scan.
     *
-    * Scale shape: the bbox grid is ONE distributed range (capped by
-    * MaxCoverCells) and the output is broadcast-sized by construction;
-    * candidate filtering multiplies the per-row predicate cost by the
-    * triangle count, never the row count. */
+    * Scale shape: O(rows × edges) interval arithmetic on the driver; the
+    * output is broadcast-sized by construction (capped by MaxCoverCells). */
   def coverClassify(spark: SparkSession, poly: Seq[(Double, Double)],
                     res: Int, eps: Double = 1e-6): DataFrame = {
-    val tris = triangulate(poly)
-    val (grid, lonC, latC) = bboxGrid(spark, poly, res)
-    val n = (1L << res).toDouble
-    val lonLo = col("xi").cast("double") / lit(n) * lit(360.0) - lit(180.0)
-    val lonHi = (col("xi").cast("double") + lit(1.0)) / lit(n) * lit(360.0) - lit(180.0)
-    val latHi = lit(90.0) - col("yi").cast("double") / lit(n) * lit(180.0)
-    val latLo = lit(90.0) - (col("yi").cast("double") + lit(1.0)) / lit(n) * lit(180.0)
-    val corners = Seq((lonLo, latLo), (lonLo, latHi), (lonHi, latLo), (lonHi, latHi))
-    def cross(a: (Double, Double), b: (Double, Double), x: Column, y: Column): Column =
-      (lit(b._1) - lit(a._1)) * (y - lit(a._2)) - (lit(b._2) - lit(a._2)) * (x - lit(a._1))
-    def triEdges(t: Tri) = Seq((t.a, t.b), (t.b, t.c), (t.c, t.a))
-    // fully inside t: all 4 corners clear all 3 edges by > eps ⇒ the cell
-    // (the corner hull) sits in t's closed interior ⇒ in the polygon's
-    // strict interior (ring edges cleared strictly with margin)
-    val interior = tris.map { t =>
-      triEdges(t).map { case (a, b) =>
-        corners.map { case (x, y) => cross(a, b, x, y) > lit(eps) }.reduce(_ && _)
-      }.reduce(_ && _)
-    }.reduce(_ || _)
-    // candidate for t: bbox overlap (eps slack) and, per edge, SOME corner
-    // not separated (max corner cross > -eps) — the separating-axis test
-    // for a convex triangle vs an axis-aligned box, margin-relaxed so any
-    // strictly-inside point's cell always survives
-    val cand = tris.map { t =>
-      val xs = Seq(t.a._1, t.b._1, t.c._1); val ys = Seq(t.a._2, t.b._2, t.c._2)
-      val bbox = lonLo <= lit(xs.max + eps) && lonHi >= lit(xs.min - eps) &&
-        latLo <= lit(ys.max + eps) && latHi >= lit(ys.min - eps)
-      val axes = triEdges(t).map { case (a, b) =>
-        corners.map { case (x, y) => cross(a, b, x, y) }.reduce(greatest(_, _)) > lit(-eps)
-      }.reduce(_ && _)
-      bbox && axes
-    }.reduce(_ || _)
-    grid.where(cand)
-      .select(graft.functions.CellFunctions.cell_id(latC, lonC, lit(res)).as("cell"),
-        interior.as("interior"))
+    val ring = closedRing(poly)
+    val g = new Grid(poly, res)
+    def clampRow(yi: Long) = math.min(math.max(yi, g.y0), g.y1)
+    def clampCol(xi: Long) = math.min(math.max(xi, g.x0), g.x1)
+    val touched = ring.sliding(2).flatMap { e =>
+      val ((ax, ay), (bx, by)) = (e(0), e(1))
+      val (ylo, yhi) = (math.min(ay, by), math.max(ay, by))
+      (clampRow(CellIndex.yIndex(yhi + eps, res)) to clampRow(CellIndex.yIndex(ylo - eps, res)))
+        .map { yi =>
+          val lo = math.max(ylo, 90.0 - (yi + 1) / g.n * 180.0 - eps)
+          val hi = math.min(yhi, 90.0 - yi / g.n * 180.0 + eps)
+          val xs = if (ay == by) Seq(ax, bx)
+            else Seq(lo, hi).map(y => ax + (y - ay) / (by - ay) * (bx - ax))
+          yi -> (clampCol(CellIndex.xIndex(xs.min - eps, res)),
+            clampCol(CellIndex.xIndex(xs.max + eps, res)))
+        }
+    }.toSeq.groupMap(_._1)(_._2)
+    val rows = insideSpans(ring, g).flatMap { case (yi, spans) =>
+      // merge the row's boundary intervals so every cell appears once
+      val bnd = touched.getOrElse(yi, Nil).sortBy(_._1).foldLeft(List.empty[(Long, Long)]) {
+        case ((s, e) :: rest, (a, b)) if a <= e + 1 => (s, math.max(e, b)) :: rest
+        case (acc, span) => span :: acc
+      }
+      bnd.map { case (lo, hi) => (yi, lo, hi, false) } ++
+        subtract(spans, bnd).map { case (lo, hi) => (yi, lo, hi, true) }
+    }
+    explodeIntervals(spark, rows, res)
   }
 
   /** Global Moran's I spatial autocorrelation over per-cell point counts
@@ -326,9 +282,6 @@ object CellOps {
     * (it feeds both the scatter and the final gather) — usual cache
     * contract: caller clearCache after the terminal action. */
   def cellFocal(points: DataFrame, res: Int): DataFrame = {
-    val n = (1L << res).toDouble
-    val lonC = (col("xi").cast("double") + lit(0.5)) / lit(n) * lit(360.0) - lit(180.0)
-    val latC = lit(90.0) - (col("yi").cast("double") + lit(0.5)) / lit(n) * lit(180.0)
     val hist = gridCounts(points, res)
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
     val offs = Seq((-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 0), (0, 1),
@@ -342,8 +295,7 @@ object CellOps {
       .agg(sum("x").as("focal_sum"), count(lit(1)).as("focal_n"))
     hist.join(contrib,
         col("xi") === col("nxi") && col("yi") === col("nyi"))
-      .select(graft.functions.CellFunctions.cell_id(latC, lonC, lit(res)).as("cell"),
-        col("x"), col("focal_sum"), col("focal_n"))
+      .select(centerCell(res).as("cell"), col("x"), col("focal_sum"), col("focal_n"))
   }
 
   /** Grid-density hotspot clusters — DBSCAN over the cell grid (region
@@ -360,19 +312,14 @@ object CellOps {
     * self-equi-join builds each undirected adjacency edge exactly once
     * (CC symmetrizes internally), and the CC loop's shuffles are sized
     * to that graph, not the corpus. Dense cells re-encode to Morton ids
-    * through the cell_id codegen path on their centers (0.5-index-unit
-    * margin, bit-safe — the [[convexFill]] trick). Persisted frames
-    * follow the usual cache contract (caller clearCache after the
-    * terminal action).
+    * through the cell_id codegen path on their centers
+    * ([[centerCell]]). Persisted frames follow the usual cache contract
+    * (caller clearCache after the terminal action).
     *
     * points: columns `lat`, `lon`. */
   def cellClusters(points: DataFrame, res: Int, minCount: Long): DataFrame = {
-    val n = (1L << res).toDouble
-    val lonC = (col("xi").cast("double") + lit(0.5)) / lit(n) * lit(360.0) - lit(180.0)
-    val latC = lit(90.0) - (col("yi").cast("double") + lit(0.5)) / lit(n) * lit(180.0)
     val dense = gridCounts(points, res).where(col("x") >= lit(minCount))
-      .select(col("xi"), col("yi"), col("x"),
-        graft.functions.CellFunctions.cell_id(latC, lonC, lit(res)).as("cell"))
+      .select(col("xi"), col("yi"), col("x"), centerCell(res).as("cell"))
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
     val offs = Seq((1, -1), (1, 0), (1, 1), (0, 1)) // forward half of the 8-neighborhood
     val edges = dense.select(col("cell").as("doc_a"), col("xi"), col("yi"),

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Structured Streaming ingestion path (SURVEY.md §2.9): the same events
   * table consumed as a file-source stream → event-time tumbling-window
@@ -50,23 +50,45 @@ object Streaming {
         "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
       case other => other // a fully-qualified custom provider class
     }
-    val prev = spark.conf.getOption(key)
-    try { spark.conf.set(key, cls); f }
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+    withConf(spark, key -> cls)(f)
   }
+
+  /** Run `f` with the given session settings, then restore each one's
+    * previous value (or unset it). */
+  private def withConf[A](spark: SparkSession, settings: (String, String)*)(f: => A): A = {
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try { settings.foreach { case (k, v) => spark.conf.set(k, v) }; f }
+    finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** Every stateful operator's shuffle partition is a state-store instance,
+    * so the stateful queries below size their shuffle to the state. */
+  private def statefulWidth(n: Int): (String, String) = "spark.sql.shuffle.partitions" -> n.toString
+
+  /** Start `w` as an AvailableNow query with adaptive execution off: Spark
+    * runs stateful streams without it anyway (the one stateless stream,
+    * [[crossCorpusStream]], is planned statically), and its analyzer warns
+    * once per stream started while the session has it on. The query runs
+    * on a session clone taken at start, so the setting is restored right
+    * after. */
+  private def startAvailableNow(spark: SparkSession, w: DataStreamWriter[Row]): StreamingQuery =
+    withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+      w.trigger(Trigger.AvailableNow()).start()
+    }
 
   /** Drain a streaming DataFrame into a memory sink (AvailableNow) and
     * return the materialized table — the batch-parity harness every
-    * oracle-checked streaming query uses. */
+    * oracle-checked streaming query uses. The run owns its checkpoint: a
+    * fresh directory under `java.io.tmpdir`, deleted once the query has
+    * terminated (the memory sink keeps the rows), instead of the temporary
+    * one Spark would otherwise create and warn about. */
   def runToMemory(df: DataFrame, mode: String = "complete"): DataFrame = {
     val name = s"graft_stream_${counter.incrementAndGet()}"
-    val q = df.writeStream.outputMode(mode)
+    val checkpoint = java.nio.file.Files.createTempDirectory(name)
+    try startAvailableNow(df.sparkSession, df.writeStream.outputMode(mode)
       .format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      .option("checkpointLocation", checkpoint.toString)).awaitTermination()
+    finally org.apache.commons.io.FileUtils.deleteQuietly(checkpoint.toFile)
     df.sparkSession.table(name)
   }
 
@@ -94,11 +116,7 @@ object Streaming {
       .agg(count(lit(1)).as("n"),
         floor(sum("value") * lit(1000000.0)).cast("long").as("sum_value_fp"))
       .select(col("win.start").as("hour"), col("event_type"), col("n"), col("sum_value_fp"))
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-      runToMemory(agg)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    withConf(spark, statefulWidth(statePartitions))(runToMemory(agg))
   }
 
   /** Watermarked append-mode variant with checkpointing — used by the
@@ -125,15 +143,11 @@ object Streaming {
     // state-sized stateful shuffle (see eventCounts). The partition count
     // is pinned by the FIRST run against a checkpoint; restarts under the
     // same checkpoint reuse the stored value, so resume stays coherent.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val q =
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-        agg.writeStream.outputMode("append")
-          .option("checkpointLocation", checkpoint)
-          .format("parquet").option("path", sinkDir)
-          .trigger(Trigger.AvailableNow()).start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val q = withConf(spark, statefulWidth(statePartitions)) {
+      startAvailableNow(spark, agg.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint)
+        .format("parquet").option("path", sinkDir))
+    }
     q.awaitTermination()
     // sum numRowsDroppedByWatermark over the run's progress updates
     q.recentProgress.flatMap(p => p.stateOperators.map(_.numRowsDroppedByWatermark)).sum
@@ -171,14 +185,11 @@ object Streaming {
     // partitions vs ~4 s at 4, input-size-independent). Size the stateful
     // shuffle to the STATE, not the cluster; a real deployment raises it
     // with actual state volume. Scoped + restored around the one start.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val pairs =
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-        withStateStoreProvider(spark, stateStore) {
-          runToMemory(joined.select("a_id", "b_id", "a_type", "b_type"), mode = "append")
-        }
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val pairs = withConf(spark, statefulWidth(statePartitions)) {
+      withStateStoreProvider(spark, stateStore) {
+        runToMemory(joined.select("a_id", "b_id", "a_type", "b_type"), mode = "append")
+      }
+    }
     pairs.groupBy("a_type", "b_type").agg(count(lit(1)).as("n_pairs"))
   }
 
@@ -222,17 +233,13 @@ object Streaming {
     // hash-keyed rows, and a store instance per session core is pure
     // per-batch snapshot cost at fixture state volumes. Pinned by the
     // first run against a checkpoint, so resume stays coherent.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val q =
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-        withStateStoreProvider(spark, stateStore) {
-          out.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .format("parquet").option("path", sinkDir)
-            .trigger(Trigger.AvailableNow()).start()
-        }
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val q = withConf(spark, statefulWidth(statePartitions)) {
+      withStateStoreProvider(spark, stateStore) {
+        startAvailableNow(spark, out.writeStream.outputMode("append")
+          .option("checkpointLocation", checkpoint)
+          .format("parquet").option("path", sinkDir))
+      }
+    }
     q.awaitTermination()
   }
 
@@ -262,11 +269,7 @@ object Streaming {
     // state-sized stateful shuffle, the streamStreamJoin lesson: each
     // partition is a state-store instance paying per-batch snapshot files,
     // and open-session state is per-user-tiny here
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-      runToMemory(agg, mode = "append")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    withConf(spark, statefulWidth(statePartitions))(runToMemory(agg, mode = "append"))
   }
 
   /** Streaming cross-corpus dedup — the live-crawl counterpart of

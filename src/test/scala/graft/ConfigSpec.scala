@@ -22,6 +22,9 @@ class ConfigSpec extends AnyFunSuite {
     assert(c.cpus == 4 && c.pages.contains(64000000L) && c.queryRuns == 3)
     assert(!c.aqe && c.flagshipOnly && c.only.contains(Set("q1_agg", "knn")))
     assert(c.master.contains("local[2]") && c.sfDir == "/data/sf1")
+    // query names are trimmed and empty names dropped
+    assert(new Config(Map("SPARK_GRAFT_ONLY" -> " polygon_fill, pip_aoi ,,pip_cell_join ")).only
+      .contains(Set("polygon_fill", "pip_aoi", "pip_cell_join")))
   }
 
   test("numeric settings: zero, negative or non-numeric values are rejected, naming the variable") {

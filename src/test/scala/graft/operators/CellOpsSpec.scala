@@ -60,15 +60,15 @@ class CellOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("convexFill: agrees with JTS center containment; fills ~the polygon's area") {
+  test("polygonFill (convex pentagon): agrees with JTS center containment; fills ~the polygon's area") {
     val poly = Seq((-100.123, -40.234), (40.567, -55.111), (120.789, 10.456),
       (10.321, 70.654), (-140.987, 30.999))
     val res = 6
-    val got = CellOps.convexFill(spark, poly, res).collect().map(_.getLong(0)).toSet
+    val got = CellOps.polygonFill(spark, poly, res).collect().map(_.getLong(0)).toSet
     assert(got.nonEmpty)
     // independent check: JTS containment of every bbox-grid cell center
     // (robust predicates — a different implementation family than the
-    // half-plane columns)
+    // scanline crossings)
     val jts = graft.core.Geom.polygon(poly)
     val n = (1L << res).toDouble
     val lons = poly.map(_._1); val lats = poly.map(_._2)
@@ -95,7 +95,7 @@ class CellOpsSpec extends AnyFunSuite {
   }
 
   /** Independent JTS robust-containment reference over the bbox grid —
-    * a different implementation family than the half-plane columns. */
+    * a different implementation family than the scanline crossings. */
   private def jtsFill(poly: Seq[(Double, Double)], res: Int): Set[Long] = {
     val jts = graft.core.Geom.polygon(poly)
     val n = (1L << res).toDouble
@@ -144,9 +144,9 @@ class CellOpsSpec extends AnyFunSuite {
 
   test("winding normalization: clockwise rings fill identically (not empty)") {
     val res = 6
-    val ccwConvex = CellOps.convexFill(spark, pipPentagonLocal, res)
+    val ccwConvex = CellOps.polygonFill(spark, pipPentagonLocal, res)
       .collect().map(_.getLong(0)).toSet
-    val cwConvex = CellOps.convexFill(spark, pipPentagonLocal.reverse, res)
+    val cwConvex = CellOps.polygonFill(spark, pipPentagonLocal.reverse, res)
       .collect().map(_.getLong(0)).toSet
     assert(ccwConvex.nonEmpty && ccwConvex == cwConvex)
     val poly = graft.QueryCatalog.concaveL
@@ -155,12 +155,64 @@ class CellOpsSpec extends AnyFunSuite {
     assert(ccwC.nonEmpty && ccwC == cwC)
   }
 
+  /** A ring whose vertices sit on res-4 cell centers: horizontal and
+    * vertical edges along center rows and columns, one cell-diagonal edge
+    * through a center, a reflex peak notch and a reflex valley notch with
+    * interior on both sides of their tips, and vertices where the boundary
+    * passes straight through a row. Every on-boundary center is an exact
+    * tie, so the fill must drop it like JTS does. */
+  private val tieRes = 4
+  private def tieRing: Seq[(Double, Double)] = {
+    val n = (1L << tieRes).toDouble
+    // (u, v) with u = column offset, v = rows upward from the bottom row
+    Seq((2, 0), (4, 0), (5, 3), (6, 0), (12, 0), (12, 4), (10, 6), (10, 9),
+      (7, 9), (6, 6), (5, 9), (2, 9)).map { case (u, v) =>
+      ((u + 2 + 0.5) / n * 360.0 - 180.0, 90.0 - (12 - v + 0.5) / n * 180.0)
+    }
+  }
+
+  test("boundary ties: centers on edges and vertices are excluded, as JTS contains") {
+    val got = CellOps.polygonFill(spark, tieRing, tieRes).collect().map(_.getLong(0)).toSet
+    val want = jtsFill(tieRing, tieRes)
+    assert(got == want, s"fill disagrees with JTS: extra=${got -- want}, missing=${want -- got}")
+    // the fixture really has ties: 12 vertices plus row, column and
+    // diagonal edge centers lie exactly on the boundary
+    val n = (1L << tieRes).toDouble
+    val boundary = graft.core.Geom.polygon(tieRing).getBoundary
+    val ties = for (xi <- 0 until (1 << tieRes); yi <- 0 until (1 << tieRes)
+      if boundary.intersects(graft.core.Geom.factory.createPoint(
+        new org.locationtech.jts.geom.Coordinate((xi + 0.5) / n * 360.0 - 180.0,
+          90.0 - (yi + 0.5) / n * 180.0)))) yield (xi, yi)
+    assert(ties.size >= 30, s"only ${ties.size} on-boundary centers")
+  }
+
+  test("boundary ties: insidePredicate rejects points exactly on edges and vertices") {
+    import spark.implicits._
+    val ring = tieRing
+    val closed = ring :+ ring.head
+    val onVertex = ring
+    val onEdge = closed.sliding(2).map { case Seq((ax, ay), (bx, by)) =>
+      ((ax + bx) / 2, (ay + by) / 2) }.toSeq
+    val (cx0, cy0) = ring(0); val (cx1, cy1) = ring(6) // (2,0) and (10,6)
+    val inside = Seq(((cx0 + cx1) / 2 + 1e-3, (cy0 + cy1) / 2 + 1e-3))
+    val pts = (onVertex ++ onEdge ++ inside).zipWithIndex.map { case ((lon, lat), k) =>
+      (k, lat, lon) }
+    val jts = graft.core.Geom.polygon(ring)
+    val want = pts.filter { case (_, lat, lon) => jts.contains(graft.core.Geom.factory
+      .createPoint(new org.locationtech.jts.geom.Coordinate(lon, lat))) }.map(_._1).toSet
+    assert(want == Set(pts.length - 1), s"fixture: only the last point is inside, JTS says $want")
+    val got = pts.toDF("k", "lat", "lon")
+      .where(CellOps.insidePredicate(ring, col("lat"), col("lon")))
+      .collect().map(_.getInt(0)).toSet
+    assert(got == want, s"on-boundary points accepted: ${(got -- want).map(pts(_))}")
+  }
+
   private def pipPentagonLocal = Seq((-100.123, -40.234), (40.567, -55.111),
     (120.789, 10.456), (10.321, 70.654), (-140.987, 30.999))
 
   /** JTS audit of a classified cover: every interior-marked cell must have
     * all 4 corners AND its center robustly contained (different
-    * implementation family than the margin-guarded half-plane columns),
+    * implementation family than the margin-guarded scanline intervals),
     * and every cell of the JTS center-fill must appear in the candidate
     * set (no inside area escapes the cover). */
   private def auditClassify(poly: Seq[(Double, Double)], res: Int): Unit = {
@@ -284,7 +336,7 @@ class CellOpsSpec extends AnyFunSuite {
     assert(got.nonEmpty && got == want,
       s"cell join diverges: extra=${(got -- want).take(5)}, missing=${(want -- got).take(5)}")
     // the scale claim: most accepted points ride the interior fast path
-    // (no exact predicate), only the boundary sliver pays the half-planes
+    // (no exact predicate), only the boundary sliver pays the crossing test
     val cover = CellOps.coverClassify(spark, poly, res = 7)
     val byKind = docs
       .withColumn("cell", graft.functions.CellFunctions.cell_id(col("lat"), col("lon"), lit(7)))

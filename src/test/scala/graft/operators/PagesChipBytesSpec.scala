@@ -11,16 +11,30 @@ import graft.sources.Fixtures
   * a page counts in every 128-pixel window whose half-open pixel range
   * [off, off + size) holds the page's pixel (a pixel owns
   * [edge, edge + pixel size)), and a chip's bytes are the counts rescaled
-  * to 1..255 over (0, max). No engine code computes the expectation. */
+  * to 1..255 over (0, max). The extent masks are rebuilt from the lux
+  * labels with JTS: a pixel is 255 iff some label contains its center.
+  * No engine code computes the expectation. */
 class PagesChipBytesSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.get
   private val nPages = 20000
 
   private case class Chip(nPages: Long, badText: Long, img: Seq[Byte])
 
+  private lazy val labels = Fixtures.labelGeoms()
+
+  /** Pixel-center containment over the window, in world coordinates. */
+  private def jtsMask(win: graft.core.Window): Seq[Byte] =
+    for (y <- 0 until win.height; x <- 0 until win.width) yield {
+      val center = graft.core.Geom.factory.createPoint(new org.locationtech.jts.geom.Coordinate(
+        Fixtures.LuxOriginX + (win.colOff + x + 0.5) * Fixtures.LuxPxX,
+        Fixtures.LuxOriginY + (win.rowOff + y + 0.5) * Fixtures.LuxPxY))
+      if (labels.exists(_._1.contains(center))) 255.toByte else 0.toByte
+    }
+
+  private lazy val grid = TileGrid.squareWindows(128, 128, Fixtures.LuxWidth,
+    Fixtures.LuxHeight, "whole_overlap")
+
   private lazy val expected: Map[(Int, Int), Chip] = {
-    val grid = TileGrid.squareWindows(128, 128, Fixtures.LuxWidth, Fixtures.LuxHeight,
-      "whole_overlap")
     val counts = grid.map(c => new Array[Int](c.window.width * c.window.height))
     for (k <- 0L until nPages.toLong) {
       val px = math.floor((Fixtures.pageLon(k) - Fixtures.LuxOriginX) / Fixtures.LuxPxX).toInt
@@ -40,9 +54,10 @@ class PagesChipBytesSpec extends AnyFunSuite {
   }
 
   for (parts <- Seq(1, 5)) test(s"density chip bytes equal a plain-Scala rebuild ($parts partitions)") {
-    val got = PagesTiling.extractChips(spark, Fixtures.pages(spark, nPages, partitions = parts),
-        Fixtures.luxMeta())
-      .collect().map { r =>
+    val rows = PagesTiling.extractChips(spark, Fixtures.pages(spark, nPages, partitions = parts),
+        Fixtures.luxMeta(), labels = Some(labels.map { case (g, c) => (graft.core.Geom.toWkb(g), c) }))
+      .collect()
+    val got = rows.map { r =>
         (r.getAs[Int]("i"), r.getAs[Int]("j")) -> Chip(r.getAs[Long]("n_pages"),
           r.getAs[Long]("bad_text"), r.getAs[Array[Byte]]("img").toSeq)
       }
@@ -53,5 +68,14 @@ class PagesChipBytesSpec extends AnyFunSuite {
       assert(chip.nPages == want.nPages && chip.badText == want.badText, s"tile $tile")
       assert(chip.img == want.img, s"tile $tile: img bytes differ")
     }
+    val windows = grid.map(c => (c.i, c.j) -> c.window).toMap
+    var burned = 0
+    for (r <- rows) {
+      val tile = (r.getAs[Int]("i"), r.getAs[Int]("j"))
+      val mask = r.getAs[Array[Byte]]("extent_mask").toSeq
+      assert(mask == jtsMask(windows(tile)), s"tile $tile: extent_mask bytes differ")
+      burned += mask.count(_ != 0)
+    }
+    assert(burned > 0, "no chip's window meets a label")
   }
 }

@@ -28,11 +28,7 @@ object Bench {
         if (e.taskMetrics != null)
           shuffleWrite.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
     }
-    // SPARK_GRAFT_AQE=0 turns adaptive re-planning off for scaling runs:
-    // the flagship's reduce stages are tiny and AQE's per-stage re-plan is
-    // pure driver-side fixed cost that anti-scales the 4N level
-    val spark = Config.session(cpus,
-      Map("spark.sql.adaptive.enabled" -> conf.aqe.toString))
+    val spark = Config.session(cpus)
 
     // ---- flagship: pages → tiles spatial join + chip extraction ----------
     val nPages = flagshipPageCount(conf, sfDir)
@@ -61,8 +57,7 @@ object Bench {
     val badText = agg.getLong(2)
 
     // ---- headline catalog queries ----------------------------------------
-    // SPARK_GRAFT_FLAGSHIP_ONLY=1 skips them (used by pinned scaling runs)
-    val headline = if (conf.flagshipOnly) Seq.empty[String] else Seq("q1_agg", "q3_join_topk", "q_window_rank", "spatial_join_tiles",
+    val headline = Seq("q1_agg", "q3_join_topk", "q_window_rank", "spatial_join_tiles",
       "cell_id", "knn", "knn_large", "dedup_exact", "dedup_minhash_lsh", "dedup_simhash_pairs",
       "dedup_ngram_jaccard", "dedup_embedding", "ann_topk", "ann_ivf", "token_count", "lang_id",
       "text_quality", "doc_fingerprint", "extract_chips", "filter_chips",
@@ -112,16 +107,12 @@ object Bench {
     // published flagship_sec is the min — the engine's capability is the
     // best wall it demonstrably achieved within this very artifact; both
     // raw values stay in the JSON so a burst remains visible (a large
-    // start/end ratio still flags a bursty host). FLAGSHIP_ONLY runs
-    // (pinned scaling pairs) skip the retime — nothing ran after the
-    // best-of-3, so there is no later window to sample.
-    val sentinelSec =
-      if (headline.isEmpty) flagshipStartSec
-      else (1 to 2).map { _ =>
-        val s0 = System.nanoTime()
-        flagshipTotals(spark, pages).head()
-        (System.nanoTime() - s0) / 1e9
-      }.min
+    // start/end ratio still flags a bursty host).
+    val sentinelSec = (1 to 2).map { _ =>
+      val s0 = System.nanoTime()
+      flagshipTotals(spark, pages).head()
+      (System.nanoTime() - s0) / 1e9
+    }.min
     val flagshipSec = math.min(flagshipStartSec, sentinelSec)
     val throughput = (tilesAssigned + nChips) / flagshipSec
     // host-window annotation (round-7 verdict hygiene): the flagship at the
@@ -192,8 +183,7 @@ object Bench {
     * Each timed run builds a FRESH DataFrame — re-executing one plan object
     * would reuse ShuffleExchangeExec's cached shuffle RDD (skipped map
     * stages) and measure nothing. Codegen compilation is cached by source
-    * text, so a warm-up covers it; with AQE off the remaining per-run driver
-    * overhead is analysis+optimization (~0.2 s). */
+    * text, so a warm-up covers it. */
   def flagshipTotals(spark: SparkSession, pages: Dataset[Page]): DataFrame =
     flagshipChips(spark, pages).agg(sum("n_pages"), count(lit(1)), sum("bad_text"))
 }

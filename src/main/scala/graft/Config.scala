@@ -26,10 +26,6 @@ final class Config(env: Map[String, String]) {
   val stateStore: String = env.getOrElse("SPARK_GRAFT_STATE_STORE", "hdfs")
   /** `SPARK_GRAFT_SF_DIR`: the fixture directory Bench and Measure read. */
   val sfDir: String = env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-  /** `SPARK_GRAFT_AQE=0` turns Bench's adaptive re-planning off. */
-  val aqe: Boolean = !env.get("SPARK_GRAFT_AQE").contains("0")
-  /** `SPARK_GRAFT_FLAGSHIP_ONLY` (any value): Bench skips the catalog. */
-  val flagshipOnly: Boolean = env.contains("SPARK_GRAFT_FLAGSHIP_ONLY")
   /** `SPARK_GRAFT_ONLY=q1,q2`: Verify dumps only the named queries and
     * their oracles (names trimmed, empty names dropped). */
   val only: Option[Set[String]] =

@@ -3214,7 +3214,7 @@ object QueryCatalog {
   /** Shared CTE: distinct word w-shingles per doc (DuckDB side). */
   // th = md5(text) identifies the distinct text: blocking-key document
   // frequency is counted over DISTINCT texts (count(DISTINCT th)), exactly
-  // as Dedup.dropHotKeys does, so the hot-key caps compare bit-identically.
+  // as Dedup.blockedPairs' cap does, so the hot-key caps compare bit-identically.
   // unnest(range(...)) with a per-row bound, NOT `range(1, K) i(i) WHERE
   // i.i < len(toks) - …`: the table-function form needs a constant K that
   // silently truncates shingle sets for documents longer than K tokens,

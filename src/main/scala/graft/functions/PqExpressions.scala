@@ -199,8 +199,8 @@ case class PqAdcLutExpr(qvec: Expression, bucket: Expression,
 
 /** `pq_codes(embedding)` → array<int> of m FLAT PQ codes: code s =
   * argmax_j (2·x_s·c_{s,j} − |c_{s,j}|²) over subspace s of the RAW vector
-  * (no coarse quantizer) — bit-identical to the
-  * [[graft.operators.Similarity]] struct-max column form (`pqCodeCol`): the
+  * (no coarse quantizer) — bit-identical to the literal struct-max column
+  * form it replaced in [[graft.operators.Similarity]]: the
   * same left-to-right double dot, the same driver-side |c|² literal, the
   * same strict-`>` lowest-code tie rule. The column form put m × ksub dot
   * subtrees into one projection; at m=8/ksub=16 that already overflows

@@ -21,17 +21,20 @@ import org.apache.spark.storage.StorageLevel
   *     Σ Dᵢ(Dᵢ−1) and collapses only when it exceeds
   *     `collapseThreshold × N` (default [[CollapsePairsPerDoc]]).  The two
   *     paths are provably output-identical (signatures, shingles and
-  *     simhashes depend only on the text), which DedupEquivalenceSpec pins.
+  *     simhashes depend only on the text), which DedupScaleGuardSpec pins.
   *  2. '''Blocking-key document-frequency cap''' — a blocking key (shingle,
-  *     band signature, simhash quarter) shared by many *distinct* documents
-  *     (boilerplate phrases, templated pages) produces DF²/2 candidates.
-  *     Keys whose DF — counted over distinct texts, so both collapse paths
-  *     agree — exceeds the cap are dropped from candidate generation
-  *     ([[dropHotKeys]]).  This is the standard LSH trade: bounded recall
-  *     loss on boilerplate keys for a hard `DF ≤ cap` bound per key.
-  *     Verification is unaffected (Jaccard / Hamming are still computed on
-  *     the full shingle set / fingerprint), and the DuckDB oracles mirror
-  *     the identical cap.
+  *     band signature, simhash quarter, sign-LSH bucket) shared by many
+  *     *distinct* documents (boilerplate phrases, templated pages) produces
+  *     DF²/2 candidates. Keys whose DF — counted over distinct texts, so
+  *     both collapse paths agree — exceeds the cap are dropped from
+  *     candidate generation.  This is the standard LSH trade: bounded
+  *     recall loss on boilerplate keys for a hard `DF ≤ cap` bound per key.
+  *     Verification is unaffected (Jaccard / Hamming / cosine are still
+  *     computed on the full shingle set / fingerprint / vector), and the
+  *     DuckDB oracles mirror the identical cap. Every pair family —
+  *     MinHash-LSH, n-gram Jaccard, SimHash, [[hammingPairs]] and
+  *     [[Similarity]]'s two cosine forms — gets its cap, skew probe and
+  *     blocked join from ONE operator, [[blockedPairs]].
   *
   * Caching contract: each operator persists its blocking intermediates
   * (shingle table, capped key tables, signatures) for the lifetime of the
@@ -95,8 +98,8 @@ object Dedup {
     * signatures/shingles/simhashes depend only on the text, so (mᴬ, mᴮ) is a
     * candidate iff (repᴬ, repᴮ) is, and the verified score is identical —
     * [[expandPairs]] restores the full pair set, and within-group pairs are
-    * emitted directly (score = exact match) by the callers, gated on the
-    * representative surviving blocking (≥1 non-hot key), mirroring the
+    * emitted directly (score = exact match) by [[collapsedPairs]], gated on
+    * the representative surviving blocking (≥1 non-hot key), mirroring the
     * uncollapsed pipeline. */
   private def collapseExact(docs: DataFrame): (DataFrame, DataFrame) = {
     // groupBy(text) instead of a window over md5(text): partial aggregation
@@ -115,13 +118,35 @@ object Dedup {
   /** Expand representative-level pairs back to all member pairs, preserving
     * the payload columns (scores depend only on the texts, which are
     * identical within a group). Emits doc_a < doc_b. */
-  private def expandPairs(repPairs: DataFrame, members: DataFrame,
-                          payload: Seq[String]): DataFrame =
+  private def expandPairs(repPairs: DataFrame, members: DataFrame): DataFrame =
     repPairs
       .join(members.select(col("rep").as("doc_a"), col("doc_id").as("ma")), Seq("doc_a"))
       .join(members.select(col("rep").as("doc_b"), col("doc_id").as("mb")), Seq("doc_b"))
       .select(least(col("ma"), col("mb")).as("doc_a") +:
-        greatest(col("ma"), col("mb")).as("doc_b") +: payload.map(col): _*)
+        greatest(col("ma"), col("mb")).as("doc_b") +:
+        repPairs.columns.toSeq.filterNot(Set("doc_a", "doc_b")).map(col): _*)
+
+  /** The collapse wrapper every text pair family runs through: `pairsOn`
+    * over `docs` directly, or — when [[shouldCollapse]] says the exact
+    * duplicates' candidate mass is worth it — over one representative per
+    * distinct text, expanded back to all member pairs. `pairsOn` returns
+    * (pairs (doc_a, doc_b, payload…), kept (doc_id, …)): `kept` is the
+    * representatives that survived blocking (≥1 non-hot key) plus whatever
+    * columns the `within` payload reads from the `x` side. Within-group
+    * pairs (identical texts) are emitted directly with that payload, only
+    * for kept groups — mirroring the uncollapsed pipeline, where a doc
+    * whose keys are all hot never becomes a candidate. */
+  private def collapsedPairs(docs: DataFrame, threshold: Double, within: Seq[Column])(
+      pairsOn: DataFrame => (DataFrame, DataFrame)): DataFrame =
+    if (shouldCollapse(docs, threshold)) {
+      val (reps, members) = collapseExact(docs)
+      val (repPairs, kept) = pairsOn(reps)
+      val grouped = members.join(kept.withColumnRenamed("doc_id", "rep"), Seq("rep"))
+      val inGroup = grouped.as("x").join(grouped.as("y"),
+          col("x.rep") === col("y.rep") && col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("doc_a") +: col("y.doc_id").as("doc_b") +: within: _*)
+      expandPairs(repPairs, members).unionByName(inGroup)
+    } else pairsOn(docs)._1
 
   /** Distinct shingle rows (doc_id, th, sh); th = md5(text) identifies the
     * distinct text, so blocking-key DF is counted identically whether the
@@ -147,8 +172,8 @@ object Dedup {
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
   }
 
-  /** Rows-of-the-hottest-key threshold above which the one-exchange window
-    * form of [[dropHotKeys]] (which sorts the hottest key's rows in ONE
+  /** Rows-of-the-hottest-key threshold above which [[blockedPairs]]'s
+    * one-exchange window cap (which sorts the hottest key's rows in ONE
     * task) is abandoned for the wide 3-exchange form. Sized to what one
     * executor task sorts comfortably (~a few hundred MB of (key, th)
     * rows); below it the window form's single hot task is still cheaper
@@ -173,21 +198,6 @@ object Dedup {
     if (r.isNullAt(0)) 0L else (r.getLong(0) / SkewProbeFraction).toLong
   }
 
-  /** Shingle-skew probe that samples DOCUMENTS before shingling: builds the
-    * shingle table for a 2% doc sample only (2% of the flatMap+distinct
-    * work, nothing materialized ahead of the real pipeline) and scales the
-    * hottest shingle's distinct-doc count back up. Used by [[ngramJaccard]],
-    * whose full shingle table has no cheap total-rows bound to short-circuit
-    * on. */
-  private[graft] def approxMaxShingleDf(docs: DataFrame, w: Int): Long = {
-    val sampled = shingleTableTh(
-      docs.sample(withReplacement = false, SkewProbeFraction, seed = 42L), w)
-    val r = sampled.groupBy(col("sh")).agg(count(lit(1)).as("c"))
-      .agg(max(col("c")).as("mx")).head()
-    sampled.unpersist()
-    if (r.isNullAt(0)) 0L else (r.getLong(0) / SkewProbeFraction).toLong
-  }
-
   /** Hot-key-set size above which the anti-join build side is SHUFFLED
     * instead of broadcast. The hot set holds every key whose DF exceeds the
     * cap — bounded by |distinct (key, th) rows| / cap, NOT by
@@ -201,8 +211,8 @@ object Dedup {
     * shuffle that produced them is cached by the count and reused by the
     * join). Above [[HotKeySetBroadcastLimit]] the plain shuffle anti-join
     * costs one more exchange of `rows` but cannot OOM the driver. */
-  private[graft] def antiJoinHotKeys(rows: DataFrame, hot: DataFrame,
-                                     keyCols: Seq[String]): DataFrame = {
+  private def antiJoinHotKeys(rows: DataFrame, hot: DataFrame,
+                              keyCols: Seq[String]): DataFrame = {
     val h = hot.persist(StorageLevel.MEMORY_AND_DISK_SER)
     val small = h.count() <= HotKeySetBroadcastLimit
     if (small) {
@@ -225,59 +235,65 @@ object Dedup {
       rows.join(h, keyCols, "left_anti")
   }
 
-  /** Wide 3-exchange form of the DF cap for degenerate key skew: map-side
-    * partial dedup of (key, th) via distinct(), per-key distinct-text
-    * counts via hash aggregation (the hottest key's final count receives
-    * one partial row per map partition — never a single-task sort), then an
-    * anti-join whose build side is broadcast only while measured under
-    * [[HotKeySetBroadcastLimit]] (see [[antiJoinHotKeys]]). */
-  private[graft] def dropHotKeysWide(rows: DataFrame, keyCols: Seq[String],
-                                     cap: Int): DataFrame = {
-    val kcols = keyCols.map(col)
-    val hot = rows.select(kcols :+ col("th"): _*).distinct()
-      .groupBy(kcols: _*).agg(count(lit(1)).as("df"))
-      .where(col("df") > cap)
-      .select(kcols: _*)
-    antiJoinHotKeys(rows, hot, keyCols)
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-  }
-
-  /** Drop rows whose blocking key is shared by more than `cap` distinct
-    * texts.  Default form is ONE exchange: window by the blocking key,
-    * where max(dense_rank ordered by th) = exact count(DISTINCT th) — a
-    * groupBy(countDistinct) + anti-join costs 3 exchanges for the same
-    * filter.  The output is persisted hash-partitioned by the key, so the
-    * downstream candidate self-join ([[blockedPairs]]) reuses the
-    * partitioning and adds NO further exchange.
+  /** The candidate-pair operator every near-dup family calls: block →
+    * hot-key cap → candidate pairs → in-stage verify → distinct.
     *
-    * Hot-key skew is handled ADAPTIVELY: the window form puts the hottest
-    * key's rows in one sorted task — fine up to [[HotKeyWindowRowLimit]]
-    * rows, a straggler/OOM beyond it (a degenerate corpus where one
-    * boilerplate shingle covers half the documents). A one-pass sampled
-    * probe ([[approxMaxKeyRows]]) detects that regime and switches to
-    * [[dropHotKeysWide]]; the two forms are provably output-identical
-    * (both filter on exact count(DISTINCT th) per key — DedupScaleGuardSpec
-    * pins the equivalence on a planted degenerate corpus). */
-  private def dropHotKeys(rows: DataFrame, keyCols: Seq[String], cap: Int,
-                          rowLimit: Long, probe: () => Long): DataFrame = {
-    // rowLimit = Long.MaxValue disables the skew probe entirely (callers
-    // that know their corpus);
-    // `probe` is a thunk so call sites can short-circuit it for free when a
-    // cheap upper bound (e.g. total band rows = nBands × |docs|) already
-    // rules the degenerate regime out — fixture-scale runs pay zero for the
-    // adaptivity while a 100-TB corpus (where the probe is relatively
-    // negligible) still gets it.
-    if (rowLimit != Long.MaxValue && probe() > rowLimit)
-      dropHotKeysWide(rows, keyCols, cap)
-    else {
-      val pw = org.apache.spark.sql.expressions.Window.partitionBy(keyCols.map(col): _*)
-      rows
-        .withColumn("dr", dense_rank().over(pw.orderBy(col("th"))))
-        .withColumn("df", max(col("dr")).over(pw))
-        .where(col("df") <= cap)
-        .drop("dr", "df")
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    * `rows` are key rows (id, th, key…, payload…): `th` identifies what the
+    * cap counts — md5(text) for the text families, the fingerprint for
+    * [[hammingPairs]], the vector id for the embedding families — and a
+    * key holds at most one row per id, so keys shared by more than `cap`
+    * DISTINCT th values are dropped. `nIds` (by name) is the input's id
+    * count, which therefore bounds the hottest key's rows: only above
+    * `rowLimit` does the sampled probe ([[approxMaxKeyRows]]) run, and only
+    * a probe above `rowLimit` switches the cap form:
+    *
+    *  - window (default): ONE exchange — window by the key, where
+    *    max(dense_rank ordered by th) = exact count(DISTINCT th);
+    *  - wide (degenerate skew): map-side distinct (key, th), per-key hash
+    *    counts (the hottest key's final count receives one partial row per
+    *    map partition — never a single-task sort), then [[antiJoinHotKeys]].
+    *
+    * Both forms filter on the exact distinct count, so they are
+    * output-identical (DedupScaleGuardSpec pins every family both ways).
+    * The capped rows are persisted hash-partitioned by the key, so the
+    * self-join adds no exchange.
+    *
+    * Self form (`other` = None): pairs x.id < y.id sharing a key. Bipartite
+    * form: `other` is a SMALL (id, key…) side, broadcast and uncapped.
+    * `pairCols` (over `x.`/`y.` columns) ride the pairs, and `keep` (over
+    * the output columns) filters them INSIDE the join stage, before the
+    * distinct's exchange — the exchange carries survivors only.
+    *
+    * Returns (pairs (id_a, id_b, pairCols…) distinct, kept ids (id)): the
+    * ids with ≥1 non-hot key, which the collapse path needs. */
+  private[graft] def blockedPairs(rows: DataFrame, keyCols: Seq[String], cap: Int,
+      rowLimit: Long, nIds: => Long, other: Option[DataFrame] = None,
+      pairCols: Seq[Column] = Nil, keep: Option[Column] = None): (DataFrame, DataFrame) = {
+    val kcols = keyCols.map(col)
+    val capped =
+      if (nIds > rowLimit && approxMaxKeyRows(rows, keyCols) > rowLimit) {
+        val hot = rows.select(kcols :+ col("th"): _*).distinct()
+          .groupBy(kcols: _*).agg(count(lit(1)).as("df"))
+          .where(col("df") > cap)
+          .select(kcols: _*)
+        antiJoinHotKeys(rows, hot, keyCols)
+      } else {
+        val pw = org.apache.spark.sql.expressions.Window.partitionBy(kcols: _*)
+        rows
+          .withColumn("dr", dense_rank().over(pw.orderBy(col("th"))))
+          .withColumn("df", max(col("dr")).over(pw))
+          .where(col("df") <= cap)
+          .drop("dr", "df")
+      }
+    val blk = capped.persist(StorageLevel.MEMORY_AND_DISK_SER)
+    val sameKey = keyCols.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _)
+    val joined = other match {
+      case None => blk.as("x").join(blk.as("y"), sameKey && col("x.id") < col("y.id"))
+      case Some(o) => blk.as("x").join(broadcast(o).as("y"), sameKey)
     }
+    val pairs = joined
+      .select(col("x.id").as("id_a") +: col("y.id").as("id_b") +: pairCols: _*)
+    (keep.fold(pairs)(pairs.where).distinct(), blk.select("id").distinct())
   }
 
   /** Shingle-blocked candidate pairs with the DF cap applied — exposed so
@@ -285,20 +301,8 @@ object Dedup {
     * the candidate count (the blowup is invisible in the verified output). */
   private[graft] def ngramCandidates(docs: DataFrame, w: Int, dfCap: Int,
                                      rowLimit: Long = HotKeyWindowRowLimit): DataFrame =
-    blockedPairs(dropHotKeys(shingleTableTh(docs, w), Seq("sh"), dfCap, rowLimit,
-      // DF is counted over distinct texts, so |docs| bounds any shingle's DF
-      () => if (rowLimit == Long.MaxValue || docs.count() <= rowLimit) 0L
-            else approxMaxShingleDf(docs, w)), Seq("sh"))
-
-  /** Candidate pairs (doc_a < doc_b) sharing a blocking key. Both join
-    * inputs are the persisted, key-partitioned [[dropHotKeys]] output, so
-    * the equi-join is co-partitioned (no exchange). */
-  private def blockedPairs(rows: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val cond = keyCols.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _) &&
-      col("x.doc_id") < col("y.doc_id")
-    rows.as("x").join(rows.as("y"), cond)
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b")).distinct()
-  }
+    blockedPairs(shingleTableTh(docs, w).withColumnRenamed("doc_id", "id"), Seq("sh"),
+      dfCap, rowLimit, docs.count())._1.toDF("doc_a", "doc_b")
 
   /** MinHash signatures: nHashes permutations approximated by salted md5;
     * minhash_i(doc) = min over shingles of h60(i || ':' || shingle). */
@@ -318,47 +322,35 @@ object Dedup {
                  rowsPerBand: Int = 2, minJaccard: Double = 0.5,
                  bandCap: Int = BandDfCap,
                  collapseThreshold: Double = CollapsePairsPerDoc,
-                 hotKeyRowLimit: Long = HotKeyWindowRowLimit): DataFrame = {
-
-    // ONE shingle table shared by the signature aggregation and the verify
-    // join — the explode + distinct shuffle (the dominant scan at 100 TB)
-    // happens once instead of twice; the same aggregation also emits each
-    // doc's shingle-set size, so the verify stage reuses it instead of
-    // re-scanning the shingle table for a separate count
-    def pairsOn(base: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+                 hotKeyRowLimit: Long = HotKeyWindowRowLimit): DataFrame =
+    collapsedPairs(docs, collapseThreshold, exactJaccard) { base =>
+      // ONE shingle table shared by the signature aggregation and the verify
+      // join — the explode + distinct shuffle (the dominant scan at 100 TB)
+      // happens once instead of twice; the same aggregation also emits each
+      // doc's shingle-set size, so the verify stage reuses it instead of
+      // re-scanning the shingle table for a separate count
       val sh3 = shingleTableTh(base, w)
       val aggs = (0 until nHashes).map(i =>
         min(h60(concat(lit(s"$i:"), col("sh")))).as(s"mh_$i")) :+
         count(lit(1)).as("n_sh")
       val sig = sh3.groupBy("doc_id", "th").agg(aggs.head, aggs.tail: _*)
         .persist(StorageLevel.MEMORY_AND_DISK_SER)
-      val nBands = nHashes / rowsPerBand
-      val bands = (0 until nBands).map { b =>
+      val bands = (0 until nHashes / rowsPerBand).map { b =>
         val cols = (0 until rowsPerBand).map(r => col(s"mh_${b * rowsPerBand + r}"))
-        sig.select(col("doc_id"), col("th"),
+        sig.select(col("doc_id").as("id"), col("th"),
           lit(b).as("band"), md5(concat_ws("_", cols: _*)).as("band_key"))
       }.reduce(_ unionByName _)
-      // cheap short-circuit: band rows = nBands × |base| exactly (one row
-      // per doc per band; the count is parquet-metadata cheap, or a cache
-      // materialization the collapse path reuses) — the sampled probe only
-      // runs when a single key COULD exceed the limit
-      val blk = dropHotKeys(bands, Seq("band", "band_key"), bandCap, hotKeyRowLimit,
-        () => if (hotKeyRowLimit == Long.MaxValue ||
-                  nBands.toLong * base.count() <= hotKeyRowLimit) 0L
-              else approxMaxKeyRows(bands, Seq("band", "band_key")))
-      val cand = blockedPairs(blk, Seq("band", "band_key"))
-      val sh = sh3.select("doc_id", "sh")
+      val (cand, kept) = blockedPairs(bands, Seq("band", "band_key"), bandCap,
+        hotKeyRowLimit, base.count())
       val sizes = sig.select("doc_id", "n_sh")
-      (verifyJaccardOnShingles(sh, cand, minJaccard, Some(sizes)), sizes,
-        blk.select("doc_id").distinct())
+      (verifyJaccardOnShingles(sh3.select("doc_id", "sh"), cand.toDF("doc_a", "doc_b"),
+        minJaccard, Some(sizes)), kept.toDF("doc_id").join(sizes, "doc_id"))
     }
 
-    if (shouldCollapse(docs, collapseThreshold)) {
-      val (reps, members) = collapseExact(docs)
-      val (repPairs, sizes, keptDocs) = pairsOn(reps)
-      expandJaccardPairs(repPairs, members, sizes, keptDocs)
-    } else pairsOn(docs)._1
-  }
+  /** Within-group payload of the Jaccard families: identical texts are
+    * exact matches, num = den = |shingles| (`n_sh` of the kept rows). */
+  private def exactJaccard: Seq[Column] =
+    Seq(col("x.n_sh").as("jaccard_num"), col("x.n_sh").as("jaccard_den"))
 
   /** Exact Jaccard over candidate pairs against a prepared (doc_id, sh)
     * shingle table (blocked joins, never a cross join). `precomputedSizes`
@@ -389,55 +381,22 @@ object Dedup {
     verifyJaccardOnShingles(shingleTableTh(docs, w).select("doc_id", "sh"),
       cand, minJaccard)
 
-  /** Representative pairs → all member pairs for the Jaccard family:
-    * cross-group pairs expand with their verified fraction; within-group
-    * pairs (identical texts) are exact matches (num = den = |shingles|),
-    * emitted only for groups whose representative survived blocking
-    * (`keptReps`: ≥1 non-hot blocking key) — mirroring the uncollapsed
-    * pipeline, where such docs never become candidates. `repSizes` is the
-    * per-representative (doc_id, n_sh) table the caller already has. */
-  private def expandJaccardPairs(repPairs: DataFrame, members: DataFrame,
-                                 repSizes: DataFrame, keptDocs: DataFrame): DataFrame = {
-    val sizes = repSizes.select(col("doc_id").as("rep"), col("n_sh"))
-    val grouped = members
-      .join(sizes, Seq("rep"))
-      .join(keptDocs.select(col("doc_id").as("rep")), Seq("rep"))
-    val within = grouped.as("x").join(grouped.as("y"),
-        col("x.rep") === col("y.rep") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.n_sh").as("jaccard_num"), col("x.n_sh").as("jaccard_den"))
-    expandPairs(repPairs, members, Seq("jaccard_num", "jaccard_den"))
-      .unionByName(within)
-  }
-
   /** n-gram Jaccard near-dup: candidates = pairs sharing any shingle whose
     * distinct-text DF ≤ dfCap (shingle-blocked join), verified exactly over
     * the full shingle sets. */
   def ngramJaccard(docs: DataFrame, w: Int = 3, minJaccard: Double = 0.3,
                    dfCap: Int = ShingleDfCap,
                    collapseThreshold: Double = CollapsePairsPerDoc,
-                   hotKeyRowLimit: Long = HotKeyWindowRowLimit): DataFrame = {
-
-    def pairsOn(base: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+                   hotKeyRowLimit: Long = HotKeyWindowRowLimit): DataFrame =
+    collapsedPairs(docs, collapseThreshold, exactJaccard) { base =>
       val sh3 = shingleTableTh(base, w)
-      val blk = dropHotKeys(sh3, Seq("sh"), dfCap, hotKeyRowLimit,
-        // DF is counted over distinct texts, so |base| bounds any shingle DF
-        () => if (hotKeyRowLimit == Long.MaxValue ||
-                  base.count() <= hotKeyRowLimit) 0L
-              else approxMaxShingleDf(base, w))
-      val cand = blockedPairs(blk, Seq("sh"))
+      val (cand, kept) = blockedPairs(sh3.withColumnRenamed("doc_id", "id"), Seq("sh"),
+        dfCap, hotKeyRowLimit, base.count())
       val sh = sh3.select("doc_id", "sh")
       val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-      (verifyJaccardOnShingles(sh, cand, minJaccard, Some(sizes)), sizes,
-        blk.select("doc_id").distinct())
+      (verifyJaccardOnShingles(sh, cand.toDF("doc_a", "doc_b"), minJaccard, Some(sizes)),
+        kept.toDF("doc_id").join(sizes, "doc_id"))
     }
-
-    if (shouldCollapse(docs, collapseThreshold)) {
-      val (reps, members) = collapseExact(docs)
-      val (repPairs, sizes, keptDocs) = pairsOn(reps)
-      expandJaccardPairs(repPairs, members, sizes, keptDocs)
-    } else pairsOn(docs)._1
-  }
 
   /** Duplicate-CLUSTER resolution: connected components over an undirected
     * near-dup pair list (the step between "pairs" and "keepers" in a real
@@ -664,61 +623,49 @@ object Dedup {
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
                    quarterCap: Int = QuarterDfCap,
                    collapseThreshold: Double = CollapsePairsPerDoc,
-                   hotKeyRowLimit: Long = HotKeyWindowRowLimit): DataFrame = {
-
-    def pairsOn(base: DataFrame): (DataFrame, DataFrame) = {
-      // fingerprints feed 4 block projections × 2 join sides — persist
-      val sig = simhashTh(base).persist(StorageLevel.MEMORY_AND_DISK_SER)
-      val blocks = (0 until 4).map(q =>
-        sig.select(col("doc_id"), col("th"), col("simhash"),
-          lit(q).as("q"), shiftright(col("simhash"), q * 15).bitwiseAND(lit(0x7fffL)).as("qk")))
-        .reduce(_ unionByName _)
-      // block rows = 4 quarters × |base| exactly — free probe short-circuit
-      val blk = dropHotKeys(blocks, Seq("q", "qk"), quarterCap, hotKeyRowLimit,
-        () => if (hotKeyRowLimit == Long.MaxValue ||
-                  4L * base.count() <= hotKeyRowLimit) 0L
-              else approxMaxKeyRows(blocks, Seq("q", "qk")))
-      // hamming verify BEFORE the cross-quarter distinct: bit_count is a
-      // codegen'd couple of instructions evaluated inside the join stage,
-      // while the distinct is an exchange — filtering first shrinks that
-      // exchange from every quarter-collision candidate (×2 simhash longs
-      // per row) to the surviving pairs only. Identical output: a pair
-      // seen via several quarters has the same hamming on every route.
-      val pairs = blk.as("x").join(blk.as("y"),
-          col("x.q") === col("y.q") && col("x.qk") === col("y.qk") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .withColumn("hamming",
-          bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))))
-        .where(col("hamming") <= maxHamming)
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          col("hamming"))
-        .distinct()
-      (pairs, blk.select("doc_id").distinct())
+                   hotKeyRowLimit: Long = HotKeyWindowRowLimit): DataFrame =
+    collapsedPairs(docs, collapseThreshold, Seq(lit(0).cast("int").as("hamming"))) { base =>
+      val sig = simhashTh(base)
+        .select(col("doc_id").as("id"), col("th"), col("simhash").as("h"))
+      val (pairs, kept) =
+        quarterPairs(sig, col("th"), maxHamming, quarterCap, hotKeyRowLimit, base.count())
+      (pairs.toDF("doc_a", "doc_b", "hamming"), kept.toDF("doc_id"))
     }
 
-    if (shouldCollapse(docs, collapseThreshold)) {
-      val (reps, members) = collapseExact(docs)
-      val (repPairs, keptDocs) = pairsOn(reps)
-      val grouped = members.join(keptDocs.select(col("doc_id").as("rep")), Seq("rep"))
-      val within = grouped.as("x").join(grouped.as("y"),
-          col("x.rep") === col("y.rep") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          lit(0).cast("int").as("hamming"))
-      expandPairs(repPairs, members, Seq("hamming")).unionByName(within)
-    } else pairsOn(docs)._1
+  /** The 4-quarter blocking shared by [[simhashPairs]] and [[hammingPairs]]
+    * over (id, h) fingerprint rows: key (q, qk) = the q-th 15-bit quarter
+    * of h, capped at `quarterCap` distinct `th` values (the text md5 for
+    * simhash, h itself for hamming). The rows are persisted (4 block
+    * projections + 2 join sides read them). Hamming is verified INSIDE
+    * the join stage, before the cross-quarter distinct:
+    * bit_count is a couple of codegen'd instructions, while the distinct is
+    * an exchange — so it carries survivors only, not every quarter
+    * collision (×2 fingerprints per row). Identical output: a pair seen via
+    * several quarters has the same hamming on every route. */
+  private def quarterPairs(sig: DataFrame, th: Column, maxHamming: Int, quarterCap: Int,
+      rowLimit: Long, nIds: => Long): (DataFrame, DataFrame) = {
+    val fp = sig.persist(StorageLevel.MEMORY_AND_DISK_SER)
+    val blocks = (0 until 4).map(q =>
+      fp.select(col("id"), col("h"), th.as("th"), lit(q).as("q"),
+        shiftright(col("h"), q * 15).bitwiseAND(lit(0x7fffL)).as("qk")))
+      .reduce(_ unionByName _)
+    blockedPairs(blocks, Seq("q", "qk"), quarterCap, rowLimit, nIds,
+      pairCols = Seq(bit_count(col("x.h").bitwiseXOR(col("y.h"))).as("hamming")),
+      keep = Some(col("hamming") <= maxHamming))
   }
 
   /** Banded Hamming near-dup pairs over PRECOMPUTED 60-bit fingerprints —
-    * the [[simhashPairs]] quarter-split machinery factored out for any
-    * fingerprint family (token simhash, perceptual image dHash
+    * the [[simhashPairs]] quarter-split machinery ([[quarterPairs]]) for
+    * any fingerprint family (token simhash, perceptual image dHash
     * [[Multimodal.dHash60]], audio fingerprints): block by the 4 15-bit
     * quarters (Hamming ≤ 3 ⇒ some quarter equal, so recall is total
     * there; 4..maxHamming pairs are found on the usual OR-of-bands LSH
     * terms), drop quarter keys hotter than `quarterCap` DISTINCT
-    * fingerprints (a group of byte-identical payloads counts once, the
-    * exact-collapse accounting), and verify Hamming INSIDE the join stage
-    * before the cross-quarter distinct (the r6 simhash lesson — the
-    * exchange carries survivors only).
+    * fingerprints (`th` = the fingerprint itself, so a group of
+    * byte-identical payloads counts once, the exact-collapse accounting),
+    * and verify Hamming INSIDE the join stage before the cross-quarter
+    * distinct (the r6 simhash lesson — the exchange carries survivors
+    * only).
     *
     * Input: (id, h) with h in [0, 2^60); output (id_a, id_b, hamming),
     * id_a < id_b. Scale shape: the only corpus-sized plan is the (q, qk)
@@ -742,30 +689,11 @@ object Dedup {
     * [[crossCorpus]]. */
   def hammingPairs(hashes: DataFrame, maxHamming: Int = 3,
                    quarterCap: Int = QuarterDfCap,
-                   hotKeyRowLimit: Long = HotKeyWindowRowLimit): DataFrame = {
-    // quarter projections read the hash frame 4×+2 join sides — persist;
-    // `th` = the fingerprint itself, so dropHotKeys' dense_rank counts
-    // DISTINCT fingerprints per quarter key
-    val sig = hashes.select(col("id"), col("h"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val blocks = (0 until 4).map(q =>
-      sig.select(col("id"), col("h"), col("h").as("th"), lit(q).as("q"),
-        shiftright(col("h"), q * 15).bitwiseAND(lit(0x7fffL)).as("qk")))
-      .reduce(_ unionByName _)
-    // block rows = 4 × |hashes| exactly — free probe short-circuit
-    val blk = dropHotKeys(blocks, Seq("q", "qk"), quarterCap, hotKeyRowLimit,
-      () => if (hotKeyRowLimit == Long.MaxValue ||
-                4L * hashes.count() <= hotKeyRowLimit) 0L
-            else approxMaxKeyRows(blocks, Seq("q", "qk")))
-    blk.as("x").join(blk.as("y"),
-        col("x.q") === col("y.q") && col("x.qk") === col("y.qk") &&
-          col("x.id") < col("y.id"))
-      .withColumn("hamming",
-        bit_count(col("x.h").bitwiseXOR(col("y.h"))))
-      .where(col("hamming") <= maxHamming)
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"), col("hamming"))
-      .distinct()
-  }
+                   hotKeyRowLimit: Long = HotKeyWindowRowLimit): DataFrame =
+    // the persisted rows are exactly (id, h), so the count below reads
+    // them through the cache and builds it before the pair stages run
+    quarterPairs(hashes.select(col("id"), col("h")), col("h"), maxHamming,
+      quarterCap, hotKeyRowLimit, hashes.count())._1
 
   /** Cross-corpus (incremental) exact dedup: drop every new-crawl doc whose
     * content fingerprint already exists in a PRIOR corpus (the snapshot-

@@ -157,26 +157,13 @@ object Similarity {
     (0 until m).map(s => samples.map(v => v.slice(s * dsub, (s + 1) * dsub)))
   }
 
-  /** Subspace-s code assignment column for the given PQ codebooks:
-    * argmin ||x_s−c||² ⟺ argmax (2·x_s·c − |c|²) since |x_s|² is constant
-    * per row — one dot per centroid, the same single-evaluation struct-max
-    * as [[ivfBucket]] (tie → lowest code). */
-  private def pqCodeCol(books: Seq[Seq[Seq[Double]]], s: Int, dsub: Int): Column = {
-    val sub = slice(col("embedding"), s * dsub + 1, dsub)
-    val scored = array(books(s).zipWithIndex.map { case (c, j) =>
-      val c2 = c.map(x => x * x).sum
-      struct(
-        (graft.functions.VectorOps.dot(sub, array(c.map(lit(_)): _*)) * lit(2.0)
-          - lit(c2)).as("v"),
-        lit(-j).as("nj"))
-    }: _*)
-    (-array_max(scored).getField("nj")).cast("int")
-  }
-
   /** Per-subspace Lloyd refinement of PQ codebooks — m independent k-means
     * fused into ONE pass per round: every vector emits its m (sub, code,
-    * subvector) assignments in a single codegen scan, and the component
-    * means aggregate map-side to ≤ m·ksub·dsub rows (1024 doubles at the
+    * subvector) assignments in a single codegen scan — the codes come
+    * from the [[graft.functions.PqCodesExpr]] kernel [[pqEncode]] uses (a
+    * literal m × ksub struct-max column here made janino fail to compile
+    * the stage, which then ran interpreted) — and the component means
+    * aggregate map-side to ≤ m·ksub·dsub rows (1024 doubles at the
     * defaults) before the collect. Codes that receive no vectors keep
     * their centroid. Measured reality check (PqSpec, planted worst case —
     * every sampled centroid from one cluster): PQ's CLUSTER-level
@@ -192,13 +179,12 @@ object Similarity {
     val dsub = dim / m
     var cur = books
     for (_ <- 0 until rounds) {
-      val entries = (0 until m).map { s =>
-        struct(lit(s).as("sub"), pqCodeCol(cur, s, dsub).as("code"),
-          slice(col("embedding"), s * dsub + 1, dsub).cast("array<double>").as("sv"))
-      }
       val means = vectors
-        .select(explode(array(entries: _*)).as("e"))
-        .select(col("e.sub"), col("e.code"), posexplode(col("e.sv")).as(Seq("pos", "v")))
+        .select(col("embedding"), posexplode(graft.functions.PqFunctions
+          .pq_codes(col("embedding"), cur)).as(Seq("sub", "code")))
+        .select(col("sub"), col("code"), posexplode(
+          slice(col("embedding"), col("sub") * dsub + 1, lit(dsub)).cast("array<double>"))
+          .as(Seq("pos", "v")))
         .groupBy("sub", "code", "pos").agg(avg("v").as("mv"))
         .collect()
         .groupBy(r => (r.getInt(0), r.getInt(1)))
@@ -418,16 +404,6 @@ object Similarity {
         floor(col("d2") * lit(1e6)).cast("long").as("dist2_fp"))
   }
 
-  /** Sampled estimate of the hottest (band, key) bucket's row count —
-    * see [[graft.operators.Dedup.approxMaxKeyRows]] for the estimator
-    * rationale (detects dominance, not small counts). */
-  private def approxMaxBucketRows(bandRows: DataFrame): Long = {
-    val r = bandRows.sample(withReplacement = false, 0.02, seed = 42L)
-      .groupBy(col("band"), col("key")).agg(count(lit(1)).as("c"))
-      .agg(max(col("c")).as("mx")).head()
-    if (r.isNullAt(0)) 0L else (r.getLong(0) / 0.02).toLong
-  }
-
   /** Hot-key cap for band buckets: a degenerate corpus (e.g. many all-zero
     * embeddings) can put D vectors in one band bucket → D²/2 candidates;
     * buckets larger than this are dropped from candidate generation (same
@@ -435,12 +411,28 @@ object Similarity {
     * DuckDB oracle). Never binds on the fixtures (max bucket ≈ N/2^width). */
   val BandBucketCap = 1024
 
-  /** The sign-LSH band keys of `embedding` — shared by the self-join
-    * ([[cosinePairs]]) and bipartite ([[crossCosinePairs]]) forms so both
-    * block with the SAME hyperplanes (direction ids 100 + b·width + i,
-    * the literals the oracles embed). */
-  private def bandKeyCols(dim: Int, width: Int, effBands: Int): Seq[Column] =
-    (0 until effBands).map { b =>
+  /** The sign-LSH band rows (id, th, band, key) of `vectors`' embedding —
+    * shared by the self-join ([[cosinePairs]]) and bipartite
+    * ([[crossCosinePairs]]) forms so both block with the SAME hyperplanes
+    * (direction ids 100 + b·width + i, the literals the oracles embed).
+    * `th` = the vector id: one row per vector per band, so a bucket's
+    * distinct-th count (what [[Dedup.blockedPairs]] caps) is its row count.
+    *
+    * Divisor-aware banding: a caller passing nPlanes that `nBands` doesn't
+    * divide (e.g. the pre-round-3 default nPlanes = 8 with the new
+    * nBands = 6) gets the largest divisor of nPlanes ≤ nBands instead of an
+    * IllegalArgumentException — banding is a recall/cost knob, not a
+    * correctness contract, so degrading it beats breaking the signature.
+    * `persist` the per-vector signature of a corpus-sized side: the band
+    * projections would otherwise re-scan the vectors (and re-evaluate that
+    * band's sign dots) once per band — at 100 TB, nBands passes over the
+    * embedding column. A small side is cheaper re-scanned than persisted:
+    * each band's scan of a not-yet-built cache is its own stage. */
+  private def bandRows(vectors: DataFrame, idCol: String, dim: Int,
+                       nPlanes: Int, nBands: Int, persist: Boolean): DataFrame = {
+    val effBands = (nBands to 1 by -1).find(nPlanes % _ == 0).getOrElse(1)
+    val width = nPlanes / effBands
+    val keyCols = (0 until effBands).map { b =>
       (0 until width).map { i =>
         val dir = direction(100 + b * width + i, dim)
         when(graft.functions.VectorOps.dot(col("embedding"),
@@ -448,6 +440,14 @@ object Similarity {
           lit(1L << i)).otherwise(lit(0L))
       }.reduce(_ + _).as(s"k$b")
     }
+    val keyed = vectors.select(col(idCol).as("id") +: keyCols: _*)
+    val sig =
+      if (persist) keyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      else keyed
+    (0 until effBands).map(b => sig.select(col("id"), col("id").as("th"),
+        lit(b).as("band"), col(s"k$b").as("key")))
+      .reduce(_ unionByName _)
+  }
 
   /** Bipartite near-neighbor pairs at cosine ≥ τ between a large `corpus`
     * and a SMALL `evalSet` — semantic decontamination (the embedding-space
@@ -457,16 +457,17 @@ object Similarity {
     *
     * Scale shape: both sides get the SAME sign-LSH band keys; the eval
     * side is small by contract (an eval suite, not a corpus) so its band
-    * rows BROADCAST, and the corpus side pays one scan + the hot-bucket
-    * cap — candidate count is bounded by Σ |corpus bucket| × |eval
-    * bucket| with the corpus buckets capped, never an all-pairs compare.
-    * Exact cosine verifies candidates, so the cap is the only recall
-    * trade (same as [[cosinePairs]], mirrored in the oracle).
+    * rows BROADCAST uncapped ([[Dedup.blockedPairs]]' bipartite form), and
+    * the corpus side pays one scan + the hot-bucket cap — candidate count
+    * is bounded by Σ |corpus bucket| × |eval bucket| with the corpus
+    * buckets capped, never an all-pairs compare. Exact cosine verifies
+    * candidates, so the cap is the only recall trade (same as
+    * [[cosinePairs]], mirrored in the oracle).
     * corpus: (vec_id, embedding); evalSet: (eval_id, embedding).
     * Returns (vec_id, eval_id, cos).
     *
-    * Cache contract: the corpus signature and blocked-band frames are
-    * persisted (band projections / join sides re-read them) and the
+    * Cache contract: the corpus signature and the capped corpus band rows
+    * are persisted (band projections / join sides re-read them) and the
     * returned plan depends on them — callers release with
     * `spark.catalog.clearCache()` (or their own unpersist) after the
     * terminal action, same as [[graft.operators.Search.bm25TopK]]. */
@@ -474,37 +475,11 @@ object Similarity {
                        dim: Int, nPlanes: Int = 24, nBands: Int = 6,
                        bucketCap: Int = BandBucketCap,
                        hotKeyRowLimit: Long = Dedup.HotKeyWindowRowLimit): DataFrame = {
-    val effBands = (nBands to 1 by -1).find(nPlanes % _ == 0).getOrElse(1)
-    val width = nPlanes / effBands
-    val keyCols = bandKeyCols(dim, width, effBands)
-    val tSig = corpus.select(col("vec_id") +: keyCols: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val tRows = (0 until effBands).map(b =>
-        tSig.select(col("vec_id"), lit(b).as("band"), col(s"k$b").as("key")))
-      .reduce(_ unionByName _)
-    // corpus-side hot-bucket cap — the cosinePairs window/probe pattern
-    val pw = WExpr.partitionBy(col("band"), col("key"))
-    val probeNeeded = hotKeyRowLimit != Long.MaxValue &&
-      effBands.toLong * corpus.count() > hotKeyRowLimit
-    val blk =
-      (if (probeNeeded && approxMaxBucketRows(tRows) > hotKeyRowLimit) {
-        val hot = tRows.groupBy(col("band"), col("key"))
-          .agg(count(lit(1)).as("df")).where(col("df") > bucketCap)
-          .select("band", "key")
-        Dedup.antiJoinHotKeys(tRows, hot, Seq("band", "key"))
-      } else
-        tRows.withColumn("df", count(lit(1)).over(pw))
-          .where(col("df") <= bucketCap).drop("df"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // eval side is small by contract: no cap, no persist (effBands re-scans
-    // of an eval-suite-sized frame are noise next to the corpus scan)
-    val eSig = evalSet.select(col("eval_id") +: keyCols: _*)
-    val eRows = (0 until effBands).map(b =>
-        eSig.select(col("eval_id"), lit(b).as("band"), col(s"k$b").as("key")))
-      .reduce(_ unionByName _)
-    val cand = blk.join(broadcast(eRows), Seq("band", "key"))
-      .select("vec_id", "eval_id").distinct()
-    cand
+    val (cand, _) = Dedup.blockedPairs(
+      bandRows(corpus, "vec_id", dim, nPlanes, nBands, persist = true),
+      Seq("band", "key"), bucketCap, hotKeyRowLimit, corpus.count(),
+      other = Some(bandRows(evalSet, "eval_id", dim, nPlanes, nBands, persist = false)))
+    cand.toDF("vec_id", "eval_id")
       .join(corpus.select(col("vec_id"), col("embedding").as("emb_t")), Seq("vec_id"))
       .join(broadcast(evalSet.select(col("eval_id"), col("embedding").as("emb_e"))),
         Seq("eval_id"))
@@ -520,61 +495,18 @@ object Similarity {
     * (the old single-band form, nBands = 1) has measured recall 0.015 at
     * τ = 0.2 on the fixture; 6 bands of 4 lift it to ≈0.5 at ~3× the
     * verify cost — at 100 TB both are (band, key) equi-joins shuffling
-    * only (vec_id, key) rows, never an all-pairs comparison. */
+    * only (vec_id, key) rows, never an all-pairs comparison. The bucket
+    * cap, its skew probe (degenerate bucket skew, e.g. a corpus of
+    * near-identical embeddings, switches to the wide cap form) and the
+    * co-partitioned self-join are [[Dedup.blockedPairs]]'. */
   def cosinePairs(vectors: DataFrame, tau: Double, dim: Int,
                   nPlanes: Int = 24, nBands: Int = 6,
                   bucketCap: Int = BandBucketCap,
                   hotKeyRowLimit: Long = Dedup.HotKeyWindowRowLimit): DataFrame = {
-    // divisor-aware banding: a caller passing nPlanes that `nBands` doesn't
-    // divide (e.g. the pre-round-3 default nPlanes = 8 with the new
-    // nBands = 6) gets the largest divisor of nPlanes ≤ nBands instead of an
-    // IllegalArgumentException — banding is a recall/cost knob, not a
-    // correctness contract, so degrading it beats breaking the signature
-    val effBands = (nBands to 1 by -1).find(nPlanes % _ == 0).getOrElse(1)
-    val width = nPlanes / effBands
-    val keyCols = bandKeyCols(dim, width, effBands)
-    // persist: the band projections below would otherwise re-scan the
-    // vectors table (and re-evaluate that band's sign dots) once per band
-    // — at 100 TB that is nBands passes over the embedding column
-    val sig = vectors.select(col("vec_id") +: keyCols: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val bandRows = (0 until effBands).map(b =>
-        sig.select(col("vec_id"), lit(b).as("band"), col(s"k$b").as("key")))
-      .reduce(_ unionByName _)
-    // one exchange: count per (band, key) via window, drop hot buckets, and
-    // the persisted key-partitioned output co-partitions the self-join.
-    // Degenerate bucket skew (e.g. a corpus of near-identical embeddings
-    // putting most vectors in one band bucket) would make that window's
-    // hottest partition a single-task sort — the same sampled probe as
-    // Dedup.dropHotKeys switches to a 3-exchange groupBy-count + broadcast
-    // anti-join form (output-identical: both filter on exact per-bucket row
-    // counts; vec_ids are unique so row count = distinct count here)
-    // free short-circuit: band rows = effBands × |vectors| exactly (one row
-    // per vector per band), so a table under the limit never pays the probe
-    val pw = WExpr.partitionBy(col("band"), col("key"))
-    val probeNeeded = hotKeyRowLimit != Long.MaxValue &&
-      effBands.toLong * vectors.count() > hotKeyRowLimit
-    val blkPlan =
-      if (probeNeeded && approxMaxBucketRows(bandRows) > hotKeyRowLimit) {
-        val hot = bandRows.groupBy(col("band"), col("key"))
-          .agg(count(lit(1)).as("df")).where(col("df") > bucketCap)
-          .select("band", "key")
-        // broadcast only while the hot-bucket set is measured small — it is
-        // bounded by |band rows|/bucketCap, not by hotKeyRowLimit, so a
-        // forced broadcast could OOM the driver on the degenerate corpora
-        // this branch exists for (see Dedup.antiJoinHotKeys)
-        Dedup.antiJoinHotKeys(bandRows, hot, Seq("band", "key"))
-      } else
-        bandRows.withColumn("df", count(lit(1)).over(pw))
-          .where(col("df") <= bucketCap).drop("df")
-    val blk = blkPlan
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val cand = blk.as("x").join(blk.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
-      .distinct()
-    cand
+    val (cand, _) = Dedup.blockedPairs(
+      bandRows(vectors, "vec_id", dim, nPlanes, nBands, persist = true),
+      Seq("band", "key"), bucketCap, hotKeyRowLimit, vectors.count())
+    cand.toDF("vec_a", "vec_b")
       .join(vectors.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a")), Seq("vec_a"))
       .join(vectors.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b")), Seq("vec_b"))
       .withColumn("cos", cosine(col("emb_a"), col("emb_b")))

@@ -6,21 +6,20 @@ import org.scalatest.funsuite.AnyFunSuite
   * environment: defaults, accepted values, and numeric settings rejected
   * with a message naming the variable and quoting the value. */
 class ConfigSpec extends AnyFunSuite {
-  test("defaults: host cores, 2 query runs, 4 state partitions, AQE on") {
+  test("defaults: host cores, 2 query runs, 4 state partitions") {
     val c = new Config(Map.empty)
     assert(c.cpus == Runtime.getRuntime.availableProcessors)
     assert(c.pages.isEmpty && c.queryRuns == 2 && c.statePartitions == 4)
-    assert(c.aqe && !c.flagshipOnly && c.only.isEmpty && c.master.isEmpty)
+    assert(c.only.isEmpty && c.master.isEmpty)
     assert(c.stateStore == "hdfs")
   }
 
   test("set values are parsed") {
     val c = new Config(Map("SPARK_GRAFT_CPUS" -> "4", "SPARK_GRAFT_PAGES" -> "64000000",
-      "SPARK_GRAFT_QUERY_RUNS" -> " 3 ", "SPARK_GRAFT_AQE" -> "0",
-      "SPARK_GRAFT_FLAGSHIP_ONLY" -> "1", "SPARK_GRAFT_ONLY" -> "q1_agg,knn",
+      "SPARK_GRAFT_QUERY_RUNS" -> " 3 ", "SPARK_GRAFT_ONLY" -> "q1_agg,knn",
       "SPARK_GRAFT_MASTER" -> "local[2]", "SPARK_GRAFT_SF_DIR" -> "/data/sf1"))
     assert(c.cpus == 4 && c.pages.contains(64000000L) && c.queryRuns == 3)
-    assert(!c.aqe && c.flagshipOnly && c.only.contains(Set("q1_agg", "knn")))
+    assert(c.only.contains(Set("q1_agg", "knn")))
     assert(c.master.contains("local[2]") && c.sfDir == "/data/sf1")
     // query names are trimmed and empty names dropped
     assert(new Config(Map("SPARK_GRAFT_ONLY" -> " polygon_fill, pip_aoi ,,pip_cell_join ")).only

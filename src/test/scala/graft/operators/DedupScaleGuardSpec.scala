@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the two dedup scale guards:
@@ -13,8 +14,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *    phrase scenario: one shingle in 10³ docs → 10⁶/2 candidates) is
   *    dropped by the document-frequency cap, bounding candidate generation.
   */
-class DedupScaleGuardSpec extends AnyFunSuite {
+class DedupScaleGuardSpec extends AnyFunSuite with BeforeAndAfterEach {
   lazy val spark: SparkSession = SparkTestSession.get
+
+  // the operators persist their intermediates for the lazy result's
+  // lifetime; the caller releases them after its action
+  override def afterEach(): Unit =
+    try spark.catalog.clearCache() finally super.afterEach()
 
   /** 40 base docs + 3 copies each of two texts + a near-dup — enough dup
     * mass that both code paths have real work to agree on. */
@@ -89,10 +95,11 @@ class DedupScaleGuardSpec extends AnyFunSuite {
     assert(est > 250 && est < 4000, s"estimate $est should be ~1000")
 
     // wide and window cap forms agree exactly on the capped candidates
-    val capped = Dedup.ngramCandidates(docs, w = 3, dfCap = Dedup.ShingleDfCap)
+    val capped = collect(Dedup.ngramCandidates(docs, w = 3, dfCap = Dedup.ShingleDfCap))
+    spark.catalog.clearCache()
     val cappedWide = Dedup.ngramCandidates(docs, w = 3, dfCap = Dedup.ShingleDfCap,
       rowLimit = 100L)
-    assert(collect(capped) == collect(cappedWide))
+    assert(capped == collect(cappedWide))
 
     // the wide plan must not contain a Window node (no single-task sort of
     // the hot key) and must broadcast the hot-key side
@@ -114,13 +121,51 @@ class DedupScaleGuardSpec extends AnyFunSuite {
           .cast("array<float>").as("embedding"))
     val all = vecs(0, 2000, flip = false).unionByName(vecs(2000, 2008, flip = true))
     val wide = Similarity.cosinePairs(all, tau = 0.5, dim = 8, hotKeyRowLimit = 50L)
+    val rw = collect(wide)
+    spark.catalog.clearCache()
     val window = Similarity.cosinePairs(all, tau = 0.5, dim = 8,
       hotKeyRowLimit = Long.MaxValue)
-    val (rw, rn) = (collect(wide), collect(window))
+    val rn = collect(window)
     assert(rw.nonEmpty, "cool cluster must produce pairs")
     assert(rw == rn)
     assert(!wide.queryExecution.executedPlan.toString.contains("Window"),
       "wide form must avoid the window sort")
+  }
+
+  test("every pair family: the wide cap form equals the window cap form") {
+    // each family's row limit forced low (probe → wide 3-exchange cap) and
+    // left at its default (window cap), with caps small enough to bind
+    // (cap 1 keeps only keys whose rows share one text/fingerprint), so
+    // both forms must drop the same hot keys
+    val docs = corpus
+    val hashes = Dedup.simhash(docs).select(col("doc_id").as("id"), col("simhash").as("h"))
+    val vecs = spark.range(1, 401).select(col("id").as("vec_id"), // id 0: a zero vector
+      array((0 until 8).map(c => sin(col("id") * (c + 1))): _*)
+        .cast("array<float>").as("embedding"))
+    val evalSet = vecs.where(col("vec_id") <= 20)
+      .select(col("vec_id").as("eval_id"), col("embedding"))
+    val families: Seq[(String, Long => DataFrame)] = Seq(
+      "minhashLsh" -> (lim => Dedup.minhashLsh(docs, minJaccard = 0.2, bandCap = 1,
+        hotKeyRowLimit = lim)),
+      "simhashPairs" -> (lim => Dedup.simhashPairs(docs, maxHamming = 12, quarterCap = 1,
+        hotKeyRowLimit = lim)),
+      "hammingPairs" -> (lim => Dedup.hammingPairs(hashes, maxHamming = 12, quarterCap = 1,
+        hotKeyRowLimit = lim)),
+      "crossCosinePairs" -> (lim => Similarity.crossCosinePairs(vecs, evalSet, tau = 0.9,
+        dim = 8, bucketCap = 32, hotKeyRowLimit = lim)))
+    for ((name, run) <- families) {
+      val wide = run(10L)
+      val (rw, widePlan) = (collect(wide), wide.queryExecution.executedPlan.toString)
+      spark.catalog.clearCache()
+      val window = run(Dedup.HotKeyWindowRowLimit)
+      val (rn, windowPlan) = (collect(window), window.queryExecution.executedPlan.toString)
+      spark.catalog.clearCache()
+      assert(!widePlan.contains("Window"), s"$name: forced limit must take the wide form")
+      assert(windowPlan.contains("Window"), s"$name: default limit must take the window form")
+      assert(rw.nonEmpty, s"$name: fixture must produce pairs")
+      assert(rw == rn, name)
+      info(s"$name: ${rw.size} pairs")
+    }
   }
 
   test("hot-shingle DF cap bounds candidate generation") {
@@ -133,8 +178,10 @@ class DedupScaleGuardSpec extends AnyFunSuite {
           col("id").cast("string"), lit(" tail"), col("id").cast("string")).as("text"))
     // uncapped: every pair shares the hot shingle → n(n-1)/2 candidates
     assert(Dedup.ngramCandidates(docs, w = 3, dfCap = Int.MaxValue).count() == 1000L * 999 / 2)
+    spark.catalog.clearCache()
     // capped: the hot key is dropped; unique-tail shingles produce nothing
     assert(Dedup.ngramCandidates(docs, w = 3, dfCap = Dedup.ShingleDfCap).count() == 0)
+    spark.catalog.clearCache()
     // and the full operator still terminates with an empty (not wrong) result
     assert(Dedup.ngramJaccard(docs, w = 3, minJaccard = 0.9).count() == 0)
   }

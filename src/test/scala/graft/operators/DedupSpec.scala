@@ -2,12 +2,18 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Planted-duplicate recall: exact copies and near-copies must be found by
   * every dedup method; degenerate inputs must not crash. */
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with BeforeAndAfterEach {
   lazy val spark: SparkSession = SparkTestSession.get
+
+  // the operators persist their intermediates for the lazy result's
+  // lifetime; the caller releases them after its action
+  override def afterEach(): Unit =
+    try spark.catalog.clearCache() finally super.afterEach()
 
   private def docsWithDups = {
     import spark.implicits._

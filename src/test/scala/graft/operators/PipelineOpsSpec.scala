@@ -2,13 +2,19 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-5 pipeline additions: cross-corpus (incremental) dedup with the
   * Bloom pre-filter, chunk-level exact dedup, deterministic stratified
   * sampling, DSIR hashed-bigram scoring, and the per-domain funnel. */
-class PipelineOpsSpec extends AnyFunSuite {
+class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterEach {
   lazy val spark: SparkSession = SparkTestSession.get
+
+  // the operators persist their intermediates for the lazy result's
+  // lifetime; the caller releases them after its action
+  override def afterEach(): Unit =
+    try spark.catalog.clearCache() finally super.afterEach()
 
   test("crossCorpus: Bloom path is result-identical to the plain anti-join") {
     import spark.implicits._
@@ -26,6 +32,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val withBloom = Dedup.crossCorpus(fresh, prior, bloom = true,
         bloomSkipPriorLimit = 0L)
       .select("doc_id").as[Long].collect().sorted
+    spark.catalog.clearCache() // both Bloom-enabled paths persist the prior fingerprints
     val smallPath = Dedup.crossCorpus(fresh, prior, bloom = true)
       .select("doc_id").as[Long].collect().sorted
     val plain = Dedup.crossCorpus(fresh, prior, bloom = false)

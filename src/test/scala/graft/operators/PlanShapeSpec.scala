@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.QueryCatalog
@@ -10,8 +11,14 @@ import graft.sources.Fixtures
   * keep their hash/broadcast EQUI-join + partial-aggregation shapes — a
   * silent fallback to a nested-loop join or a missing map-side combine is
   * a 100-TB regression even when small-SF results stay correct. */
-class PlanShapeSpec extends AnyFunSuite {
+class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterEach {
   lazy val spark: SparkSession = SparkTestSession.get
+
+  // the operators persist their intermediates for the lazy result's
+  // lifetime; the caller releases them after its action
+  override def afterEach(): Unit =
+    try spark.catalog.clearCache() finally super.afterEach()
+
   private val sf = "/root/testdata/sf0.001"
 
   private def plan(name: String): String =

@@ -23,6 +23,29 @@ class PqSpec extends AnyFunSuite {
     assert(enc.map(r => (r.getLong(0), r.getInt(1))).distinct.length == enc.length)
   }
 
+  test("pqRefine: one round equals a plain-Scala Lloyd step over the collected vectors") {
+    val (m, ksub, dim) = (8, 16, 64)
+    val dsub = dim / m
+    val books = Similarity.pqCodebooks(vecs, m, ksub, dim)
+    val got = Similarity.pqRefine(vecs, books, rounds = 1, dim = dim)
+    val data = vecs.collect().map(_.getSeq[Float](1).map(_.toDouble).toArray)
+    for (s <- 0 until m) {
+      val subs = data.map(_.slice(s * dsub, (s + 1) * dsub))
+      // argmin L2 ⟺ argmax 2·x·c − |c|², lowest code on ties
+      def codeOf(x: Array[Double]): Int = books(s).indices.maxBy { j =>
+        val c = books(s)(j)
+        var dot = 0.0
+        for (t <- 0 until dsub) dot += x(t) * c(t)
+        (dot * 2.0 - c.map(v => v * v).sum, -j)
+      }
+      val members = subs.groupBy(codeOf)
+      for (j <- 0 until ksub; t <- 0 until dsub) {
+        val want = members.get(j).fold(books(s)(j)(t))(xs => xs.map(_(t)).sum / xs.length)
+        assert(math.abs(got(s)(j)(t) - want) < 1e-9, s"sub $s code $j component $t")
+      }
+    }
+  }
+
   test("pqTopK matches an independent in-memory ADC reference") {
     val q = vecs.where(col("vec_id") < 3)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))

@@ -1,14 +1,20 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Search operators: inverted index postings and BM25 top-k, verified
   * against an in-memory reference implementation on a planted corpus —
   * independent arithmetic (plain Scala doubles, no Spark expressions), so a
   * broken expression tree cannot self-confirm. */
-class SearchSpec extends AnyFunSuite {
+class SearchSpec extends AnyFunSuite with BeforeAndAfterEach {
   lazy val spark = SparkTestSession.get
+
+  // the operators persist their intermediates for the lazy result's
+  // lifetime; the caller releases them after its action
+  override def afterEach(): Unit =
+    try spark.catalog.clearCache() finally super.afterEach()
 
   private val corpus = Seq(
     (0L, "hash join hash join hash"),          // tf-heavy on two terms

@@ -19,7 +19,7 @@ import org.apache.spark.storage.StorageLevel
   *     is engaged '''adaptively''': a one-pass hash-only probe
   *     ([[dupPairMass]]) measures the exact duplicate-driven candidate mass
   *     Σ Dᵢ(Dᵢ−1) and collapses only when it exceeds
-  *     `collapseThreshold × N` (default [[CollapsePairsPerDoc]]).  The two
+  *     [[CollapsePairsPerDoc]] × N (the `dedup.collapse` [[Gate]]).  The two
   *     paths are provably output-identical (signatures, shingles and
   *     simhashes depend only on the text), which DedupScaleGuardSpec pins.
   *  2. '''Blocking-key document-frequency cap''' — a blocking key (shingle,
@@ -84,13 +84,6 @@ object Dedup {
     if (r.isNullAt(0)) (0.0, 0L) else (r.getDouble(0), r.getDouble(1).toLong)
   }
 
-  /** `threshold < 0` forces collapse, `Double.PositiveInfinity` forbids it
-    * (both used by the equivalence spec); otherwise probe the data. */
-  private def shouldCollapse(docs: DataFrame, threshold: Double): Boolean =
-    if (threshold < 0) true
-    else if (threshold.isPosInfinity) false
-    else { val (mass, n) = dupPairMass(docs); mass > threshold * n }
-
   /** Collapse exact-duplicate texts to one representative (min doc_id)
     * BEFORE any quadratic blocking stage. Returns (reps, members): `reps` is
     * one (doc_id, text) row per distinct text; `members` maps every doc_id
@@ -127,8 +120,9 @@ object Dedup {
         repPairs.columns.toSeq.filterNot(Set("doc_a", "doc_b")).map(col): _*)
 
   /** The collapse wrapper every text pair family runs through: `pairsOn`
-    * over `docs` directly, or — when [[shouldCollapse]] says the exact
-    * duplicates' candidate mass is worth it — over one representative per
+    * over `docs` directly, or — when the `dedup.collapse` gate measures
+    * more than [[CollapsePairsPerDoc]] duplicate candidate pairs per
+    * document ([[dupPairMass]]) — over one representative per
     * distinct text, expanded back to all member pairs. `pairsOn` returns
     * (pairs (doc_a, doc_b, payload…), kept (doc_id, …)): `kept` is the
     * representatives that survived blocking (≥1 non-hot key) plus whatever
@@ -136,9 +130,12 @@ object Dedup {
     * pairs (identical texts) are emitted directly with that payload, only
     * for kept groups — mirroring the uncollapsed pipeline, where a doc
     * whose keys are all hot never becomes a candidate. */
-  private def collapsedPairs(docs: DataFrame, threshold: Double, within: Seq[Column])(
+  private def collapsedPairs(docs: DataFrame, within: Seq[Column])(
       pairsOn: DataFrame => (DataFrame, DataFrame)): DataFrame =
-    if (shouldCollapse(docs, threshold)) {
+    if (Gate("dedup.collapse", CollapsePairsPerDoc) {
+        val (mass, n) = dupPairMass(docs); if (n == 0) 0.0 else mass / n
+      }) pairsOn(docs)._1
+    else {
       val (reps, members) = collapseExact(docs)
       val (repPairs, kept) = pairsOn(reps)
       val grouped = members.join(kept.withColumnRenamed("doc_id", "rep"), Seq("rep"))
@@ -146,7 +143,7 @@ object Dedup {
           col("x.rep") === col("y.rep") && col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("doc_a") +: col("y.doc_id").as("doc_b") +: within: _*)
       expandPairs(repPairs, members).unionByName(inGroup)
-    } else pairsOn(docs)._1
+    }
 
   /** Distinct shingle rows (doc_id, th, sh); th = md5(text) identifies the
     * distinct text, so blocking-key DF is counted identically whether the
@@ -188,9 +185,10 @@ object Dedup {
     * sample of `rows` (persisted upstream, so the scan is cheap and also
     * warms the cache the downstream stages reuse). Scale-up of the sampled
     * max is a fine estimator HERE because the probe only needs to detect
-    * keys that dominate the corpus (≫ rowLimit rows): such a key appears
-    * ~fraction·D times in the sample with tiny relative error, while keys
-    * far below the limit can be off by 10× without changing the plan. */
+    * keys that dominate the corpus (≫ [[HotKeyWindowRowLimit]] rows): such
+    * a key appears ~fraction·D times in the sample with tiny relative
+    * error, while keys far below the limit can be off by 10× without
+    * changing the plan. */
   private[graft] def approxMaxKeyRows(rows: DataFrame, keyCols: Seq[String]): Long = {
     val r = rows.sample(withReplacement = false, SkewProbeFraction, seed = 42L)
       .groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("c"))
@@ -207,15 +205,15 @@ object Dedup {
   val HotKeySetBroadcastLimit = 1000000L
 
   /** Anti-join `rows` against a hot-key set, broadcasting only when the set
-    * is MEASURED small (one count over the already-aggregated keys — the
-    * shuffle that produced them is cached by the count and reused by the
-    * join). Above [[HotKeySetBroadcastLimit]] the plain shuffle anti-join
-    * costs one more exchange of `rows` but cannot OOM the driver. */
+    * is MEASURED small (the `dedup.hotKeySet` gate: one count over the
+    * already-aggregated keys — the shuffle that produced them is cached by
+    * the count and reused by the join). Above [[HotKeySetBroadcastLimit]]
+    * the plain shuffle anti-join costs one more exchange of `rows` but
+    * cannot OOM the driver. */
   private def antiJoinHotKeys(rows: DataFrame, hot: DataFrame,
                               keyCols: Seq[String]): DataFrame = {
     val h = hot.persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val small = h.count() <= HotKeySetBroadcastLimit
-    if (small) {
+    if (Gate("dedup.hotKeySet", HotKeySetBroadcastLimit)(h.count())) {
       // measured-small path (the overwhelmingly common one): COLLECT the
       // keys — bounded by the very limit the broadcast would enforce — into
       // a LocalRelation, so the cached frame is unpersisted HERE instead of
@@ -243,9 +241,10 @@ object Dedup {
     * [[hammingPairs]], the vector id for the embedding families — and a
     * key holds at most one row per id, so keys shared by more than `cap`
     * DISTINCT th values are dropped. `nIds` (by name) is the input's id
-    * count, which therefore bounds the hottest key's rows: only above
-    * `rowLimit` does the sampled probe ([[approxMaxKeyRows]]) run, and only
-    * a probe above `rowLimit` switches the cap form:
+    * count, which therefore bounds the hottest key's rows. The
+    * `dedup.hotKeyProbe` gate measures it: only above
+    * [[HotKeyWindowRowLimit]] does the sampled probe ([[approxMaxKeyRows]])
+    * run, and only a probe above that limit switches the cap form:
     *
     *  - window (default): ONE exchange — window by the key, where
     *    max(dense_rank ordered by th) = exact count(DISTINCT th);
@@ -267,11 +266,15 @@ object Dedup {
     * Returns (pairs (id_a, id_b, pairCols…) distinct, kept ids (id)): the
     * ids with ≥1 non-hot key, which the collapse path needs. */
   private[graft] def blockedPairs(rows: DataFrame, keyCols: Seq[String], cap: Int,
-      rowLimit: Long, nIds: => Long, other: Option[DataFrame] = None,
+      nIds: => Long, other: Option[DataFrame] = None,
       pairCols: Seq[Column] = Nil, keep: Option[Column] = None): (DataFrame, DataFrame) = {
     val kcols = keyCols.map(col)
+    val window = Gate("dedup.hotKeyProbe", HotKeyWindowRowLimit) {
+      val n = nIds
+      if (n <= HotKeyWindowRowLimit) n else approxMaxKeyRows(rows, keyCols)
+    }
     val capped =
-      if (nIds > rowLimit && approxMaxKeyRows(rows, keyCols) > rowLimit) {
+      if (!window) {
         val hot = rows.select(kcols :+ col("th"): _*).distinct()
           .groupBy(kcols: _*).agg(count(lit(1)).as("df"))
           .where(col("df") > cap)
@@ -299,10 +302,9 @@ object Dedup {
   /** Shingle-blocked candidate pairs with the DF cap applied — exposed so
     * the planted hot-shingle scale test and `Measure dedup-guard` can measure
     * the candidate count (the blowup is invisible in the verified output). */
-  private[graft] def ngramCandidates(docs: DataFrame, w: Int, dfCap: Int,
-                                     rowLimit: Long = HotKeyWindowRowLimit): DataFrame =
+  private[graft] def ngramCandidates(docs: DataFrame, w: Int, dfCap: Int): DataFrame =
     blockedPairs(shingleTableTh(docs, w).withColumnRenamed("doc_id", "id"), Seq("sh"),
-      dfCap, rowLimit, docs.count())._1.toDF("doc_a", "doc_b")
+      dfCap, docs.count())._1.toDF("doc_a", "doc_b")
 
   /** MinHash signatures: nHashes permutations approximated by salted md5;
     * minhash_i(doc) = min over shingles of h60(i || ':' || shingle). */
@@ -320,10 +322,8 @@ object Dedup {
     * fraction for determinism). */
   def minhashLsh(docs: DataFrame, w: Int = 3, nHashes: Int = 8,
                  rowsPerBand: Int = 2, minJaccard: Double = 0.5,
-                 bandCap: Int = BandDfCap,
-                 collapseThreshold: Double = CollapsePairsPerDoc,
-                 hotKeyRowLimit: Long = HotKeyWindowRowLimit): DataFrame =
-    collapsedPairs(docs, collapseThreshold, exactJaccard) { base =>
+                 bandCap: Int = BandDfCap): DataFrame =
+    collapsedPairs(docs, exactJaccard) { base =>
       // ONE shingle table shared by the signature aggregation and the verify
       // join — the explode + distinct shuffle (the dominant scan at 100 TB)
       // happens once instead of twice; the same aggregation also emits each
@@ -335,13 +335,15 @@ object Dedup {
         count(lit(1)).as("n_sh")
       val sig = sh3.groupBy("doc_id", "th").agg(aggs.head, aggs.tail: _*)
         .persist(StorageLevel.MEMORY_AND_DISK_SER)
-      val bands = (0 until nHashes / rowsPerBand).map { b =>
-        val cols = (0 until rowsPerBand).map(r => col(s"mh_${b * rowsPerBand + r}"))
-        sig.select(col("doc_id").as("id"), col("th"),
-          lit(b).as("band"), md5(concat_ws("_", cols: _*)).as("band_key"))
-      }.reduce(_ unionByName _)
+      // every band's rows in ONE pass over the signature, not a per-band union
+      val bands = sig.select(col("doc_id").as("id"), col("th"),
+          explode(array((0 until nHashes / rowsPerBand).map { b =>
+            val cols = (0 until rowsPerBand).map(r => col(s"mh_${b * rowsPerBand + r}"))
+            struct(lit(b).as("band"), md5(concat_ws("_", cols: _*)).as("band_key"))
+          }: _*)).as("b"))
+        .select(col("id"), col("th"), col("b.band"), col("b.band_key"))
       val (cand, kept) = blockedPairs(bands, Seq("band", "band_key"), bandCap,
-        hotKeyRowLimit, base.count())
+        base.count())
       val sizes = sig.select("doc_id", "n_sh")
       (verifyJaccardOnShingles(sh3.select("doc_id", "sh"), cand.toDF("doc_a", "doc_b"),
         minJaccard, Some(sizes)), kept.toDF("doc_id").join(sizes, "doc_id"))
@@ -385,18 +387,26 @@ object Dedup {
     * distinct-text DF ≤ dfCap (shingle-blocked join), verified exactly over
     * the full shingle sets. */
   def ngramJaccard(docs: DataFrame, w: Int = 3, minJaccard: Double = 0.3,
-                   dfCap: Int = ShingleDfCap,
-                   collapseThreshold: Double = CollapsePairsPerDoc,
-                   hotKeyRowLimit: Long = HotKeyWindowRowLimit): DataFrame =
-    collapsedPairs(docs, collapseThreshold, exactJaccard) { base =>
+                   dfCap: Int = ShingleDfCap): DataFrame =
+    collapsedPairs(docs, exactJaccard) { base =>
       val sh3 = shingleTableTh(base, w)
       val (cand, kept) = blockedPairs(sh3.withColumnRenamed("doc_id", "id"), Seq("sh"),
-        dfCap, hotKeyRowLimit, base.count())
+        dfCap, base.count())
       val sh = sh3.select("doc_id", "sh")
       val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
       (verifyJaccardOnShingles(sh, cand.toDF("doc_a", "doc_b"), minJaccard, Some(sizes)),
         kept.toDF("doc_id").join(sizes, "doc_id"))
     }
+
+  /** Edge-count ceiling for [[connectedComponents]]'s single-task
+    * union-find fast path (the `cc.oneTask` gate), shared by
+    * [[Graph.pageRank]] and [[Graph.hits]]. 2M symmetric edges ≈ a few
+    * hundred MB of hash-map state in one task — far under executor memory —
+    * while the graphs the threshold targets (near-dup pair graphs of
+    * fixture-to-moderate corpora) finish in one O(E·α) pass instead of
+    * paying the loop's per-iteration shuffle fixed costs. Measured at sf0.1
+    * (136k edges): 2.40 s loop → ~0.3 s fast path. */
+  val LocalCcEdgeLimit = 2000000L
 
   /** Duplicate-CLUSTER resolution: connected components over an undirected
     * near-dup pair list (the step between "pairs" and "keepers" in a real
@@ -417,21 +427,11 @@ object Dedup {
     * label = min doc_id of its component. The labels carry no join hint:
     * both paths end in a checkpoint with UNKNOWN stats, so a caller joining
     * them against a corpus-sized id column hints `broadcast` at that join
-    * (otherwise it gets a SortMergeJoin that shuffles the corpus). Below
-    * `localEdgeLimit` the label table is ≤ 2× that many rows, a measured-
-    * small broadcast at any corpus size; non-join consumers stay free of
-    * hint warnings. */
-  /** Edge-count ceiling for [[connectedComponents]]'s single-task
-    * union-find fast path. 2M symmetric edges ≈ a few hundred MB of
-    * hash-map state in one task — far under executor memory — while the
-    * graphs the threshold targets (near-dup pair graphs of fixture-to-
-    * moderate corpora) finish in one O(E·α) pass instead of paying the
-    * loop's per-iteration shuffle fixed costs. Measured at sf0.1 (136k
-    * edges): 2.40 s loop → ~0.3 s fast path. */
-  val LocalCcEdgeLimit = 2000000L
-
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-      localEdgeLimit: Long = LocalCcEdgeLimit): DataFrame = {
+    * (otherwise it gets a SortMergeJoin that shuffles the corpus). At or
+    * below [[LocalCcEdgeLimit]] edges the label table is ≤ 2× that many
+    * rows, a measured-small broadcast at any corpus size; non-join
+    * consumers stay free of hint warnings. */
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
     // eager localCheckpoint, NOT plain persist: an iterative loop over
     // persisted frames still re-analyzes the whole accumulated logical plan
     // (including the pair producer's full lineage, referenced twice by the
@@ -450,26 +450,16 @@ object Dedup {
       .select(col("e.u").as("u"), col("e.v").as("v"))
       .distinct()
       .localCheckpoint(true)
-    // size the loop's shuffles to the GRAPH, not the corpus: the pair graph
-    // is orders of magnitude smaller than the documents it came from, and
-    // each iteration pays 4 exchanges whose per-task fixed cost dominates
-    // when partitions ≫ data (same lesson as the stream-stream join's
-    // state-sized shuffle). Measured from the already-materialized edge
-    // count (a cached-block scan), ~2M edges per partition, never above
-    // the session setting — at 100-TB pair volumes this keeps the session
-    // value.
-    val caller = pairs.sparkSession
-    val edgeCount = edges.count()
 
-    // hybrid CC: a measured-small graph is pure per-iteration shuffle fixed
-    // cost for the loop below — ONE task runs union-find over the whole
-    // edge list in O(E·α) and emits the identical min-label-per-component
+    // hybrid CC: a measured-small graph (the edge count is a scan of the
+    // checkpoint's cached blocks) is pure per-iteration shuffle fixed cost
+    // for the loop below — ONE task runs union-find over the whole edge
+    // list in O(E·α) and emits the identical min-label-per-component
     // contract (union always points the larger root at the smaller, so a
-    // set's root IS its minimum node id). The task is bounded by
-    // `localEdgeLimit` (see [[LocalCcEdgeLimit]]); graphs above it take the
+    // set's root IS its minimum node id). Graphs above the limit take the
     // distributed loop. CcEquivalenceSpec pins path equality.
-    if (edgeCount <= localEdgeLimit) {
-      import caller.implicits._
+    if (Gate("cc.oneTask", LocalCcEdgeLimit)(edges.count())) {
+      import pairs.sparkSession.implicits._
       // the union-find runs on Longs; cast the output back to the INPUT id
       // dtype so both CC paths emit an identical schema (the distributed
       // loop preserves the input type — a caller passing int ids must not
@@ -503,33 +493,14 @@ object Dedup {
       return out
     }
 
-    val sessionParts = caller.conf.get("spark.sql.shuffle.partitions").toInt
-    val graphParts = math.max(4L, math.min(sessionParts.toLong,
-      edgeCount / 2000000L + 1L)).toInt
-    // the override lives in a CLONED session (shared SparkContext, cache
-    // manager and checkpoint blocks; private SQLConf): mutating the
-    // caller's session-global shuffle.partitions — even restored in a
-    // finally — would make any CONCURRENT query on the same session plan
-    // its corpus-sized shuffles at the graph's partition count. A plain
-    // per-plan repartition() can't replace the conf here: it is a
-    // user-inserted exchange of RAW rows, which forfeits the partial
-    // (map-side) aggregation the loop's neighbor-min relies on. The
-    // checkpointed edge frame crosses sessions via a uniquely-named global
-    // temp view (its plan is a constant-size LogicalRDD).
-    val loopSession = caller.newSession()
-    loopSession.conf.set("spark.sql.shuffle.partitions", graphParts.toString)
-    val viewTag = s"graft_cc_${ccSeq.incrementAndGet()}"
-    edges.createOrReplaceGlobalTempView(s"${viewTag}_edges")
-    try {
-    val edgesLoop = loopSession.table(s"global_temp.${viewTag}_edges")
-    // iteration 0 is folded into initialization: label(node) = min of the
-    // CLOSED neighborhood, one aggregation over the symmetric edges (every
-    // node appears as `u`). The old form derived the node set with a
-    // distinct and then spent a full join round to reach this same state.
+    // the loop's shuffles run at the session's partition count, which AQE
+    // coalesces to the graph's size. Iteration 0 is folded into
+    // initialization: label(node) = min of the CLOSED neighborhood, one
+    // aggregation over the symmetric edges (every node appears as `u`).
     // `ckpt` is the frame actually holding checkpoint blocks (unpersist
     // target — unpersisting a projection of it would be a no-op and leak);
     // `labels` is the (node, label) view the joins use
-    var ckpt = edgesLoop.groupBy(col("u").as("node"))
+    var ckpt = edges.groupBy(col("u").as("node"))
       .agg(min(col("v")).as("mn"))
       .select(col("node"), least(col("mn"), col("node")).as("label"))
       .localCheckpoint(true)
@@ -539,7 +510,7 @@ object Dedup {
     while (changed > 0 && iter < maxIter) {
       // step 1: neighbor-min — each node takes the min label in its
       // closed neighborhood
-      val nbr = edgesLoop.join(labels.select(col("node").as("v"), col("label")), Seq("v"))
+      val nbr = edges.join(labels.select(col("node").as("v"), col("label")), Seq("v"))
         .select(col("u").as("node"), col("label"))
       val relaxed = labels.unionByName(nbr)
         .groupBy("node").agg(min("label").as("label"))
@@ -569,21 +540,8 @@ object Dedup {
     }
     require(changed == 0, s"connectedComponents did not converge in $maxIter iterations")
     edges.unpersist()
-    // hand the result back to the CALLER's session (same view mechanism) so
-    // downstream plans over it use the caller's conf, not the loop clone's;
-    // the view resolves to the final checkpoint's constant-size LogicalRDD,
-    // so dropping the views afterwards cannot invalidate the returned frame
-    labels.createOrReplaceGlobalTempView(s"${viewTag}_labels")
-    val out = caller.table(s"global_temp.${viewTag}_labels")
-    caller.catalog.dropGlobalTempView(s"${viewTag}_labels")
-    out
-    } finally caller.catalog.dropGlobalTempView(s"${viewTag}_edges")
+    labels
   }
-
-  /** Monotonic tag for [[connectedComponents]]'s cross-session temp views —
-    * global temp views are process-wide, so concurrent CC runs must not
-    * collide on a name. */
-  private val ccSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** (doc_id, simhash) — the per-token pipeline carries NOTHING but
     * (doc_id, token): th (the 32-char text md5, functionally dependent on
@@ -621,35 +579,34 @@ object Dedup {
     * at least one quarter equal), drop quarter keys hotter than `quarterCap`
     * distinct texts, verify Hamming distance exactly. */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-                   quarterCap: Int = QuarterDfCap,
-                   collapseThreshold: Double = CollapsePairsPerDoc,
-                   hotKeyRowLimit: Long = HotKeyWindowRowLimit): DataFrame =
-    collapsedPairs(docs, collapseThreshold, Seq(lit(0).cast("int").as("hamming"))) { base =>
+                   quarterCap: Int = QuarterDfCap): DataFrame =
+    collapsedPairs(docs, Seq(lit(0).cast("int").as("hamming"))) { base =>
       val sig = simhashTh(base)
         .select(col("doc_id").as("id"), col("th"), col("simhash").as("h"))
-      val (pairs, kept) =
-        quarterPairs(sig, col("th"), maxHamming, quarterCap, hotKeyRowLimit, base.count())
+      val (pairs, kept) = quarterPairs(sig, col("th"), maxHamming, quarterCap, base.count())
       (pairs.toDF("doc_a", "doc_b", "hamming"), kept.toDF("doc_id"))
     }
 
   /** The 4-quarter blocking shared by [[simhashPairs]] and [[hammingPairs]]
     * over (id, h) fingerprint rows: key (q, qk) = the q-th 15-bit quarter
     * of h, capped at `quarterCap` distinct `th` values (the text md5 for
-    * simhash, h itself for hamming). The rows are persisted (4 block
-    * projections + 2 join sides read them). Hamming is verified INSIDE
+    * simhash, h itself for hamming). The rows are persisted and the four
+    * block rows of each are emitted in ONE pass (a union of per-quarter
+    * projections would build the cache once per branch). Hamming is
+    * verified INSIDE
     * the join stage, before the cross-quarter distinct:
     * bit_count is a couple of codegen'd instructions, while the distinct is
     * an exchange — so it carries survivors only, not every quarter
     * collision (×2 fingerprints per row). Identical output: a pair seen via
     * several quarters has the same hamming on every route. */
   private def quarterPairs(sig: DataFrame, th: Column, maxHamming: Int, quarterCap: Int,
-      rowLimit: Long, nIds: => Long): (DataFrame, DataFrame) = {
+      nIds: => Long): (DataFrame, DataFrame) = {
     val fp = sig.persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val blocks = (0 until 4).map(q =>
-      fp.select(col("id"), col("h"), th.as("th"), lit(q).as("q"),
-        shiftright(col("h"), q * 15).bitwiseAND(lit(0x7fffL)).as("qk")))
-      .reduce(_ unionByName _)
-    blockedPairs(blocks, Seq("q", "qk"), quarterCap, rowLimit, nIds,
+    val blocks = fp.select(col("id"), col("h"), th.as("th"),
+        explode(array((0 until 4).map(q => struct(lit(q).as("q"),
+          shiftright(col("h"), q * 15).bitwiseAND(lit(0x7fffL)).as("qk"))): _*)).as("b"))
+      .select(col("id"), col("h"), col("th"), col("b.q"), col("b.qk"))
+    blockedPairs(blocks, Seq("q", "qk"), quarterCap, nIds,
       pairCols = Seq(bit_count(col("x.h").bitwiseXOR(col("y.h"))).as("hamming")),
       keep = Some(col("hamming") <= maxHamming))
   }
@@ -682,18 +639,25 @@ object Dedup {
     * wider band split (e.g. ⌈d+1⌉ bands), paying proportionally more
     * join volume.
     *
-    * Cache contract: the quarter projection is persisted (4 block
-    * projections + 2 join sides read it) and the returned plan depends
+    * Cache contract: the fingerprint rows and the capped quarter rows are
+    * persisted (the probe and both join sides read them) and the returned plan depends
     * on it — callers release it with `spark.catalog.clearCache()` (or
     * their own unpersist) after the terminal action, same as
     * [[crossCorpus]]. */
   def hammingPairs(hashes: DataFrame, maxHamming: Int = 3,
-                   quarterCap: Int = QuarterDfCap,
-                   hotKeyRowLimit: Long = HotKeyWindowRowLimit): DataFrame =
+                   quarterCap: Int = QuarterDfCap): DataFrame =
     // the persisted rows are exactly (id, h), so the count below reads
     // them through the cache and builds it before the pair stages run
     quarterPairs(hashes.select(col("id"), col("h")), col("h"), maxHamming,
-      quarterCap, hotKeyRowLimit, hashes.count())._1
+      quarterCap, hashes.count())._1
+
+  /** Prior-fingerprint count at or below which [[crossCorpus]] skips the
+    * Bloom stage for a plain anti-join: a prior that fits a broadcast
+    * build (8-byte fingerprints; 4M ≈ tens of MB) makes the broadcast
+    * LEFT ANTI join strictly better at ANY scale — the new side is not
+    * shuffled AT ALL and no Bloom build pass runs. The Bloom stage's value
+    * begins exactly where the prior outgrows broadcast. */
+  val BloomSkipPriorLimit = 4000000L
 
   /** Cross-corpus (incremental) exact dedup: drop every new-crawl doc whose
     * content fingerprint already exists in a PRIOR corpus (the snapshot-
@@ -709,8 +673,10 @@ object Dedup {
     *     ~dup_rate·|new| rows instead of |new|.
     *
     * False positives are exact-verified away by stage 2, so the output is
-    * deterministic and identical to a plain anti-join (pinned by
-    * DedupSpec) — the Bloom stage is pure shuffle avoidance. Fingerprints
+    * deterministic and identical to the measured-small prior's plain
+    * broadcast anti-join (the `crossCorpus.bloomSkip` gate, see
+    * [[BloomSkipPriorLimit]]; PipelineOpsSpec pins both sides) — the Bloom
+    * stage is pure shuffle avoidance. Fingerprints
     * are the engine-portable 60-bit md5; only (doc_id, fp) ever shuffles.
     * Output: surviving new docs as (doc_id, fp).
     *
@@ -719,22 +685,10 @@ object Dedup {
     * depends on it — callers release it with `spark.catalog.clearCache()`
     * (or their own unpersist) after the terminal action; same contract as
     * [[graft.operators.Search.bm25TopK]] / [[TextOps.ngramNovelty]]. */
-  /** Prior-fingerprint count at or below which [[crossCorpus]] skips the
-    * Bloom stage for a plain anti-join: a prior that fits a broadcast
-    * build (8-byte fingerprints; 4M ≈ tens of MB) makes the broadcast
-    * LEFT ANTI join strictly better at ANY scale — the new side is not
-    * shuffled AT ALL and no Bloom build pass runs. The Bloom stage's value
-    * begins exactly where the prior outgrows broadcast. */
-  val BloomSkipPriorLimit = 4000000L
-
   def crossCorpus(newDocs: DataFrame, prior: DataFrame,
-      fpp: Double = 0.01, bloom: Boolean = true,
-      bloomSkipPriorLimit: Long = BloomSkipPriorLimit): DataFrame = {
+      fpp: Double = 0.01): DataFrame = {
     val spark = newDocs.sparkSession
     val nf = newDocs.select(col("doc_id"), h60(col("text")).as("fp"))
-    if (!bloom) return nf.join(
-        prior.select(h60(col("text")).as("fp")).distinct(), Seq("fp"), "left_anti")
-      .select("doc_id", "fp")
     // the prior fingerprints are read up to three times (count for
     // expectedNumItems, bloomFilter build, exact verify anti-join) —
     // persist so the prior corpus is scanned+hashed once, not per action
@@ -742,12 +696,11 @@ object Dedup {
     val pf = prior.select(h60(col("text")).as("fp"))
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
     // expectedNumItems from a cheap hash-only count; never collect the fps
-    val nPrior = math.max(pf.count(), 1L)
+    lazy val nPrior = math.max(pf.count(), 1L)
     // measured-small prior: broadcast anti-join, no Bloom build, no UDF
     // pass, zero shuffle of the new side — output-identical to the Bloom
-    // path (which is itself pinned identical to the plain anti-join by
-    // DedupSpec). The count above is paid on both paths.
-    if (nPrior <= bloomSkipPriorLimit)
+    // path. The count is paid on both paths unless the gate is forced.
+    if (Gate("crossCorpus.bloomSkip", BloomSkipPriorLimit)(nPrior))
       return nf.join(pf.distinct(), Seq("fp"), "left_anti").select("doc_id", "fp")
     val filter = pf.stat.bloomFilter("fp", nPrior, fpp)
     val bc = spark.sparkContext.broadcast(filter)

@@ -11,12 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Edge-count ceiling for [[pageRank]]'s single-task fast path — the
-    * [[Dedup.LocalCcEdgeLimit]] sizing argument: 2M weighted edges is a
-    * few hundred MB of task state, far under executor memory, while the
-    * loop above it pays iters × per-round shuffle fixed cost. */
-  val LocalPrEdgeLimit = 2000000L
-
   /** PageRank (Page et al. 1999) in exact INTEGER micro-units — designed
     * so the cross-engine gate is a hash match, not a float truce: ranks
     * live in millionths (r₀ = 1 000 000 = 1.0), each edge contribution is
@@ -48,9 +42,10 @@ object Graph {
     * domain graph is usually tiny next to the corpus it came from (10⁵–10⁷
     * hosts for a 10¹²-page crawl), and the distributed loop's per-round
     * cost on a measured-small graph is pure shuffle fixed cost × iters. An
-    * edge table at or under `localEdgeLimit` rows therefore iterates in
-    * ONE task (identical integer math — GraphSpec pins fast == loop);
-    * larger graphs keep the distributed loop.
+    * edge table at or under [[Dedup.LocalCcEdgeLimit]] rows (CC's sizing
+    * argument) therefore iterates in ONE task (the `pagerank.oneTask` gate;
+    * identical integer math — GraphSpec pins fast == loop); larger graphs
+    * keep the distributed loop.
     *
     * edges: (src, dst, w) — pre-aggregated, self-loops already dropped.
     * Returns (node, rank_u) for every node appearing as src or dst.
@@ -64,8 +59,7 @@ object Graph {
     * node-sized agg next to the round's edge join; O(nodes) scan on the
     * fast path) and fail loudly with a rescale hint instead. */
   def pageRank(edges: DataFrame, iters: Int = 10,
-               dampNum: Long = 85L, jumpU: Long = 150000L,
-               localEdgeLimit: Long = LocalPrEdgeLimit): DataFrame = {
+               dampNum: Long = 85L, jumpU: Long = 150000L): DataFrame = {
     require(iters >= 0)
     val spark = edges.sparkSession
     import spark.implicits._
@@ -77,7 +71,7 @@ object Graph {
     // every round, so its lineage must not include the corpus scan
     val ew = edges.join(outW, Seq("src")).localCheckpoint(true)
 
-    if (ew.count() <= localEdgeLimit) {
+    if (Gate("pagerank.oneTask", Dedup.LocalCcEdgeLimit)(ew.count())) {
       val idType = edges.schema(edges.schema.fieldIndex("src")).dataType
       val out = ew.select(col("src").cast("long"), col("dst").cast("long"),
           col("w").cast("long"), col("wout").cast("long"))
@@ -144,17 +138,17 @@ object Graph {
     * rounds hash-match ten unrolled oracle CTE rounds with no float
     * tolerance anywhere — the pageRank determinism family.
     *
-    * Hybrid like [[pageRank]]: an edge table measured ≤ `localEdgeLimit`
-    * runs all rounds in ONE task with identical arithmetic (GraphSpec
-    * pins fast == loop); larger graphs keep the distributed loop —
-    * per round two edge-sized joins + map-side integer sums + a
-    * node-sized left join, lineage checkpoint-truncated. Overflow fails
-    * loudly up front: scores are ≤ 1e6 after every rescale, so the guard
-    * is static — max per-node in/out weight ≤ Long.MaxValue / 1e12.
+    * Hybrid like [[pageRank]] (the `hits.oneTask` gate): an edge table
+    * measured ≤ [[Dedup.LocalCcEdgeLimit]] runs all rounds in ONE task with
+    * identical arithmetic (GraphSpec pins fast == loop); larger graphs
+    * keep the distributed loop — per round two edge-sized joins + map-side
+    * integer sums + a node-sized left join, lineage checkpoint-truncated.
+    * Overflow fails loudly up front: scores are ≤ 1e6 after every
+    * rescale, so the guard is static — max per-node in/out weight ≤
+    * Long.MaxValue / 1e12.
     *
     * edges: (src, dst, w). Returns (node, hub_u, auth_u). */
-  def hits(edges: DataFrame, iters: Int = 10,
-           localEdgeLimit: Long = LocalPrEdgeLimit): DataFrame = {
+  def hits(edges: DataFrame, iters: Int = 10): DataFrame = {
     require(iters >= 1, "hits: need at least one round")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -172,7 +166,7 @@ object Graph {
     require(degBound <= Long.MaxValue / 1000000000000L,
       s"hits: per-node weight $degBound would overflow the 1e12 headroom — rescale w")
 
-    if (nEdges <= localEdgeLimit) {
+    if (Gate("hits.oneTask", Dedup.LocalCcEdgeLimit)(nEdges)) {
       val idType = edges.schema(edges.schema.fieldIndex("src")).dataType
       val out = ew.select(col("src").cast("long"), col("dst").cast("long"),
           col("w").cast("long"))

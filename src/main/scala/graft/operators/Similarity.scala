@@ -423,11 +423,10 @@ object Similarity {
     * nBands = 6) gets the largest divisor of nPlanes ≤ nBands instead of an
     * IllegalArgumentException — banding is a recall/cost knob, not a
     * correctness contract, so degrading it beats breaking the signature.
-    * `persist` the per-vector signature of a corpus-sized side: the band
-    * projections would otherwise re-scan the vectors (and re-evaluate that
-    * band's sign dots) once per band — at 100 TB, nBands passes over the
-    * embedding column. A small side is cheaper re-scanned than persisted:
-    * each band's scan of a not-yet-built cache is its own stage. */
+    * Every band's rows come from ONE pass over the per-vector signature.
+    * `persist` the signature of a corpus-sized side: the skew probe's
+    * sample and the wide cap form re-read the band rows, which would
+    * otherwise re-evaluate the sign dots. A small side is re-scanned. */
   private def bandRows(vectors: DataFrame, idCol: String, dim: Int,
                        nPlanes: Int, nBands: Int, persist: Boolean): DataFrame = {
     val effBands = (nBands to 1 by -1).find(nPlanes % _ == 0).getOrElse(1)
@@ -444,9 +443,9 @@ object Similarity {
     val sig =
       if (persist) keyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       else keyed
-    (0 until effBands).map(b => sig.select(col("id"), col("id").as("th"),
-        lit(b).as("band"), col(s"k$b").as("key")))
-      .reduce(_ unionByName _)
+    sig.select(col("id"), col("id").as("th"), explode(array((0 until effBands).map(b =>
+        struct(lit(b).as("band"), col(s"k$b").as("key"))): _*)).as("b"))
+      .select(col("id"), col("th"), col("b.band"), col("b.key"))
   }
 
   /** Bipartite near-neighbor pairs at cosine ≥ τ between a large `corpus`
@@ -473,11 +472,10 @@ object Similarity {
     * terminal action, same as [[graft.operators.Search.bm25TopK]]. */
   def crossCosinePairs(corpus: DataFrame, evalSet: DataFrame, tau: Double,
                        dim: Int, nPlanes: Int = 24, nBands: Int = 6,
-                       bucketCap: Int = BandBucketCap,
-                       hotKeyRowLimit: Long = Dedup.HotKeyWindowRowLimit): DataFrame = {
+                       bucketCap: Int = BandBucketCap): DataFrame = {
     val (cand, _) = Dedup.blockedPairs(
       bandRows(corpus, "vec_id", dim, nPlanes, nBands, persist = true),
-      Seq("band", "key"), bucketCap, hotKeyRowLimit, corpus.count(),
+      Seq("band", "key"), bucketCap, corpus.count(),
       other = Some(bandRows(evalSet, "eval_id", dim, nPlanes, nBands, persist = false)))
     cand.toDF("vec_id", "eval_id")
       .join(corpus.select(col("vec_id"), col("embedding").as("emb_t")), Seq("vec_id"))
@@ -501,11 +499,10 @@ object Similarity {
     * co-partitioned self-join are [[Dedup.blockedPairs]]'. */
   def cosinePairs(vectors: DataFrame, tau: Double, dim: Int,
                   nPlanes: Int = 24, nBands: Int = 6,
-                  bucketCap: Int = BandBucketCap,
-                  hotKeyRowLimit: Long = Dedup.HotKeyWindowRowLimit): DataFrame = {
+                  bucketCap: Int = BandBucketCap): DataFrame = {
     val (cand, _) = Dedup.blockedPairs(
       bandRows(vectors, "vec_id", dim, nPlanes, nBands, persist = true),
-      Seq("band", "key"), bucketCap, hotKeyRowLimit, vectors.count())
+      Seq("band", "key"), bucketCap, vectors.count())
     cand.toDF("vec_a", "vec_b")
       .join(vectors.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a")), Seq("vec_a"))
       .join(vectors.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b")), Seq("vec_b"))

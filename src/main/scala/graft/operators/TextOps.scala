@@ -229,9 +229,9 @@ object TextOps {
     * Returns (doc_id, n_matched_grams = DISTINCT grams hit, contaminated).
     *
     * Hybrid driver-memory discipline (the crossCorpus/CC/bpeTrain
-    * pattern): a benchmark whose distinct gram count measures ≤
-    * `gramSetLimit` — the normal case, eval suites are thousands of
-    * documents — collects its grams into ONE broadcast Set, and the
+    * pattern): a benchmark whose distinct gram count measures ≤ 2M (the
+    * `decontaminate.gramSet` gate) — the normal case, eval suites are
+    * thousands of documents — collects its grams into ONE broadcast Set, and the
     * corpus side is a zero-shuffle typed mapPartitions pass. Above the
     * limit nothing corpus-scale is ever collected: a BLOOM filter over
     * the benchmark grams is built distributively
@@ -246,8 +246,7 @@ object TextOps {
     * callers release it with `spark.catalog.clearCache()` (or their own
     * unpersist) after the terminal action, same as
     * [[graft.operators.Dedup.crossCorpus]]. */
-  def decontaminate(docs: DataFrame, benchmark: DataFrame, w: Int = 5,
-                    gramSetLimit: Long = 2000000L): DataFrame = {
+  def decontaminate(docs: DataFrame, benchmark: DataFrame, w: Int = 5): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     def grams(text: String): Iterator[String] = {
@@ -258,8 +257,8 @@ object TextOps {
     val benchGramDf = benchmark.select(col("text")).as[String]
       .flatMap(grams(_)).toDF("g").distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val nGrams = benchGramDf.count()
-    if (nGrams <= gramSetLimit) {
+    lazy val nGrams = benchGramDf.count()
+    if (Gate("decontaminate.gramSet", 2000000L)(nGrams)) {
       val bc = spark.sparkContext.broadcast(
         benchGramDf.as[String].collect().toSet)
       docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
@@ -961,13 +960,13 @@ object TextOps {
     * corpus — and the distributed loop's per-round cost is pure scheduler
     * fixed cost once that table fits one task: a real 50k-merge vocab
     * means 50k sequential Spark jobs. A word table measured at or under
-    * `localWordLimit` rows therefore trains in ONE task
+    * [[LocalBpeWordLimit]] rows (the `bpe.oneTask` gate) therefore trains
+    * in ONE task
     * (repartition(1) + the identical count→argmax→rewrite induction,
     * byte-lexicographic ties — the UTF8String binary order Spark's
     * orderBy uses); larger tables keep the distributed loop.
     * BpeTrainSpec pins fast == distributed on planted corpora. */
-  def bpeTrain(docs: DataFrame, nMerges: Int,
-               localWordLimit: Long = LocalBpeWordLimit): DataFrame = {
+  def bpeTrain(docs: DataFrame, nMerges: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
 
@@ -985,7 +984,7 @@ object TextOps {
 
     // the checkpoint above materialized the table, so this count is a
     // cached-block scan, not a recompute
-    if (words.count() <= localWordLimit) {
+    if (Gate("bpe.oneTask", LocalBpeWordLimit)(words.count())) {
       val res = words.repartition(1)
         .mapPartitions(it => trainLocal(it, nMerges))
         .collect() // ≤ nMerges rows — merges are driver values, both paths

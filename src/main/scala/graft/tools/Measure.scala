@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
 import graft.{Bench, Config, SparkEntry}
-import graft.operators.{Dedup, PagesTiling}
+import graft.operators.{Dedup, Gate, PagesTiling}
 import graft.sources.Fixtures
 
 /** The one measurement main (not part of the driver contract — the frozen
@@ -78,23 +78,30 @@ object Measure {
   final case class Stage(site: String, wallMs: Long, tasks: Int, runMs: Long,
                          cpuMs: Long, gcMs: Long, deserMs: Long)
 
-  /** A query's passes (None = a failed pass, never a time) and the stages
-    * of its last pass. No passes at all: the name is not in the catalog. */
-  final case class QueryTiming(name: String, walls: Seq[Option[Double]], stages: Seq[Stage]) {
+  /** A query's passes (None = a failed pass, never a time) and the size
+    * gate decisions and stages of its last pass. No passes at all: the name
+    * is not in the catalog. */
+  final case class QueryTiming(name: String, walls: Seq[Option[Double]],
+                               gates: Seq[Gate.Decision], stages: Seq[Stage]) {
     def lines: Seq[String] =
       if (walls.isEmpty) Seq(s"QB $name UNKNOWN")
       else {
         val best = walls.flatten.minOption.fold("FAILED")(w => f"$w%6.3f")
         val all = walls.map(_.fold("fail")(w => f"$w%.3f")).mkString(",")
-        f"QB $name%-24s min=$best  all=$all" +: stages.sortBy(-_.wallMs).take(12).map(s =>
+        val num = (d: Double) => java.math.BigDecimal.valueOf(d).stripTrailingZeros.toPlainString
+        (f"QB $name%-24s min=$best  all=$all" +: gates.map(g =>
+          s"QB-GATE ${g.gate} measured=${g.measured.fold("forced")(num)} limit=${num(g.limit)}" +
+            s" -> ${if (g.small) "small" else "large"}")) ++
+          stages.sortBy(-_.wallMs).take(12).map(s =>
           f"QB-STAGE ${s.wallMs}%6d ms wall  ${s.tasks}%4d tasks  ${s.runMs}%7d run  ${s.cpuMs}%7d cpu  ${s.gcMs}%5d gc  ${s.deserMs}%5d deser  ${s.site}")
       }
   }
 
   /** Per-query min-of-`reps`, each pass timed by [[Bench.timeQuery]] (fresh
-    * DataFrame, `clearCache` after, a failed pass is no time), plus the
-    * slowest stages of the last pass — where a query spends its time,
-    * without the UI. */
+    * DataFrame, `clearCache` after, a failed pass is no time) inside a
+    * [[Gate.scope]], plus the gate decisions and slowest stages of the last
+    * pass — which side each size gate took and where a query spends its
+    * time, without the UI. */
   def queries(spark: SparkSession, sfDir: String, reps: Int,
               names: Seq[String]): Seq[QueryTiming] = {
     require(reps > 0, s"reps must be a positive integer, got $reps")
@@ -114,14 +121,14 @@ object Measure {
     }
     sc.addSparkListener(listener)
     try names.map { name =>
-      SparkEntry.queries.get(name).fold(QueryTiming(name, Nil, Nil)) { fn =>
-        val walls = (1 to reps).map { _ =>
+      SparkEntry.queries.get(name).fold(QueryTiming(name, Nil, Nil, Nil)) { fn =>
+        val passes = (1 to reps).map { _ =>
           Bridge.drainListenerBus(sc)
           stages.clear()
-          Bench.timeQuery(spark, sfDir)(fn)
+          Gate.scope()(Bench.timeQuery(spark, sfDir)(fn))
         }
         Bridge.drainListenerBus(sc)
-        QueryTiming(name, walls, stages.asScala.toSeq)
+        QueryTiming(name, passes.map(_._1), passes.last._2, stages.asScala.toSeq)
       }
     } finally sc.removeSparkListener(listener)
   }
@@ -253,9 +260,6 @@ object Measure {
     val docs = dedupCorpus(spark, n).persist()
     val nDocs = docs.count()
 
-    val (mass, total) = Dedup.dupPairMass(docs)
-    val collapses = mass > Dedup.CollapsePairsPerDoc * total
-
     // candidate counts, capped vs uncapped, on a bounded slice (the
     // uncapped count is the quadratic being demonstrated — size it so the
     // demonstration itself terminates)
@@ -269,8 +273,10 @@ object Measure {
       timed(Dedup.ngramCandidates(slice, 3, Dedup.ShingleDfCap).count())
 
     // end-to-end blocked+verified pairs at full size, default guards
-    val (nPairs: Long, tFull: Double) =
-      timed(Dedup.ngramJaccard(docs, w = 3, minJaccard = 0.5).count())
+    val ((nPairs: Long, gates), tFull: Double) =
+      timed(Gate.scope()(Dedup.ngramJaccard(docs, w = 3, minJaccard = 0.5).count()))
+    val collapse = gates.find(_.gate == "dedup.collapse").get
+    val (mass, collapses) = (collapse.measured.get * nDocs, !collapse.small)
 
     f"""{"n_docs":$nDocs,"dup_pair_mass":$mass%.0f,"collapse_engaged":$collapses,""" +
       f""""cand_uncapped_20k":$candUncapped,"cand_capped_20k":$candCapped,""" +

@@ -61,13 +61,18 @@ class BpeTrainSpec extends AnyFunSuite {
         (0 until (2 + rnd.nextInt(7))).map(_ => alpha(rnd.nextInt(4))).mkString)
       (i, words.mkString(" "))
     }.toDF("doc_id", "text")
-    def run(limit: Long) = TextOps.bpeTrain(docs, nMerges = 24, localWordLimit = limit)
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .sortBy(_._1).toSeq
+    def run(oneTask: Boolean) = {
+      val (out, gates) = Gate.scope(Map("bpe.oneTask" -> oneTask))(
+        TextOps.bpeTrain(docs, nMerges = 24)
+          .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
+          .sortBy(_._1).toSeq)
+      assert(gates.map(g => (g.gate, g.small)) == Seq("bpe.oneTask" -> oneTask))
+      out
+    }
     val t0 = System.nanoTime()
-    val fast = run(Long.MaxValue) // word table always under → fast path
+    val fast = run(oneTask = true)  // the single-task fast path
     val t1 = System.nanoTime()
-    val loop = run(0L)            // force the distributed per-round loop
+    val loop = run(oneTask = false) // the distributed per-round loop
     val t2 = System.nanoTime()
     assert(fast == loop, s"fast=$fast\nloop=$loop")
     assert(fast.size == 24)

@@ -5,18 +5,21 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The hybrid CC contract: the single-task union-find fast path and the
   * distributed min-label/pointer-jumping loop must emit IDENTICAL
-  * (node, label) sets on the same graph — label = component's min node id. */
+  * (node, label) sets on the same graph — label = component's min node id.
+  * Each side is forced through the `cc.oneTask` gate. */
 class CcEquivalenceSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.get
 
   private def both(pairs: Seq[(Long, Long)]): (Set[(Long, Long)], Set[(Long, Long)]) = {
     import spark.implicits._
     val df = pairs.toDF("doc_a", "doc_b")
-    val fast = Dedup.connectedComponents(df)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val loop = Dedup.connectedComponents(df, localEdgeLimit = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    (fast, loop)
+    def run(oneTask: Boolean) = {
+      val (out, gates) = Gate.scope(Map("cc.oneTask" -> oneTask))(
+        Dedup.connectedComponents(df).collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+      assert(gates.map(g => (g.gate, g.small)) == Seq("cc.oneTask" -> oneTask))
+      out
+    }
+    (run(oneTask = true), run(oneTask = false))
   }
 
   test("chain (adversarial for propagation depth): paths agree, labels are global min") {

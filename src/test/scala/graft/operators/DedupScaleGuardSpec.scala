@@ -10,6 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the collapsed (exact-dup collapse + expand) and uncollapsed pipelines
   *    are output-IDENTICAL on a dup-heavy corpus, so the adaptive probe can
   *    pick either purely on cost;
+  *  - both hot-key cap forms (window, and wide with a broadcast or a
+  *    shuffled hot-key set) are output-IDENTICAL;
   *  - a blocking key shared by many distinct documents (the boilerplate-
   *    phrase scenario: one shingle in 10³ docs → 10⁶/2 candidates) is
   *    dropped by the document-frequency cap, bounding candidate generation.
@@ -39,29 +41,38 @@ class DedupScaleGuardSpec extends AnyFunSuite with BeforeAndAfterEach {
   private def collect(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
 
+  /** `run`'s result with the named gates forced (true = small side),
+    * asserting each forced gate took its side; plans and rows are read
+    * inside the scope. */
+  private def forced[T](force: (String, Boolean)*)(run: => T): T = {
+    val (out, gates) = Gate.scope(force.toMap)(run)
+    for ((gate, small) <- force)
+      assert(gates.filter(_.gate == gate).forall(_.small == small), s"$gate: $gates")
+    out
+  }
+
+  /** Rows with the exact-dup collapse forced on (the gate's large side). */
+  private def collapsed(df: => DataFrame) = forced("dedup.collapse" -> false)(collect(df))
+  /** Rows with the exact-dup collapse forced off. */
+  private def uncollapsed(df: => DataFrame) = forced("dedup.collapse" -> true)(collect(df))
+
   test("ngramJaccard: collapsed and uncollapsed paths agree exactly") {
-    val a = Dedup.ngramJaccard(corpus, w = 3, minJaccard = 0.3, collapseThreshold = -1)
-    val b = Dedup.ngramJaccard(corpus, w = 3, minJaccard = 0.3,
-      collapseThreshold = Double.PositiveInfinity)
-    val (ra, rb) = (collect(a), collect(b))
+    val ra = collapsed(Dedup.ngramJaccard(corpus, w = 3, minJaccard = 0.3))
+    val rb = uncollapsed(Dedup.ngramJaccard(corpus, w = 3, minJaccard = 0.3))
     assert(ra.nonEmpty, "corpus must produce pairs")
     assert(ra == rb)
   }
 
   test("simhashPairs: collapsed and uncollapsed paths agree exactly") {
-    val a = Dedup.simhashPairs(corpus, maxHamming = 8, collapseThreshold = -1)
-    val b = Dedup.simhashPairs(corpus, maxHamming = 8,
-      collapseThreshold = Double.PositiveInfinity)
-    val (ra, rb) = (collect(a), collect(b))
+    val ra = collapsed(Dedup.simhashPairs(corpus, maxHamming = 8))
+    val rb = uncollapsed(Dedup.simhashPairs(corpus, maxHamming = 8))
     assert(ra.nonEmpty)
     assert(ra == rb)
   }
 
   test("minhashLsh: collapsed and uncollapsed paths agree exactly") {
-    val a = Dedup.minhashLsh(corpus, minJaccard = 0.4, collapseThreshold = -1)
-    val b = Dedup.minhashLsh(corpus, minJaccard = 0.4,
-      collapseThreshold = Double.PositiveInfinity)
-    val (ra, rb) = (collect(a), collect(b))
+    val ra = collapsed(Dedup.minhashLsh(corpus, minJaccard = 0.4))
+    val rb = uncollapsed(Dedup.minhashLsh(corpus, minJaccard = 0.4))
     assert(ra.nonEmpty)
     assert(ra == rb)
   }
@@ -97,13 +108,14 @@ class DedupScaleGuardSpec extends AnyFunSuite with BeforeAndAfterEach {
     // wide and window cap forms agree exactly on the capped candidates
     val capped = collect(Dedup.ngramCandidates(docs, w = 3, dfCap = Dedup.ShingleDfCap))
     spark.catalog.clearCache()
-    val cappedWide = Dedup.ngramCandidates(docs, w = 3, dfCap = Dedup.ShingleDfCap,
-      rowLimit = 100L)
-    assert(capped == collect(cappedWide))
+    val (cappedWide, widePlan) = forced("dedup.hotKeyProbe" -> false) {
+      val df = Dedup.ngramCandidates(docs, w = 3, dfCap = Dedup.ShingleDfCap)
+      (collect(df), df.queryExecution.executedPlan.toString)
+    }
+    assert(capped == cappedWide)
 
     // the wide plan must not contain a Window node (no single-task sort of
     // the hot key) and must broadcast the hot-key side
-    val widePlan = cappedWide.queryExecution.executedPlan.toString
     assert(!widePlan.contains("Window"), "wide form must avoid the window sort")
     assert(widePlan.contains("BroadcastHashJoin") || widePlan.contains("Broadcast"),
       "hot keys must be broadcast, not shuffled")
@@ -120,23 +132,25 @@ class DedupScaleGuardSpec extends AnyFunSuite with BeforeAndAfterEach {
           lit(if (flip && c == 0) -1.0 else 1.0) + col("id") * lit(1e-9) * (c + 1)): _*)
           .cast("array<float>").as("embedding"))
     val all = vecs(0, 2000, flip = false).unionByName(vecs(2000, 2008, flip = true))
-    val wide = Similarity.cosinePairs(all, tau = 0.5, dim = 8, hotKeyRowLimit = 50L)
-    val rw = collect(wide)
+    val (rw, widePlan) = forced("dedup.hotKeyProbe" -> false) {
+      val wide = Similarity.cosinePairs(all, tau = 0.5, dim = 8)
+      (collect(wide), wide.queryExecution.executedPlan.toString)
+    }
     spark.catalog.clearCache()
-    val window = Similarity.cosinePairs(all, tau = 0.5, dim = 8,
-      hotKeyRowLimit = Long.MaxValue)
-    val rn = collect(window)
+    val rn = forced("dedup.hotKeyProbe" -> true)(
+      collect(Similarity.cosinePairs(all, tau = 0.5, dim = 8)))
     assert(rw.nonEmpty, "cool cluster must produce pairs")
     assert(rw == rn)
-    assert(!wide.queryExecution.executedPlan.toString.contains("Window"),
+    assert(!widePlan.contains("Window"),
       "wide form must avoid the window sort")
   }
 
   test("every pair family: the wide cap form equals the window cap form") {
-    // each family's row limit forced low (probe → wide 3-exchange cap) and
-    // left at its default (window cap), with caps small enough to bind
-    // (cap 1 keeps only keys whose rows share one text/fingerprint), so
-    // both forms must drop the same hot keys
+    // each family's skew probe forced both ways (large → wide 3-exchange
+    // cap, its hot-key set broadcast or, forced large too, shuffled; small
+    // → window cap), with caps small enough to bind (cap 1 keeps only keys
+    // whose rows share one text/fingerprint), so every form must drop the
+    // same hot keys
     val docs = corpus
     val hashes = Dedup.simhash(docs).select(col("doc_id").as("id"), col("simhash").as("h"))
     val vecs = spark.range(1, 401).select(col("id").as("vec_id"), // id 0: a zero vector
@@ -144,26 +158,31 @@ class DedupScaleGuardSpec extends AnyFunSuite with BeforeAndAfterEach {
         .cast("array<float>").as("embedding"))
     val evalSet = vecs.where(col("vec_id") <= 20)
       .select(col("vec_id").as("eval_id"), col("embedding"))
-    val families: Seq[(String, Long => DataFrame)] = Seq(
-      "minhashLsh" -> (lim => Dedup.minhashLsh(docs, minJaccard = 0.2, bandCap = 1,
-        hotKeyRowLimit = lim)),
-      "simhashPairs" -> (lim => Dedup.simhashPairs(docs, maxHamming = 12, quarterCap = 1,
-        hotKeyRowLimit = lim)),
-      "hammingPairs" -> (lim => Dedup.hammingPairs(hashes, maxHamming = 12, quarterCap = 1,
-        hotKeyRowLimit = lim)),
-      "crossCosinePairs" -> (lim => Similarity.crossCosinePairs(vecs, evalSet, tau = 0.9,
-        dim = 8, bucketCap = 32, hotKeyRowLimit = lim)))
+    val families: Seq[(String, () => DataFrame)] = Seq(
+      "minhashLsh" -> (() => Dedup.minhashLsh(docs, minJaccard = 0.2, bandCap = 1)),
+      "simhashPairs" -> (() => Dedup.simhashPairs(docs, maxHamming = 12, quarterCap = 1)),
+      "hammingPairs" -> (() => Dedup.hammingPairs(hashes, maxHamming = 12, quarterCap = 1)),
+      "crossCosinePairs" -> (() => Similarity.crossCosinePairs(vecs, evalSet, tau = 0.9,
+        dim = 8, bucketCap = 32)))
     for ((name, run) <- families) {
-      val wide = run(10L)
-      val (rw, widePlan) = (collect(wide), wide.queryExecution.executedPlan.toString)
-      spark.catalog.clearCache()
-      val window = run(Dedup.HotKeyWindowRowLimit)
-      val (rn, windowPlan) = (collect(window), window.queryExecution.executedPlan.toString)
-      spark.catalog.clearCache()
-      assert(!widePlan.contains("Window"), s"$name: forced limit must take the wide form")
-      assert(windowPlan.contains("Window"), s"$name: default limit must take the window form")
+      def rowsAndPlan(force: (String, Boolean)*) = {
+        val out = forced(force: _*) {
+          val df = run()
+          (collect(df), df.queryExecution.executedPlan.toString)
+        }
+        spark.catalog.clearCache()
+        out
+      }
+      val (rw, widePlan) = rowsAndPlan("dedup.hotKeyProbe" -> false)
+      val (rs, shuffledPlan) =
+        rowsAndPlan("dedup.hotKeyProbe" -> false, "dedup.hotKeySet" -> false)
+      val (rn, windowPlan) = rowsAndPlan("dedup.hotKeyProbe" -> true)
+      assert(!widePlan.contains("Window"), s"$name: forced probe must take the wide form")
+      assert(!shuffledPlan.contains("Window"), s"$name: forced probe must take the wide form")
+      assert(windowPlan.contains("Window"), s"$name: forced probe must take the window form")
       assert(rw.nonEmpty, s"$name: fixture must produce pairs")
       assert(rw == rn, name)
+      assert(rs == rn, s"$name: shuffled hot-key anti-join")
       info(s"$name: ${rw.size} pairs")
     }
   }

@@ -85,10 +85,12 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterEach {
     // a path graph is the worst case for plain neighbor-min propagation
     // (diameter = n); pointer jumping must close it well inside maxIter
     val chain = (0L until 1999L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    // localEdgeLimit = 0 forces the DISTRIBUTED loop — the default would
-    // route a graph this small to the union-find fast path and stop
-    // exercising pointer jumping
-    val got = Dedup.connectedComponents(chain, maxIter = 25, localEdgeLimit = 0L).collect()
+    // the `cc.oneTask` gate is forced to the DISTRIBUTED loop — by its
+    // measurement a graph this small takes the union-find fast path and
+    // stops exercising pointer jumping
+    val (got, gates) = Gate.scope(Map("cc.oneTask" -> false))(
+      Dedup.connectedComponents(chain, maxIter = 25).collect())
+    assert(gates.map(g => (g.gate, g.small)) == Seq("cc.oneTask" -> false))
     assert(got.length == 2000)
     assert(got.forall(_.getLong(1) == 0L), "whole chain is one component rooted at 0")
   }

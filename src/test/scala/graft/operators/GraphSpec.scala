@@ -52,9 +52,10 @@ class GraphSpec extends AnyFunSuite {
     val want = refPageRank(edges, 10)
     assert(got == want, s"engine=$got\nreference=$want")
     // hybrid contract: the forced distributed loop emits the identical map
-    val loop = Graph.pageRank(edges.toDF("src", "dst", "w"), iters = 10,
-        localEdgeLimit = 0L).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (loop, gates) = Gate.scope(Map("pagerank.oneTask" -> false))(
+      Graph.pageRank(edges.toDF("src", "dst", "w"), iters = 10).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    assert(gates.map(g => (g.gate, g.small)) == Seq("pagerank.oneTask" -> false))
     assert(loop == want, s"distributed loop diverged: $loop")
     // the dangling node's rank is jump + in-mass and total mass shrinks
     assert(got(24L) > 150000L)
@@ -120,11 +121,15 @@ class GraphSpec extends AnyFunSuite {
     }
     val fz = raw.groupBy(e => (e._1, e._2)).map { case ((u, v), es) =>
       (u, v, es.map(_._3).sum) }.toSeq
-    val fast = Graph.hits(fz.toDF("src", "dst", "w"), iters = 8).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val loop = Graph.hits(fz.toDF("src", "dst", "w"), iters = 8,
-        localEdgeLimit = 0L).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    def run(oneTask: Boolean) = {
+      val (out, gates) = Gate.scope(Map("hits.oneTask" -> oneTask))(
+        Graph.hits(fz.toDF("src", "dst", "w"), iters = 8).collect()
+          .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap)
+      assert(gates.map(g => (g.gate, g.small)) == Seq("hits.oneTask" -> oneTask))
+      out
+    }
+    val fast = run(oneTask = true)
+    val loop = run(oneTask = false)
     val ref = refHits(fz, 8)
     assert(fast == ref, s"fast path diverged from reference")
     assert(loop == ref, s"distributed loop diverged from reference")

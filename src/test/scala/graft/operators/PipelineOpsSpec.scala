@@ -26,16 +26,19 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterEach {
       (3L, "delta epsilon zeta"),    // dup of prior 101 → dropped
       (4L, "another novel document") // survives
     ).toDF("doc_id", "text")
-    // all three physical paths must agree: forced Bloom (skip limit 0),
-    // the measured-small broadcast anti-join (default limit), and the
-    // plain anti-join reference
-    val withBloom = Dedup.crossCorpus(fresh, prior, bloom = true,
-        bloomSkipPriorLimit = 0L)
-      .select("doc_id").as[Long].collect().sorted
-    spark.catalog.clearCache() // both Bloom-enabled paths persist the prior fingerprints
-    val smallPath = Dedup.crossCorpus(fresh, prior, bloom = true)
-      .select("doc_id").as[Long].collect().sorted
-    val plain = Dedup.crossCorpus(fresh, prior, bloom = false)
+    // both physical paths must agree: the Bloom split (the
+    // `crossCorpus.bloomSkip` gate forced large) and the plain broadcast
+    // anti-join (forced small; the measured side on this prior)
+    def run(skip: Boolean) = {
+      val (out, gates) = Gate.scope(Map("crossCorpus.bloomSkip" -> skip))(
+        Dedup.crossCorpus(fresh, prior).select("doc_id").as[Long].collect().sorted)
+      assert(gates.map(g => (g.gate, g.small)) == Seq("crossCorpus.bloomSkip" -> skip))
+      spark.catalog.clearCache() // both paths persist the prior fingerprints
+      out
+    }
+    val withBloom = run(skip = false)
+    val plain = run(skip = true)
+    val smallPath = Dedup.crossCorpus(fresh, prior) // measured, unforced
       .select("doc_id").as[Long].collect().sorted
     assert(withBloom.toSeq == Seq(2L, 4L))
     assert(plain.toSeq == withBloom.toSeq)
@@ -46,8 +49,10 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterEach {
     import spark.implicits._
     val prior = (0L until 50L).map(i => (i, s"prior doc number $i")).toDF("doc_id", "text")
     val fresh = (0L until 50L).map(i => (i + 1000L, s"fresh doc number $i")).toDF("doc_id", "text")
-    val out = Dedup.crossCorpus(fresh, prior, fpp = 0.001, bloomSkipPriorLimit = 0L)
-    assert(out.count() == 50L) // nothing shared → all survive
+    val (n, gates) = Gate.scope(Map("crossCorpus.bloomSkip" -> false))(
+      Dedup.crossCorpus(fresh, prior, fpp = 0.001).count())
+    assert(gates.map(g => (g.gate, g.small)) == Seq("crossCorpus.bloomSkip" -> false))
+    assert(n == 50L) // nothing shared → all survive
   }
 
   test("chunkDedup: keep-first leaves the planted boilerplate only on the smallest doc") {

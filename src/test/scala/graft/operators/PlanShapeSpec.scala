@@ -59,7 +59,7 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterEach {
 
   test("dedup_clusters: local-CC labels broadcast into the final join, no corpus shuffle") {
     // the local union-find path guarantees a measured-small label table
-    // (≤ localEdgeLimit edges), so connectedComponents hints it broadcast:
+    // (≤ LocalCcEdgeLimit edges), so the query hints it broadcast:
     // the doc_id ⟕ labels join must be a BroadcastHashJoin — a
     // SortMergeJoin here means the corpus-sized id column is being
     // exchanged for a tens-of-MB build side (the r9 finding). The id side
@@ -126,9 +126,10 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterEach {
   test("cross_corpus: forced Bloom path keeps pass-through union + anti-join only on candidates") {
     import org.apache.spark.sql.functions.col
     val docs = spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text")
-    val p = Dedup.crossCorpus(docs, docs.where(col("doc_id") % 5 === 0),
-        bloomSkipPriorLimit = 0L)
-      .queryExecution.executedPlan.toString
+    val (p, gates) = Gate.scope(Map("crossCorpus.bloomSkip" -> false))(
+      Dedup.crossCorpus(docs, docs.where(col("doc_id") % 5 === 0))
+        .queryExecution.executedPlan.toString)
+    assert(gates.map(g => (g.gate, g.small)) == Seq("crossCorpus.bloomSkip" -> false))
     assert(p.contains("Union"), "definite non-members must bypass the join")
     assert(!p.contains("NestedLoop") && !p.contains("CartesianProduct"), p.take(2000))
   }

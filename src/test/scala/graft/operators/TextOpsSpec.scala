@@ -315,12 +315,16 @@ class TextOpsSpec extends AnyFunSuite {
         val words = benchTexts((i % 8).toInt).split(" ").slice(3, 8).mkString(" ")
         (i, doc(6) + " " + words + " " + doc(6))
       }).toDF("doc_id", "text")
-    def run(limit: Long) =
-      TextOps.decontaminate(corpus, bench, w = 5, gramSetLimit = limit)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val viaSet = run(Long.MaxValue)
+    def run(gramSet: Boolean) = {
+      val (out, gates) = Gate.scope(Map("decontaminate.gramSet" -> gramSet))(
+        TextOps.decontaminate(corpus, bench, w = 5)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet)
+      assert(gates.map(g => (g.gate, g.small)) == Seq("decontaminate.gramSet" -> gramSet))
+      out
+    }
+    val viaSet = run(gramSet = true)
     spark.catalog.clearCache()
-    val viaBloom = run(0L) // force the Bloom path
+    val viaBloom = run(gramSet = false) // the Bloom path
     spark.catalog.clearCache()
     assert(viaSet == viaBloom,
       s"paths diverge: onlySet=${viaSet -- viaBloom}, onlyBloom=${viaBloom -- viaSet}")

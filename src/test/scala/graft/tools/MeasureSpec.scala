@@ -18,6 +18,13 @@ class MeasureSpec extends AnyFunSuite {
     assert(unknown.walls.isEmpty && unknown.lines == Seq("QB no_such_query UNKNOWN"))
   }
 
+  test("queries: a gated query prints the decisions of its last pass") {
+    val Seq(bpe) = Measure.queries(spark, sf, reps = 1, Seq("bpe_train"))
+    assert(bpe.gates.map(g => (g.gate, g.small)) == Seq("bpe.oneTask" -> true))
+    assert(bpe.lines(1).matches("QB-GATE bpe\\.oneTask measured=\\d+ limit=1000000 -> small"),
+      bpe.lines.mkString("\n"))
+  }
+
   test("explain: spatial_join_tiles plans a BroadcastHashJoin; an unknown name is reported") {
     val plans = Measure.explain(spark, sf, Seq("spatial_join_tiles", "no_such_query"), nPages = 20000)
     assert(plans.map(_._1) == Seq("spatial_join_tiles", "no_such_query"))

@@ -131,22 +131,19 @@ object Bench {
     spark.stop()
   }
 
-  /** One timed pass of a catalog query: `count()` over a FRESH DataFrame,
-    * then `clearCache`. A FAILED pass must not poison the min with its fast
-    * crash wall (a regression would read as a speedup in the recorded
-    * artifact) — it returns None; a query with NO successful pass is
+  /** One timed pass of a catalog query: `count()` over a FRESH DataFrame in
+    * its own [[operators.Owned.scope]], so the query's cached and
+    * checkpointed intermediates are gone before the next one is timed. A
+    * FAILED pass must not poison the min with its fast crash wall (a
+    * regression would read as a speedup in the recorded artifact) — it returns None; a query with NO successful pass is
     * published as -1.0, an unmistakable failure marker, never a time. */
   def timeQuery(spark: SparkSession, sfDir: String)(
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
     val q0 = System.nanoTime()
-    val ok = try { fn(spark, sfDir).count(); true }
+    val ok = try operators.Owned.scope { fn(spark, sfDir).count(); true }
              catch { case e: Throwable =>
                System.err.println(s"[bench] query failed: ${e.getMessage}"); false }
     val dt = (System.nanoTime() - q0) / 1e9
-    // drop the query's persisted blocking intermediates (dedup/
-    // similarity persist several DataFrames each) so later queries
-    // aren't timed under accumulated cache pressure
-    spark.catalog.clearCache()
     if (ok) Some(dt) else None
   }
 

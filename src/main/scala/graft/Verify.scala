@@ -18,15 +18,13 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => wanted(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // each query's cached and checkpointed intermediates are released
+      // when its scope closes, so a full catalog run accumulates none
+      try operators.Owned.scope(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // the dedup/similarity operators persist blocking intermediates for
-      // the lifetime of their query; drop them between queries so a full
-      // catalog run doesn't accumulate cached blocks session-wide
-      spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -116,15 +116,17 @@ object Main {
 
   // ---- tools ---------------------------------------------------------------
 
-  def run(spark: SparkSession, tool: String, c: Cli): Unit = tool match {
+  /** Runs one tool; every intermediate it caches is released when it ends. */
+  def run(spark: SparkSession, tool: String, c: Cli): Unit = Owned.scope(runTool(spark, tool, c))
+
+  private def runTool(spark: SparkSession, tool: String, c: Cli): Unit = tool match {
     case "extract_chips" =>
       val meta = readMeta(spark, c("meta"))
       val cfg = chipConfig(c)
       val tiles = gridded(spark, readTiles(spark, c.positional.head), meta, cfg, c)
       val labels = c.get("labels").map(readLabels(spark, _, cfg.labelProperty))
       val aoi = c.get("aoi").map(readAoi(spark, _))
-      val chips = ChipPipeline.extractChips(spark, tiles, meta, labels, aoi, cfg)
-        .persist()
+      val chips = Owned.persist(ChipPipeline.extractChips(spark, tiles, meta, labels, aoi, cfg))
       Sinks.writeChips(chips.toDF(), c.out)
       if (labels.isDefined)
         Sinks.writeMasks(ChipPipeline.masksOf(spark, chips), c.out)
@@ -135,7 +137,6 @@ object Main {
           s"${c.out}/${meta.raster_id}.geojson", meta.crs)
       }
       println(s"extract_chips: ${chips.count()} chips -> ${c.out}")
-      chips.unpersist()
 
     case "make_masks" =>
       val meta = readMeta(spark, c("meta"))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.core.{CellIndex, Rasterize}
 
@@ -217,8 +216,7 @@ object CellOps {
     * diverging from DuckDB's HUGEINT-widening sums.
     *
     * Scale shape: the corpus is scanned ONCE into a map-side-combined
-    * (xi, yi) count (persisted — usual cache contract: caller clearCache
-    * after the terminal action); everything downstream is
+    * (xi, yi) count (cached); everything downstream is
     * occupied-cell-sized — an 8-row offset explode, a (xi+dx, yi+dy)
     * hash self-equi-join (edge cells simply find fewer partners: no
     * ring/wraparound semantics to replay in an oracle), and two scalar
@@ -241,8 +239,7 @@ object CellOps {
   }
 
   def moranI(points: DataFrame, res: Int): DataFrame = {
-    val hist = gridCounts(points, res)
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    val hist = Owned.persist(gridCounts(points, res))
     val st = hist.agg(count(lit(1)).as("n"), sum("x").as("s"), max("x").as("mx")).head()
     val (nCells, s, maxX) = (st.getLong(0), st.getLong(1), st.getLong(2))
     require(nCells > 0, "moranI: empty corpus")
@@ -278,12 +275,10 @@ object CellOps {
     * (xi+dx, yi+dy) hash self-equi-join of the OCCUPIED-cell table —
     * work is 9·|occupied cells| rows, never corpus-sized, and empty
     * neighbors cost nothing (they simply don't match, the sparse-grid
-    * win over a dense raster convolution). The histogram is persisted
-    * (it feeds both the scatter and the final gather) — usual cache
-    * contract: caller clearCache after the terminal action. */
+    * win over a dense raster convolution). The histogram is cached: it
+    * feeds both the scatter and the final gather. */
   def cellFocal(points: DataFrame, res: Int): DataFrame = {
-    val hist = gridCounts(points, res)
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    val hist = Owned.persist(gridCounts(points, res))
     val offs = Seq((-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 0), (0, 1),
       (1, -1), (1, 0), (1, 1))
     val contrib = hist.select(col("xi"), col("yi"), col("x"),
@@ -313,14 +308,12 @@ object CellOps {
     * (CC symmetrizes internally), and the CC loop's shuffles are sized
     * to that graph, not the corpus. Dense cells re-encode to Morton ids
     * through the cell_id codegen path on their centers
-    * ([[centerCell]]). Persisted frames follow the usual cache contract
-    * (caller clearCache after the terminal action).
+    * ([[centerCell]]).
     *
     * points: columns `lat`, `lon`. */
   def cellClusters(points: DataFrame, res: Int, minCount: Long): DataFrame = {
-    val dense = gridCounts(points, res).where(col("x") >= lit(minCount))
-      .select(col("xi"), col("yi"), col("x"), centerCell(res).as("cell"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    val dense = Owned.persist(gridCounts(points, res).where(col("x") >= lit(minCount))
+      .select(col("xi"), col("yi"), col("x"), centerCell(res).as("cell")))
     val offs = Seq((1, -1), (1, 0), (1, 1), (0, 1)) // forward half of the 8-neighborhood
     val edges = dense.select(col("cell").as("doc_a"), col("xi"), col("yi"),
         explode(array(offs.map { case (dx, dy) =>

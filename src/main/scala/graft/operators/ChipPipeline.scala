@@ -270,10 +270,8 @@ object ChipPipeline {
     * partition-local scan assigns offset + local ordinal. Ids are
     * partition-count-invariant by construction — offsets are computed
     * against whatever boundaries the range partitioner picked. The sorted
-    * frame must stay persisted until the caller's terminal action: the
-    * ids are assigned against its materialized partition boundaries (same
-    * cache contract as packSequences; Verify/Bench clearCache between
-    * queries). */
+    * frame stays cached until the caller's scope closes: the ids are
+    * assigned against its materialized partition boundaries. */
   def footprints(chips: Dataset[ChipRow]): DataFrame = {
     val spark = chips.sparkSession
     import spark.implicits._
@@ -286,14 +284,13 @@ object ChipPipeline {
     // merged parent. Data-carried pids are immune: rows of one parent
     // partition stay contiguous under coalesce, so offset + reset-on-change
     // reproduces the exact zipWithIndex enumeration in any execution shape.
-    val sorted = chips.toDF()
+    val sorted = Owned.persist(chips.toDF()
       .select(col("raster_id"), col("i"), col("j"),
         col("minx"), col("miny"), col("maxx"), col("maxy"), col("filename"))
       .repartitionByRange(col("raster_id"), col("i"), col("j"))
       .sortWithinPartitions("raster_id", "i", "j")
       .withColumn("pid", spark_partition_id())
-      .as[(String, Int, Int, Double, Double, Double, Double, String, Int)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .as[(String, Int, Int, Double, Double, Double, Double, String, Int)])
     val partCounts = sorted.groupBy(col("pid")).count()
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     val maxPid = if (partCounts.isEmpty) -1 else partCounts.map(_._1).max

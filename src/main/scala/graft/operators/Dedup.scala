@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Deduplication family for the training-data pipeline: exact, MinHash+LSH,
   * SimHash, n-gram Jaccard, embedding-cosine near-dup. All pure
@@ -36,12 +35,8 @@ import org.apache.spark.storage.StorageLevel
   *     [[Similarity]]'s two cosine forms — gets its cap, skew probe and
   *     blocked join from ONE operator, [[blockedPairs]].
   *
-  * Caching contract: each operator persists its blocking intermediates
-  * (shingle table, capped key tables, signatures) for the lifetime of the
-  * returned DataFrame's evaluation — they CANNOT be unpersisted here
-  * because the result is lazy. A long-lived session running many dedup
-  * queries should `spark.catalog.clearCache()` between them (Verify/Bench
-  * do); otherwise the cached blocks are bounded only by LRU eviction. */
+  * Blocking intermediates (shingle tables, capped key tables, signatures)
+  * are cached and checkpointed through [[Owned]]. */
 object Dedup {
 
   /** DF cap for shingle blocking keys (ngram Jaccard candidates). */
@@ -98,14 +93,12 @@ object Dedup {
     // groupBy(text) instead of a window over md5(text): partial aggregation
     // combines duplicates map-side (on a dup-heavy corpus the shuffle
     // carries each distinct text ~once) and needs no sort
-    val reps = docs.groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"), col("text"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    val reps = Owned.persist(docs.groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
+      .select(col("doc_id"), col("text")))
     val members = docs.select(col("doc_id"), md5(col("text")).as("th"))
       .join(reps.select(md5(col("text")).as("th"), col("doc_id").as("rep")), Seq("th"))
       .select("doc_id", "rep")
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    (reps, members)
+    (reps, Owned.persist(members))
   }
 
   /** Expand representative-level pairs back to all member pairs, preserving
@@ -158,15 +151,15 @@ object Dedup {
     * regex keeping empty tokens). */
   private def shingleTableTh(docs: DataFrame, w: Int): DataFrame = {
     import docs.sparkSession.implicits._
-    docs.select(col("doc_id").cast("long"), md5(col("text")).as("th"), col("text"))
+    Owned.persist(docs
+      .select(col("doc_id").cast("long"), md5(col("text")).as("th"), col("text"))
       .as[(Long, String, String)]
       .flatMap { case (id, th, text) =>
         val t = text.split(" ", -1)
         if (t.length < w) Iterator.empty
         else (0 to t.length - w).iterator.map(i => (id, th, t.slice(i, i + w).mkString(" ")))
       }
-      .toDF("doc_id", "th", "sh").distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+      .toDF("doc_id", "th", "sh").distinct())
   }
 
   /** Rows-of-the-hottest-key threshold above which [[blockedPairs]]'s
@@ -212,25 +205,9 @@ object Dedup {
     * cannot OOM the driver. */
   private def antiJoinHotKeys(rows: DataFrame, hot: DataFrame,
                               keyCols: Seq[String]): DataFrame = {
-    val h = hot.persist(StorageLevel.MEMORY_AND_DISK_SER)
-    if (Gate("dedup.hotKeySet", HotKeySetBroadcastLimit)(h.count())) {
-      // measured-small path (the overwhelmingly common one): COLLECT the
-      // keys — bounded by the very limit the broadcast would enforce — into
-      // a LocalRelation, so the cached frame is unpersisted HERE instead of
-      // leaking until the caller's clearCache. broadcast(h) directly would
-      // read the cache blocks lazily at result evaluation, forcing the
-      // persist to outlive this call (the old form's leak).
-      val keys = h.collect()
-      val schema = h.schema
-      h.unpersist()
-      val local = rows.sparkSession.createDataFrame(
-        java.util.Arrays.asList(keys: _*), schema)
-      rows.join(broadcast(local), keyCols, "left_anti")
-    } else
-      // degenerate-corpus path: the key set is too big to hold on the
-      // driver, so the shuffled build side must stay persisted until the
-      // result evaluates (object-level cache contract: caller clearCache)
-      rows.join(h, keyCols, "left_anti")
+    val h = Owned.persist(hot)
+    val small = Gate("dedup.hotKeySet", HotKeySetBroadcastLimit)(h.count())
+    rows.join(if (small) broadcast(h) else h, keyCols, "left_anti")
   }
 
   /** The candidate-pair operator every near-dup family calls: block →
@@ -288,7 +265,7 @@ object Dedup {
           .where(col("df") <= cap)
           .drop("dr", "df")
       }
-    val blk = capped.persist(StorageLevel.MEMORY_AND_DISK_SER)
+    val blk = Owned.persist(capped)
     val sameKey = keyCols.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _)
     val joined = other match {
       case None => blk.as("x").join(blk.as("y"), sameKey && col("x.id") < col("y.id"))
@@ -333,8 +310,7 @@ object Dedup {
       val aggs = (0 until nHashes).map(i =>
         min(h60(concat(lit(s"$i:"), col("sh")))).as(s"mh_$i")) :+
         count(lit(1)).as("n_sh")
-      val sig = sh3.groupBy("doc_id", "th").agg(aggs.head, aggs.tail: _*)
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
+      val sig = Owned.persist(sh3.groupBy("doc_id", "th").agg(aggs.head, aggs.tail: _*))
       // every band's rows in ONE pass over the signature, not a per-band union
       val bands = sig.select(col("doc_id").as("id"), col("th"),
           explode(array((0 until nHashes / rowsPerBand).map { b =>
@@ -432,24 +408,23 @@ object Dedup {
     * rows, a measured-small broadcast at any corpus size; non-join
     * consumers stay free of hint warnings. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
-    // eager localCheckpoint, NOT plain persist: an iterative loop over
-    // persisted frames still re-analyzes the whole accumulated logical plan
+    // an eager checkpoint, NOT a plain cache: an iterative loop over
+    // cached frames still re-analyzes the whole accumulated logical plan
     // (including the pair producer's full lineage, referenced twice by the
     // union) every iteration — the driver pays O(iterations × plan) analysis
     // and eventually OOMs. Checkpointing truncates the plan to the cached
-    // blocks so every iteration analyzes a constant-size tree. On a
-    // cluster, swap for reliable `checkpoint()` against the checkpoint dir
-    // so executor loss replays from storage instead of recomputing.
+    // blocks so every iteration analyzes a constant-size tree. The
+    // checkpoint kind (local, or reliable so that executor loss replays
+    // from storage) is chosen in one place, [[Owned.checkpoint]].
     // symmetrize with ONE explode pass so the pair producer runs exactly
     // once into the checkpoint (a two-branch union would execute the full
     // LSH pipeline twice, and checkpointing the producer first — the old
     // form — paid an extra materialization job just to avoid that)
-    val edges = pairs.select(explode(array(
+    val edges = Owned.checkpoint(pairs.select(explode(array(
         struct(col("doc_a").as("u"), col("doc_b").as("v")),
         struct(col("doc_b").as("u"), col("doc_a").as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
 
     // hybrid CC: a measured-small graph (the edge count is a scan of the
     // checkpoint's cached blocks) is pure per-iteration shuffle fixed cost
@@ -465,7 +440,7 @@ object Dedup {
       // loop preserves the input type — a caller passing int ids must not
       // get a path-dependent LongType here)
       val idType = pairs.schema(pairs.schema.fieldIndex("doc_a")).dataType
-      val out = edges.as[(Long, Long)].repartition(1)
+      val out = Owned.checkpoint(edges.as[(Long, Long)].repartition(1)
         .mapPartitions { it =>
           val parent = scala.collection.mutable.LongMap.empty[Long]
           def find(x: Long): Long = {
@@ -487,9 +462,8 @@ object Dedup {
         }
         .toDF("node", "label")
         .select(col("node").cast(idType).as("node"),
-          col("label").cast(idType).as("label"))
-        .localCheckpoint(true) // edges' cached blocks are about to go away
-      edges.unpersist()
+          col("label").cast(idType).as("label"))) // edges' blocks are about to go away
+      Owned.release(edges)
       return out
     }
 
@@ -497,14 +471,9 @@ object Dedup {
     // coalesces to the graph's size. Iteration 0 is folded into
     // initialization: label(node) = min of the CLOSED neighborhood, one
     // aggregation over the symmetric edges (every node appears as `u`).
-    // `ckpt` is the frame actually holding checkpoint blocks (unpersist
-    // target — unpersisting a projection of it would be a no-op and leak);
-    // `labels` is the (node, label) view the joins use
-    var ckpt = edges.groupBy(col("u").as("node"))
+    var labels = Owned.checkpoint(edges.groupBy(col("u").as("node"))
       .agg(min(col("v")).as("mn"))
-      .select(col("node"), least(col("mn"), col("node")).as("label"))
-      .localCheckpoint(true)
-    var labels = ckpt
+      .select(col("node"), least(col("mn"), col("node")).as("label")))
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
@@ -524,22 +493,20 @@ object Dedup {
       // the convergence flag rides INSIDE the checkpointed frame (one join
       // with the previous labels before materialization), so the `changed`
       // count is a scan of cached blocks, not an extra shuffle job
-      val next = relaxed
+      val next = Owned.checkpoint(relaxed
         .join(relaxed.select(col("node").as("label"), col("label").as("label2")),
           Seq("label"))
         .select(col("node"), least(col("label"), col("label2")).as("label"))
         .join(labels.select(col("node"), col("label").as("old")), Seq("node"))
         .withColumn("chg", col("label") =!= col("old"))
-        .select("node", "label", "chg")
-        .localCheckpoint(true)
+        .select("node", "label", "chg"))
       changed = next.where(col("chg")).count()
-      ckpt.unpersist()
-      ckpt = next
+      Owned.release(labels)
       labels = next.drop("chg")
       iter += 1
     }
     require(changed == 0, s"connectedComponents did not converge in $maxIter iterations")
-    edges.unpersist()
+    Owned.release(edges)
     labels
   }
 
@@ -601,7 +568,7 @@ object Dedup {
     * several quarters has the same hamming on every route. */
   private def quarterPairs(sig: DataFrame, th: Column, maxHamming: Int, quarterCap: Int,
       nIds: => Long): (DataFrame, DataFrame) = {
-    val fp = sig.persist(StorageLevel.MEMORY_AND_DISK_SER)
+    val fp = Owned.persist(sig)
     val blocks = fp.select(col("id"), col("h"), th.as("th"),
         explode(array((0 until 4).map(q => struct(lit(q).as("q"),
           shiftright(col("h"), q * 15).bitwiseAND(lit(0x7fffL)).as("qk"))): _*)).as("b"))
@@ -637,13 +604,7 @@ object Dedup {
     * by construction (the oracle replays the same blocking, so the hash
     * gate shares the trade). Callers wanting certainty at d > 3 need a
     * wider band split (e.g. ⌈d+1⌉ bands), paying proportionally more
-    * join volume.
-    *
-    * Cache contract: the fingerprint rows and the capped quarter rows are
-    * persisted (the probe and both join sides read them) and the returned plan depends
-    * on it — callers release it with `spark.catalog.clearCache()` (or
-    * their own unpersist) after the terminal action, same as
-    * [[crossCorpus]]. */
+    * join volume. */
   def hammingPairs(hashes: DataFrame, maxHamming: Int = 3,
                    quarterCap: Int = QuarterDfCap): DataFrame =
     // the persisted rows are exactly (id, h), so the count below reads
@@ -678,13 +639,7 @@ object Dedup {
     * [[BloomSkipPriorLimit]]; PipelineOpsSpec pins both sides) — the Bloom
     * stage is pure shuffle avoidance. Fingerprints
     * are the engine-portable 60-bit md5; only (doc_id, fp) ever shuffles.
-    * Output: surviving new docs as (doc_id, fp).
-    *
-    * Cache contract: the prior-fingerprint frame is persisted (count,
-    * Bloom build, and exact verify all read it) and the returned plan
-    * depends on it — callers release it with `spark.catalog.clearCache()`
-    * (or their own unpersist) after the terminal action; same contract as
-    * [[graft.operators.Search.bm25TopK]] / [[TextOps.ngramNovelty]]. */
+    * Output: surviving new docs as (doc_id, fp). */
   def crossCorpus(newDocs: DataFrame, prior: DataFrame,
       fpp: Double = 0.01): DataFrame = {
     val spark = newDocs.sparkSession
@@ -692,9 +647,7 @@ object Dedup {
     // the prior fingerprints are read up to three times (count for
     // expectedNumItems, bloomFilter build, exact verify anti-join) —
     // persist so the prior corpus is scanned+hashed once, not per action
-    // (usual cache contract: caller clearCache after the terminal action)
-    val pf = prior.select(h60(col("text")).as("fp"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    val pf = Owned.persist(prior.select(h60(col("text")).as("fp")))
     // expectedNumItems from a cheap hash-only count; never collect the fps
     lazy val nPrior = math.max(pf.count(), 1L)
     // measured-small prior: broadcast anti-join, no Bloom build, no UDF

@@ -142,24 +142,22 @@ object EventOps {
     import spark.implicits._
     val us = unix_micros(col("ts").cast("timestamp"))
     val typed = events.select(col("user_id"), col("event_type"), us.as("us"))
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var reached = typed.where(col("event_type") === steps.head)
-      .groupBy("user_id").agg(min("us").as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    cached += reached
-    val counts = scala.collection.mutable.ArrayBuffer[(Int, String, Long)](
-      (1, steps.head, reached.count()))
-    steps.zipWithIndex.drop(1).foreach { case (st, i) =>
-      reached = typed.where(col("event_type") === st)
-        .join(reached.select(col("user_id"), col("t").as("prev")), Seq("user_id"))
-        .where(col("us") > col("prev"))
-        .groupBy("user_id").agg(min("us").as("t"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      cached += reached
-      counts += ((i + 1, st, reached.count()))
+    // the counts are driver values, so the scope frees every reach frame
+    val counts = Owned.scope {
+      var reached = Owned.persist(typed.where(col("event_type") === steps.head)
+        .groupBy("user_id").agg(min("us").as("t")))
+      val perStep = scala.collection.mutable.ArrayBuffer[(Int, String, Long)](
+        (1, steps.head, reached.count()))
+      steps.zipWithIndex.drop(1).foreach { case (st, i) =>
+        reached = Owned.persist(typed.where(col("event_type") === st)
+          .join(reached.select(col("user_id"), col("t").as("prev")), Seq("user_id"))
+          .where(col("us") > col("prev"))
+          .groupBy("user_id").agg(min("us").as("t")))
+        perStep += ((i + 1, st, reached.count()))
+      }
+      perStep.toSeq
     }
-    cached.foreach(_.unpersist()) // counts are materialized driver values
-    counts.toSeq.toDF("step", "step_type", "n_users")
+    counts.toDF("step", "step_type", "n_users")
   }
 
   /** Point-in-time (as-of) join: attach to every `leftType` event the most

@@ -63,17 +63,14 @@ object Graph {
     require(iters >= 0)
     val spark = edges.sparkSession
     import spark.implicits._
-    val nodes = edges.select(col("src").as("node"))
-      .unionByName(edges.select(col("dst").as("node")))
-      .distinct()
     val outW = edges.groupBy("src").agg(sum("w").as("wout"))
     // edge table + out-weights materialized ONCE; the loop re-joins it
     // every round, so its lineage must not include the corpus scan
-    val ew = edges.join(outW, Seq("src")).localCheckpoint(true)
+    val ew = Owned.checkpoint(edges.join(outW, Seq("src")))
 
     if (Gate("pagerank.oneTask", Dedup.LocalCcEdgeLimit)(ew.count())) {
       val idType = edges.schema(edges.schema.fieldIndex("src")).dataType
-      val out = ew.select(col("src").cast("long"), col("dst").cast("long"),
+      val out = Owned.checkpoint(ew.select(col("src").cast("long"), col("dst").cast("long"),
           col("w").cast("long"), col("wout").cast("long"))
         .as[(Long, Long, Long, Long)].repartition(1)
         .mapPartitions { it =>
@@ -95,16 +92,15 @@ object Graph {
           r.iterator
         }
         .toDF("node", "rank_u")
-        .select(col("node").cast(idType).as("node"), col("rank_u"))
-        .localCheckpoint(true)
-      ew.unpersist()
+        .select(col("node").cast(idType).as("node"), col("rank_u")))
+      Owned.release(ew)
       return out
     }
-    val nodesCk = nodes.localCheckpoint(true)
+    val nodesCk = nodesOf(ew)
     val maxW = math.max(
       Option(ew.agg(max(col("w").cast("long"))).head().get(0))
         .map(_.asInstanceOf[Long]).getOrElse(1L), 1L)
-    var ranks = nodesCk.withColumn("rank_u", lit(1000000L)).localCheckpoint(true)
+    var ranks = Owned.checkpoint(nodesCk.withColumn("rank_u", lit(1000000L)))
     for (_ <- 1 to iters) {
       val maxR = Option(ranks.agg(max("rank_u")).head().get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
@@ -116,15 +112,23 @@ object Graph {
         .select(col("dst").as("node"),
           expr(s"(rank_u * $dampNum * w) div (100 * wout)").as("c"))
         .groupBy("node").agg(sum("c").as("mass"))
-      val next = nodesCk.join(contrib, Seq("node"), "left")
+      val next = Owned.checkpoint(nodesCk.join(contrib, Seq("node"), "left")
         .select(col("node"),
-          (lit(jumpU) + coalesce(col("mass"), lit(0L))).as("rank_u"))
-        .localCheckpoint(true)
-      ranks.unpersist()
+          (lit(jumpU) + coalesce(col("mass"), lit(0L))).as("rank_u")))
+      Owned.release(ranks)
       ranks = next
     }
+    Owned.release(ew)
+    Owned.release(nodesCk)
     ranks
   }
+
+  /** Every node of a checkpointed edge table, as src or dst, checkpointed:
+    * derived from the checkpoint, so the input graph's lineage runs once. */
+  private def nodesOf(ew: DataFrame): DataFrame =
+    Owned.checkpoint(ew.select(col("src").as("node"))
+      .unionByName(ew.select(col("dst").as("node")))
+      .distinct())
 
   /** HITS hubs & authorities (Kleinberg 1999) in exact integer
     * micro-units — the query-independent link-analysis complement to
@@ -152,10 +156,7 @@ object Graph {
     require(iters >= 1, "hits: need at least one round")
     val spark = edges.sparkSession
     import spark.implicits._
-    val nodes = edges.select(col("src").as("node"))
-      .unionByName(edges.select(col("dst").as("node")))
-      .distinct()
-    val ew = edges.select(col("src"), col("dst"), col("w")).localCheckpoint(true)
+    val ew = Owned.checkpoint(edges.select(col("src"), col("dst"), col("w")))
     val nEdges = ew.count()
     require(nEdges > 0, "hits: empty edge table")
     val degBound = math.max(
@@ -168,7 +169,7 @@ object Graph {
 
     if (Gate("hits.oneTask", Dedup.LocalCcEdgeLimit)(nEdges)) {
       val idType = edges.schema(edges.schema.fieldIndex("src")).dataType
-      val out = ew.select(col("src").cast("long"), col("dst").cast("long"),
+      val out = Owned.checkpoint(ew.select(col("src").cast("long"), col("dst").cast("long"),
           col("w").cast("long"))
         .as[(Long, Long, Long)].repartition(1)
         .mapPartitions { it =>
@@ -189,41 +190,40 @@ object Graph {
           ns.iterator.map(n => (n, h(n), a(n)))
         }
         .toDF("node", "hub_u", "auth_u")
-        .select(col("node").cast(idType).as("node"), col("hub_u"), col("auth_u"))
-        .localCheckpoint(true)
-      ew.unpersist()
+        .select(col("node").cast(idType).as("node"), col("hub_u"), col("auth_u")))
+      Owned.release(ew)
       return out
     }
 
-    val nodesCk = nodes.localCheckpoint(true)
-    var auth = nodesCk.withColumn("v", lit(1000000L)).localCheckpoint(true)
+    val nodesCk = nodesOf(ew)
+    var auth = Owned.checkpoint(nodesCk.withColumn("v", lit(1000000L)))
     var hub: DataFrame = null
     for (_ <- 1 to iters) {
       val hRaw = ew.join(auth.withColumnRenamed("node", "dst"), Seq("dst"))
         .select(col("src").as("node"), (col("w") * col("v")).as("c"))
         .groupBy("node").agg(sum("c").as("s"))
-      val hAll = nodesCk.join(hRaw, Seq("node"), "left")
-        .select(col("node"), coalesce(col("s"), lit(0L)).as("v"))
-        .localCheckpoint(true)
+      val hAll = Owned.checkpoint(nodesCk.join(hRaw, Seq("node"), "left")
+        .select(col("node"), coalesce(col("s"), lit(0L)).as("v")))
       val mh = hAll.agg(max("v")).head().getLong(0)
-      val hNext = hAll.select(col("node"),
-        expr(s"(v * 1000000) div $mh").as("v")).localCheckpoint(true)
-      hAll.unpersist()
-      if (hub != null) hub.unpersist()
+      val hNext = Owned.checkpoint(hAll.select(col("node"),
+        expr(s"(v * 1000000) div $mh").as("v")))
+      Owned.release(hAll)
+      if (hub != null) Owned.release(hub)
       hub = hNext
       val aRaw = ew.join(hub.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node"), (col("w") * col("v")).as("c"))
         .groupBy("node").agg(sum("c").as("s"))
-      val aAll = nodesCk.join(aRaw, Seq("node"), "left")
-        .select(col("node"), coalesce(col("s"), lit(0L)).as("v"))
-        .localCheckpoint(true)
+      val aAll = Owned.checkpoint(nodesCk.join(aRaw, Seq("node"), "left")
+        .select(col("node"), coalesce(col("s"), lit(0L)).as("v")))
       val ma = aAll.agg(max("v")).head().getLong(0)
-      val aNext = aAll.select(col("node"),
-        expr(s"(v * 1000000) div $ma").as("v")).localCheckpoint(true)
-      aAll.unpersist()
-      auth.unpersist()
+      val aNext = Owned.checkpoint(aAll.select(col("node"),
+        expr(s"(v * 1000000) div $ma").as("v")))
+      Owned.release(aAll)
+      Owned.release(auth)
       auth = aNext
     }
+    Owned.release(ew)
+    Owned.release(nodesCk)
     hub.withColumnRenamed("v", "hub_u")
       .join(auth.withColumnRenamed("v", "auth_u"), Seq("node"))
   }

@@ -35,16 +35,13 @@ object Knn {
     * degrees, ties broken by id — identical to [[knnRingExpansion]]. */
   def knnLarge(spark: SparkSession, points: DataFrame, queries: DataFrame,
                k: Int, res: Int = 4, saltFactor: Int = 16): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val cellH = 180.0 / (1L << res).toDouble
-    val pts = points
-      .withColumn("cell", CellFunctions.cell_id(col("lat"), col("lon"), lit(res)))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    val pts = Owned.persist(points
+      .withColumn("cell", CellFunctions.cell_id(col("lat"), col("lon"), lit(res))))
     val maxR = 1 << res
     var r = 1
-    var remaining = queries.select("qid", "qlat", "qlon")
-      .withColumn("qcell", CellFunctions.cell_id(col("qlat"), col("qlon"), lit(res)))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    var remaining = Owned.persist(queries.select("qid", "qlat", "qlon")
+      .withColumn("qcell", CellFunctions.cell_id(col("qlat"), col("qlon"), lit(res))))
     var nRemaining = remaining.count()
     val finished = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     while (nRemaining > 0) {
@@ -63,9 +60,8 @@ object Knn {
         .select("qid", "id", "dist2")
       // level 2: merge ≤ saltFactor·k rows per query
       val w2 = WExpr.partitionBy(col("qid")).orderBy(col("dist2"), col("id"))
-      val topk = partial.withColumn("rank", row_number().over(w2))
-        .where(col("rank") <= k)
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
+      val topk = Owned.persist(partial.withColumn("rank", row_number().over(w2))
+        .where(col("rank") <= k))
       // same strict stop bound as knnRingExpansion (see its comment on the
       // tie-break at kd == bound); at maxR the disk covers the whole grid
       val bound = (r.toDouble * cellH) * (r.toDouble * cellH)
@@ -76,22 +72,21 @@ object Knn {
         else stats.where(col("n") >= k && col("kd") < lit(bound)).select("qid")
       finished += topk.join(doneQ, Seq("qid"), "left_semi")
         .select("qid", "rank", "id", "dist2")
-      val stillGoing = remaining.join(doneQ, Seq("qid"), "left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
+      val stillGoing = Owned.persist(remaining.join(doneQ, Seq("qid"), "left_anti"))
       // run the count action UNCONDITIONALLY: it materializes stillGoing and,
       // through doneQ → stats, caches this round's topk frame. Skipping it in
       // the final round (r >= maxR) would leave that topk lazy, and the
       // returned union would recompute its candidate join AFTER
-      // pts.unpersist() below — a full uncached re-scan of the points table.
+      // the release of `pts` below — a full uncached re-scan of the points table.
       val nStill = stillGoing.count()
       nRemaining = if (r >= maxR) 0L else nStill
-      remaining.unpersist()
+      Owned.release(remaining)
       remaining = stillGoing
       r = math.min(r * 2, maxR)
     }
-    remaining.unpersist()
-    pts.unpersist() // per-round topk frames are persisted+materialized; the
-                    // final union reads them, never the points table again
+    Owned.release(remaining)
+    Owned.release(pts) // per-round topk frames are cached and materialized;
+                       // the final union reads them, never the points table
     if (finished.isEmpty) {
       import spark.implicits._
       Seq.empty[(Long, Int, Long, Double)].toDF("qid", "rank", "id", "dist2")

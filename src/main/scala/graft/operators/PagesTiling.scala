@@ -203,10 +203,9 @@ object PagesTiling {
     val windows = grid.filter(w => open(tileKey(w)))
     if (windows.isEmpty) return 0L
 
-    val pending = chipsOf(spark, pages, meta, labels, None, cfg, windows)
-      .withColumn("tile_key", concat_ws("_", c("raster_id"), c("i"), c("j")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    try {
+    Owned.scope {
+      val pending = Owned.persist(chipsOf(spark, pages, meta, labels, None, cfg, windows)
+        .withColumn("tile_key", concat_ws("_", c("raster_id"), c("i"), c("j"))))
       // metrics (SURVEY §7.4 north-rule field list), one schema for the
       // append-only side-table: a detail row per partition (rows_in = pages
       // binned into the partition's tiles, rows_out = tiles, checksum over
@@ -243,7 +242,7 @@ object PagesTiling {
           .coalesce(1))
       }
       n
-    } finally pending.unpersist()
+    }
   }
 
   case class ChipOut(raster_id: String, i: Int, j: Int, n_pages: Long,

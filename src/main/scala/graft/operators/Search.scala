@@ -50,18 +50,11 @@ object Search {
     * preserved). Duplicate query terms count once (set semantics).
     *
     * Returns (qid, rank, doc_id, score_u) where score_u is the integer
-    * micro-unit sum described above.
-    *
-    * Cache contract: the postings frame is persisted (it feeds doc
-    * lengths, df, and the scoring join) and the returned plan depends on
-    * it — the cache outlives this call by design, and callers release it
-    * with `spark.catalog.clearCache()` (or their own unpersist) after the
-    * terminal action. Same contract as [[graft.operators.TextOps.ngramNovelty]]
-    * and [[graft.operators.Dedup.crossCorpus]]. */
+    * micro-unit sum described above. The postings frame is cached: it
+    * feeds doc lengths, df, and the scoring join. */
   def bm25TopK(docs: DataFrame, queries: DataFrame, k: Int,
                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val post = invertedIndex(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val post = Owned.persist(invertedIndex(docs))
     // doc length = Σ tf over the doc's postings (re-uses the combined
     // index — the raw token stream is never scanned twice)
     val dl = post.groupBy("doc_id").agg(sum("tf").as("dl"))

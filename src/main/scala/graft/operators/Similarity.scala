@@ -440,9 +440,7 @@ object Similarity {
       }.reduce(_ + _).as(s"k$b")
     }
     val keyed = vectors.select(col(idCol).as("id") +: keyCols: _*)
-    val sig =
-      if (persist) keyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      else keyed
+    val sig = if (persist) Owned.persist(keyed) else keyed
     sig.select(col("id"), col("id").as("th"), explode(array((0 until effBands).map(b =>
         struct(lit(b).as("band"), col(s"k$b").as("key"))): _*)).as("b"))
       .select(col("id"), col("th"), col("b.band"), col("b.key"))
@@ -463,13 +461,7 @@ object Similarity {
     * candidates, so the cap is the only recall trade (same as
     * [[cosinePairs]], mirrored in the oracle).
     * corpus: (vec_id, embedding); evalSet: (eval_id, embedding).
-    * Returns (vec_id, eval_id, cos).
-    *
-    * Cache contract: the corpus signature and the capped corpus band rows
-    * are persisted (band projections / join sides re-read them) and the
-    * returned plan depends on them — callers release with
-    * `spark.catalog.clearCache()` (or their own unpersist) after the
-    * terminal action, same as [[graft.operators.Search.bm25TopK]]. */
+    * Returns (vec_id, eval_id, cos). */
   def crossCosinePairs(corpus: DataFrame, evalSet: DataFrame, tau: Double,
                        dim: Int, nPlanes: Int = 24, nBands: Int = 6,
                        bucketCap: Int = BandBucketCap): DataFrame = {
@@ -533,9 +525,8 @@ object Similarity {
                lloydRounds: Int = 0): DataFrame = {
     val centroids =
       kmeansRefine(vectors, ivfCentroids(vectors, nCentroids), lloydRounds)
-    val assigned = vectors
-      .withColumn("bucket", ivfBucket(col("embedding"), centroids))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val assigned = Owned.persist(vectors
+      .withColumn("bucket", ivfBucket(col("embedding"), centroids)))
     // cluster sizes via map-side-combined groupBy + broadcast join back —
     // NOT a count-over-window by bucket: with only nCentroids distinct
     // buckets that window would drag every cluster's full membership

@@ -126,14 +126,13 @@ object TextOps {
     // restarting the offset for every merged parent — the footprints
     // lesson ([[graft.operators.ChipPipeline.footprints]]); data-carried
     // pids make the enumeration correct in any execution shape.
-    val parts = docs
+    val parts = Owned.persist(docs
       .select(col("doc_id").cast("long"),
         nTokens.cast("long").as("n_tokens"))
       .repartitionByRange(col("doc_id"))
       .sortWithinPartitions("doc_id")
       .withColumn("pid", spark_partition_id())
-      .as[(Long, Long, Int)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .as[(Long, Long, Int)])
     val partTotals = parts.groupBy(col("pid")).agg(sum(col("n_tokens")).as("s"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     val maxPid = if (partTotals.isEmpty) -1 else partTotals.map(_._1).max
@@ -153,10 +152,9 @@ object TextOps {
         (id, n, bin)
       }
     }.toDF("doc_id", "n_tokens", "bin")
-    // `parts` stays persisted until the caller's terminal action: the
-    // offsets were computed against ITS materialized partition boundaries,
-    // and the result must scan those same cached partitions (see the
-    // session-level cache contract in Dedup's scaladoc)
+    // `parts` stays cached until the caller's scope closes: the offsets
+    // were computed against ITS materialized partition boundaries, and the
+    // result must scan those same cached partitions
     out
   }
 
@@ -240,12 +238,8 @@ object TextOps {
     * (true hits + the fpp sliver), and an exact string equi-join against
     * the benchmark gram relation removes the false positives — so the
     * two paths are output-identical (TextOpsSpec pins it) and only the
-    * positive sliver ever shuffles. Cache contract: the distinct-gram
-    * frame is persisted (count, Set-collect/Bloom build, and the verify
-    * join all read it) and the Bloom path's returned plan depends on it —
-    * callers release it with `spark.catalog.clearCache()` (or their own
-    * unpersist) after the terminal action, same as
-    * [[graft.operators.Dedup.crossCorpus]]. */
+    * positive sliver ever shuffles. The distinct-gram frame is cached
+    * (count, Set-collect/Bloom build, and the verify join all read it). */
   def decontaminate(docs: DataFrame, benchmark: DataFrame, w: Int = 5): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -254,9 +248,8 @@ object TextOps {
       if (t.length < w) Iterator.empty
       else (0 to t.length - w).iterator.map(i => t.slice(i, i + w).mkString(" "))
     }
-    val benchGramDf = benchmark.select(col("text")).as[String]
-      .flatMap(grams(_)).toDF("g").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val benchGramDf = Owned.persist(benchmark.select(col("text")).as[String]
+      .flatMap(grams(_)).toDF("g").distinct())
     lazy val nGrams = benchGramDf.count()
     if (Gate("decontaminate.gramSet", 2000000L)(nGrams)) {
       val bc = spark.sparkContext.broadcast(
@@ -386,7 +379,6 @@ object TextOps {
       .toDF("doc_id", "chunk_idx", "n_tok", "chunk")
       .select(col("doc_id"), col("chunk_idx"), col("n_tok"),
         fingerprintCol(col("chunk")).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val keepers = chunks.groupBy("h")
       .agg(min(struct(col("doc_id"), col("chunk_idx"))).as("keeper"))
     chunks.join(keepers, Seq("h"))
@@ -417,12 +409,7 @@ object TextOps {
     * chunk_idx, n_tok, h60) rows reach the keeper aggregation — the
     * [[chunkDedup]] exchange discipline. Keep-first = min (doc_id,
     * chunk_idx) struct per hash, hot-chunk safe (no window over the
-    * corpus). Output: (doc_id, n_chunks, n_dup_chunks, n_tokens_kept).
-    *
-    * Cache contract: the chunk-hash frame is persisted (keeper choice and
-    * the per-doc rollup both read it) and the returned plan depends on
-    * it — callers release it with `spark.catalog.clearCache()` (or their
-    * own unpersist) after the terminal action, same as [[Search.bm25TopK]]. */
+    * corpus). Output: (doc_id, n_chunks, n_dup_chunks, n_tokens_kept). */
   def cdcChunkDedup(docs: DataFrame, mask: Long = 8L): DataFrame = {
     import docs.sparkSession.implicits._
     val chunks = docs.select(col("doc_id").cast("long"), col("text"))
@@ -450,7 +437,6 @@ object TextOps {
       .toDF("doc_id", "chunk_idx", "n_tok", "chunk")
       .select(col("doc_id"), col("chunk_idx"), col("n_tok"),
         fingerprintCol(col("chunk")).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val keepers = chunks.groupBy("h")
       .agg(min(struct(col("doc_id"), col("chunk_idx"))).as("keeper"))
     chunks.join(keepers, Seq("h"))
@@ -481,21 +467,16 @@ object TextOps {
     * Scale shape: ONE map-side-combined (source, bucket) count over the
     * exploded tokens (output ≤ |sources|·nBuckets rows), a broadcast of
     * the nBuckets-row global table, zero further corpus passes.
-    * Output: (source, n_tokens, drift_u).
-    *
-    * Cache contract: the (source, bucket) count frame is persisted (the
-    * global histogram, per-source totals and the grid join all read it)
-    * and the returned plan depends on it — callers release it with
-    * `spark.catalog.clearCache()` (or their own unpersist) after the
-    * terminal action, same as [[Search.bm25TopK]]. */
+    * Output: (source, n_tokens, drift_u). The (source, bucket) count
+    * frame is cached: the global histogram, per-source totals and the
+    * grid join all read it. */
   def tokenDrift(docs: DataFrame, nBuckets: Int = 64): DataFrame = {
     val spark = docs.sparkSession
     val tok = docs.select(col("source"),
       explode(split(col("text"), " ")).as("tok"))
-    val sb = tok.select(col("source"),
+    val sb = Owned.persist(tok.select(col("source"),
         pmod(fingerprintCol(col("tok")), lit(nBuckets.toLong)).as("bucket"))
-      .groupBy("source", "bucket").agg(count(lit(1)).as("n_sb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .groupBy("source", "bucket").agg(count(lit(1)).as("n_sb")))
     val g = sb.groupBy("bucket").agg(sum("n_sb").as("n_gb"))
     val totals = sb.groupBy("source").agg(sum("n_sb").as("n_s"))
     val gTotal = g.agg(sum("n_gb").as("n_g"))
@@ -709,16 +690,11 @@ object TextOps {
     * lesson); df is a map-side-combined count over the same persisted
     * frame, and the join back is co-partitioned on the hash. Docs with
     * fewer than n tokens emit nothing and are absent from the output (the
-    * oracle mirrors this).
-    *
-    * Cache contract: the hashed-gram frame is persisted (it feeds both the
-    * df aggregation and the join back) and the returned plan depends on
-    * it — callers release it with `spark.catalog.clearCache()` (or an
-    * unpersist of their own) after the terminal action, as [[Dedup.crossCorpus]]
-    * and [[graft.operators.Search.bm25TopK]] require for theirs. */
+    * oracle mirrors this). */
   def ngramNovelty(docs: DataFrame, n: Int = 3): DataFrame = {
     import docs.sparkSession.implicits._
-    val rows = docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
+    val rows = Owned.persist(docs.select(col("doc_id").cast("long"), col("text"))
+      .as[(Long, String)]
       .flatMap { case (id, text) =>
         val t = if (text == null) Array.empty[String] else text.split(" ", -1)
         if (t.length < n) Iterator.empty
@@ -730,8 +706,7 @@ object TextOps {
           }
           seen.iterator.map(h => (id, h))
         }
-      }.toDF("doc_id", "h")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      }.toDF("doc_id", "h"))
     val dfreq = rows.groupBy("h").agg(count(lit(1)).as("df"))
     rows.join(dfreq, Seq("h"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_grams"),
@@ -970,50 +945,49 @@ object TextOps {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    var words = docs
-      .select(explode(split(col("text"), " ")).as("w"))
-      .where(col("w") =!= "")
-      .groupBy("w").agg(count(lit(1)).as("f"))
-      .as[(String, Long)]
-      .map { case (w, f) =>
-        // code points, not UTF-16 units (see bpePairCounts)
-        val cps = w.codePoints().toArray
-        (cps.map(cp => new String(Character.toChars(cp))).toSeq, f)
-      }
-      .localCheckpoint(true)
+    // ≤ nMerges rows — the merges are driver values on both paths, so the
+    // scope frees every word table before the result is built
+    val merges = Owned.scope {
+      var words = Owned.checkpoint(docs
+        .select(explode(split(col("text"), " ")).as("w"))
+        .where(col("w") =!= "")
+        .groupBy("w").agg(count(lit(1)).as("f"))
+        .as[(String, Long)]
+        .map { case (w, f) =>
+          // code points, not UTF-16 units (see bpePairCounts)
+          val cps = w.codePoints().toArray
+          (cps.map(cp => new String(Character.toChars(cp))).toSeq, f)
+        })
 
-    // the checkpoint above materialized the table, so this count is a
-    // cached-block scan, not a recompute
-    if (Gate("bpe.oneTask", LocalBpeWordLimit)(words.count())) {
-      val res = words.repartition(1)
-        .mapPartitions(it => trainLocal(it, nMerges))
-        .collect() // ≤ nMerges rows — merges are driver values, both paths
-      words.unpersist()
-      return res.toSeq.toDF("rank", "lhs", "rhs", "n")
-    }
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var rank = 1
-    var exhausted = false
-    while (rank <= nMerges && !exhausted) {
-      val top = words.flatMap { case (syms, f) =>
-        (0 until syms.length - 1).iterator.map(i => (syms(i), syms(i + 1), f))
-      }.toDF("lhs", "rhs", "f")
-        .groupBy("lhs", "rhs").agg(sum("f").as("n"))
-        .orderBy(col("n").desc, col("lhs"), col("rhs"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true // every word fully merged
+      // the checkpoint above materialized the table, so this count is a
+      // cached-block scan, not a recompute
+      if (Gate("bpe.oneTask", LocalBpeWordLimit)(words.count()))
+        words.repartition(1).mapPartitions(it => trainLocal(it, nMerges)).collect().toSeq
       else {
-        val (l, r, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((rank, l, r, n))
-        val next = words.map { case (syms, f) => (mergeLtr(syms, l, r), f) }
-          .localCheckpoint(true)
-        words.unpersist()
-        words = next
-        rank += 1
+        val learned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+        var rank = 1
+        var exhausted = false
+        while (rank <= nMerges && !exhausted) {
+          val top = words.flatMap { case (syms, f) =>
+            (0 until syms.length - 1).iterator.map(i => (syms(i), syms(i + 1), f))
+          }.toDF("lhs", "rhs", "f")
+            .groupBy("lhs", "rhs").agg(sum("f").as("n"))
+            .orderBy(col("n").desc, col("lhs"), col("rhs"))
+            .limit(1).collect()
+          if (top.isEmpty) exhausted = true // every word fully merged
+          else {
+            val (l, r, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+            learned += ((rank, l, r, n))
+            val next = Owned.checkpoint(words.map { case (syms, f) => (mergeLtr(syms, l, r), f) })
+            Owned.release(words)
+            words = next
+            rank += 1
+          }
+        }
+        learned.toSeq
       }
     }
-    words.unpersist()
-    merges.toSeq.toDF("rank", "lhs", "rhs", "n")
+    merges.toDF("rank", "lhs", "rhs", "n")
   }
 
   /** BPE tokenizer APPLICATION: encode every document into subword tokens
@@ -1172,7 +1146,7 @@ object TextOps {
     * co-partitioned on the same key. */
   def substringDedup(docs: DataFrame, window: Int = 8): DataFrame = {
     import docs.sparkSession.implicits._
-    val wh = docs.select(col("doc_id").cast("long"), col("text"))
+    val wh = Owned.persist(docs.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
         val t = text.split(" ", -1)
@@ -1186,8 +1160,7 @@ object TextOps {
         }
       }
       .toDF("doc_id", "sh")
-      .select(col("doc_id"), fingerprintCol(col("sh")).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .select(col("doc_id"), fingerprintCol(col("sh")).as("h")))
     val shared = wh.groupBy("h").agg(count(lit(1)).as("nd"))
     val perDoc = wh.join(shared, Seq("h"))
       .groupBy("doc_id")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
 import graft.{Bench, Config, SparkEntry}
-import graft.operators.{Dedup, Gate, PagesTiling}
+import graft.operators.{Dedup, Gate, Owned, PagesTiling}
 import graft.sources.Fixtures
 
 /** The one measurement main (not part of the driver contract — the frozen
@@ -72,9 +72,10 @@ object Measure {
 
   // ---- queries ------------------------------------------------------------
 
-  /** One completed stage: labelled by its first graft call site (broadcast
-    * builds all read withThreadLocalCaptured otherwise), with its wall,
-    * task count and cumulative task run/CPU/GC/deserialize time. */
+  /** One completed stage: labelled by its first graft call site outside
+    * [[Owned]] (broadcast builds all read withThreadLocalCaptured
+    * otherwise), with its wall, task count and cumulative task
+    * run/CPU/GC/deserialize time. */
   final case class Stage(site: String, wallMs: Long, tasks: Int, runMs: Long,
                          cpuMs: Long, gcMs: Long, deserMs: Long)
 
@@ -98,7 +99,7 @@ object Measure {
   }
 
   /** Per-query min-of-`reps`, each pass timed by [[Bench.timeQuery]] (fresh
-    * DataFrame, `clearCache` after, a failed pass is no time) inside a
+    * DataFrame in its own [[Owned.scope]], a failed pass is no time) inside a
     * [[Gate.scope]], plus the gate decisions and slowest stages of the last
     * pass — which side each size gate took and where a query spends its
     * time, without the UI. */
@@ -112,7 +113,8 @@ object Measure {
         val i = e.stageInfo
         val wall = (for (a <- i.completionTime; b <- i.submissionTime) yield a - b)
           .getOrElse(0L)
-        val site = i.details.linesIterator.find(_.contains("graft."))
+        val site = i.details.linesIterator
+          .find(l => l.contains("graft.") && !l.contains("graft.operators.Owned"))
           .getOrElse(i.name.linesIterator.next()).trim.take(110)
         stages.add(Stage(site, wall, i.numTasks, i.taskMetrics.executorRunTime,
           i.taskMetrics.executorCpuTime / 1000000L, i.taskMetrics.jvmGCTime,
@@ -256,8 +258,8 @@ object Measure {
     *   2. the blocking-key DF cap cuts the boilerplate-shingle candidate
     *      quadratic (candidate counts capped vs uncapped);
     *   3. end-to-end ngramJaccard wall at corpus scale. */
-  def dedupGuard(spark: SparkSession, n: Long): String = {
-    val docs = dedupCorpus(spark, n).persist()
+  def dedupGuard(spark: SparkSession, n: Long): String = Owned.scope {
+    val docs = Owned.persist(dedupCorpus(spark, n))
     val nDocs = docs.count()
 
     // candidate counts, capped vs uncapped, on a bounded slice (the
@@ -296,12 +298,12 @@ object Measure {
     val toExplain = if (names.nonEmpty) names
       else Seq("q1_agg", "spatial_join_tiles", "knn", "knn_large",
         "dedup_minhash_lsh", "ann_topk", "url_dedup", "pii_redact")
-    toExplain.map { name =>
+    toExplain.map(name => name -> Owned.scope {
       val df = SparkEntry.queries.get(name).map(_(spark, sfDir)).orElse(
         if (name == "flagship")
           Some(Bench.flagshipChips(spark, Bench.flagshipPages(spark, nPages)))
         else None)
-      name -> df.fold("unknown query")(_.queryExecution.explainString(FormattedMode))
-    }
+      df.fold("unknown query")(_.queryExecution.explainString(FormattedMode))
+    })
   }
 }

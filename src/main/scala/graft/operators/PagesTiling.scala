@@ -187,7 +187,10 @@ object PagesTiling {
     * grid it already holds. With none pending the call returns 0 without
     * touching `pages`; otherwise the tile table is built from the pending
     * windows only, so pages are joined, binned and masked for those tiles
-    * alone. Within-job retry is Spark-native task retry. */
+    * alone. Within-job retry is Spark-native task retry. One collect of a
+    * row of facts per chip materializes the cached chips and one job writes
+    * them; the driver builds the manifest, lineage and metrics rows from the
+    * facts and writes them itself ([[graft.sources.IcebergLite]]'s protocol). */
   def extractChipsResumable(spark: SparkSession, pages: Dataset[Page],
                             meta: RasterMeta, table: graft.sources.IcebergLite,
                             labels: Option[Seq[(Array[Byte], String)]] = None,
@@ -206,42 +209,34 @@ object PagesTiling {
     Owned.scope {
       val pending = Owned.persist(chipsOf(spark, pages, meta, labels, None, cfg, windows)
         .withColumn("tile_key", concat_ws("_", c("raster_id"), c("i"), c("j"))))
-      // metrics (SURVEY §7.4 north-rule field list), one schema for the
-      // append-only side-table: a detail row per partition (rows_in = pages
-      // binned into the partition's tiles, rows_out = tiles, checksum over
-      // tile keys) and a summary row (partition = -1) summing them. The
-      // detail has at most one row per partition; collecting it also
-      // materializes `pending` and counts its chips. The summary is summed
-      // on the driver, where `addExact` raises on overflow as ANSI `sum` does.
-      val detail = pending
-        .groupBy(spark_partition_id().as("partition"))
-        .agg(sum(c("n_pages")).as("rows_in"), count(lit(1)).as("rows_out"),
-          sum(hash(c("tile_key")).cast("long")).as("checksum"))
-        .as[(Int, Long, Long, Long)].collect()
-      val (rowsIn, n, checksum) = detail.foldLeft((0L, 0L, 0L)) {
-        case ((in, out, ck), (_, i, o, k)) =>
-          (Math.addExact(in, i), Math.addExact(out, o), Math.addExact(ck, k))
-      }
-      if (n > 0) {
+      // one row of facts per chip; collecting them also materializes
+      // `pending`, so the chips write below reads the cache
+      val tiles = pending.select(spark_partition_id(), c("tile_key"), c("i"), c("j"),
+          c("n_pages"), c("bad_text"), hash(c("tile_key")).cast("long"))
+        .as[(Int, String, Int, Int, Long, Long, Long)].collect()
+      if (tiles.nonEmpty) {
         val inputSnapshot = table.currentSnapshot()
-        val manifest = pending.select(c("tile_key").as("part_key"),
-          c("n_pages"), c("bad_text"))
+        val manifest = tiles.toSeq.map(t => (t._2, t._5, t._6))
+          .toDF("part_key", "n_pages", "bad_text")
         table.commit(Some((pending.drop("tile_key"), "chips")), manifest, "chips-append")
         // lineage: output tile → input snapshot + covering cells at cfg.cellRes
-        val lineage = pending.select(c("tile_key"), c("i"), c("j"))
-          .withColumn("input_snapshot", lit(inputSnapshot))
-          .withColumn("cell_res", lit(cfg.cellRes))
-        table.appendLineage(lineage)
+        table.appendLineage(tiles.toSeq.map(t => (t._2, t._3, t._4, inputSnapshot, cfg.cellRes))
+          .toDF("tile_key", "i", "j", "input_snapshot", "cell_res"))
+        // metrics (SURVEY §7.4 north-rule field list), one schema for the
+        // append-only side-table: a detail row per partition (rows_in = pages
+        // binned into the partition's tiles, rows_out = tiles, checksum over
+        // tile keys) and a summary row (partition = -1) summing them, where
+        // `addExact` raises on overflow as ANSI `sum` does
+        def total(xs: Seq[(Long, Long, Long)]) = xs.reduce((a, b) =>
+          (Math.addExact(a._1, b._1), Math.addExact(a._2, b._2), Math.addExact(a._3, b._3)))
+        val detail = tiles.toSeq.groupBy(_._1).toSeq.sortBy(_._1)
+          .map { case (p, ts) => (p, total(ts.map(t => (t._5, 1L, t._7))), "chips.partitions") }
         val wall = System.currentTimeMillis() - t0
-        val rows = detail.toSeq.map { case (p, i, o, k) => (p, i, o, k, "chips.partitions") } :+
-          ((-1, rowsIn, n, checksum, "chips"))
-        table.appendMetrics(rows.toDF("partition", "rows_in", "rows_out", "checksum", "stage")
-          .withColumn("job_id", lit(jobId))
-          .withColumn("wall_ms", lit(wall))
-          .withColumn("skew_salt", lit(cfg.salt))
-          .coalesce(1))
+        table.appendMetrics((detail :+ ((-1, total(detail.map(_._2)), "chips"))).map {
+          case (p, (in, out, ck), stage) => (p, in, out, ck, stage, jobId, wall, cfg.salt)
+        }.toDF("partition", "rows_in", "rows_out", "checksum", "stage", "job_id", "wall_ms", "skew_salt"))
       }
-      n
+      tiles.length.toLong
     }
   }
 

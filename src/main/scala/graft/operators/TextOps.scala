@@ -687,13 +687,14 @@ object TextOps {
     * Scale shape: the corpus becomes (doc_id, h60) rows — per-doc distinct
     * INSIDE the flatMap (the substringDedup contract), so the exchange
     * carries 16-byte hash rows, never n-gram strings (the gopher-bigram
-    * lesson); df is a map-side-combined count over the same persisted
-    * frame, and the join back is co-partitioned on the hash. Docs with
+    * lesson); df is a map-side-combined count over the same rows (uncached:
+    * both join sides scan them at once, so a cache would save no scan), and
+    * the join back is co-partitioned on the hash. Docs with
     * fewer than n tokens emit nothing and are absent from the output (the
     * oracle mirrors this). */
   def ngramNovelty(docs: DataFrame, n: Int = 3): DataFrame = {
     import docs.sparkSession.implicits._
-    val rows = Owned.persist(docs.select(col("doc_id").cast("long"), col("text"))
+    val rows = docs.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
         val t = if (text == null) Array.empty[String] else text.split(" ", -1)
@@ -706,7 +707,7 @@ object TextOps {
           }
           seen.iterator.map(h => (id, h))
         }
-      }.toDF("doc_id", "h"))
+      }.toDF("doc_id", "h")
     val dfreq = rows.groupBy("h").agg(count(lit(1)).as("df"))
     rows.join(dfreq, Seq("h"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_grams"),
@@ -1146,7 +1147,7 @@ object TextOps {
     * co-partitioned on the same key. */
   def substringDedup(docs: DataFrame, window: Int = 8): DataFrame = {
     import docs.sparkSession.implicits._
-    val wh = Owned.persist(docs.select(col("doc_id").cast("long"), col("text"))
+    val wh = docs.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
         val t = text.split(" ", -1)
@@ -1160,7 +1161,7 @@ object TextOps {
         }
       }
       .toDF("doc_id", "sh")
-      .select(col("doc_id"), fingerprintCol(col("sh")).as("h")))
+      .select(col("doc_id"), fingerprintCol(col("sh")).as("h"))
     val shared = wh.groupBy("h").agg(count(lit(1)).as("nd"))
     val perDoc = wh.join(shared, Seq("h"))
       .groupBy("doc_id")

@@ -1,6 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{Path => FsPath}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
@@ -27,8 +32,14 @@ import scala.jdk.CollectionConverters._
   * files and manifest rows stay invisible forever (snapshot isolation for
   * append-only workloads): a torn commit's id is consumed by SEQ and never
   * appears in VERSION, and the retry runs under a new id, so no replay can
-  * resurrect orphans. The snapshot row's `rows` is observed on the
-  * manifest write, not counted in a second pass.
+  * resurrect orphans. The snapshot row's `rows` is the number of manifest
+  * rows the commit wrote.
+  *
+  * Commit protocol, as Iceberg's committer splits it: data files are
+  * written by Spark tasks (one write job per commit); manifest, snapshot,
+  * lineage and metrics rows are written by the driver, one parquet file
+  * per row set ([[writeLocal]]). Those row sets hold one row per work unit
+  * and must stay driver-sized.
   *
   * The manifest table doubles as the resume mechanism ([[pendingWork]]):
   * work units whose key a committed snapshot already holds are anti-joined
@@ -101,23 +112,42 @@ class IcebergLite(root: String, spark: SparkSession) {
     data.foreach { case (df, sub) =>
       df.write.mode(SaveMode.Append).parquet(s"$root/data/$sub/snapshot_id=$snap")
     }
-    // the snapshot row's count is observed on the manifest write itself,
-    // not counted in a second pass; an empty manifest records 0
-    val written = Observation()
-    manifest.withColumn("snapshot_id", lit(snap))
-      .observe(written, count(lit(1)).as("rows"))
-      .write.mode(SaveMode.Append).parquet(s"$metaDir/manifests")
-    val rows = written.get.get("rows").fold(0L)(_.asInstanceOf[Long])
-    import spark.implicits._
-    Seq((snap, System.currentTimeMillis(), operation, rows))
-      .toDF("snapshot_id", "ts_ms", "operation", "rows")
-      .write.mode(SaveMode.Append).parquet(s"$metaDir/snapshots")
+    val rows = writeLocal(manifest.withColumn("snapshot_id", lit(snap)), s"$metaDir/manifests")
+    writeSnapshot(snap, operation, rows)
     if (abortBeforeVersionMove) return snap // simulated crash: id burned, nothing published
     val tmp = Paths.get(root, s".VERSION.$snap.tmp")
     Files.write(tmp, (committedSnapshots() :+ snap).mkString("\n").getBytes,
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     Files.move(tmp, versionFile, ATOMIC_MOVE, REPLACE_EXISTING)
     snap
+  }
+
+  private def writeSnapshot(snap: Long, operation: String, rows: Long): Unit =
+    writeLocal(spark.createDataFrame(Seq((snap, System.currentTimeMillis(), operation, rows)))
+      .toDF("snapshot_id", "ts_ms", "operation", "rows"), s"$metaDir/snapshots")
+
+  /** The driver's writer for metadata row sets: collects `df` (driver-sized
+    * by contract; a local frame collects without a job) and writes it as
+    * one parquet file in `dir` through Spark's own parquet writer, with the
+    * all-nullable schema Spark's file writes record. The file is written
+    * under a dot-prefixed name, which readers skip, and renamed into place
+    * (its `.crc` moves with it), so a crash mid-write leaves nothing
+    * visible. An empty frame still writes a file, so the directory always
+    * carries its schema. Returns the number of rows written. */
+  private def writeLocal(df: DataFrame, dir: String): Long = {
+    val schema = df.schema.toNullable
+    val rows = df.collect()
+    val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
+    val format = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val name = s"part-00000-${java.util.UUID.randomUUID()}${format.getFileExtension(ctx)}"
+    val tmp = new FsPath(dir, s".$name.tmp")
+    val out = format.newInstance(tmp.toString, schema, ctx)
+    val toRow = ExpressionEncoder(schema).createSerializer()
+    try rows.foreach(r => out.write(toRow(r))) finally out.close()
+    val dst = new FsPath(dir, name)
+    require(dst.getFileSystem(job.getConfiguration).rename(tmp, dst), s"could not publish $dst")
+    rows.length
   }
 
   /** Above this many committed snapshots, filter with a semi-join against a
@@ -206,7 +236,6 @@ class IcebergLite(root: String, spark: SparkSession) {
     * AFTER the move, and a crash mid-cleanup leaves only invisible
     * leftovers that the next compaction removes. */
   def compact(): Long = {
-    import spark.implicits._
     val old = committedSnapshots()
     require(old.nonEmpty, "nothing to compact: no committed snapshots")
     val snap = allocateSnapshotId()
@@ -223,31 +252,24 @@ class IcebergLite(root: String, spark: SparkSession) {
       if (df.schema.nonEmpty)
         df.write.mode(SaveMode.Append).parquet(s"$root/data/$sub/snapshot_id=$snap")
     }
-    // the compacted manifest's row count is observed on its write, as in
-    // [[commit]]; a table with no manifest rows records 0
-    val mf = manifests()
-    val mfRows =
-      if (mf.schema.nonEmpty) {
-        val written = Observation()
-        mf.drop("snapshot_id").withColumn("snapshot_id", lit(snap))
-          .observe(written, count(lit(1)).as("rows"))
-          .coalesce(1).write.mode(SaveMode.Append).parquet(s"$metaDir/manifests")
-        written.get.get("rows").fold(0L)(_.asInstanceOf[Long])
-      } else 0L
-    Seq((snap, System.currentTimeMillis(), "compact", mfRows))
-      .toDF("snapshot_id", "ts_ms", "operation", "rows")
-      .write.mode(SaveMode.Append).parquet(s"$metaDir/snapshots")
+    // every manifest file listed now is superseded by the one file the
+    // driver writes next (compaction is a single-writer op)
+    val mfDir = Paths.get(metaDir, "manifests")
+    val supersededManifests = withStream(Files.list(mfDir))(_.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toList)
+    val mfRows = writeLocal(manifests().drop("snapshot_id").withColumn("snapshot_id", lit(snap)),
+      mfDir.toString)
+    writeSnapshot(snap, "compact", mfRows)
     // commit point: only the compaction snapshot survives
     val tmp = Paths.get(root, s".VERSION.$snap.tmp")
     Files.write(tmp, snap.toString.getBytes, StandardOpenOption.CREATE,
       StandardOpenOption.TRUNCATE_EXISTING)
     Files.move(tmp, versionFile, ATOMIC_MOVE, REPLACE_EXISTING)
-    // physical expiry: superseded data dirs, then manifest files whose rows
-    // all carry superseded ids (each file is deleted only after a cheap
-    // per-file id scan, so the directory stays readable at every instant)
-    val dataRoot = Paths.get(root, "data")
-    if (Files.exists(dataRoot)) {
-      val superseded = withStream(Files.walk(dataRoot, 2))(_.iterator().asScala
+    // physical expiry: superseded data dirs, then the superseded manifest
+    // files with their checksums (the compacted file is already in place,
+    // so the directory stays readable at every instant)
+    if (Files.exists(dataRootDir)) {
+      val superseded = withStream(Files.walk(dataRootDir, 2))(_.iterator().asScala
         .filter(p => p.getFileName.toString.startsWith("snapshot_id=") &&
           p.getFileName.toString != s"snapshot_id=$snap").toList)
       superseded.foreach { dir =>
@@ -256,38 +278,18 @@ class IcebergLite(root: String, spark: SparkSession) {
           .forEach(Files.delete(_)))
       }
     }
-    // manifest expiry in ONE distributed pass: read the directory once with
-    // input_file_name() to find files carrying LIVE rows, then delete every
-    // listed parquet NOT in that set — the old per-file driver loop planned
-    // O(files) separate read jobs, quadratic driver work over a long-lived
-    // table's lifetime. Dead = listed − live (not "grouped and not live"):
-    // a ZERO-row manifest file produces no input_file_name group at all and
-    // would otherwise leak forever; and if the directory holds no readable
-    // parquet there is nothing to read and nothing to delete.
-    val mfDir = Paths.get(metaDir, "manifests")
-    if (Files.exists(mfDir)) {
-      val allFiles = withStream(Files.list(mfDir))(_.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toList)
-      if (allFiles.nonEmpty) {
-        val live = spark.read.parquet(mfDir.toString)
-          .where(col("snapshot_id") === snap)
-          .select(input_file_name().as("f"))
-          .distinct().as[String].collect()
-          .map(f => Paths.get(new java.net.URI(f)).toRealPath()).toSet
-        allFiles.filterNot(p => live.contains(p.toRealPath()))
-          .foreach(Files.deleteIfExists(_))
-      }
+    supersededManifests.foreach { p =>
+      Files.deleteIfExists(p)
+      Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
     }
     snap
   }
 
   /** Append per-partition metrics rows (job_id, stage, partition, rows_in,
     * rows_out, wall_ms, checksum) — the north rule's lineage/metrics tables. */
-  def appendMetrics(metrics: DataFrame): Unit =
-    metrics.write.mode(SaveMode.Append).parquet(s"$metaDir/metrics")
+  def appendMetrics(metrics: DataFrame): Unit = writeLocal(metrics, s"$metaDir/metrics")
 
-  def appendLineage(lineage: DataFrame): Unit =
-    lineage.write.mode(SaveMode.Append).parquet(s"$metaDir/lineage")
+  def appendLineage(lineage: DataFrame): Unit = writeLocal(lineage, s"$metaDir/lineage")
 
   def metrics(): DataFrame = spark.read.parquet(s"$metaDir/metrics")
 }

@@ -105,6 +105,33 @@ class FlagshipResumeSpec extends AnyFunSuite {
     assert(table.committedSnapshots().size == 1)
   }
 
+  test("metadata row sets are written by the driver: a local manifest, lineage or metrics frame runs no job") {
+    import spark.implicits._
+    val table = new IcebergLite(Files.createTempDirectory("flagship-local").toString, spark)
+    val (snap, commitJobs) = countJobs(
+      table.commit(None, Seq("a", "b", "c").toDF("part_key"), "append"))
+    val (_, lineageJobs) = countJobs(table.appendLineage(
+      Seq(("a", 0, 1, snap, 16)).toDF("tile_key", "i", "j", "input_snapshot", "cell_res")))
+    val (_, metricsJobs) = countJobs(table.appendMetrics(
+      Seq(("job1", "chips", 0, 3L, 3L, 7L)).toDF("job_id", "stage", "partition", "rows_in", "rows_out", "wall_ms")))
+    // a Spark parquet write per row set ran 2, 1 and 1 jobs
+    assert((commitJobs, lineageJobs, metricsJobs) == ((0, 0, 0)))
+    assert(table.manifests().select("part_key").as[String].collect().sorted.sameElements(Seq("a", "b", "c")))
+    assert(table.metrics().count() == 1)
+  }
+
+  test("a committing run on a fresh table writes only its chips with a Spark job: at most 5 jobs") {
+    val table = new IcebergLite(Files.createTempDirectory("flagship-jobs").toString, spark)
+    val pages = Fixtures.pages(spark, 20000)
+    val (n, jobs) = countJobs(
+      PagesTiling.extractChipsResumable(spark, pages, Fixtures.luxMeta(), table, Some(labels)))
+    assert(n == 8)
+    // measured: 5 jobs (building and collecting the chip facts, then the
+    // chips write); with a Spark write per metadata row set and a shuffle
+    // for the per-partition metrics, the same call ran 10
+    assert(jobs <= 5, s"the committing run ran $jobs jobs")
+  }
+
   test("snapshot rows equal each snapshot's manifest row count, empty manifests included") {
     import spark.implicits._
     val root = Files.createTempDirectory("flagship-rows").toString

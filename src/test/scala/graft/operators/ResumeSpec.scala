@@ -188,6 +188,84 @@ class ResumeSpec extends AnyFunSuite {
     assert(table.readDataAsOf("rows", table.currentSnapshot()).count() == 9)
   }
 
+  /** The visible parquet files directly under `dir` (none if it is absent). */
+  private def parquetFiles(dir: String): Seq[java.nio.file.Path] =
+    if (!Files.isDirectory(java.nio.file.Paths.get(dir))) Nil
+    else {
+      val s = Files.list(java.nio.file.Paths.get(dir))
+      try s.iterator().asScala.filter { p =>
+        val name = p.getFileName.toString
+        name.endsWith(".parquet") && !name.startsWith(".")
+      }.toList.sortBy(_.toString)
+      finally s.close()
+    }
+
+  test("side-table files written by the driver read back like Spark-written ones; dot-prefixed leftovers stay invisible") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-mixed").toString
+    val table = new IcebergLite(tmp, spark)
+    val lineage = Seq(("t_0_0", 0, 0, 0L, 16), ("t_0_1", 0, 1, 0L, 16))
+      .toDF("tile_key", "i", "j", "input_snapshot", "cell_res")
+    table.appendLineage(lineage)
+    lineage.coalesce(1).write.mode(SaveMode.Append).parquet(s"$tmp/metadata/lineage")
+    val files = parquetFiles(s"$tmp/metadata/lineage")
+    assert(files.length == 2)
+    val reads = files.map(f => spark.read.parquet(f.toString))
+    assert((spark.read.parquet(s"$tmp/metadata/lineage").schema +: reads.map(_.schema)).distinct.length == 1)
+    assert(reads.head.schema.map(f => (f.name, f.dataType, f.nullable)) ==
+      lineage.schema.map(f => (f.name, f.dataType, true)))
+    val rows = reads.map(_.collect().map(_.toSeq).sortBy(_.toString).toSeq)
+    assert(rows.distinct.length == 1 && rows.head.length == 2)
+
+    // a dot-prefixed leftover carrying a committed id is never read
+    val work = Seq("a", "b", "c", "d").toDF("part_key")
+    table.commit(None, Seq("a", "b").toDF("part_key"), "append")
+    val mfBefore = table.manifests().collect().map(_.toSeq).sortBy(_.toString).toSeq
+    val pendingBefore = table.pendingWork(work, "part_key").as[String].collect().sorted.toSeq
+    val ghostDir = s"$tmp/ghost"
+    Seq(("c", table.currentSnapshot())).toDF("part_key", "snapshot_id")
+      .write.parquet(ghostDir)
+    Files.copy(parquetFiles(ghostDir).head,
+      java.nio.file.Paths.get(tmp, "metadata", "manifests", ".part-00000-leftover.snappy.parquet.tmp"))
+    assert(table.manifests().collect().map(_.toSeq).sortBy(_.toString).toSeq == mfBefore)
+    assert(table.pendingWork(work, "part_key").as[String].collect().sorted.toSeq == pendingBefore)
+    assert(pendingBefore == Seq("c", "d"))
+  }
+
+  test("compaction over manifests written by Spark and by the driver leaves one manifest file and identical reads") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-mixed-compact").toString
+    val table = new IcebergLite(tmp, spark)
+    val mfDir = s"$tmp/metadata/manifests"
+    (0 until 4).foreach { k =>
+      val keys = Seq(s"part${2 * k}", s"part${2 * k + 1}")
+      val earlier = parquetFiles(mfDir).toSet
+      table.commit(Some((keys.map(key => (k.toLong, key)).toDF("id", "payload"), "rows")),
+        keys.toDF("part_key"), "append")
+      if (k % 2 == 0) {
+        // rewrite this commit's manifest file the way a Spark write job lays it out
+        val file = (parquetFiles(mfDir).toSet -- earlier).head
+        val written = spark.read.parquet(file.toString)
+        val rows = written.collect()
+        Files.delete(file)
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), written.schema)
+          .coalesce(1).write.mode(SaveMode.Append).parquet(mfDir)
+      }
+    }
+    assert(parquetFiles(mfDir).length == 4)
+    val work = (0 until 10).map(k => s"part$k").toDF("part_key")
+    def state() = (
+      table.readData("rows").collect().map(_.toSeq).sortBy(_.toString).toSeq,
+      table.manifests().select("part_key").as[String].collect().sorted.toSeq,
+      table.pendingWork(work, "part_key").as[String].collect().sorted.toSeq)
+    val before = state()
+    assert(before._2.length == 8 && before._3 == Seq("part8", "part9"))
+
+    table.compact()
+    assert(parquetFiles(mfDir).length == 1, "manifests must compact to one file")
+    assert(state() == before)
+  }
+
   test("pages written Iceberg-style and read back preserve the text invariant") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-pages").toString

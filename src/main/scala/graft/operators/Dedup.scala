@@ -95,10 +95,13 @@ object Dedup {
     // carries each distinct text ~once) and needs no sort
     val reps = Owned.persist(docs.groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"), col("text")))
+    // built once, now: both joins of `expandPairs` and both sides of the
+    // in-group self-join read it in one action, so a lazy cache would be
+    // first-built by several stages at once
     val members = docs.select(col("doc_id"), md5(col("text")).as("th"))
       .join(reps.select(md5(col("text")).as("th"), col("doc_id").as("rep")), Seq("th"))
       .select("doc_id", "rep")
-    (reps, Owned.persist(members))
+    (reps, Owned.checkpoint(members))
   }
 
   /** Expand representative-level pairs back to all member pairs, preserving

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Affine, Geom, TileGrid}
@@ -181,16 +181,23 @@ object PagesTiling {
     *
     * Skip-existing is decided once, on the tile grid, before any pages
     * work (satproc checks each window before reading it,
-    * satproc/chips.py:227-233): the grid's tile keys
-    * (`<raster_id>_<i>_<j>`) are anti-joined against the committed manifest
-    * and the pending windows collected to the driver — never more than the
-    * grid it already holds. With none pending the call returns 0 without
-    * touching `pages`; otherwise the tile table is built from the pending
-    * windows only, so pages are joined, binned and masked for those tiles
-    * alone. Within-job retry is Spark-native task retry. One collect of a
-    * row of facts per chip materializes the cached chips and one job writes
-    * them; the driver builds the manifest, lineage and metrics rows from the
-    * facts and writes them itself ([[graft.sources.IcebergLite]]'s protocol). */
+    * satproc/chips.py:227-233): the committed manifest's keys, read on the
+    * driver, are removed from the grid's tile keys (`<raster_id>_<i>_<j>`)
+    * — no job, and never more than the grid it already holds. With none
+    * pending the call returns 0 without touching `pages`; otherwise the
+    * tile table is built from the pending windows only, so pages are
+    * joined, binned and masked for those tiles alone. Within-job retry is
+    * Spark-native task retry.
+    *
+    * A committing call runs 3 jobs: the tile table's broadcast, the pages
+    * scan into the tile aggregate's shuffle, and the chips write. The
+    * write reports a row of facts per chip through an `Observation` on the
+    * written frame; they come from the write's result stage, where Spark
+    * merges each task's accumulator once even when a task is retried. The
+    * driver builds the manifest, lineage and metrics rows from those facts
+    * and writes them itself ([[graft.sources.IcebergLite]]'s protocol). An
+    * open window that holds no page yields no chip, and a call whose open
+    * windows yield none commits nothing. */
   def extractChipsResumable(spark: SparkSession, pages: Dataset[Page],
                             meta: RasterMeta, table: graft.sources.IcebergLite,
                             labels: Option[Seq[(Array[Byte], String)]] = None,
@@ -201,43 +208,46 @@ object PagesTiling {
     val t0 = System.currentTimeMillis()
     val grid = gridWindows(meta, cfg)
     def tileKey(w: TileGrid.GridCell) = s"${meta.raster_id}_${w.i}_${w.j}"
-    val open = table.pendingWork(grid.map(tileKey).toDF("tile_key"), "tile_key")
-      .as[String].collect().toSet
-    val windows = grid.filter(w => open(tileKey(w)))
+    val done =
+      if (table.committedSnapshots().isEmpty) Set.empty[String]
+      else table.manifests().select("part_key").as[String].collect().toSet
+    val windows = grid.filterNot(w => done(tileKey(w)))
     if (windows.isEmpty) return 0L
 
-    Owned.scope {
-      val pending = Owned.persist(chipsOf(spark, pages, meta, labels, None, cfg, windows)
-        .withColumn("tile_key", concat_ws("_", c("raster_id"), c("i"), c("j"))))
-      // one row of facts per chip; collecting them also materializes
-      // `pending`, so the chips write below reads the cache
-      val tiles = pending.select(spark_partition_id(), c("tile_key"), c("i"), c("j"),
-          c("n_pages"), c("bad_text"), hash(c("tile_key")).cast("long"))
-        .as[(Int, String, Int, Int, Long, Long, Long)].collect()
-      if (tiles.nonEmpty) {
-        val inputSnapshot = table.currentSnapshot()
-        val manifest = tiles.toSeq.map(t => (t._2, t._5, t._6))
-          .toDF("part_key", "n_pages", "bad_text")
-        table.commit(Some((pending.drop("tile_key"), "chips")), manifest, "chips-append")
-        // lineage: output tile → input snapshot + covering cells at cfg.cellRes
-        table.appendLineage(tiles.toSeq.map(t => (t._2, t._3, t._4, inputSnapshot, cfg.cellRes))
-          .toDF("tile_key", "i", "j", "input_snapshot", "cell_res"))
-        // metrics (SURVEY §7.4 north-rule field list), one schema for the
-        // append-only side-table: a detail row per partition (rows_in = pages
-        // binned into the partition's tiles, rows_out = tiles, checksum over
-        // tile keys) and a summary row (partition = -1) summing them, where
-        // `addExact` raises on overflow as ANSI `sum` does
-        def total(xs: Seq[(Long, Long, Long)]) = xs.reduce((a, b) =>
-          (Math.addExact(a._1, b._1), Math.addExact(a._2, b._2), Math.addExact(a._3, b._3)))
-        val detail = tiles.toSeq.groupBy(_._1).toSeq.sortBy(_._1)
-          .map { case (p, ts) => (p, total(ts.map(t => (t._5, 1L, t._7))), "chips.partitions") }
-        val wall = System.currentTimeMillis() - t0
-        table.appendMetrics((detail :+ ((-1, total(detail.map(_._2)), "chips"))).map {
-          case (p, (in, out, ck), stage) => (p, in, out, ck, stage, jobId, wall, cfg.salt)
-        }.toDF("partition", "rows_in", "rows_out", "checksum", "stage", "job_id", "wall_ms", "skew_salt"))
-      }
-      tiles.length.toLong
+    // one row of facts per chip, observed on the write; the partition id
+    // is projected first (Spark cannot evaluate it inside the observed
+    // aggregate) and dropped before the write
+    val facts = Observation()
+    val key = concat_ws("_", c("raster_id"), c("i"), c("j"))
+    val chips = chipsOf(spark, pages, meta, labels, None, cfg, windows)
+      .withColumn("partition", spark_partition_id())
+      .observe(facts, collect_list(struct(c("partition"), key, c("i"), c("j"),
+        c("n_pages"), c("bad_text"), hash(key).cast("long"))).as("facts"))
+      .drop("partition")
+    lazy val tiles = facts.get("facts").asInstanceOf[scala.collection.Seq[Row]].toSeq.map(r =>
+      (r.getInt(0), r.getString(1), r.getInt(2), r.getInt(3), r.getLong(4), r.getLong(5), r.getLong(6)))
+    val inputSnapshot = table.currentSnapshot()
+    table.commit(Some((chips, "chips")),
+      tiles.map(t => (t._2, t._5, t._6)).toDF("part_key", "n_pages", "bad_text"), "chips-append")
+    if (tiles.nonEmpty) {
+      // lineage: output tile → input snapshot + covering cells at cfg.cellRes
+      table.appendLineage(tiles.map(t => (t._2, t._3, t._4, inputSnapshot, cfg.cellRes))
+        .toDF("tile_key", "i", "j", "input_snapshot", "cell_res"))
+      // metrics (SURVEY §7.4 north-rule field list), one schema for the
+      // append-only side-table: a detail row per partition (rows_in = pages
+      // binned into the partition's tiles, rows_out = tiles, checksum over
+      // tile keys) and a summary row (partition = -1) summing them, where
+      // `addExact` raises on overflow as ANSI `sum` does
+      def total(xs: Seq[(Long, Long, Long)]) = xs.reduce((a, b) =>
+        (Math.addExact(a._1, b._1), Math.addExact(a._2, b._2), Math.addExact(a._3, b._3)))
+      val detail = tiles.groupBy(_._1).toSeq.sortBy(_._1)
+        .map { case (p, ts) => (p, total(ts.map(t => (t._5, 1L, t._7))), "chips.partitions") }
+      val wall = System.currentTimeMillis() - t0
+      table.appendMetrics((detail :+ ((-1, total(detail.map(_._2)), "chips"))).map {
+        case (p, (in, out, ck), stage) => (p, in, out, ck, stage, jobId, wall, cfg.salt)
+      }.toDF("partition", "rows_in", "rows_out", "checksum", "stage", "job_id", "wall_ms", "skew_salt"))
     }
+    tiles.length.toLong
   }
 
   case class ChipOut(raster_id: String, i: Int, j: Int, n_pages: Long,

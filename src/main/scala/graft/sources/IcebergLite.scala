@@ -3,10 +3,12 @@ package graft.sources
 import org.apache.hadoop.fs.{Path => FsPath}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, VectorizedParquetRecordReader}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
 import scala.jdk.CollectionConverters._
@@ -25,29 +27,32 @@ import scala.jdk.CollectionConverters._
   *   <root>/VERSION                 committed snapshot ids, one per line
   *
   * Commit = allocate a FRESH snapshot id from the persisted SEQ counter,
-  * write data under data/<sub>/snapshot_id=<snap>/, append manifests +
-  * snapshot row carrying that id, then atomically append the id to VERSION.
-  * Readers ([[readData]], [[manifests]]) resolve VERSION first and select
-  * only rows/files of committed snapshots, so a crashed writer's orphan
-  * files and manifest rows stay invisible forever (snapshot isolation for
-  * append-only workloads): a torn commit's id is consumed by SEQ and never
-  * appears in VERSION, and the retry runs under a new id, so no replay can
-  * resurrect orphans. The snapshot row's `rows` is the number of manifest
-  * rows the commit wrote.
+  * write data under data/<sub>/snapshot_id=<snap>/, THEN build and append
+  * the manifest + snapshot row carrying that id, then atomically append the
+  * id to VERSION. Readers ([[readData]], [[manifests]]) resolve VERSION
+  * first and select only rows/files of committed snapshots, so a crashed
+  * writer's orphan files and manifest rows stay invisible forever (snapshot
+  * isolation for append-only workloads): a torn commit's id is consumed by
+  * SEQ and never appears in VERSION, and the retry runs under a new id, so
+  * no replay can resurrect orphans. The snapshot row's `rows` is the number
+  * of manifest rows the commit wrote.
   *
-  * Commit protocol, as Iceberg's committer splits it: data files are
-  * written by Spark tasks (one write job per commit); manifest, snapshot,
-  * lineage and metrics rows are written by the driver, one parquet file
-  * per row set ([[writeLocal]]). Those row sets hold one row per work unit
-  * and must stay driver-sized.
+  * Commit protocol, as Iceberg splits it: data files are written by Spark
+  * tasks (one write job per commit); the driver writes the manifest,
+  * snapshot, lineage and metrics rows, one parquet file per row set
+  * ([[writeLocal]]), and reads the manifest back itself ([[readManifests]])
+  * when it plans a resume, as Iceberg plans scans from manifest files on
+  * the driver. Those row sets hold one row per work unit and must stay
+  * driver-sized. Because the manifest is built after the data write, a
+  * writer can derive it from facts the write itself reported.
   *
   * The manifest table doubles as the resume mechanism ([[pendingWork]]):
   * work units whose key a committed snapshot already holds are anti-joined
   * away (satproc's skip-existing, F6, reference: satproc/chips.py:227-233).
   * Callers decide at the granularity of their work unit, before the work:
-  * `PagesTiling.extractChipsResumable` anti-joins the raster's tile keys
-  * against the manifest on the driver-held grid and reads pages only for
-  * the tiles still open.
+  * `PagesTiling.extractChipsResumable` removes the manifest's keys from the
+  * raster's tile keys on the driver and reads pages only for the tiles
+  * still open.
   */
 class IcebergLite(root: String, spark: SparkSession) {
   private val metaDir = s"$root/metadata"
@@ -102,18 +107,36 @@ class IcebergLite(root: String, spark: SparkSession) {
   }
 
   /** Append a data batch as a new snapshot. `manifest` must contain one row
-    * per logical work unit (e.g. tile) with a `part_key` column.
-    * `abortBeforeVersionMove` is a crash-injection hook for tests: it
-    * simulates a writer dying after all file writes but before the atomic
-    * VERSION publish (the torn-commit window). */
-  def commit(data: Option[(DataFrame, String)], manifest: DataFrame,
+    * per logical work unit (e.g. tile) with a `part_key` column; it is
+    * evaluated after the data write, so it may read what the write
+    * observed. A data commit whose manifest is empty publishes nothing: its
+    * data directory is deleted and neither a manifest, a snapshot row nor a
+    * VERSION line is written (its id is burned, as a torn commit's is).
+    * Returns the snapshot id. `abortBeforeVersionMove` is a crash-injection
+    * hook for tests: it simulates a writer dying after all file writes but
+    * before the atomic VERSION publish (the torn-commit window). */
+  def commit(data: Option[(DataFrame, String)], manifest: => DataFrame,
              operation: String, abortBeforeVersionMove: Boolean = false): Long = {
     val snap = allocateSnapshotId()
     data.foreach { case (df, sub) =>
       df.write.mode(SaveMode.Append).parquet(s"$root/data/$sub/snapshot_id=$snap")
     }
-    val rows = writeLocal(manifest.withColumn("snapshot_id", lit(snap)), s"$metaDir/manifests")
-    writeSnapshot(snap, operation, rows)
+    val mf = manifest.withColumn("snapshot_id", lit(snap))
+    val rows = mf.collect()
+    if (data.nonEmpty && rows.isEmpty) {
+      data.foreach { case (_, sub) =>
+        // an emptied sub-table directory goes too: readers take an
+        // absent directory for a sub-table that was never written
+        val subDir = Paths.get(root, "data", sub)
+        val written = subDir.resolve(s"snapshot_id=$snap")
+        if (Files.exists(written)) deleteTree(written)
+        if (Files.isDirectory(subDir) && withStream(Files.list(subDir))(!_.iterator().hasNext))
+          Files.delete(subDir)
+      }
+      return snap
+    }
+    writeLocal(mf.schema, rows, s"$metaDir/manifests")
+    writeSnapshot(snap, operation, rows.length)
     if (abortBeforeVersionMove) return snap // simulated crash: id burned, nothing published
     val tmp = Paths.get(root, s".VERSION.$snap.tmp")
     Files.write(tmp, (committedSnapshots() :+ snap).mkString("\n").getBytes,
@@ -126,17 +149,28 @@ class IcebergLite(root: String, spark: SparkSession) {
     writeLocal(spark.createDataFrame(Seq((snap, System.currentTimeMillis(), operation, rows)))
       .toDF("snapshot_id", "ts_ms", "operation", "rows"), s"$metaDir/snapshots")
 
-  /** The driver's writer for metadata row sets: collects `df` (driver-sized
-    * by contract; a local frame collects without a job) and writes it as
-    * one parquet file in `dir` through Spark's own parquet writer, with the
+  /** Deletes `dir` and everything under it. */
+  private def deleteTree(dir: java.nio.file.Path): Unit =
+    withStream(Files.walk(dir))(_.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(Files.delete(_)))
+
+  /** [[writeLocal]] of a driver-sized frame, collected (a local frame
+    * collects without a job). Returns the number of rows written. */
+  private def writeLocal(df: DataFrame, dir: String): Long = {
+    val rows = df.collect()
+    writeLocal(df.schema, rows, dir)
+    rows.length
+  }
+
+  /** The driver's writer for metadata row sets: writes `rows` as one
+    * parquet file in `dir` through Spark's own parquet writer, with the
     * all-nullable schema Spark's file writes record. The file is written
     * under a dot-prefixed name, which readers skip, and renamed into place
     * (its `.crc` moves with it), so a crash mid-write leaves nothing
-    * visible. An empty frame still writes a file, so the directory always
-    * carries its schema. Returns the number of rows written. */
-  private def writeLocal(df: DataFrame, dir: String): Long = {
-    val schema = df.schema.toNullable
-    val rows = df.collect()
+    * visible. An empty row set still writes a file, so the directory always
+    * carries its schema. */
+  private def writeLocal(rowSchema: StructType, rows: Array[Row], dir: String): Unit = {
+    val schema = rowSchema.toNullable
     val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
     val format = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
     val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
@@ -147,10 +181,57 @@ class IcebergLite(root: String, spark: SparkSession) {
     try rows.foreach(r => out.write(toRow(r))) finally out.close()
     val dst = new FsPath(dir, name)
     require(dst.getFileSystem(job.getConfiguration).rename(tmp, dst), s"could not publish $dst")
-    rows.length
   }
 
-  /** Above this many committed snapshots, filter with a semi-join against a
+  /** The driver's reader for the manifest, the mirror of [[writeLocal]]:
+    * reads every visible parquet file of `metadata/manifests` (dot and
+    * underscore files are skipped, as Spark's file listing skips them) with
+    * Spark's own parquet reader and returns the rows of the `visible`
+    * snapshots as a local frame, so nothing that reads it needs a job for
+    * the manifest side. Files that differ in columns (a manifest with extra
+    * per-unit columns beside one with `part_key` only) read under their
+    * union, in first-seen column order, with null where a file lacks a
+    * column. */
+  private def readManifests(visible: Seq[Long]): DataFrame = {
+    val ids = visible.toSet
+    val files = withStream(Files.list(Paths.get(metaDir, "manifests")))(_.iterator().asScala
+      .filter { p =>
+        val name = p.getFileName.toString
+        name.endsWith(".parquet") && !name.startsWith(".") && !name.startsWith("_")
+      }.map(_.toString).toList.sorted)
+    val parts = files.map { file =>
+      val reader = new ManifestFileReader
+      try {
+        reader.initialize(file, null)
+        val schema = reader.schema
+        val snapIdx = schema.fieldIndex("snapshot_id")
+        val toRow = ExpressionEncoder(schema).resolveAndBind().createDeserializer()
+        val rows = Iterator.continually(reader).takeWhile(_.nextKeyValue())
+          .map(_.getCurrentValue.asInstanceOf[InternalRow])
+          .filter(r => ids(r.getLong(snapIdx))).map(toRow).toList
+        (schema, rows)
+      } finally reader.close()
+    }
+    val fields = parts.flatMap(_._1.fields).map(_.copy(nullable = true)).distinct
+    val names = fields.map(_.name)
+    require(names.distinct.length == names.length,
+      s"manifest files disagree on column types: ${fields.mkString(", ")}")
+    val schema = StructType(fields)
+    val rows = parts.flatMap { case (s, rs) =>
+      val idx = names.map(n => if (s.fieldNames.contains(n)) s.fieldIndex(n) else -1)
+      rs.map(r => Row.fromSeq(idx.map(i => if (i < 0) null else r.get(i))))
+    }
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** Spark's vectorized parquet reader, opened on one whole file; exposes
+    * the Spark schema it reads the file under. */
+  private class ManifestFileReader extends VectorizedParquetRecordReader(false, 4096) {
+    def schema: StructType = sparkSchema
+  }
+
+  /** Data reads only (the manifest is read on the driver). Above this many
+    * committed snapshots, filter with a semi-join against a
     * committed-ids dataset instead of an `isin` literal list: the literal
     * list grows the PLAN itself linearly per commit (quadratic analysis
     * cost over a long-lived append-only table), while the semi-join stays
@@ -189,7 +270,8 @@ class IcebergLite(root: String, spark: SparkSession) {
     else committedOnly(spark.read.parquet(s"$root/data/$sub"), visible)
       .drop("snapshot_id")
 
-  /** Committed manifest rows visible at the current snapshot. */
+  /** Committed manifest rows visible at the current snapshot, as a local
+    * frame read on the driver ([[readManifests]]). */
   def manifests(): DataFrame =
     manifestsVisible(committedSnapshots())
 
@@ -200,7 +282,7 @@ class IcebergLite(root: String, spark: SparkSession) {
 
   private def manifestsVisible(visible: Seq[Long]): DataFrame =
     if (visible.isEmpty) spark.emptyDataFrame
-    else committedOnly(spark.read.parquet(s"$metaDir/manifests"), visible)
+    else readManifests(visible)
 
   /** Resume filter: drop work units whose part_key is already committed
     * (anti-join against the manifest — satproc skip-existing semantics).
@@ -272,11 +354,7 @@ class IcebergLite(root: String, spark: SparkSession) {
       val superseded = withStream(Files.walk(dataRootDir, 2))(_.iterator().asScala
         .filter(p => p.getFileName.toString.startsWith("snapshot_id=") &&
           p.getFileName.toString != s"snapshot_id=$snap").toList)
-      superseded.foreach { dir =>
-        withStream(Files.walk(dir))(_.sorted(
-            java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(Files.delete(_)))
-      }
+      superseded.foreach(deleteTree)
     }
     supersededManifests.foreach { p =>
       Files.deleteIfExists(p)

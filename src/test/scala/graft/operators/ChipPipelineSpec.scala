@@ -99,4 +99,23 @@ class ChipPipelineSpec extends AnyFunSuite {
 /** One session for all suites (guide: one SparkSession per JVM). */
 object SparkTestSession {
   lazy val get: SparkSession = graft.Config.session(4)
+
+  /** Jobs `f` submits, counted by a listener on its own job group. */
+  def countJobs[A](f: => A): (A, Int) = {
+    val sc = get.sparkContext
+    val group = s"count-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "count jobs")
+      val a = try f finally sc.clearJobGroup()
+      org.apache.spark.graft.ListenerBusFlush.flush(sc)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }

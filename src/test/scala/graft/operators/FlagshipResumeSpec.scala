@@ -1,15 +1,14 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 import graft.core.Geom
 import graft.sources.{Fixtures, IcebergLite}
@@ -19,10 +18,12 @@ import graft.sources.Model.Page
   * manifest + lineage + metrics; a crash-rerun commits nothing new; after
   * invalidating part of the manifest, resume recomputes ONLY the missing
   * tiles and the final table equals a from-scratch run. The skip-existing
-  * decision is made on the tile grid, so a resume over a fully committed
-  * table reads no pages at all. */
+  * decision is made on the tile grid against the manifest read on the
+  * driver, so a resume over a fully committed table reads no pages and
+  * runs no job. */
 class FlagshipResumeSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.get
+  import SparkTestSession.countJobs
 
   test("flagship resumable run: exactly-once commit, partial-manifest resume") {
     val tmp = Files.createTempDirectory("flagship").toString
@@ -63,32 +64,13 @@ class FlagshipResumeSpec extends AnyFunSuite {
 
   private lazy val labels = Fixtures.labelGeoms().map { case (g, c) => (Geom.toWkb(g), c) }
 
-  /** Jobs `f` submits, counted by a listener on its own job group. */
-  private def countJobs[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"flagship-resume-${System.nanoTime()}"
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "count jobs")
-      val a = try f finally sc.clearJobGroup()
-      org.apache.spark.graft.ListenerBusFlush.flush(sc)
-      (a, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   private def deleteTree(p: Path): Unit = {
     val s = Files.walk(p)
     try s.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
     finally s.close()
   }
 
-  test("resume over a fully committed table: returns 0, reads no pages file, at most 3 jobs") {
+  test("resume over a fully committed table: returns 0, reads no pages file, runs no job") {
     import spark.implicits._
     val pagesDir = Files.createTempDirectory("flagship-pages")
     Fixtures.pages(spark, 20000, partitions = 4).write.mode("overwrite").parquet(pagesDir.toString)
@@ -101,7 +83,9 @@ class FlagshipResumeSpec extends AnyFunSuite {
     val (resumed, jobs) = countJobs(
       PagesTiling.extractChipsResumable(spark, pages, Fixtures.luxMeta(), table, Some(labels)))
     assert(resumed == 0)
-    assert(jobs <= 3, s"resume over a committed table ran $jobs jobs")
+    // measured: 0 jobs (the manifest is read on the driver); reading it
+    // with a Spark scan and anti-joining the grid against it ran 3
+    assert(jobs == 0, s"resume over a committed table ran $jobs jobs")
     assert(table.committedSnapshots().size == 1)
   }
 
@@ -120,16 +104,44 @@ class FlagshipResumeSpec extends AnyFunSuite {
     assert(table.metrics().count() == 1)
   }
 
-  test("a committing run on a fresh table writes only its chips with a Spark job: at most 5 jobs") {
+  test("a committing run on a fresh table writes only its chips with a Spark job: at most 3 jobs") {
     val table = new IcebergLite(Files.createTempDirectory("flagship-jobs").toString, spark)
     val pages = Fixtures.pages(spark, 20000)
     val (n, jobs) = countJobs(
       PagesTiling.extractChipsResumable(spark, pages, Fixtures.luxMeta(), table, Some(labels)))
     assert(n == 8)
-    // measured: 5 jobs (building and collecting the chip facts, then the
-    // chips write); with a Spark write per metadata row set and a shuffle
-    // for the per-partition metrics, the same call ran 10
-    assert(jobs <= 5, s"the committing run ran $jobs jobs")
+    // measured: 3 jobs (the tile table's broadcast, the pages scan into the
+    // tile aggregate's shuffle, the chips write, which also reports the
+    // chip facts); caching the chips and collecting the facts before the
+    // write ran 5, and a Spark write per metadata row set 10
+    assert(jobs <= 3, s"the committing run ran $jobs jobs")
+  }
+
+  test("a run whose open windows hold no page commits nothing and leaves no data file") {
+    val root = Files.createTempDirectory("flagship-empty")
+    val table = new IcebergLite(root.toString, spark)
+    // the lux raster moved a degree east of every page
+    val away = Fixtures.luxMeta().copy(c = Fixtures.LuxOriginX + 1.0)
+    assert(PagesTiling.extractChipsResumable(spark, Fixtures.pages(spark, 2000), away,
+      table, Some(labels)) == 0)
+    assert(table.committedSnapshots().isEmpty)
+    assert(!Files.exists(root.resolve("VERSION")))
+    def parquetUnder(dir: Path): Int =
+      if (!Files.exists(dir)) 0
+      else {
+        val s = Files.walk(dir)
+        try s.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+        finally s.close()
+      }
+    assert(parquetUnder(root.resolve("data")) == 0)
+    assert(parquetUnder(root.resolve("metadata")) == 0, "no manifest, snapshot, lineage or metrics row")
+
+    // the burned id leaves the table usable: the raster's own run commits
+    // all 8 tiles as the table's one snapshot
+    assert(PagesTiling.extractChipsResumable(spark, Fixtures.pages(spark, 20000),
+      Fixtures.luxMeta(), table, Some(labels)) == 8)
+    assert(table.committedSnapshots().size == 1)
+    assert(table.readData("chips").count() == 8)
   }
 
   test("snapshot rows equal each snapshot's manifest row count, empty manifests included") {

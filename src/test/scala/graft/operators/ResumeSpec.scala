@@ -200,6 +200,17 @@ class ResumeSpec extends AnyFunSuite {
       finally s.close()
     }
 
+  /** Replaces the one parquet file in `dir` that is not in `earlier` with
+    * the same rows as a Spark write job lays them out. */
+  private def rewriteBySpark(dir: String, earlier: Set[java.nio.file.Path]): Unit = {
+    val file = (parquetFiles(dir).toSet -- earlier).head
+    val written = spark.read.parquet(file.toString)
+    val rows = written.collect()
+    Files.delete(file)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), written.schema)
+      .coalesce(1).write.mode(SaveMode.Append).parquet(dir)
+  }
+
   test("side-table files written by the driver read back like Spark-written ones; dot-prefixed leftovers stay invisible") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-mixed").toString
@@ -242,15 +253,8 @@ class ResumeSpec extends AnyFunSuite {
       val earlier = parquetFiles(mfDir).toSet
       table.commit(Some((keys.map(key => (k.toLong, key)).toDF("id", "payload"), "rows")),
         keys.toDF("part_key"), "append")
-      if (k % 2 == 0) {
-        // rewrite this commit's manifest file the way a Spark write job lays it out
-        val file = (parquetFiles(mfDir).toSet -- earlier).head
-        val written = spark.read.parquet(file.toString)
-        val rows = written.collect()
-        Files.delete(file)
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*), written.schema)
-          .coalesce(1).write.mode(SaveMode.Append).parquet(mfDir)
-      }
+      // rewrite this commit's manifest file the way a Spark write job lays it out
+      if (k % 2 == 0) rewriteBySpark(mfDir, earlier)
     }
     assert(parquetFiles(mfDir).length == 4)
     val work = (0 until 10).map(k => s"part$k").toDF("part_key")
@@ -264,6 +268,56 @@ class ResumeSpec extends AnyFunSuite {
     table.compact()
     assert(parquetFiles(mfDir).length == 1, "manifests must compact to one file")
     assert(state() == before)
+  }
+
+  test("the driver reads the manifest back: the rows of a Spark read of the committed files, string and long keys, no job") {
+    for (longKeys <- Seq(false, true)) {
+      val tmp = Files.createTempDirectory("graft-mfread").toString
+      val table = new IcebergLite(tmp, spark)
+      val mfDir = s"$tmp/metadata/manifests"
+      def keys(lo: Long, hi: Long) = {
+        val id = spark.range(lo, hi).toDF("id")
+        if (longKeys) id.select(col("id").as("part_key")) else id.select(col("id").cast("string").as("part_key"))
+      }
+      // commits of keys [3k, 3k+3), k = 0..4; the third is torn; every
+      // second manifest file is rewritten the way a Spark write lays it out
+      val snaps = (0 until 5).map { k =>
+        val earlier = parquetFiles(mfDir).toSet
+        val batch = keys(3L * k, 3L * k + 3)
+        val snap = table.commit(Some((batch, "rows")), batch, "append", abortBeforeVersionMove = k == 2)
+        if (k % 2 == 1) rewriteBySpark(mfDir, earlier)
+        snap
+      }
+      // a dot-prefixed leftover carrying a committed id
+      val ghostDir = s"$tmp/ghost"
+      keys(100, 103).withColumn("snapshot_id", lit(snaps.head)).coalesce(1).write.parquet(ghostDir)
+      Files.copy(parquetFiles(ghostDir).head,
+        java.nio.file.Paths.get(mfDir, ".part-00000-leftover.snappy.parquet"))
+
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).sortBy(_.toString).toSeq
+      def sparkRead(visible: Seq[Long]) =
+        spark.read.parquet(mfDir).where(col("snapshot_id").isin(visible: _*))
+      val work = keys(0, 20)
+      def pending(mf: org.apache.spark.sql.DataFrame) =
+        rows(work.join(mf.select("part_key"), Seq("part_key"), "left_anti"))
+      val committed = table.committedSnapshots()
+      val asOf = committed.take(2)
+      assert(committed == Seq(snaps(0), snaps(1), snaps(3), snaps(4)))
+
+      val (current, jobs) = SparkTestSession.countJobs(rows(table.manifests()))
+      assert(jobs == 0, s"manifests() ran $jobs jobs")
+      assert(table.manifests().schema == sparkRead(committed).schema)
+      assert(current == rows(sparkRead(committed)))
+      assert(current.length == 12)
+      assert(rows(table.manifestsAsOf(snaps(1))) == rows(sparkRead(asOf)))
+      assert(rows(table.pendingWork(work, "part_key")) == pending(sparkRead(committed)))
+      assert(rows(table.pendingWorkAsOf(work, "part_key", snaps(1))) == pending(sparkRead(asOf)))
+      // the torn commit's keys stay pending; the leftover's never show
+      val key: Long => Any = if (longKeys) k => k else k => k.toString
+      assert(rows(table.pendingWork(work, "part_key")).map(_.head) ==
+        ((6L until 9L) ++ (15L until 20L)).map(key).sortBy(_.toString))
+      assert(!current.map(_.head).contains(key(100L)))
+    }
   }
 
   test("pages written Iceberg-style and read back preserve the text invariant") {

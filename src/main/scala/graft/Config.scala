@@ -22,8 +22,6 @@ final class Config(env: Map[String, String]) {
     * [[graft.operators.Streaming.defaultStatePartitions]]. */
   val statePartitions: Int =
     positiveInt("SPARK_GRAFT_STATE_PARTITIONS").getOrElse(4)
-  /** `SPARK_GRAFT_STATE_STORE`: streaming state-store provider. */
-  val stateStore: String = env.getOrElse("SPARK_GRAFT_STATE_STORE", "hdfs")
   /** `SPARK_GRAFT_SF_DIR`: the fixture directory Bench and Measure read. */
   val sfDir: String = env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
   /** `SPARK_GRAFT_ONLY=q1,q2`: Verify dumps only the named queries and

@@ -1,7 +1,5 @@
 package graft
 
-import graft.core.TileGrid
-
 /** Builders for the heavyweight DuckDB oracle queries: each reproduces an
   * operator's semantics independently in SQL (same fixture constants, same
   * IEEE expression trees — see QueryCatalog's determinism rules), so the
@@ -187,7 +185,7 @@ object OracleSql {
         case (Seq((x0, y0), (x1, y1)), k) => s"(${pid * 100 + k}, $x0, $y0, $x1, $y1)"
       }
     }.mkString(", ")
-    s"""WITH RECURSIVE grid AS (SELECT * FROM ${gridValues(128, 128, "whole_overlap")}),
+    s"""WITH RECURSIVE grid AS (${sqlTileGrid(128, 128, "whole_overlap")}),
        |${extentCountCte(polys)},
        |ext AS (
        | SELECT DISTINCT s.i, s.j, r.x AS x, s.row_ AS y
@@ -313,27 +311,55 @@ object OracleSql {
   // grids
   // ---------------------------------------------------------------------
 
-  /** A TileGrid.squareWindows grid as SQL VALUES — the grid itself is pinned
-    * bit-exact by the tile_grid oracle's range() re-derivation; here the
-    * (integer) windows are emitted directly so other oracles can build on
-    * any size/step/mode without re-deriving the extras logic in SQL. */
-  def gridValues(size: Int, step: Int, mode: String): String = {
-    val cells = TileGrid.squareWindows(size, step, W, H, mode)
-    val rows = cells.map { c =>
-      val w = c.window
-      s"(${c.i}, ${c.j}, ${w.colOff}, ${w.rowOff}, ${w.width}, ${w.height})"
-    }.mkString(", ")
-    s"(SELECT * FROM (VALUES $rows) g(i, j, col_off, row_off, win_width, win_height))"
+  /** DuckDB query: the lux1 `TileGrid.squareWindows(size, step, W, H, mode)`
+    * grid with world bounds — (i, j, col_off, row_off, win_width,
+    * win_height, minx, miny, maxx, maxy) — re-derived with range() from the
+    * reference's `sliding_windows` (utils.py:39-90), never from engine
+    * output. `exact` clips border windows to the raster; `whole_overlap`
+    * adds the right-edge column, bottom-edge row and corner windows when
+    * the raster is not a multiple of the step (utils.py:79-90). */
+  def sqlTileGrid(size: Int, step: Int, mode: String): String = {
+    require(Set("exact", "whole", "whole_overlap").contains(mode), s"bad mode $mode")
+    val whole = mode != "exact"
+    val endI = if (whole) H - size else H // exclusive range ends
+    val endJ = if (whole) W - size else W
+    require(endI > 0 && endJ > 0, s"no $size-pixel window fits the ${W}x$H raster")
+    val (winW, winH) =
+      if (whole) (s"$size", s"$size") else (s"LEAST($size, $W - x.j)", s"LEAST($size, $H - y.i)")
+    val extras =
+      if (mode == "whole_overlap" && (H % step != 0 || W % step != 0))
+        s""", extra_col AS (
+           |  SELECT y.i // $step AS i, ($endJ - 1) // $step + 1 AS j,
+           |         ${W - size} AS col_off, y.i AS row_off, $size AS win_width, $size AS win_height
+           |  FROM range(0, $endI, $step) y(i)
+           |), extra_row AS (
+           |  SELECT ($endI - 1) // $step + 1 AS i, x.j // $step AS j,
+           |         x.j AS col_off, ${H - size} AS row_off, $size AS win_width, $size AS win_height
+           |  FROM range(0, $endJ, $step) x(j)
+           |), corner AS (
+           |  SELECT ($endI - 1) // $step + 1 AS i, ($endJ - 1) // $step + 1 AS j,
+           |         ${W - size} AS col_off, ${H - size} AS row_off, $size AS win_width, $size AS win_height
+           |), grid AS (
+           |  SELECT * FROM main UNION ALL SELECT * FROM extra_col
+           |  UNION ALL SELECT * FROM extra_row UNION ALL SELECT * FROM corner
+           |)""".stripMargin
+      else ", grid AS (SELECT * FROM main)"
+    s"""
+       |WITH main AS (
+       |  SELECT y.i // $step AS i, x.j // $step AS j, x.j AS col_off, y.i AS row_off,
+       |         $winW AS win_width, $winH AS win_height
+       |  FROM range(0, $endI, $step) y(i), range(0, $endJ, $step) x(j)
+       |)$extras
+       |SELECT CAST(i AS INT) AS i, CAST(j AS INT) AS j,
+       |       CAST(col_off AS INT) AS col_off, CAST(row_off AS INT) AS row_off,
+       |       CAST(win_width AS INT) AS win_width, CAST(win_height AS INT) AS win_height,
+       |       $C + col_off * $A AS minx,
+       |       $F + (row_off + win_height) * ($E) AS miny,
+       |       $C + (col_off + win_width) * $A AS maxx,
+       |       $F + row_off * ($E) AS maxy
+       |FROM grid
+       |""".stripMargin
   }
-
-  /** gridValues + world bounds columns (same arithmetic as sqlTileGrid). */
-  def gridWithBounds(size: Int, step: Int, mode: String): String =
-    s"""SELECT i, j, col_off, row_off, win_width, win_height,
-       | $C + col_off * $A AS minx,
-       | $F + (row_off + win_height) * ($E) AS miny,
-       | $C + (col_off + win_width) * $A AS maxx,
-       | $F + row_off * ($E) AS maxy
-       |FROM ${gridValues(size, step, mode)}""".stripMargin
 
   // ---------------------------------------------------------------------
   // smooth stitch (spline weights + nan-max merge)
@@ -360,9 +386,9 @@ object OracleSql {
        |w2r AS (SELECT y.i AS wy, x.i AS wx, (y.w * x.w) / 4.0 AS w FROM w1 y, w1 x),
        |w2s AS (SELECT MIN(w) AS mn, MAX(w) AS mx FROM w2r),
        |w2 AS (SELECT wy, wx, (w - mn) / (mx - mn) AS w FROM w2r, w2s),
-       |cg AS (SELECT col_off, row_off FROM ${gridValues(128, 64, "whole_overlap")}),
+       |cg AS (SELECT col_off, row_off FROM (${sqlTileGrid(128, 64, "whole_overlap")})),
        |og AS (SELECT i AS oi, j AS oj, col_off AS ocol, row_off AS orow,
-       |        win_width AS ow, win_height AS oh FROM ${gridValues(128, 128, "exact")}),
+       |        win_width AS ow, win_height AS oh FROM (${sqlTileGrid(128, 128, "exact")})),
        |pxv AS (
        | SELECT o.oi, o.oj, o.ocol, o.orow, o.ow, o.oh, y.y AS py, x.x AS px,
        |  MAX(w2.w * (CASE WHEN ((o.orow + y.y) >= 20 AND (o.orow + y.y) < 60 AND (o.ocol + x.x) >= 100 AND (o.ocol + x.x) < 160)
@@ -394,7 +420,7 @@ object OracleSql {
     val ry = s"(CASE WHEN g.row_off + y.y + ky.kk - 2 < 0 THEN -(g.row_off + y.y + ky.kk - 2) WHEN g.row_off + y.y + ky.kk - 2 >= $H THEN ${2 * H - 2} - (g.row_off + y.y + ky.kk - 2) ELSE g.row_off + y.y + ky.kk - 2 END)"
     val rx = s"(CASE WHEN g.col_off + x.x + kx.kk - 2 < 0 THEN -(g.col_off + x.x + kx.kk - 2) WHEN g.col_off + x.x + kx.kk - 2 >= $W THEN ${2 * W - 2} - (g.col_off + x.x + kx.kk - 2) ELSE g.col_off + x.x + kx.kk - 2 END)"
     s"""WITH kw(kk, kv) AS (VALUES (0, 0.0625), (1, 0.25), (2, 0.375), (3, 0.25), (4, 0.0625)),
-       |g AS (SELECT * FROM ${gridValues(128, 128, "exact")}),
+       |g AS (${sqlTileGrid(128, 128, "exact")}),
        |out_ AS (
        | SELECT g.i, g.j, b.b AS b, y.y AS y, x.x AS x,
        |  CAST(SUM(ky.kv * kx.kv * ${v.replace("ry", ry).replace("rx", rx)}) AS REAL) AS v
@@ -418,7 +444,7 @@ object OracleSql {
     val ry = s"LEAST(GREATEST(g.row_off + y.y + ky.ky - 2, 0), ${H - 1})"
     val rx = s"LEAST(GREATEST(g.col_off + x.x + kx.kx - 2, 0), ${W - 1})"
     val v = s"CAST(CAST((b.b * 7 + $ry * 13 + $rx) % 256 AS REAL) / CAST(850 AS REAL) AS REAL)"
-    s"""WITH g AS (SELECT * FROM ${gridValues(128, 128, "exact")}),
+    s"""WITH g AS (${sqlTileGrid(128, 128, "exact")}),
        |med AS (
        | SELECT g.i, g.j, b.b AS b, y.y AS y, x.x AS x,
        |  quantile_disc($v, 0.5) AS v
@@ -443,7 +469,7 @@ object OracleSql {
   def histogramMatch: String = {
     val srcV = "CAST((py * 31 + px * 17) % 200 AS REAL)"
     val refV = "CAST(((py * 13 + px * 7) % 200) // 2 + 55 AS REAL)"
-    s"""WITH g AS (SELECT * FROM ${gridValues(128, 128, "exact")}),
+    s"""WITH g AS (${sqlTileGrid(128, 128, "exact")}),
        |px AS (
        | SELECT g.i, g.j, g.win_width * g.win_height AS n,
        |  g.row_off + y.y AS py, g.col_off + x.x AS px

@@ -343,40 +343,8 @@ object QueryCatalog {
   private val sqlLLon = s"($C + (doc_id * 7919 % 10000) / 10000.0 * 0.043388628)"
   private val sqlLLat = "(50.099582385 + (doc_id * 104729 % 10000) / 10000.0 * 0.019403610)"
 
-  /** DuckDB SQL fragment: the lux1 whole_overlap 128/128 grid with world
-    * bounds — the same semantics as TileGrid.squareWindows (utils.py:39-90),
-    * expressed with range() unions. */
-  private val sqlTileGrid: String = {
-    val endI = LH - 128; val endJ = LW - 128 // exclusive range ends
-    s"""
-      |WITH main AS (
-      |  SELECT y.i // 128 AS i, x.j // 128 AS j, x.j AS col_off, y.i AS row_off
-      |  FROM range(0, $endI, 128) y(i), range(0, $endJ, 128) x(j)
-      |), extra_col AS (
-      |  SELECT y.i // 128 AS i, ($endJ - 1) // 128 + 1 AS j,
-      |         ${LW - 128} AS col_off, y.i AS row_off
-      |  FROM range(0, $endI, 128) y(i)
-      |), extra_row AS (
-      |  SELECT ($endI - 1) // 128 + 1 AS i, x.j // 128 AS j,
-      |         x.j AS col_off, ${LH - 128} AS row_off
-      |  FROM range(0, $endJ, 128) x(j)
-      |), corner AS (
-      |  SELECT ($endI - 1) // 128 + 1 AS i, ($endJ - 1) // 128 + 1 AS j,
-      |         ${LW - 128} AS col_off, ${LH - 128} AS row_off
-      |), grid AS (
-      |  SELECT * FROM main UNION ALL SELECT * FROM extra_col
-      |  UNION ALL SELECT * FROM extra_row UNION ALL SELECT * FROM corner
-      |)
-      |SELECT CAST(i AS INT) AS i, CAST(j AS INT) AS j,
-      |       CAST(col_off AS INT) AS col_off, CAST(row_off AS INT) AS row_off,
-      |       128 AS win_width, 128 AS win_height,
-      |       $C + col_off * $A AS minx,
-      |       $F + (row_off + 128) * ($E) AS miny,
-      |       $C + (col_off + 128) * $A AS maxx,
-      |       $F + row_off * ($E) AS maxy
-      |FROM grid
-      |""".stripMargin
-  }
+  /** DuckDB query: the lux1 whole_overlap 128/128 grid with world bounds. */
+  private val sqlTileGrid: String = OracleSql.sqlTileGrid(128, 128, "whole_overlap")
 
   /** DuckDB fragment: morton cell id at `res` from integer xi/yi columns. */
   private def sqlInterleave(xi: String, yi: String, res: Int): String =
@@ -580,7 +548,7 @@ object QueryCatalog {
     // every document doubles as a query point (different coordinate derivation
     // than the points side) — the pipeline shape the round-3 verdict flagged:
     // 10⁵ queries joined distributively, per-query adaptive expansion,
-    // salted two-level top-k
+    // one per-query top-k window (partial group limit before the shuffle)
     "knn_large" -> ((s, dir) => {
       val points = docs(s, dir).select(col("doc_id").as("id"), dLat.as("lat"), dLon.as("lon"))
       val queries = docs(s, dir).select(col("doc_id").as("qid"),
@@ -2721,11 +2689,10 @@ object QueryCatalog {
 
     "histogram_match" -> OracleSql.histogramMatch,
 
-    "pages_chips" -> OracleSql.pagesChips(20000,
-      OracleSql.gridWithBounds(128, 128, "whole_overlap")),
+    "pages_chips" -> OracleSql.pagesChips(20000, sqlTileGrid),
 
     "make_masks" ->
-      s"""WITH grid AS (SELECT * FROM ${OracleSql.gridValues(128, 128, "whole_overlap")}),
+      s"""WITH grid AS ($sqlTileGrid),
          |${OracleSql.extentCountCte(labelRings)}
          |SELECT 'lux1' AS raster_id, CAST(i AS INT) AS i, CAST(j AS INT) AS j,
          | 'extent' AS kind, 0 AS class_idx, CAST(n_ext AS BIGINT) AS n_nonzero
@@ -2779,7 +2746,7 @@ object QueryCatalog {
         |FROM range(0, 60) r WHERE r.range % 3 <> 0 OR r.range >= 30""".stripMargin,
 
     "extract_chips" ->
-      s"""WITH grid AS (SELECT * FROM ${OracleSql.gridValues(128, 128, "whole_overlap")}),
+      s"""WITH grid AS ($sqlTileGrid),
          |${OracleSql.extentCountCte(labelRings)},
          |kept AS (
          | SELECT g.i, g.j,
@@ -2801,7 +2768,7 @@ object QueryCatalog {
     // within = the AOI box contains the tile bbox: all four bound
     // inequalities flip direction relative to the intersects form above
     "extract_chips_within" ->
-      s"""WITH grid AS (SELECT * FROM ${OracleSql.gridValues(128, 128, "whole_overlap")}),
+      s"""WITH grid AS ($sqlTileGrid),
          |${OracleSql.extentCountCte(labelRings)},
          |kept AS (
          | SELECT g.i, g.j,

@@ -2,7 +2,7 @@ package graft.core
 
 import org.locationtech.jts.geom._
 import org.locationtech.jts.geom.util.GeometryFixer
-import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader}
+import org.locationtech.jts.io.{WKBReader, WKBWriter}
 import org.locationtech.jts.operation.union.UnaryUnionOp
 import org.locationtech.jts.simplify.TopologyPreservingSimplifier
 
@@ -14,7 +14,6 @@ object Geom {
   // WKBReader/Writer are not thread-safe; cheap to construct per call-site
   def toWkb(g: Geometry): Array[Byte] = new WKBWriter().write(g)
   def fromWkb(b: Array[Byte]): Geometry = new WKBReader(factory).read(b)
-  def fromWkt(s: String): Geometry = new WKTReader(factory).read(s)
 
   def polygon(coords: Seq[(Double, Double)]): Polygon = {
     val closed = if (coords.head == coords.last) coords else coords :+ coords.head

@@ -28,13 +28,6 @@ final case class Affine(a: Double, b: Double, c: Double,
   }
 }
 
-object Affine {
-  /** `Affine.translation(x, y) * Affine.scale(sx, sy)` as used by the
-    * reference's smooth-stitch output transform (smooth.py:160-163). */
-  def translationScale(tx: Double, ty: Double, sx: Double, sy: Double): Affine =
-    Affine(sx, 0.0, tx, 0.0, sy, ty)
-}
-
 /** Pixel-space window, `rasterio.windows.Window(col_off, row_off, width, height)`. */
 final case class Window(colOff: Int, rowOff: Int, width: Int, height: Int) {
   /** World bounds under transform t: (minx, miny, maxx, maxy).

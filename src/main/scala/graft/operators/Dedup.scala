@@ -356,12 +356,6 @@ object Dedup {
       .select("doc_a", "doc_b", "jaccard_num", "jaccard_den")
   }
 
-  /** Exact n-gram Jaccard over externally-supplied candidate pairs. */
-  def verifyJaccard(docs: DataFrame, cand: DataFrame, w: Int,
-                    minJaccard: Double): DataFrame =
-    verifyJaccardOnShingles(shingleTableTh(docs, w).select("doc_id", "sh"),
-      cand, minJaccard)
-
   /** n-gram Jaccard near-dup: candidates = pairs sharing any shingle whose
     * distinct-text DF ≤ dfCap (shingle-blocked join), verified exactly over
     * the full shingle sets. */

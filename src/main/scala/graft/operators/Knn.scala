@@ -11,21 +11,22 @@ import graft.functions.CellFunctions
   * once the k-th candidate distance is provably closer than anything outside
   * the explored disk (outside ring r ⇒ coordinate gap ≥ r · 180/2^res).
   *
-  * All rounds are DataFrame equi-joins on cell (the query side is tiny and
-  * broadcast); no RDDs, no cross join. For hot cells the points side is
-  * already pre-aggregated per cell by the join pruning; a salted sort-merge
-  * fallback is unnecessary below ~10^5 candidates per cell but the points
-  * input can be pre-salted by the caller with the same semantics.
+  * All rounds are DataFrame equi-joins on cell; no RDDs, no cross join.
+  * Per-query top-k is one `row_number() <= k` window, which Spark plans as
+  * `WindowGroupLimit Partial → Exchange(qid) → WindowGroupLimit Final`:
+  * each map task keeps only its k best rows per query before the shuffle,
+  * so a query on a hot cell ships at most k rows per task to its reducer
+  * (for k below `spark.sql.optimizer.windowGroupLimitThreshold`, 1000 by
+  * default; above it the window is still exact, only unlimited).
   */
 object Knn {
 
-  /** Distributed kNN for LARGE query sets (SURVEY G4's salted sort-merge
+  /** Distributed kNN for LARGE query sets (SURVEY G4's sort-merge
     * fallback, inside the operator): the query side is never collected —
     * each round is a cell equi-join between the points table and the
-    * remaining queries' exploded k-ring cover, per-query top-k runs
-    * two-level (salted partial top-k, then a merge of ≤ salt·k rows per
-    * query, exact because global top-k ⊆ union of per-salt top-k — no
-    * single window task ever sorts a hot query's full candidate set), and
+    * remaining queries' exploded k-ring cover, per-query top-k is the
+    * single window above (its partial group limit runs before the qid
+    * exchange, so no task sorts a hot query's full candidate set), and
     * queries whose k-th distance provably beats anything outside the
     * explored disk DROP OUT of later rounds. Driver-side state is one
     * count per round; results accumulate as persisted per-round frames.
@@ -34,7 +35,7 @@ object Knn {
     * Returns (qid, rank, id, dist2), rank 1..k by squared euclidean
     * degrees, ties broken by id — identical to [[knnRingExpansion]]. */
   def knnLarge(spark: SparkSession, points: DataFrame, queries: DataFrame,
-               k: Int, res: Int = 4, saltFactor: Int = 16): DataFrame = {
+               k: Int, res: Int = 4): DataFrame = {
     val cellH = 180.0 / (1L << res).toDouble
     val pts = Owned.persist(points
       .withColumn("cell", CellFunctions.cell_id(col("lat"), col("lon"), lit(res))))
@@ -51,17 +52,9 @@ object Knn {
         .withColumn("dist2",
           (col("lat") - col("qlat")) * (col("lat") - col("qlat")) +
             (col("lon") - col("qlon")) * (col("lon") - col("qlon")))
-      // level 1: partial top-k per (qid, salt) — bounds any one task's sort
-      // to candidates/saltFactor even when a query lands on a hot cell
-      val w1 = WExpr.partitionBy(col("qid"), col("salt")).orderBy(col("dist2"), col("id"))
-      val partial = cand
-        .withColumn("salt", pmod(xxhash64(col("id")), lit(saltFactor)))
-        .withColumn("rk", row_number().over(w1)).where(col("rk") <= k)
-        .select("qid", "id", "dist2")
-      // level 2: merge ≤ saltFactor·k rows per query
-      val w2 = WExpr.partitionBy(col("qid")).orderBy(col("dist2"), col("id"))
-      val topk = Owned.persist(partial.withColumn("rank", row_number().over(w2))
-        .where(col("rank") <= k))
+      val w = WExpr.partitionBy(col("qid")).orderBy(col("dist2"), col("id"))
+      val topk = Owned.persist(cand.select("qid", "id", "dist2")
+        .withColumn("rank", row_number().over(w)).where(col("rank") <= k))
       // same strict stop bound as knnRingExpansion (see its comment on the
       // tie-break at kd == bound); at maxR the disk covers the whole grid
       val bound = (r.toDouble * cellH) * (r.toDouble * cellH)

@@ -18,11 +18,10 @@ import org.apache.spark.sql.expressions.{Window => WExpr}
   *   - document-frequency and length tables join back on term (query-term-
   *     sized) and doc_id (one doc-keyed exchange);
   *   - per-(query, doc) accumulation is a partial-aggregated integer sum;
-  *     the final top-k is the salted TWO-LEVEL form (the kNN large-path
-  *     discipline): partial top-k per (qid, salt) bounds any one task's
-  *     sort to candidates/saltFactor even when a query matches the whole
-  *     corpus, then a merge of ≤ salt·k rows per qid — exact because the
-  *     global top-k is contained in the union of per-salt top-k.
+  *     the final top-k is one `row_number() <= k` window per qid, which
+  *     Spark plans with a partial group limit before the qid exchange
+  *     (`WindowGroupLimit Partial`), so even a query that matches the whole
+  *     corpus ships at most k rows per map task to its reducer.
   *
   * Cross-engine determinism: every per-term score is ONE IEEE expression
   * tree evaluated identically by Spark and DuckDB (integer tf/df/dl/n plus
@@ -87,16 +86,9 @@ object Search {
         floor(idf * tfPart * lit(1e6)).as("score_term_u"))
     val perDoc = perTerm.groupBy("qid", "doc_id")
       .agg(sum("score_term_u").as("score_u"))
-    // two-level salted top-k: a hot query (matching the whole corpus) never
-    // sorts all its candidates in one task
-    val w1 = WExpr.partitionBy(col("qid"), col("salt"))
-      .orderBy(col("score_u").desc, col("doc_id"))
-    val partial = perDoc
-      .withColumn("salt", pmod(xxhash64(col("doc_id")), lit(16L)))
-      .withColumn("rk", row_number().over(w1)).where(col("rk") <= k)
     val w = WExpr.partitionBy(col("qid"))
       .orderBy(col("score_u").desc, col("doc_id"))
-    partial.withColumn("rank", row_number().over(w))
+    perDoc.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select("qid", "rank", "doc_id", "score_u")
   }

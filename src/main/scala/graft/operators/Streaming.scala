@@ -14,12 +14,6 @@ object Streaming {
 
   private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Default state-store provider for the stateful queries below:
-    * `SPARK_GRAFT_STATE_STORE=rocksdb|hdfs` (default hdfs — the sandbox
-    * fixtures have tiny state and the HDFS-backed store has the lower
-    * fixed cost per micro-batch). */
-  def defaultStateStore: String = graft.Config.fromEnv.stateStore
-
   /** Default stateful-shuffle width (`SPARK_GRAFT_STATE_PARTITIONS`): every
     * shuffle partition of a stateful operator is a state-store instance
     * paying per-batch snapshot/commit files, so the right width tracks the
@@ -33,14 +27,18 @@ object Streaming {
     new graft.Config(setting.map("SPARK_GRAFT_STATE_PARTITIONS" -> _).toMap).statePartitions
 
   /** Scope the streaming state-store provider around `f` and restore it.
-    * "hdfs" (the Spark default) keeps all state as JVM objects in executor
-    * heap — O(state) memory, the scale ceiling for a 100-TB dedup whose
-    * key space outgrows the heap. "rocksdb" swaps in Spark's built-in
-    * RocksDBStateStoreProvider: state lives in native memory + local SSD
-    * with changelog/snapshot files in the checkpoint dir, so state volume
-    * is bounded by disk, not heap. The provider is pinned by the FIRST run
-    * against a checkpoint (stored in the state metadata) — restarts must
-    * keep the same provider, which is why it scopes the whole query run. */
+    * "hdfs" (the Spark default, and the stateful queries' default) keeps
+    * all state as JVM objects in executor heap — O(state) memory, the
+    * scale ceiling for a 100-TB dedup whose key space outgrows the heap.
+    * "rocksdb" swaps in Spark's built-in RocksDBStateStoreProvider: state
+    * lives in native memory + local SSD with changelog/snapshot files in
+    * the checkpoint dir, so state volume is bounded by disk, not heap; a
+    * caller whose state outgrows the heap passes it. At fixture state
+    * volumes it costs more per micro-batch (`streaming_join` at sf0.1, 4
+    * cores: min wall about 11 s against about 5 s with hdfs). The provider
+    * is pinned by the FIRST run against a checkpoint (stored in the state
+    * metadata) — restarts must keep the same provider, which is why it
+    * scopes the whole query run. */
   def withStateStoreProvider[A](spark: SparkSession, provider: String)(f: => A): A = {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val cls = provider match {
@@ -166,7 +164,7 @@ object Streaming {
     * would need another watermark hop and buys nothing for the oracle). */
   def streamStreamJoin(spark: SparkSession, sfDir: String,
                        statePartitions: Int = defaultStatePartitions,
-                       stateStore: String = defaultStateStore): DataFrame = {
+                       stateStore: String = "hdfs"): DataFrame = {
     def side(prefix: String): DataFrame =
       tableStream(spark, sfDir, "events")
         .withColumn("ts", col("ts").cast("timestamp")) // NTZ → LTZ for watermarks
@@ -206,7 +204,7 @@ object Streaming {
                   checkpoint: String, sinkDir: String,
                   glob: String = "documents.parquet",
                   maxFilesPerTrigger: Option[Int] = None,
-                  stateStore: String = defaultStateStore,
+                  stateStore: String = "hdfs",
                   statePartitions: Int = defaultStatePartitions): Unit = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}

@@ -515,10 +515,11 @@ object TextOps {
     * break by doc_id).
     *
     * Scale shape: u, w, and the priority are one codegen scan; the only
-    * shuffle is the per-source top-k window. The window's per-source
-    * partition is the operator's documented caveat (same as
-    * [[Search.bm25TopK]]'s per-qid window): corpora with few giant
-    * sources want the kNN-style salted two-level top-k.
+    * shuffle is the per-source top-k window. A giant source costs no
+    * more than a small one: Spark plans the `rank <= k` filter as a
+    * partial group limit before the source exchange (the same plan as
+    * [[Search.bm25TopK]]'s per-qid window), so each map task ships at most
+    * k rows per source.
     * Output: (doc_id, source, n_tokens, rank), rank ≤ k. */
   def prioritySample(docs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => WExpr}

@@ -94,13 +94,6 @@ object Fixtures {
         (p2, "A"), (p2.copy().asInstanceOf[Geometry], "A"))
   }
 
-  def labelFeatures(spark: SparkSession): Dataset[Feature] = {
-    import spark.implicits._
-    spark.createDataset(labelGeoms().map { case (g, c) =>
-      Feature(Geom.toWkb(g), Map("class" -> c))
-    })
-  }
-
   /** AOI twin (FIXTURES.md §4): two identical MultiPolygons over the bounds. */
   def aoiGeoms(): Seq[Geometry] = {
     val box = Geom.box(5.982763948, 50.094170213, 6.002821601, 50.113968500)

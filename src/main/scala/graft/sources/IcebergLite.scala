@@ -30,7 +30,9 @@ import scala.jdk.CollectionConverters._
   * write data under data/<sub>/snapshot_id=<snap>/, THEN build and append
   * the manifest + snapshot row carrying that id, then atomically append the
   * id to VERSION. Readers ([[readData]], [[manifests]]) resolve VERSION
-  * first and select only rows/files of committed snapshots, so a crashed
+  * first and select only rows/files of committed snapshots (data reads
+  * through a static `snapshot_id IN (…)` partition filter, which the scan
+  * prunes by at planning time whatever the id count), so a crashed
   * writer's orphan files and manifest rows stay invisible forever (snapshot
   * isolation for append-only workloads): a torn commit's id is consumed by
   * SEQ and never appears in VERSION, and the retry runs under a new id, so
@@ -230,24 +232,6 @@ class IcebergLite(root: String, spark: SparkSession) {
     def schema: StructType = sparkSchema
   }
 
-  /** Data reads only (the manifest is read on the driver). Above this many
-    * committed snapshots, filter with a semi-join against a
-    * committed-ids dataset instead of an `isin` literal list: the literal
-    * list grows the PLAN itself linearly per commit (quadratic analysis
-    * cost over a long-lived append-only table), while the semi-join stays
-    * O(1) in plan size and Spark's dynamic partition pruning still prunes
-    * snapshot_id directories at runtime. Below it, the static `isin` is
-    * kept for compile-time partition pruning (orphan dirs never opened). */
-  private val IsinPruneLimit = 64
-
-  private def committedOnly(df: DataFrame, committed: Seq[Long]): DataFrame =
-    if (committed.length <= IsinPruneLimit)
-      df.where(col("snapshot_id").isin(committed: _*))
-    else {
-      import spark.implicits._
-      df.join(broadcast(committed.toDF("snapshot_id")), Seq("snapshot_id"), "left_semi")
-    }
-
   /** Snapshot-isolated data reader: only files under committed snapshot
     * directories are visible. Returns empty when the table has committed
     * snapshots but nothing was ever written under data/<sub> (metadata-only
@@ -267,7 +251,14 @@ class IcebergLite(root: String, spark: SparkSession) {
   private def readDataVisible(sub: String, visible: Seq[Long]): DataFrame =
     if (visible.isEmpty || !Files.exists(Paths.get(root, "data", sub)))
       spark.emptyDataFrame
-    else committedOnly(spark.read.parquet(s"$root/data/$sub"), visible)
+    // the `isin` list plans as a static `snapshot_id INSET` partition
+    // filter at any length, so the scan never opens a torn commit's files
+    // (the list grows with the snapshot count; `compact` bounds it). A
+    // semi-join against a local id list would not prune: it plans only
+    // `isnotnull(snapshot_id)`, and dynamic partition pruning needs a
+    // selective filter on the build side, which a local list has none of.
+    else spark.read.parquet(s"$root/data/$sub")
+      .where(col("snapshot_id").isin(visible: _*))
       .drop("snapshot_id")
 
   /** Committed manifest rows visible at the current snapshot, as a local

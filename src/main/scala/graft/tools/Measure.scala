@@ -80,8 +80,9 @@ object Measure {
                          cpuMs: Long, gcMs: Long, deserMs: Long)
 
   /** A query's passes (None = a failed pass, never a time) and the size
-    * gate decisions and stages of its last pass. No passes at all: the name
-    * is not in the catalog. */
+    * gate decisions and stages of its last pass: the `QB` line counts every
+    * completed stage, the `QB-STAGE` lines list the 12 slowest. No passes
+    * at all: the name is not in the catalog. */
   final case class QueryTiming(name: String, walls: Seq[Option[Double]],
                                gates: Seq[Gate.Decision], stages: Seq[Stage]) {
     def lines: Seq[String] =
@@ -90,7 +91,7 @@ object Measure {
         val best = walls.flatten.minOption.fold("FAILED")(w => f"$w%6.3f")
         val all = walls.map(_.fold("fail")(w => f"$w%.3f")).mkString(",")
         val num = (d: Double) => java.math.BigDecimal.valueOf(d).stripTrailingZeros.toPlainString
-        (f"QB $name%-24s min=$best  all=$all" +: gates.map(g =>
+        (f"QB $name%-24s min=$best  all=$all  stages=${stages.size}" +: gates.map(g =>
           s"QB-GATE ${g.gate} measured=${g.measured.fold("forced")(num)} limit=${num(g.limit)}" +
             s" -> ${if (g.small) "small" else "large"}")) ++
           stages.sortBy(-_.wallMs).take(12).map(s =>

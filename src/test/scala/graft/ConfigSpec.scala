@@ -11,7 +11,6 @@ class ConfigSpec extends AnyFunSuite {
     assert(c.cpus == Runtime.getRuntime.availableProcessors)
     assert(c.pages.isEmpty && c.queryRuns == 2 && c.statePartitions == 4)
     assert(c.only.isEmpty && c.master.isEmpty)
-    assert(c.stateStore == "hdfs")
   }
 
   test("set values are parsed") {

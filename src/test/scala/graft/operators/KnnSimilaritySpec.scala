@@ -66,6 +66,10 @@ class KnnSimilaritySpec extends AnyFunSuite {
     val plan = large.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       "knnLarge must never degrade to an all-pairs join")
+    // every round's top-k is one Window whose partial group limit runs
+    // before the qid exchange (the planner's form of a skew-proof top-k)
+    val (windows, faults) = TopKPlan.faults(large, "qid")
+    assert(windows >= 1 && faults.isEmpty, s"$windows top-k windows: $faults\n$plan")
   }
 
   // The synthetic embeddings are unclustered (intra-label cosine ≈

@@ -1,6 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, InSet}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -117,13 +120,33 @@ class ResumeSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft-compact").toString
     val table = new IcebergLite(tmp, spark)
     // 200 tiny commits (a long-lived append-only table): batch the data into
-    // 200 single-row appends with per-commit manifests
+    // 200 single-row appends with per-commit manifests; one torn commit in
+    // the middle leaves its data directory (id 101) on disk
     (0 until 200).foreach { k =>
       val row = Seq((k.toLong, s"payload$k")).toDF("id", "payload")
+      if (k == 100) table.commit(Some((Seq((-1L, "torn")).toDF("id", "payload"), "rows")),
+        Seq("torn").toDF("part_key"), "append", abortBeforeVersionMove = true)
       table.commit(Some((row, "rows")), Seq(s"part$k").toDF("part_key"), "append")
     }
     assert(table.committedSnapshots().length == 200)
-    val dataBefore = table.readData("rows").collect().map(_.toSeq).sortBy(_.toString)
+    val before = table.readData("rows")
+    val dataBefore = before.collect().map(_.toSeq).sortBy(_.toString)
+    // the scan prunes by a static snapshot_id INSET of the 200 committed ids
+    // and opens exactly the files under their directories, so the torn
+    // commit's file is never read
+    val scan = new AdaptiveSparkPlanHelper {}.collect(before.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s
+    }
+    assert(scan.size == 1 && scan.head.partitionFilters.exists {
+      case InSet(a: Attribute, ids) => a.name == "snapshot_id" && ids.size == 200
+      case _ => false
+    }, s"partition filters: ${scan.map(_.partitionFilters)}")
+    def parquetFiles(ids: Seq[Long]): Int = ids.map { id =>
+      val dir = java.nio.file.Paths.get(tmp, "data", "rows", s"snapshot_id=$id")
+      Files.list(dir).iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+    }.sum
+    assert(parquetFiles(Seq(101L)) >= 1, "the torn commit's data stays on disk")
+    assert(scan.head.metrics("numFiles").value == parquetFiles(table.committedSnapshots()))
     val mfBefore = table.manifests().select("part_key").as[String].collect().sorted
     val work = (0 until 300).map(k => s"part$k").toDF("part_key")
     val pendingBefore = table.pendingWork(work, "part_key").as[String].collect().sorted
@@ -132,7 +155,7 @@ class ResumeSpec extends AnyFunSuite {
 
     // planning state is O(1): one committed snapshot, one manifest file,
     // one data directory
-    assert(table.committedSnapshots() == Seq(201L))
+    assert(table.committedSnapshots() == Seq(202L))
     val mfFiles = Files.list(java.nio.file.Paths.get(tmp, "metadata", "manifests"))
       .iterator(); var nMf = 0
     while (mfFiles.hasNext) { if (mfFiles.next().toString.endsWith(".parquet")) nMf += 1 }
@@ -153,7 +176,7 @@ class ResumeSpec extends AnyFunSuite {
     table.commit(Some((Seq((999L, "late")).toDF("id", "payload"), "rows")),
       Seq("part999").toDF("part_key"), "append")
     assert(table.readData("rows").count() == 201)
-    assert(table.committedSnapshots() == Seq(201L, 202L))
+    assert(table.committedSnapshots() == Seq(202L, 203L))
   }
 
   test("time travel: as-of(s1) differs from current after append, equals it at head, errors on torn/expired ids") {

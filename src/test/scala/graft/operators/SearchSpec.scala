@@ -82,11 +82,15 @@ class SearchSpec extends AnyFunSuite with BeforeAndAfterEach {
 
   test("plan shape: corpus side joins are equi-joins; only the 1-row stats frame is nested-loop") {
     import spark.implicits._
-    val plan = Search.bm25TopK(df(), Seq((0L, "hash join")).toDF("qid", "qtext"), k = 3)
-      .queryExecution.executedPlan.toString
+    val top = Search.bm25TopK(df(), Seq((0L, "hash join")).toDF("qid", "qtext"), k = 3)
+    val plan = top.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), "no shuffle-side cartesian anywhere")
     // the single BroadcastNestedLoopJoin allowed is the 1-row stats attach
     val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(plan).size
     assert(bnlj <= 1, s"unexpected nested-loop joins in:\n$plan")
+    // the top-k is one Window, with a partial group limit below the qid
+    // exchange, so a query matching the whole corpus ships ≤ k rows per task
+    val (windows, faults) = TopKPlan.faults(top, "qid")
+    assert(windows == 1 && faults.isEmpty, s"$windows windows: $faults\n$plan")
   }
 }

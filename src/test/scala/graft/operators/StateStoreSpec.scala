@@ -12,8 +12,9 @@ import scala.jdk.CollectionConverters._
   * executor heap — fine for the sandbox fixtures, a hard scale ceiling for
   * a 100-TB dedup whose key space outgrows memory. Spark ships a RocksDB
   * provider (native memory + local disk, snapshots in the checkpoint dir);
-  * [[Streaming.withStateStoreProvider]] makes it a per-run knob
-  * (`SPARK_GRAFT_STATE_STORE=rocksdb`). These tests pin that
+  * [[Streaming.withStateStoreProvider]] makes it a per-run choice (the
+  * stateful operators' `stateStore = "rocksdb"` argument). These tests
+  * pin that
   *   (1) dedup state is carried ACROSS micro-batches under RocksDB on a
   *       corpus ~40× the driver fixture's key count,
   *   (2) a restart against a RocksDB checkpoint stays exactly-once, and

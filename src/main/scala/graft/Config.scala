@@ -18,10 +18,6 @@ final class Config(env: Map[String, String]) {
     parsed("SPARK_GRAFT_PAGES")(_.toLongOption.filter(_ > 0))
   /** `SPARK_GRAFT_QUERY_RUNS`: Bench's catalog passes (min-of-N). */
   val queryRuns: Int = positiveInt("SPARK_GRAFT_QUERY_RUNS").getOrElse(2)
-  /** `SPARK_GRAFT_STATE_PARTITIONS`: stateful-shuffle width, see
-    * [[graft.operators.Streaming.defaultStatePartitions]]. */
-  val statePartitions: Int =
-    positiveInt("SPARK_GRAFT_STATE_PARTITIONS").getOrElse(4)
   /** `SPARK_GRAFT_SF_DIR`: the fixture directory Bench and Measure read. */
   val sfDir: String = env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
   /** `SPARK_GRAFT_ONLY=q1,q2`: Verify dumps only the named queries and

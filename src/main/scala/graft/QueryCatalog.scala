@@ -26,25 +26,28 @@ object QueryCatalog {
     * per-row kernel downstream ran on 1 of the session's cores (measured:
     * model_quality spent 1.3 of its 1.8 s in two single-task stages) —
     * spread rows round-robin across the session's parallelism right after
-    * the scan. The condition is derived from input size vs the session's
-    * split size, so at production scale (splits ≥ cores) this adds NO
-    * exchange; the spread itself is deterministic (sort-before-repartition
-    * is on) and every consumer is partition-agnostic (hashes, joins,
-    * aggregations, range-repartitioned enumerations). */
+    * the scan. The `catalog.spreadRead` gate measures the input's split
+    * count (file bytes over the session's split size) against cores − 1,
+    * so at production scale (splits ≥ cores) this adds NO exchange; the
+    * spread itself is deterministic (sort-before-repartition is on) and
+    * every consumer is partition-agnostic (hashes, joins, aggregations,
+    * range-repartitioned enumerations). */
   private def spreadRead(s: SparkSession, path: String): DataFrame = {
     val df = s.read.parquet(path)
-    val bytes =
-      try {
-        val p = java.nio.file.Paths.get(path)
-        if (java.nio.file.Files.isDirectory(p)) {
-          val st = java.nio.file.Files.list(p)
-          try st.mapToLong(f => java.nio.file.Files.size(f)).sum()
-          finally st.close()
-        } else java.nio.file.Files.size(p)
-      } catch { case _: Exception => Long.MaxValue }
     val cores = s.sparkContext.defaultParallelism
-    val maxSplit = math.max(1L, s.sessionState.conf.filesMaxPartitionBytes)
-    if (bytes / maxSplit < cores) df.repartition(cores) else df
+    val spread = Gate("catalog.spreadRead", cores - 1L) {
+      val bytes =
+        try {
+          val p = java.nio.file.Paths.get(path)
+          if (java.nio.file.Files.isDirectory(p)) {
+            val st = java.nio.file.Files.list(p)
+            try st.mapToLong(f => java.nio.file.Files.size(f)).sum()
+            finally st.close()
+          } else java.nio.file.Files.size(p)
+        } catch { case _: Exception => Long.MaxValue }
+      bytes / math.max(1L, s.sessionState.conf.filesMaxPartitionBytes)
+    }
+    if (spread) df.repartition(cores) else df
   }
 
   private def docs(s: SparkSession, dir: String) = spreadRead(s, s"$dir/documents.parquet")
@@ -1429,7 +1432,8 @@ object QueryCatalog {
     // ---- S12: retile ----------------------------------------------------------
     "retile_64" -> ((s, _) => {
       import s.implicits._
-      Regrid.retile(s, Fixtures.luxTiles(s), Fixtures.LuxWidth, Fixtures.LuxHeight, 64)
+      Regrid.regrid(s, Fixtures.luxTiles(s), Fixtures.LuxWidth, Fixtures.LuxHeight,
+        64, 64, "exact")
         .toDF()
         .select(col("i"), col("j"), col("col_off"), col("row_off"),
           col("width"), col("height"),

@@ -204,8 +204,9 @@ object Main {
 
     case "retile" =>
       val meta = readMeta(spark, c("meta"))
-      val out = Regrid.retile(spark, readTiles(spark, c.positional.head),
-        meta.width, meta.height, c.get("size").map(_.toInt).getOrElse(64))
+      val size = c.get("size").map(_.toInt).getOrElse(64)
+      val out = Regrid.regrid(spark, readTiles(spark, c.positional.head),
+        meta.width, meta.height, size, size, "exact")
       out.write.mode("overwrite").parquet(c.out)
       println(s"retile -> ${c.out}")
 

@@ -17,7 +17,7 @@ import graft.sources.Model.{RasterMeta, Tile}
   *   → AOI broadcast filter (prepared geometry, F1/J1)
   *   → typed map: NaN→0, band subset, rescale, low-contrast skip,
   *     per-class mask rasterization, empty-mask skip (F2/F4/F5/M1/M4–M7)
-  *   → chips + masks + footprints (row_number over (i,j), A8)
+  *   → chips + masks + footprints (distributed prefix sum over (raster_id, i, j), A8)
   *
   * Everything after the (tiny) AOI broadcast is shuffle-free; the only wide
   * stage is the footprint numbering over an 8–10^4 row result.
@@ -56,6 +56,33 @@ object ChipPipeline {
     def get(wkb: Array[Byte]): PreparedGeometry =
       cache.computeIfAbsent(wkb.toSeq,
         _ => PreparedGeometryFactory.prepare(Geom.fromWkb(wkb)))
+  }
+
+  /** Each tile window's world bounds as plain columns (minx, maxx, maxy,
+    * miny), so a bbox filter on them stays a Catalyst predicate. */
+  private[operators] def tileBounds(tiles: Dataset[_], meta: RasterMeta): DataFrame =
+    tiles
+      .withColumn("minx", lit(meta.c) + col("col_off") * lit(meta.a))
+      .withColumn("maxx", lit(meta.c) + (col("col_off") + col("width")) * lit(meta.a))
+      .withColumn("maxy", lit(meta.f) + col("row_off") * lit(meta.e))
+      .withColumn("miny", lit(meta.f) + (col("row_off") + col("height")) * lit(meta.e))
+
+  /** AOI filter (F1/J1) over [[tileBounds]] columns: a bbox prefilter on
+    * the plain columns (pushdown), then the exact predicate against the
+    * per-executor prepared AOI — the tile inside the AOI when `within`,
+    * else intersecting it. */
+  private[operators] def aoiFilter(tiles: DataFrame, aoiWkb: Array[Byte],
+                                   within: Boolean): DataFrame = {
+    val env = Geom.fromWkb(aoiWkb).getEnvelopeInternal
+    val exact = udf { (minx: Double, miny: Double, maxx: Double, maxy: Double) =>
+      val g = Geom.box(minx, miny, maxx, maxy)
+      val p = PreparedCache.get(aoiWkb)
+      if (within) p.contains(g) else p.intersects(g)
+    }
+    tiles.where(
+        col("minx") <= lit(env.getMaxX) && col("maxx") >= lit(env.getMinX) &&
+        col("miny") <= lit(env.getMaxY) && col("maxy") >= lit(env.getMinY))
+      .where(exact(col("minx"), col("miny"), col("maxx"), col("maxy")))
   }
 
   /** Resolve bands like the reference CLI (console/extract_chips.py:268-274):
@@ -107,28 +134,8 @@ object ChipPipeline {
     val noBorder = cfg.extentNoBorder
     val within = cfg.within
 
-    // ---- AOI filter (F1/J1): bbox prefilter on plain columns (pushdown),
-    // then exact prepared-geometry predicate
-    val withBounds = tiles
-      .withColumn("minx", lit(meta.c) + col("col_off") * lit(meta.a))
-      .withColumn("maxx", lit(meta.c) + (col("col_off") + col("width")) * lit(meta.a))
-      .withColumn("maxy", lit(meta.f) + col("row_off") * lit(meta.e))
-      .withColumn("miny", lit(meta.f) + (col("row_off") + col("height")) * lit(meta.e))
-
-    val aoiFiltered = aoiWkb match {
-      case None => withBounds
-      case Some(wkb) =>
-        val env = Geom.fromWkb(wkb).getEnvelopeInternal
-        val pre = withBounds.where(
-          col("minx") <= lit(env.getMaxX) && col("maxx") >= lit(env.getMinX) &&
-          col("miny") <= lit(env.getMaxY) && col("maxy") >= lit(env.getMinY))
-        val exact = udf { (minx: Double, miny: Double, maxx: Double, maxy: Double) =>
-          val g = Geom.box(minx, miny, maxx, maxy)
-          val p = PreparedCache.get(wkb)
-          if (within) p.contains(g) else p.intersects(g)
-        }
-        pre.where(exact(col("minx"), col("miny"), col("maxx"), col("maxy")))
-    }
+    val withBounds = tileBounds(tiles, meta)
+    val aoiFiltered = aoiWkb.fold(withBounds)(aoiFilter(withBounds, _, within))
 
     aoiFiltered.as[TileWithBounds].flatMap { tw =>
       val t = tw.toTile
@@ -258,61 +265,17 @@ object ChipPipeline {
     * order — deterministic ordering, never partition order. Columns mirror
     * utils.py:177-221 including the x=i / y=j quirk.
     *
-    * The id is a DISTRIBUTED enumeration, not an unpartitioned row_number
-    * window — the window form funnels every footprint through ONE task's
-    * sort, which is the first operator to fall over when a whole crawl's
-    * chips flow through. The enumeration is the [[TextOps.packSequences]]
-    * distributed prefix sum, pure Dataset/Catalyst (the old
-    * `.rdd.zipWithIndex()` was the codebase's last RDD hop — same two
-    * jobs, but through the row-format conversion BASELINE.json forbids):
-    * range-partition + in-partition sort, one row-count per partition to
-    * the driver, broadcast cumulative offsets back, then a
-    * partition-local scan assigns offset + local ordinal. Ids are
-    * partition-count-invariant by construction — offsets are computed
-    * against whatever boundaries the range partitioner picked. The sorted
-    * frame stays cached until the caller's scope closes: the ids are
-    * assigned against its materialized partition boundaries. */
-  def footprints(chips: Dataset[ChipRow]): DataFrame = {
-    val spark = chips.sparkSession
-    import spark.implicits._
-    // the partition id is FROZEN INTO the cached rows (spark_partition_id()
-    // is evaluated in the cache-build stage, right after the range
-    // exchange+sort) instead of read from TaskContext in the assignment
-    // pass: a downstream coalesce() — e.g. Verify's coalesce(1) writer —
-    // pipelines the assignment into ONE task whose TaskContext id is the
-    // COALESCED partition's, which would restart the offset at 0 for every
-    // merged parent. Data-carried pids are immune: rows of one parent
-    // partition stay contiguous under coalesce, so offset + reset-on-change
-    // reproduces the exact zipWithIndex enumeration in any execution shape.
-    val sorted = Owned.persist(chips.toDF()
-      .select(col("raster_id"), col("i"), col("j"),
+    * The id is the [[TextOps.prefixSum]] of a weight of 1, a DISTRIBUTED
+    * enumeration, not an unpartitioned row_number window — the window form
+    * funnels every footprint through ONE task's sort, which is the first
+    * operator to fall over when a whole crawl's chips flow through. */
+  def footprints(chips: Dataset[ChipRow]): DataFrame =
+    TextOps.prefixSum(chips.toDF()
+        .select(col("raster_id"), col("i"), col("j"),
+          col("minx"), col("miny"), col("maxx"), col("maxy"), col("filename")),
+        Seq("raster_id", "i", "j"), lit(1), "id")
+      .select(col("id"), col("i").as("x"), col("j").as("y"),
         col("minx"), col("miny"), col("maxx"), col("maxy"), col("filename"))
-      .repartitionByRange(col("raster_id"), col("i"), col("j"))
-      .sortWithinPartitions("raster_id", "i", "j")
-      .withColumn("pid", spark_partition_id())
-      .as[(String, Int, Int, Double, Double, Double, Double, String, Int)])
-    val partCounts = sorted.groupBy(col("pid")).count()
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val maxPid = if (partCounts.isEmpty) -1 else partCounts.map(_._1).max
-    val offsets = new Array[Long](maxPid + 2)
-    partCounts.foreach { case (pid, n) => offsets(pid + 1) = n }
-    var i = 1
-    while (i < offsets.length) { offsets(i) += offsets(i - 1); i += 1 }
-    val bc = spark.sparkContext.broadcast(offsets)
-    // id is a Long: the whole point of the distributed enumeration is crawl
-    // scale, where an Int would wrap silently past 2^31 footprints
-    sorted.mapPartitions { it =>
-      val off = bc.value
-      var curPid = -1
-      var id = 0L
-      it.map { case (rasterId, ti, tj, minx, miny, maxx, maxy, filename, pid) =>
-        if (pid != curPid) { curPid = pid; id = off(pid) }
-        val out = (id, ti, tj, minx, miny, maxx, maxy, filename)
-        id += 1
-        out
-      }
-    }.toDF("id", "x", "y", "minx", "miny", "maxx", "maxy", "filename")
-  }
 
   /** Explode per-chip masks to the masks table (S7 logical sink):
     * (raster_id, i, j, kind, class_idx, band bytes). */

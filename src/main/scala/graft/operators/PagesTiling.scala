@@ -68,11 +68,7 @@ object PagesTiling {
       (t, meta.raster_id, c.i, c.j, c.window.colOff, c.window.rowOff,
         c.window.width, c.window.height)
     }).toDF("t", "raster_id", "i", "j", "col_off", "row_off", "width", "height")
-      .withColumn("minx", lit(meta.c) + col("col_off") * lit(meta.a))
-      .withColumn("maxx", lit(meta.c) + (col("col_off") + col("width")) * lit(meta.a))
-      .withColumn("maxy", lit(meta.f) + col("row_off") * lit(meta.e))
-      .withColumn("miny", lit(meta.f) + (col("row_off") + col("height")) * lit(meta.e))
-    tiles.withColumn("cell", explode(CellFunctions.cell_cover(
+    ChipPipeline.tileBounds(tiles, meta).withColumn("cell", explode(CellFunctions.cell_cover(
       col("miny"), col("minx"), col("maxy"), col("maxx"), lit(cfg.cellRes))))
   }
 
@@ -110,20 +106,9 @@ object PagesTiling {
     import spark.implicits._
     val affine = Affine(meta.a, meta.b, meta.c, meta.d, meta.e, meta.f)
     val pagesGeo = geotagged(spark, pages, cfg.cellRes)
-    var tiles = tileCellsOf(spark, meta, cfg, windows)
-
+    val cells = tileCellsOf(spark, meta, cfg, windows)
     // AOI filter on tiles (F1) — tile side is tiny, do it pre-join
-    aoiWkb.foreach { wkb =>
-      val aoi = Geom.fromWkb(wkb)
-      val env = aoi.getEnvelopeInternal
-      val exact = udf { (minx: Double, miny: Double, maxx: Double, maxy: Double) =>
-        Geom.box(minx, miny, maxx, maxy).intersects(aoi)
-      }
-      tiles = tiles.where(
-        col("minx") <= lit(env.getMaxX) && col("maxx") >= lit(env.getMinX) &&
-          col("miny") <= lit(env.getMaxY) && col("maxy") >= lit(env.getMinY))
-        .where(exact(col("minx"), col("miny"), col("maxx"), col("maxy")))
-    }
+    val tiles = aoiWkb.fold(cells)(ChipPipeline.aoiFilter(cells, _, within = false))
 
     val assigned = assignTiles(pagesGeo, tiles, cfg)
 

@@ -115,7 +115,7 @@ object PostProcess {
     * output grid → pixelwise max merge (reference: smooth.py:128-204).
     * Each chip's overlapping output-window keys (oi, oj) are computed
     * arithmetically (the output grid is uniform, stride = chipSize — same
-    * trick as Regrid.retile), so the chip×window assignment is a broadcast
+    * trick as Regrid.regrid), so the chip×window assignment is a broadcast
     * hash EQUI-join on (oi, oj), never a nested-loop bbox join: at 100×
     * raster area the cost stays O(chips · overlap), not O(chips · windows).
     * One shuffle (the merge groupBy). */

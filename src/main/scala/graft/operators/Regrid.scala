@@ -5,71 +5,13 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.core.TileGrid
 import graft.sources.Model.Tile
 
-/** Retile (gdal_retile.py parity, reference: postprocess/polygonize.py:143-164):
-  * re-cut a tile-chunked raster into a new square grid. One shuffle:
-  * flatMap each source tile into per-target fragments keyed by the target
-  * tile, then groupBy-assemble. Fragment volume equals the raster size —
-  * no amplification — so this scales linearly at 100 TB. */
+/** Re-cut a tile-chunked raster into a new sliding-window grid. One
+  * shuffle: flatMap each source tile into per-target fragments keyed by the
+  * target tile, then groupBy-assemble. Retile (gdal_retile.py parity,
+  * reference: postprocess/polygonize.py:143-164) is [[regrid]] with
+  * size = step in "exact" mode: fragment volume equals the raster size —
+  * no amplification — so it scales linearly at 100 TB. */
 object Regrid {
-
-  def retile(spark: SparkSession, tiles: Dataset[Tile], rasterW: Int, rasterH: Int,
-             tileSize: Int): Dataset[Tile] = {
-    import spark.implicits._
-
-    val frags = tiles.flatMap { t =>
-      // overlapping targets computed arithmetically (uniform exact grid) —
-      // O(overlap) per tile, no target-list broadcast at scale
-      val ti0 = t.row_off / tileSize
-      val ti1 = (t.row_off + t.height - 1) / tileSize
-      val tj0 = t.col_off / tileSize
-      val tj1 = (t.col_off + t.width - 1) / tileSize
-      val targets = for (ti <- ti0 to ti1; tj <- tj0 to tj1) yield {
-        val tc = tj * tileSize; val tr = ti * tileSize
-        (ti, tj, tc, tr, math.min(tileSize, rasterW - tc), math.min(tileSize, rasterH - tr))
-      }
-      targets.flatMap { case (ti, tj, tc, tr, tw, th) =>
-        // overlap of source tile and target window in raster coords
-        val x0 = math.max(t.col_off, tc); val x1 = math.min(t.col_off + t.width, tc + tw)
-        val y0 = math.max(t.row_off, tr); val y1 = math.min(t.row_off + t.height, tr + th)
-        if (x0 >= x1 || y0 >= y1) None
-        else {
-          val fw = x1 - x0; val fh = y1 - y0
-          val px = t.pixels.map { band =>
-            val out = new Array[Float](fw * fh)
-            var y = 0
-            while (y < fh) {
-              System.arraycopy(band, (y0 - t.row_off + y) * t.width + (x0 - t.col_off),
-                out, y * fw, fw)
-              y += 1
-            }
-            out
-          }
-          Some(Frag(t.raster_id, ti, tj, tc, tr, tw, th, x0, y0, fw, fh, px))
-        }
-      }
-    }
-
-    frags.groupByKey(f => (f.raster_id, f.ti, f.tj))
-      .mapGroups { (key, it) =>
-        val fs = it.toSeq
-        val h = fs.head
-        val nb = h.pixels.length
-        val out = Array.fill(nb)(new Array[Float](h.tw * h.th))
-        fs.foreach { f =>
-          var bi = 0
-          while (bi < nb) {
-            var y = 0
-            while (y < f.fh) {
-              System.arraycopy(f.pixels(bi), y * f.fw,
-                out(bi), (f.y0 - f.tr + y) * f.tw + (f.x0 - f.tc), f.fw)
-              y += 1
-            }
-            bi += 1
-          }
-        }
-        Tile(key._1, key._2, key._3, h.tc, h.tr, h.tw, h.th, out)
-      }
-  }
 
   case class Frag(raster_id: String, ti: Int, tj: Int, tc: Int, tr: Int,
                   tw: Int, th: Int, x0: Int, y0: Int, fw: Int, fh: Int,

@@ -14,18 +14,6 @@ object Streaming {
 
   private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Default stateful-shuffle width (`SPARK_GRAFT_STATE_PARTITIONS`): every
-    * shuffle partition of a stateful operator is a state-store instance
-    * paying per-batch snapshot/commit files, so the right width tracks the
-    * STATE volume, not the core count. 4 is the measured fixture-scale
-    * optimum; a deployment raises it with actual state volume. A value that
-    * is not a positive integer is rejected, naming the variable. */
-  def defaultStatePartitions: Int = graft.Config.fromEnv.statePartitions
-
-  /** The same setting parsed from an explicit value (None = unset). */
-  private[operators] def statePartitions(setting: Option[String]): Int =
-    new graft.Config(setting.map("SPARK_GRAFT_STATE_PARTITIONS" -> _).toMap).statePartitions
-
   /** Scope the streaming state-store provider around `f` and restore it.
     * "hdfs" (the Spark default, and the stateful queries' default) keeps
     * all state as JVM objects in executor heap — O(state) memory, the
@@ -59,9 +47,11 @@ object Streaming {
     finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
-  /** Every stateful operator's shuffle partition is a state-store instance,
-    * so the stateful queries below size their shuffle to the state. */
-  private def statefulWidth(n: Int): (String, String) = "spark.sql.shuffle.partitions" -> n.toString
+  /** Every stateful operator's shuffle partition is a state-store instance
+    * paying per-batch snapshot/commit files, so the stateful queries below
+    * size their shuffle to the STATE volume, not the core count: 4 store
+    * instances, the fixture-scale optimum of an A/B at 4, 8 and 16. */
+  private val statefulWidth: (String, String) = "spark.sql.shuffle.partitions" -> "4"
 
   /** Start `w` as an AvailableNow query with adaptive execution off: Spark
     * runs stateful streams without it anyway (the one stateless stream,
@@ -105,16 +95,14 @@ object Streaming {
     * every shuffle partition of a stateful operator is a state-store
     * instance paying per-batch snapshot/commit files, and complete-mode
     * window-count state is (windows × types)-sized — thousands of rows —
-    * so 32 store instances are pure fixed cost. A deployment raises
-    * `statePartitions` with actual state volume. */
-  def eventCounts(spark: SparkSession, sfDir: String,
-                  statePartitions: Int = defaultStatePartitions): DataFrame = {
+    * so 32 store instances are pure fixed cost. */
+  def eventCounts(spark: SparkSession, sfDir: String): DataFrame = {
     val agg = tableStream(spark, sfDir, "events")
       .groupBy(window(col("ts"), "1 hour").as("win"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         floor(sum("value") * lit(1000000.0)).cast("long").as("sum_value_fp"))
       .select(col("win.start").as("hour"), col("event_type"), col("n"), col("sum_value_fp"))
-    withConf(spark, statefulWidth(statePartitions))(runToMemory(agg))
+    withConf(spark, statefulWidth)(runToMemory(agg))
   }
 
   /** Watermarked append-mode variant with checkpointing — used by the
@@ -124,8 +112,7 @@ object Streaming {
   def eventCountsCheckpointed(spark: SparkSession, sfDir: String,
                               checkpoint: String, sinkDir: String,
                               glob: String = "events.parquet",
-                              maxFilesPerTrigger: Option[Int] = None,
-                              statePartitions: Int = defaultStatePartitions): Long = {
+                              maxFilesPerTrigger: Option[Int] = None): Long = {
     val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
     var rs = spark.readStream.schema(schema)
       .option("pathGlobFilter", glob)
@@ -141,7 +128,7 @@ object Streaming {
     // state-sized stateful shuffle (see eventCounts). The partition count
     // is pinned by the FIRST run against a checkpoint; restarts under the
     // same checkpoint reuse the stored value, so resume stays coherent.
-    val q = withConf(spark, statefulWidth(statePartitions)) {
+    val q = withConf(spark, statefulWidth) {
       startAvailableNow(spark, agg.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint)
         .format("parquet").option("path", sinkDir))
@@ -163,7 +150,6 @@ object Streaming {
     * BATCH over the sink (stream-stream join + streaming agg in one query
     * would need another watermark hop and buys nothing for the oracle). */
   def streamStreamJoin(spark: SparkSession, sfDir: String,
-                       statePartitions: Int = defaultStatePartitions,
                        stateStore: String = "hdfs"): DataFrame = {
     def side(prefix: String): DataFrame =
       tableStream(spark, sfDir, "events")
@@ -181,9 +167,9 @@ object Streaming {
     // instance paying per-batch snapshot/commit files — for a join whose
     // state is tiny that fixed cost dominates (measured ~15 s at 32
     // partitions vs ~4 s at 4, input-size-independent). Size the stateful
-    // shuffle to the STATE, not the cluster; a real deployment raises it
-    // with actual state volume. Scoped + restored around the one start.
-    val pairs = withConf(spark, statefulWidth(statePartitions)) {
+    // shuffle to the STATE, not the cluster. Scoped + restored around the
+    // one start.
+    val pairs = withConf(spark, statefulWidth) {
       withStateStoreProvider(spark, stateStore) {
         runToMemory(joined.select("a_id", "b_id", "a_type", "b_type"), mode = "append")
       }
@@ -204,8 +190,7 @@ object Streaming {
                   checkpoint: String, sinkDir: String,
                   glob: String = "documents.parquet",
                   maxFilesPerTrigger: Option[Int] = None,
-                  stateStore: String = "hdfs",
-                  statePartitions: Int = defaultStatePartitions): Unit = {
+                  stateStore: String = "hdfs"): Unit = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val schema = spark.read.option("pathGlobFilter", glob)
@@ -231,7 +216,7 @@ object Streaming {
     // hash-keyed rows, and a store instance per session core is pure
     // per-batch snapshot cost at fixture state volumes. Pinned by the
     // first run against a checkpoint, so resume stays coherent.
-    val q = withConf(spark, statefulWidth(statePartitions)) {
+    val q = withConf(spark, statefulWidth) {
       withStateStoreProvider(spark, stateStore) {
         startAvailableNow(spark, out.writeStream.outputMode("append")
           .option("checkpointLocation", checkpoint)
@@ -256,8 +241,7 @@ object Streaming {
     * proven cast as eventCountsCheckpointed; the round-trip is
     * tz-neutral). */
   def sessionWindows(spark: SparkSession, sfDir: String,
-                     gap: String = "30 minutes",
-                     statePartitions: Int = defaultStatePartitions): DataFrame = {
+                     gap: String = "30 minutes"): DataFrame = {
     val agg = tableStream(spark, sfDir, "events")
       .withColumn("ts", col("ts").cast("timestamp"))
       .withWatermark("ts", "2 hours")
@@ -267,7 +251,7 @@ object Streaming {
     // state-sized stateful shuffle, the streamStreamJoin lesson: each
     // partition is a state-store instance paying per-batch snapshot files,
     // and open-session state is per-user-tiny here
-    withConf(spark, statefulWidth(statePartitions))(runToMemory(agg, mode = "append"))
+    withConf(spark, statefulWidth)(runToMemory(agg, mode = "append"))
   }
 
   /** Streaming cross-corpus dedup — the live-crawl counterpart of

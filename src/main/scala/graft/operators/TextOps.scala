@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Text-analysis operators for the large-scale training-data pipeline:
   * language id, quality scoring, token counting, fingerprinting. All built
@@ -103,59 +104,71 @@ object TextOps {
 
   /** Sequence packing for training batches: assign docs (in global doc_id
     * order) to fixed-capacity token bins — bin = ⌊tokens-before-doc /
-    * capacity⌋, the sequential-fill contract. The global running sum is a
-    * DISTRIBUTED PREFIX SUM, not a global window (which would sort
-    * everything in ONE task): range-partition by doc_id, per-partition
-    * token totals (one row per partition) to the driver, broadcast the
-    * cumulative offsets back, then a partition-local scan. Bin assignment
-    * is partition-count-invariant by construction — offsets are computed
-    * against whatever boundaries the range partitioner picked.
+    * capacity⌋, the sequential-fill contract, on the [[prefixSum]] of the
+    * token counts.
     *
     * `nTokens` is the per-doc length measure — whitespace token count by
     * default; pass [[bpeEncode]]'s `n_tokens` column to pack on REAL
     * tokenizer output instead of the whitespace proxy. */
   def packSequences(docs: DataFrame, capacity: Long,
-      nTokens: Column = size(tokens(col("text"))).cast("long")): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    import org.apache.spark.TaskContext
-    // the partition id is frozen into the cached rows (evaluated in the
-    // cache-build stage) rather than read from TaskContext in the
-    // assignment pass: a downstream coalesce() would pipeline the pass
-    // into one task whose TaskContext id is the coalesced partition's,
-    // restarting the offset for every merged parent — the footprints
-    // lesson ([[graft.operators.ChipPipeline.footprints]]); data-carried
-    // pids make the enumeration correct in any execution shape.
-    val parts = Owned.persist(docs
-      .select(col("doc_id").cast("long"),
-        nTokens.cast("long").as("n_tokens"))
-      .repartitionByRange(col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .withColumn("pid", spark_partition_id())
-      .as[(Long, Long, Int)])
-    val partTotals = parts.groupBy(col("pid")).agg(sum(col("n_tokens")).as("s"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+      nTokens: Column = size(tokens(col("text"))).cast("long")): DataFrame =
+    prefixSum(docs.select(col("doc_id").cast("long"), nTokens.cast("long").as("n_tokens")),
+        Seq("doc_id"), col("n_tokens"), "offset")
+      .select(col("doc_id"), col("n_tokens"), expr(s"`offset` div $capacity").as("bin"))
+
+  /** Distributed exclusive prefix sum: `rows` plus a Long column `offset`,
+    * the sum of `weight` over every row before it in `orderBy` order (the
+    * order keys must be unique). Not a global running-sum window, which
+    * would sort everything in ONE task: range-partition and sort by the
+    * order keys, collect one weight total per partition to the driver,
+    * broadcast the cumulative offsets back, then a partition-local scan.
+    * Offsets are partition-count-invariant by construction — they are
+    * computed against whatever boundaries the range partitioner picked.
+    *
+    * The partition id is FROZEN INTO the cached rows (spark_partition_id()
+    * is evaluated in the cache-build stage, right after the range exchange
+    * and sort) instead of read from TaskContext in the scan: a downstream
+    * coalesce() — e.g. Verify's coalesce(1) writer — pipelines the scan
+    * into ONE task whose TaskContext id is the COALESCED partition's, which
+    * would restart the offset for every merged parent. Data-carried pids
+    * are immune: rows of one parent partition stay contiguous under
+    * coalesce, so offset + reset-on-change reproduces the sequential
+    * enumeration in any execution shape. The sorted frame stays cached
+    * until the caller's scope closes: the offsets were computed against
+    * ITS materialized partition boundaries, and the result must scan those
+    * same partitions. */
+  private[operators] def prefixSum(rows: DataFrame, orderBy: Seq[String], weight: Column,
+                                   offset: String): DataFrame = {
+    val spark = rows.sparkSession
+    val n = rows.columns.length
+    val keys = orderBy.map(col)
+    val sorted = Owned.persist(rows
+      .withColumn("_w", weight.cast("long"))
+      .repartitionByRange(keys: _*)
+      .sortWithinPartitions(keys: _*)
+      .withColumn("_pid", spark_partition_id()))
+    val partTotals = sorted.groupBy(col("_pid")).agg(sum(col("_w")))
+      .collect().map(r => (r.getInt(0), r.getLong(1)))
     val maxPid = if (partTotals.isEmpty) -1 else partTotals.map(_._1).max
     val offsets = new Array[Long](maxPid + 2)
     partTotals.foreach { case (pid, s) => offsets(pid + 1) = s }
     var i = 1
     while (i < offsets.length) { offsets(i) += offsets(i - 1); i += 1 }
     val bc = spark.sparkContext.broadcast(offsets)
-    val out = parts.mapPartitions { it =>
+    // offsets are Longs: the point of the distributed scan is crawl scale,
+    // where an Int would wrap silently past 2^31
+    sorted.mapPartitions { it =>
       val off = bc.value
       var curPid = -1
       var acc = 0L
-      it.map { case (id, n, pid) =>
+      it.map { r =>
+        val pid = r.getInt(n + 1)
         if (pid != curPid) { curPid = pid; acc = off(pid) }
-        val bin = acc / capacity
-        acc += n
-        (id, n, bin)
+        val out = Row.fromSeq(r.toSeq.take(n) :+ acc)
+        acc += r.getLong(n)
+        out
       }
-    }.toDF("doc_id", "n_tokens", "bin")
-    // `parts` stays cached until the caller's scope closes: the offsets
-    // were computed against ITS materialized partition boundaries, and the
-    // result must scan those same cached partitions
-    out
+    }(Encoders.row(rows.schema.add(offset, LongType, nullable = false)))
   }
 
   /** Gopher-style repetition + format filters (Rae et al. 2021 §A1.1, the

@@ -6,10 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * environment: defaults, accepted values, and numeric settings rejected
   * with a message naming the variable and quoting the value. */
 class ConfigSpec extends AnyFunSuite {
-  test("defaults: host cores, 2 query runs, 4 state partitions") {
+  test("defaults: host cores, 2 query runs") {
     val c = new Config(Map.empty)
     assert(c.cpus == Runtime.getRuntime.availableProcessors)
-    assert(c.pages.isEmpty && c.queryRuns == 2 && c.statePartitions == 4)
+    assert(c.pages.isEmpty && c.queryRuns == 2)
     assert(c.only.isEmpty && c.master.isEmpty)
   }
 

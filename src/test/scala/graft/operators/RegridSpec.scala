@@ -8,25 +8,6 @@ import graft.sources.Fixtures
 class RegridSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.get
 
-  test("retile 128/whole_overlap → 64/exact equals direct 64-grid generation") {
-    val src = Fixtures.luxTiles(spark) // 128 whole_overlap
-    val got = Regrid.retile(spark, src, Fixtures.LuxWidth, Fixtures.LuxHeight, 64)
-      .collect().map(t => (t.i, t.j) -> t).toMap
-    val want = Fixtures.luxTiles(spark, 64, 64, "exact")
-      .collect().map(t => (t.i, t.j) -> t).toMap
-    assert(got.keySet == want.keySet)
-    assert(got.nonEmpty)
-    got.foreach { case (k, g) =>
-      val w = want(k)
-      assert(g.col_off == w.col_off && g.row_off == w.row_off &&
-        g.width == w.width && g.height == w.height)
-      assert(g.pixels.length == w.pixels.length)
-      g.pixels.zip(w.pixels).foreach { case (gb, wb) =>
-        assert(gb.sameElements(wb), s"pixel mismatch at $k")
-      }
-    }
-  }
-
   test("degenerate grids: raster dim == tile size is rejected for whole_overlap, empty for whole") {
     val src = Fixtures.luxTiles(spark, mode = "exact")
     // height == size with height % step != 0: TileGrid emits extras at
@@ -44,19 +25,23 @@ class RegridSpec extends AnyFunSuite {
   }
 
   test("general regrid: exact/128 source → every target grid equals direct generation") {
-    val src = Fixtures.luxTiles(spark, mode = "exact") // 128 exact
-    for ((size, step, mode) <- Seq((128, 64, "whole_overlap"), (64, 64, "exact"),
-                                   (128, 128, "whole_overlap"), (100, 50, "whole"))) {
+    val exact128 = Fixtures.luxTiles(spark, mode = "exact")
+    // the last input is retile (gdal_retile parity, the `retile_64` query):
+    // an overlapping whole_overlap/128 source re-cut to the 64 exact grid
+    for ((src, (size, step, mode)) <- Seq(exact128 -> (128, 64, "whole_overlap"),
+        exact128 -> (64, 64, "exact"), exact128 -> (128, 128, "whole_overlap"),
+        exact128 -> (100, 50, "whole"), Fixtures.luxTiles(spark) -> (64, 64, "exact"))) {
       val got = Regrid.regrid(spark, src, Fixtures.LuxWidth, Fixtures.LuxHeight,
           size, step, mode)
         .collect().map(t => (t.i, t.j) -> t).toMap
       val want = Fixtures.luxTiles(spark, size, step, mode)
         .collect().map(t => (t.i, t.j) -> t).toMap
-      assert(got.keySet == want.keySet, s"grid keys for ($size,$step,$mode)")
+      assert(got.nonEmpty && got.keySet == want.keySet, s"grid keys for ($size,$step,$mode)")
       got.foreach { case (k, g) =>
         val w = want(k)
         assert(g.col_off == w.col_off && g.row_off == w.row_off &&
           g.width == w.width && g.height == w.height, s"window at $k ($size,$step,$mode)")
+        assert(g.pixels.length == w.pixels.length, s"bands at $k ($size,$step,$mode)")
         g.pixels.zip(w.pixels).foreach { case (gb, wb) =>
           assert(gb.sameElements(wb), s"pixels at $k ($size,$step,$mode)")
         }

@@ -82,20 +82,4 @@ class StateStoreSpec extends AnyFunSuite {
     assert(hdfs.nonEmpty, "fixture must produce join pairs")
     assert(rocks == hdfs, "join results must not depend on the state-store provider")
   }
-
-  test("SPARK_GRAFT_STATE_PARTITIONS: a non-positive width is rejected, naming the variable") {
-    assert(Streaming.statePartitions(None) == 4)
-    assert(Streaming.statePartitions(Some("8")) == 8)
-    for (v <- Seq("0", "-1")) {
-      val e = intercept[IllegalArgumentException](Streaming.statePartitions(Some(v)))
-      assert(e.getMessage.contains("SPARK_GRAFT_STATE_PARTITIONS") && e.getMessage.contains(s"'$v'"))
-    }
-  }
-
-  test("SPARK_GRAFT_STATE_PARTITIONS: a value that is not a number is rejected, not defaulted") {
-    for (v <- Seq("four", "", "2.5")) {
-      val e = intercept[IllegalArgumentException](Streaming.statePartitions(Some(v)))
-      assert(e.getMessage.contains("SPARK_GRAFT_STATE_PARTITIONS") && e.getMessage.contains(s"'$v'"))
-    }
-  }
 }

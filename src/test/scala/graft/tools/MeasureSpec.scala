@@ -20,8 +20,12 @@ class MeasureSpec extends AnyFunSuite {
 
   test("queries: a gated query prints the decisions of its last pass") {
     val Seq(bpe) = Measure.queries(spark, sf, reps = 1, Seq("bpe_train"))
-    assert(bpe.gates.map(g => (g.gate, g.small)) == Seq("bpe.oneTask" -> true))
-    assert(bpe.lines(1).matches("QB-GATE bpe\\.oneTask measured=\\d+ limit=1000000 -> small"),
+    // the fixture corpus is one split, so the read is spread over the 4 cores
+    assert(bpe.gates.map(g => (g.gate, g.small)) ==
+      Seq("catalog.spreadRead" -> true, "bpe.oneTask" -> true))
+    assert(bpe.lines(1).matches("QB-GATE catalog\\.spreadRead measured=0 limit=3 -> small"),
+      bpe.lines.mkString("\n"))
+    assert(bpe.lines(2).matches("QB-GATE bpe\\.oneTask measured=\\d+ limit=1000000 -> small"),
       bpe.lines.mkString("\n"))
   }
 

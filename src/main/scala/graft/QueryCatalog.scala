@@ -90,6 +90,19 @@ object QueryCatalog {
       |    PARTITION BY vec_id, sub ORDER BY score DESC, j) AS rn
       |  FROM scoredv) WHERE rn = 1)""".stripMargin
 
+  /** The sign-LSH band keys of [[graft.operators.Similarity.cosinePairs]]
+    * as SQL select items `k0 … k{nBands-1}` over a DOUBLE[] column `e`:
+    * key b sums 2^i over the sign bits of the exact hyperplanes
+    * direction(100 + b·width + i) as literals (shared by dedup_embedding
+    * and decontaminate_semantic). */
+  private def signLshKeySql(nBands: Int, width: Int): String = {
+    def keyExpr(b: Int) = (0 until width).map { i =>
+      val dir = Similarity.direction(100 + b * width + i, 64).mkString("[", ", ", "]")
+      s"(CASE WHEN list_dot_product(e, $dir::DOUBLE[]) >= 0 THEN ${1L << i} ELSE 0 END)"
+    }.mkString(" + ")
+    (0 until nBands).map(b => s"${keyExpr(b)} AS k$b").mkString(",\n  ")
+  }
+
   /** Unrolled integer-PageRank oracle: iteration k's CTE references k−1's
     * — recursive CTEs cannot host per-round aggregates (the bpe_train
     * lesson), so the ten rounds are generated as a chain. Every value is
@@ -2535,11 +2548,7 @@ object QueryCatalog {
       // cannot disagree on a bit), block on (band, key) with the same
       // hot-bucket cap, and verify the same rounded cosine
       val nBands = 6; val width = 4
-      def keyExpr(b: Int) = (0 until width).map { i =>
-        val dir = Similarity.direction(100 + b * width + i, 64).mkString("[", ", ", "]")
-        s"(CASE WHEN list_dot_product(e, $dir::DOUBLE[]) >= 0 THEN ${1L << i} ELSE 0 END)"
-      }.mkString(" + ")
-      val sigCols = (0 until nBands).map(b => s"${keyExpr(b)} AS k$b").mkString(",\n  ")
+      val sigCols = signLshKeySql(nBands, width)
       val bandUnion = (0 until nBands)
         .map(b => s"SELECT vec_id, $b AS band, k$b AS key FROM sig")
         .mkString("\n  UNION ALL ")
@@ -2566,11 +2575,7 @@ object QueryCatalog {
       // same hyperplane literals and corpus-side cap as dedup_embedding,
       // bipartite: corpus buckets join the (small) eval band rows
       val nBands = 6; val width = 4
-      def keyExpr(b: Int) = (0 until width).map { i =>
-        val dir = Similarity.direction(100 + b * width + i, 64).mkString("[", ", ", "]")
-        s"(CASE WHEN list_dot_product(e, $dir::DOUBLE[]) >= 0 THEN ${1L << i} ELSE 0 END)"
-      }.mkString(" + ")
-      val sigCols = (0 until nBands).map(b => s"${keyExpr(b)} AS k$b").mkString(",\n  ")
+      val sigCols = signLshKeySql(nBands, width)
       def bandUnion(src: String, idCol: String) = (0 until nBands)
         .map(b => s"SELECT $idCol, $b AS band, k$b AS key FROM $src")
         .mkString("\n  UNION ALL ")

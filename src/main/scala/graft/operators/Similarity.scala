@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.{Window => WExpr}
+import graft.functions.Codebook
+import graft.functions.PqFunctions._
 
 /** Similarity search over an embedding column (Array[Float]).
   *
@@ -52,7 +54,8 @@ object Similarity {
 
   /** IVF coarse-quantizer centroids: a deterministic sample of the data
     * itself (the classic random-init codebook). Tiny — collected once and
-    * inlined as literals so assignment stays in codegen.
+    * carried by the [[graft.functions.IvfAssignExpr]] /
+    * [[graft.functions.IvfProbeExpr]] kernels.
     *
     * Refinement is data-dependent: on near-uniform embeddings (the sf
     * fixtures) 1–5 Lloyd rounds DROP recall@10 from 0.920 to 0.84 — a
@@ -64,27 +67,25 @@ object Similarity {
     * 8-cluster fixture, one round lifts recall@10 from the collapsed init to
     * ≈1.0 (EmbeddingRecallSpec pins it). Callers with clustered data pass
     * `lloydRounds ≥ 1` to [[ivfTopK]]/[[semDedup]]. */
-  def ivfCentroids(vectors: DataFrame, nCentroids: Int): Seq[Seq[Double]] = {
-    vectors.orderBy("vec_id").limit(nCentroids)
+  def ivfCentroids(vectors: DataFrame, nCentroids: Int): Codebook =
+    Codebook(vectors.orderBy("vec_id").limit(nCentroids)
       .select(col("embedding").cast("array<double>"))
-      .collect().map(_.getSeq[Double](0)).toSeq
-  }
+      .collect().map(_.getSeq[Double](0)).toSeq)
 
   /** Lloyd refinement of an IVF codebook: `rounds` passes of assign →
     * per-bucket component mean. Scale shape per round: assignment is the
-    * [[ivfBucket]] codegen argmax over literal centroids (one scan, no
-    * shuffle), and the mean is a posexplode + groupBy(bucket, pos) whose
-    * partial aggregation combines map-side to ≤ nCentroids×dim rows per
-    * task — the exchange carries the codebook, never the vectors. The
-    * collected result is nCentroids×dim doubles (the same tiny literal
-    * table [[ivfCentroids]] produces). Buckets that receive no vectors keep
-    * their previous centroid (the standard empty-cluster rule). */
-  def kmeansRefine(vectors: DataFrame, centroids: Seq[Seq[Double]],
-                   rounds: Int): Seq[Seq[Double]] = {
+    * `ivf_assign` kernel (one scan, no shuffle), and the mean is a
+    * posexplode + groupBy(bucket, pos) whose partial aggregation combines
+    * map-side to ≤ nCentroids×dim rows per task — the exchange carries the
+    * codebook, never the vectors. The collected result is nCentroids×dim
+    * doubles (the same tiny codebook [[ivfCentroids]] produces). Buckets
+    * that receive no vectors keep their previous centroid (the standard
+    * empty-cluster rule). */
+  def kmeansRefine(vectors: DataFrame, centroids: Codebook, rounds: Int): Codebook = {
     var cur = centroids
     for (_ <- 0 until rounds) {
       val means = vectors
-        .select(ivfBucket(col("embedding"), cur).as("bucket"),
+        .select(ivf_assign(col("embedding"), cur).as("bucket"),
           posexplode(col("embedding").cast("array<double>")).as(Seq("pos", "v")))
         .groupBy("bucket", "pos").agg(avg("v").as("m"))
         .collect()
@@ -92,48 +93,26 @@ object Similarity {
         .map { case (b, rows) =>
           b -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq
         }
-      cur = cur.indices.map(b => means.getOrElse(b, cur(b)))
+      cur = Codebook(cur.rows.indices.map(b => means.getOrElse(b, cur.rows(b))))
     }
     cur
   }
 
-  /** IVF bucket id: argmax cosine over the centroid codebook (tie → lowest
-    * id). Pure column expression over literal centroid arrays. Single-pass
-    * argmax via array_max over (dot, -index) structs: each centroid dot is
-    * computed ONCE — a greatest() + when-chain would let Catalyst re-inline
-    * every dot into every comparison (O(n²) evaluations, and the dominant
-    * cost of the old 9.6 s ann_ivf plan). */
-  def ivfBucket(emb: Column, centroids: Seq[Seq[Double]]): Column = {
-    val dots = centroids.map { c =>
-      val norm = math.sqrt(c.map(x => x * x).sum)
-      graft.functions.VectorOps.dot(emb, array(c.map(lit(_)): _*)) / lit(norm)
-    }
-    val scored = array(dots.zipWithIndex.map { case (d, i) =>
-      struct(d.as("v"), lit(-i).as("ni"))
-    }: _*)
-    (-array_max(scored).getField("ni")).cast("int")
-  }
-
   /** IVF top-k: probe only the nProbe nearest centroids' buckets. Recall <1
-    * by construction; the baseline for quality is bruteTopK. `lloydRounds`
-    * refines the sampled codebook ([[kmeansRefine]]) — leave 0 for
-    * near-uniform data, use ≥1 when the corpus is clustered (see
-    * [[ivfCentroids]] for the measured trade). */
+    * by construction; the baseline for quality is bruteTopK. A vector's
+    * bucket is [[Codebook.nearest]] (tie → lowest id) and a query's probes
+    * are [[Codebook.probe]] (tie → larger id). `lloydRounds` refines the
+    * sampled codebook ([[kmeansRefine]]) — leave 0 for near-uniform data,
+    * use ≥1 when the corpus is clustered (see [[ivfCentroids]] for the
+    * measured trade). */
   def ivfTopK(vectors: DataFrame, queries: DataFrame, k: Int, dim: Int,
               nCentroids: Int = 16, nProbe: Int = 4,
               lloydRounds: Int = 0): DataFrame = {
     val centroids =
       kmeansRefine(vectors, ivfCentroids(vectors, nCentroids), lloydRounds)
-    val bucketed = vectors.withColumn("bucket", ivfBucket(col("embedding"), centroids))
-    val qDots = centroids.zipWithIndex.map { case (c, d) =>
-      val norm = math.sqrt(c.map(x => x * x).sum)
-      struct((graft.functions.VectorOps.dot(col("qvec"), array(c.map(lit(_)): _*))
-        / lit(norm)).as("dot"), lit(d).as("d"))
-    }
-    val qBuckets = queries.withColumn("probes",
-        slice(reverse(array_sort(array(qDots: _*))), 1, nProbe))
-      .withColumn("bucket", explode(transform(col("probes"), p => p.getField("d"))))
-      .drop("probes")
+    val bucketed = vectors.withColumn("bucket", ivf_assign(col("embedding"), centroids))
+    val qBuckets = queries.withColumn("bucket",
+      explode(ivf_probe(col("qvec"), centroids, nProbe)))
     val cand = bucketed.join(broadcast(qBuckets), Seq("bucket"))
       .where(col("vec_id") =!= col("qid"))
       .withColumn("cos", cosine(col("embedding"), col("qvec")))
@@ -148,21 +127,20 @@ object Similarity {
     * into `m` contiguous subspaces of dim/m components; each subspace gets a
     * `ksub`-entry codebook sampled from the data ([[ivfCentroids]]'s
     * deterministic first-ids sample, sliced per subspace). Returned as
-    * m × ksub × (dim/m) doubles — tiny, inlined as literals downstream. */
-  def pqCodebooks(vectors: DataFrame, m: Int, ksub: Int,
-                  dim: Int): Seq[Seq[Seq[Double]]] = {
+    * m codebooks of ksub × (dim/m) doubles — tiny, carried by the kernels. */
+  def pqCodebooks(vectors: DataFrame, m: Int, ksub: Int, dim: Int): Seq[Codebook] = {
     require(dim % m == 0, s"dim $dim must divide into $m subspaces")
     val dsub = dim / m
-    val samples = ivfCentroids(vectors, ksub)
-    (0 until m).map(s => samples.map(v => v.slice(s * dsub, (s + 1) * dsub)))
+    val samples = ivfCentroids(vectors, ksub).rows
+    (0 until m).map(s => Codebook(samples.map(v => v.slice(s * dsub, (s + 1) * dsub))))
   }
 
   /** Per-subspace Lloyd refinement of PQ codebooks — m independent k-means
     * fused into ONE pass per round: every vector emits its m (sub, code,
     * subvector) assignments in a single codegen scan — the codes come
-    * from the [[graft.functions.PqCodesExpr]] kernel [[pqEncode]] uses (a
-    * literal m × ksub struct-max column here made janino fail to compile
-    * the stage, which then ran interpreted) — and the component means
+    * from the `pq_residual_codes` kernel [[pqEncode]] uses (a literal
+    * m × ksub struct-max column here made janino fail to compile the
+    * stage, which then ran interpreted) — and the component means
     * aggregate map-side to ≤ m·ksub·dsub rows (1024 doubles at the
     * defaults) before the collect. Codes that receive no vectors keep
     * their centroid. Measured reality check (PqSpec, planted worst case —
@@ -173,15 +151,15 @@ object Similarity {
     * unrankable at small ksub regardless of rounds; refinement is the
     * right tool only when sub-cluster structure EXISTS at the codebook's
     * resolution. Catalog queries stay at rounds 0. */
-  def pqRefine(vectors: DataFrame, books: Seq[Seq[Seq[Double]]],
-               rounds: Int, dim: Int): Seq[Seq[Seq[Double]]] = {
+  def pqRefine(vectors: DataFrame, books: Seq[Codebook],
+               rounds: Int, dim: Int): Seq[Codebook] = {
     val m = books.size
     val dsub = dim / m
     var cur = books
     for (_ <- 0 until rounds) {
       val means = vectors
-        .select(col("embedding"), posexplode(graft.functions.PqFunctions
-          .pq_codes(col("embedding"), cur)).as(Seq("sub", "code")))
+        .select(col("embedding"), posexplode(pq_residual_codes(col("embedding"), cur))
+          .as(Seq("sub", "code")))
         .select(col("sub"), col("code"), posexplode(
           slice(col("embedding"), col("sub") * dsub + 1, lit(dsub)).cast("array<double>"))
           .as(Seq("pos", "v")))
@@ -189,32 +167,31 @@ object Similarity {
         .collect()
         .groupBy(r => (r.getInt(0), r.getInt(1)))
         .map { case (k, rs) => k -> rs.sortBy(_.getInt(2)).map(_.getDouble(3)).toSeq }
-      cur = (0 until m).map(s => cur(s).indices.map(j =>
-        means.getOrElse((s, j), cur(s)(j))))
+      cur = cur.indices.map(s => Codebook(cur(s).rows.indices.map(j =>
+        means.getOrElse((s, j), cur(s).rows(j)))))
     }
     cur
   }
 
+  /** (vec_id, sub, code): every vector's m flat PQ codes, one scan. */
+  private def pqCodes(vectors: DataFrame, books: Seq[Codebook]): DataFrame =
+    vectors.select(col("vec_id"),
+        posexplode(pq_residual_codes(col("embedding"), books)).as(Seq("sub", "code")))
+      .select(col("vec_id"), col("sub").cast("int").as("sub"), col("code"))
+
   /** PQ encode: each vector compresses to m small codes — code s is the
     * argmin-L2 centroid of subspace s (64 floats → 8 bytes at m=8/ksub=16,
     * the memory trade that lets a 100-TB embedding column fit a RAM-resident
-    * ANN index). Zero shuffle: one scan emitting (vec_id, sub, code) rows.
-    * The code assignment is the [[graft.functions.PqCodesExpr]] kernel
-    * (bit-identical to the old m × ksub struct-max column form — same IEEE
-    * dot tree, same tie rule — pinned by PqSpec): the literal-struct form
-    * overflowed janino's 64 KB method limit once fused with the downstream
-    * count/join stage, silently dropping the WHOLE corpus stage out of
-    * whole-stage codegen (guide §4). `lloydRounds` refines the sampled
-    * codebooks per subspace ([[pqRefine]]) — leave 0 for near-uniform
-    * data. */
+    * ANN index). Zero shuffle: one scan emitting (vec_id, sub, code) rows
+    * through the `pq_residual_codes` kernel with no coarse codebook (a
+    * literal m × ksub struct-max column form overflowed janino's 64 KB
+    * method limit once fused with the downstream count/join stage,
+    * silently dropping the WHOLE corpus stage out of whole-stage codegen,
+    * guide §4). `lloydRounds` refines the sampled codebooks per subspace
+    * ([[pqRefine]]) — leave 0 for near-uniform data. */
   def pqEncode(vectors: DataFrame, m: Int = 8, ksub: Int = 16,
-               dim: Int = 64, lloydRounds: Int = 0): DataFrame = {
-    val books = pqRefine(vectors, pqCodebooks(vectors, m, ksub, dim), lloydRounds, dim)
-    vectors.select(col("vec_id"),
-        posexplode(graft.functions.PqFunctions.pq_codes(col("embedding"), books))
-          .as(Seq("sub", "code")))
-      .select(col("vec_id"), col("sub").cast("int").as("sub"), col("code"))
-  }
+               dim: Int = 64, lloydRounds: Int = 0): DataFrame =
+    pqCodes(vectors, pqRefine(vectors, pqCodebooks(vectors, m, ksub, dim), lloydRounds, dim))
 
   /** PQ top-k via asymmetric distance computation: the query stays exact
     * and scores a compressed vector as Σ_s lut[s][code_s] with
@@ -234,21 +211,11 @@ object Similarity {
     // codebooks (a per-call refine would let float-mean nondeterminism
     // hand them subtly different ones)
     val books = pqRefine(vectors, pqCodebooks(vectors, m, ksub, dim), lloydRounds, dim)
-    // both dense steps are kernels, not literal-struct column trees: the
-    // old form's m × ksub dot subtrees overflowed janino's 64 KB method
-    // limit when fused with the scoring join/aggregate, dropping the
-    // corpus-sided stage out of whole-stage codegen AND costing ~2 s of
-    // driver analysis per run (guide §4). Values are bit-identical
-    // (PqSpec pins both kernels against the literal form).
-    val encoded = vectors.select(col("vec_id"),
-        posexplode(graft.functions.PqFunctions.pq_codes(col("embedding"), books))
-          .as(Seq("sub", "code")))
-      .select(col("vec_id"), col("sub").cast("int").as("sub"), col("code"))
     val lut = queries.select(col("qid"),
-        explode(graft.functions.PqFunctions.pq_flat_lut(col("qvec"), books)).as("e"))
+        explode(pq_adc_lut(col("qvec"), books)).as("e"))
       .select(col("qid"), col("e.sub").as("sub"), col("e.code").as("code"),
         col("e.lut_u").as("lut_u"))
-    val scored = encoded.join(broadcast(lut), Seq("sub", "code"))
+    val scored = pqCodes(vectors, books).join(broadcast(lut), Seq("sub", "code"))
       .groupBy("qid", "vec_id").agg(sum("lut_u").as("score_u"))
     val w = WExpr.partitionBy(col("qid"))
       .orderBy(col("score_u").desc, col("vec_id"))
@@ -256,27 +223,6 @@ object Similarity {
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select("qid", "rank", "vec_id", "score_u")
-  }
-
-  /** Driver-side replica of [[ivfBucket]]'s assignment rule (argmax cosine
-    * over the codebook, tie → lowest id) — bit-identical IEEE ops (dot and
-    * |c|² accumulate left-to-right, one division by the same literal norm),
-    * so a sample row's bucket computed here equals the engine's. Used to
-    * form residual codebooks from a collected sample. */
-  private def coarseBucketOf(e: IndexedSeq[Double], cents: Seq[Seq[Double]]): Int = {
-    var best = Double.NegativeInfinity
-    var bi = 0
-    var d = 0
-    while (d < cents.size) {
-      val c = cents(d)
-      var dot = 0.0
-      var i = 0
-      while (i < c.size) { dot += e(i) * c(i); i += 1 }
-      val score = dot / math.sqrt(c.map(x => x * x).sum)
-      if (score > best) { best = score; bi = d }
-      d += 1
-    }
-    bi
   }
 
   /** IVFADC (Jégou et al. 2011 §IV, "Product quantization for nearest
@@ -292,17 +238,18 @@ object Similarity {
     * resolution.
     *
     * Scale shape: coarse assignment and residual encoding are one
-    * zero-shuffle codegen-fallback kernel pass ([[graft.functions.PqResidualCodesExpr]]
-    * — the codebooks ride the expression, not a join); the per-(query,
-    * probed bucket) ADC tables are queries × nProbe × m × ksub rows —
-    * broadcast ([[graft.functions.PqAdcLutExpr]]); the only corpus-sized
-    * plan is the (bucket, sub, code) equi-join + map-side-combined integer
-    * sum. Scores are exact integer micro-units (entries floored BEFORE the
-    * sum, per-bucket |r_q|² bias folded into sub 0 so ranking is
-    * comparable across probed buckets), ascending = nearest; ties break by
-    * vec_id, so ranking is engine-total. `lloydRounds` refines the COARSE
-    * codebook only (leave 0 for near-uniform data and for the oracle-gated
-    * catalog query — [[kmeansRefine]]'s float means are not SQL-replayable).
+    * zero-shuffle kernel pass (`ivf_assign`, then `pq_residual_codes` with
+    * the coarse codebook — the codebooks ride the expressions, not a
+    * join); the per-(query, probed bucket) ADC tables (`ivf_probe`, then
+    * `pq_adc_lut`) are queries × nProbe × m × ksub rows — broadcast; the
+    * only corpus-sized plan is the (bucket, sub, code) equi-join +
+    * map-side-combined integer sum. Scores are exact integer micro-units
+    * (entries floored BEFORE the sum, per-bucket |r_q|² bias folded into
+    * sub 0 so ranking is comparable across probed buckets), ascending =
+    * nearest; ties break by vec_id, so ranking is engine-total.
+    * `lloydRounds` refines the COARSE codebook only (leave 0 for
+    * near-uniform data and for the oracle-gated catalog query —
+    * [[kmeansRefine]]'s float means are not SQL-replayable).
     *
     * Returns (qid, rank, vec_id, dist_u) — approximate by construction;
     * PqSpec pins the within-cluster precision lift over flat PQ. */
@@ -311,46 +258,32 @@ object Similarity {
                 lloydRounds: Int = 0): DataFrame = {
     require(dim % m == 0, s"dim $dim must divide into $m subspaces")
     val dsub = dim / m
-    // residual codebooks: the deterministic first-ksub sample's residuals
-    // against their OWN coarse centroids (driver-side bucket rule is the
-    // engine's, bit-exact — see coarseBucketOf)
     val sample = vectors.orderBy("vec_id").limit(math.max(ksub, nCoarse))
       .select(col("embedding").cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toIndexedSeq)
+      .collect().map(_.getSeq[Double](0))
     // coarse init = the first nCoarse rows of the SAME ordered sample —
     // identical to ivfCentroids(vectors, nCoarse) (same orderBy(vec_id)
     // prefix, same cast) but without a SECOND TakeOrdered job over the
     // corpus: codebook sampling pays one pass, not two (guide §1.2 step 1:
     // don't compute things twice). kmeansRefine leaves it untouched at the
     // catalog's lloydRounds = 0.
-    val cents = kmeansRefine(vectors,
-      sample.take(nCoarse).map(_.toSeq: Seq[Double]).toSeq, lloydRounds)
-    val books: Seq[Seq[Seq[Double]]] = (0 until m).map { s =>
-      sample.take(ksub).toSeq.map { e =>
-        val c = cents(coarseBucketOf(e, cents))
-        ((s * dsub) until ((s + 1) * dsub)).map(i => e(i) - c(i)): Seq[Double]
-      }
+    val cents = kmeansRefine(vectors, Codebook(sample.take(nCoarse).toSeq), lloydRounds)
+    // residual codebooks: the first-ksub sample's residuals against their
+    // OWN coarse centroids, assigned by the rule the ivf_assign kernel runs
+    val resid = sample.take(ksub).toSeq.map { e =>
+      val c = cents.rows(cents.nearest(e.toArray))
+      e.indices.map(i => e(i) - c(i))
     }
+    val books = (0 until m).map(s => Codebook(resid.map(_.slice(s * dsub, (s + 1) * dsub))))
     val encoded = vectors
-      .withColumn("bucket", ivfBucket(col("embedding"), cents))
+      .withColumn("bucket", ivf_assign(col("embedding"), cents))
       .select(col("vec_id"), col("bucket"),
-        posexplode(graft.functions.PqFunctions.pq_residual_codes(
-          col("embedding"), col("bucket"), cents, books)).as(Seq("sub", "code")))
-    // probe rule identical to ivfTopK: top-nProbe coarse centroids by
-    // cosine, ties to the larger id (the reversed ascending struct sort)
-    val qDots = cents.zipWithIndex.map { case (c, d) =>
-      val norm = math.sqrt(c.map(x => x * x).sum)
-      struct((graft.functions.VectorOps.dot(col("qvec"), array(c.map(lit(_)): _*))
-        / lit(norm)).as("dot"), lit(d).as("d"))
-    }
-    val qProbes = queries.withColumn("probes",
-        slice(reverse(array_sort(array(qDots: _*))), 1, nProbe))
-      .withColumn("bucket",
-        explode(transform(col("probes"), p => p.getField("d"))))
-      .drop("probes")
-    val lut = qProbes.select(col("qid"), col("bucket"),
-        explode(graft.functions.PqFunctions.pq_adc_lut(
-          col("qvec"), col("bucket"), cents, books)).as("e"))
+        posexplode(pq_residual_codes(col("embedding"), books, Some(col("bucket") -> cents)))
+          .as(Seq("sub", "code")))
+    val lut = queries
+      .select(col("qid"), col("qvec"), explode(ivf_probe(col("qvec"), cents, nProbe)).as("bucket"))
+      .select(col("qid"), col("bucket"),
+        explode(pq_adc_lut(col("qvec"), books, Some(col("bucket") -> cents))).as("e"))
       .select(col("qid"), col("bucket"), col("e.sub").as("sub"),
         col("e.code").as("code"), col("e.lut_u").as("lut_u"))
     val scored = encoded.join(broadcast(lut), Seq("bucket", "sub", "code"))
@@ -518,15 +451,15 @@ object Similarity {
     * contributes NO candidates — its members all keep, mirrored in the
     * oracle). The self-join is a (bucket) equi-join over co-partitioned
     * sides; only (bucket, vec_id, embedding) rows shuffle. Centroid
-    * assignment is the [[ivfBucket]] codegen argmax — same codebook, same
-    * tie rule as `ann_ivf`, already cross-engine-proven. */
+    * assignment is the `ivf_assign` kernel — same codebook, same tie rule
+    * as `ann_ivf`, already cross-engine-proven. */
   def semDedup(vectors: DataFrame, tau: Double,
                nCentroids: Int = 16, bucketCap: Int = 4096,
                lloydRounds: Int = 0): DataFrame = {
     val centroids =
       kmeansRefine(vectors, ivfCentroids(vectors, nCentroids), lloydRounds)
     val assigned = Owned.persist(vectors
-      .withColumn("bucket", ivfBucket(col("embedding"), centroids)))
+      .withColumn("bucket", ivf_assign(col("embedding"), centroids)))
     // cluster sizes via map-side-combined groupBy + broadcast join back —
     // NOT a count-over-window by bucket: with only nCentroids distinct
     // buckets that window would drag every cluster's full membership

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.functions.{Codebook, PqFunctions, VectorOps}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,16 +34,16 @@ class PqSpec extends AnyFunSuite {
     for (s <- 0 until m) {
       val subs = data.map(_.slice(s * dsub, (s + 1) * dsub))
       // argmin L2 ⟺ argmax 2·x·c − |c|², lowest code on ties
-      def codeOf(x: Array[Double]): Int = books(s).indices.maxBy { j =>
-        val c = books(s)(j)
+      def codeOf(x: Array[Double]): Int = books(s).rows.indices.maxBy { j =>
+        val c = books(s).rows(j)
         var dot = 0.0
         for (t <- 0 until dsub) dot += x(t) * c(t)
         (dot * 2.0 - c.map(v => v * v).sum, -j)
       }
       val members = subs.groupBy(codeOf)
       for (j <- 0 until ksub; t <- 0 until dsub) {
-        val want = members.get(j).fold(books(s)(j)(t))(xs => xs.map(_(t)).sum / xs.length)
-        assert(math.abs(got(s)(j)(t) - want) < 1e-9, s"sub $s code $j component $t")
+        val want = members.get(j).fold(books(s).rows(j)(t))(xs => xs.map(_(t)).sum / xs.length)
+        assert(math.abs(got(s).rows(j)(t) - want) < 1e-9, s"sub $s code $j component $t")
       }
     }
   }
@@ -154,6 +156,52 @@ class PqSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"))
     assert(!plan.contains("BroadcastNestedLoopJoin"))
     assert(plan.contains("BroadcastHashJoin"), "the ADC lut join should broadcast")
+    // codebooks print by shape; carried as literal arguments, the centroids
+    // and residual codebooks print ~730k characters and Spark truncates
+    // the plan string
+    assert(plan.length < 50000, s"IVFADC executed plan prints ${plan.length} characters")
+  }
+
+  // The IVF rules as the column trees the kernels replaced: the bucket is
+  // array_max over (cosine, -id) structs (tie → lowest id), the probes
+  // the first nProbe of the reversed ascending (cosine, id) struct sort
+  // (tie → larger id). The cosine is the literal-array dot over the
+  // driver-computed sqrt(Σc²).
+  private def cosineCols(v: Column, cb: Codebook): Seq[Column] = cb.rows.map { c =>
+    VectorOps.dot(v, array(c.map(lit(_)): _*)) / lit(math.sqrt(c.map(x => x * x).sum))
+  }
+  private def bucketTree(v: Column, cb: Codebook): Column =
+    (-array_max(array(cosineCols(v, cb).zipWithIndex.map { case (d, i) =>
+      struct(d.as("v"), lit(-i).as("ni"))
+    }: _*)).getField("ni")).cast("int")
+  private def probeTree(v: Column, cb: Codebook, nProbe: Int): Column =
+    transform(slice(reverse(array_sort(array(cosineCols(v, cb).zipWithIndex.map {
+      case (d, i) => struct(d.as("dot"), lit(i).as("d"))
+    }: _*))), 1, nProbe), p => p.getField("d"))
+
+  test("IVF kernels equal the column trees they replaced and the driver rule, both tie directions") {
+    val cents = Similarity.ivfCentroids(vecs, 16)
+    // row 3 again as row 16: a vector nearest row 3 ties with row 16, so
+    // it is assigned 3 (lowest id) and probes 16 before 3 (larger id)
+    val dup = Codebook(cents.rows :+ cents.rows(3))
+    for (cb <- Seq(cents, dup)) {
+      val rows = vecs.select(col("embedding").cast("array<double>"),
+          PqFunctions.ivf_assign(col("embedding"), cb), bucketTree(col("embedding"), cb),
+          PqFunctions.ivf_probe(col("embedding"), cb, 4), probeTree(col("embedding"), cb, 4))
+        .collect()
+      assert(rows.length == vecs.count())
+      rows.foreach { r =>
+        val v = r.getSeq[Double](0).toArray
+        assert(r.getInt(1) == r.getInt(2), s"$cb assignment")
+        assert(r.getInt(1) == cb.nearest(v), s"$cb driver assignment")
+        assert(r.getSeq[Int](3) == r.getSeq[Int](4), s"$cb probes")
+        assert(cb.probe(v, 4).toSeq == r.getSeq[Int](3), s"$cb driver probes")
+      }
+      if (cb == dup) {
+        val tied = rows.filter(_.getInt(1) == 3).map(_.getSeq[Int](3).take(2))
+        assert(tied.nonEmpty && tied.forall(_ == Seq(16, 3)), tied.toSeq)
+      }
+    }
   }
 
   test("IVFADC: residual encoding + ksub=256 lifts within-cluster recall far above flat PQ") {

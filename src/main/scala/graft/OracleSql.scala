@@ -11,6 +11,12 @@ package graft
   *    round-trips through signed BIGINT;
   *  - pixel scanline / grid / window math uses the exact formulas of
   *    core.Rasterize / core.TileGrid with the lux1 fixture literals.
+  *
+  * Rule CTEs written once here for every oracle that repeats them: the h60
+  * fingerprint, the quality gate, the split rule, chunk keep-first, MinHash
+  * and simhash signatures, quarter-blocked Hamming pairs, Jaccard verify,
+  * min-label components, the lux pixel table, IVF assign/probe, kNN ranking
+  * and the prefix-bin summary.
   */
 object OracleSql {
 
@@ -18,6 +24,297 @@ object OracleSql {
   val W = 483; val H = 216
   val A = "8.983152795e-5"; val E = "-8.983152778e-5"
   val C = "5.979635689"; val F = "50.118985995"
+
+  /** World bounds (minx, miny, maxx, maxy) of the two pixel-rectangle label
+    * blobs (Fixtures.labelGeoms' rectangles), in the affine expression trees
+    * the engine evaluates. */
+  val blobBounds: Seq[(String, String, String, String)] = Seq(
+    (s"($C + 100 * $A)", s"($F + 60 * ($E))", s"(($C + 128 * $A) + 32 * $A)", s"($F + 20 * ($E))"),
+    (s"(($C + 256 * $A) + 44 * $A)", s"(($F + 88 * ($E)) + 112 * ($E))",
+      s"(($C + 355 * $A) + 45 * $A)", s"(($F + 88 * ($E)) + 62 * ($E))"))
+
+  // ---------------------------------------------------------------------
+  // text-family rules
+  // ---------------------------------------------------------------------
+
+  /** The engine-portable 60-bit fingerprint of a SQL string expression:
+    * md5 → first 15 hex chars → BIGINT. */
+  def h60(e: String): String = s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
+
+  /** Stopwords of the heuristic quality gate. */
+  val QualityStopwords = "('the','and','a','of','to','in','over')"
+
+  /** Select items `toks`, `n_chars`, `n_spaces` over a `text` column: the
+    * inputs of [[qualityOkSql]]. */
+  val qualitySignalsSql: String =
+    """string_split(text, ' ') AS toks,
+      |  length(text) AS n_chars,
+      |  length(text) - length(replace(text, ' ', '')) AS n_spaces""".stripMargin
+
+  /** The heuristic quality gate over [[qualitySignalsSql]]: at least 15
+    * tokens, a mean of at least 2.0 non-space chars per token, and
+    * stopwords on at least 1/20 of the tokens. */
+  val qualityOkSql: String =
+    s"""(len(toks) >= 15 AND (n_chars - n_spaces) / len(toks)::DOUBLE >= 2.0
+       |   AND len(list_filter(toks, x -> x IN $QualityStopwords)) * 20 >= len(toks))""".stripMargin
+
+  /** Select items of the Gopher signals over `text` and its token list `l`. */
+  val gopherSignalsSql: String =
+    s"""len(l) AS n_words,
+       |  length(replace(text, ' ', '')) AS n_letters,
+       |  len(list_filter(l, x -> regexp_matches(x, '[a-z]'))) AS n_alpha_words,
+       |  len(list_filter(l, x -> x IN ('the','be','to','of','and','that','have','with'))) AS n_stop,
+       |  (length(text) - length(replace(text, '#', '')))
+       |   + (length(text) - length(replace(text, '...', ''))) // 3 AS n_symbols,
+       |  greatest(len(l) - 1, 0) AS n_bigrams,
+       |  greatest(len(l) - 1, 0) - len(list_distinct(list_transform(list_filter(
+       |    list_transform(list_zip(l, l[2:]), s -> s[1] || ' ' || s[2]),
+       |    x -> x IS NOT NULL),
+       |    x -> ${h60("x")}))) AS n_dup_bigrams""".stripMargin
+
+  /** The Gopher pass rule over [[gopherSignalsSql]]'s columns. */
+  val gopherOkSql: String =
+    """(n_words >= 15 AND n_words <= 100000
+      |  AND n_letters >= n_words * 3 AND n_letters <= n_words * 10
+      |  AND n_symbols * 10 <= n_words
+      |  AND n_alpha_words * 5 >= n_words * 4
+      |  AND n_stop >= 1
+      |  AND n_dup_bigrams * 5 <= n_bigrams)""".stripMargin
+
+  /** The 80/10/10 train/val/test split of a document by its
+    * h60(doc_id) mod 100 bucket. */
+  val docSplitSql: String = {
+    val bucket = s"${h60("CAST(doc_id AS VARCHAR)")} % 100"
+    s"CASE WHEN $bucket < 80 THEN 'train' WHEN $bucket < 90 THEN 'val' ELSE 'test' END"
+  }
+
+  /** CTEs `d` (the documents with `prefix` planted before the text where
+    * `cond` holds) and `t` (doc_id, toks). */
+  def plantedTokensSql(cond: String, prefix: String): String =
+    s"""d AS (SELECT doc_id,
+       |  CASE WHEN $cond THEN '$prefix ' || text ELSE text END AS text
+       | FROM documents),
+       |t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM d)""".stripMargin
+
+  /** CTEs `i` and `c`: t's tokens cut into consecutive `width`-token
+    * chunks c(doc_id, ci, n_tok, chunk). */
+  def fixedChunksSql(width: Int): String =
+    s"""i AS (SELECT doc_id, toks,
+       |  unnest(range(0, CAST(ceil(len(toks) / $width.0) AS BIGINT))) AS ci FROM t),
+       |c AS (SELECT doc_id, ci,
+       |  least(len(toks) - ci * $width, $width) AS n_tok,
+       |  array_to_string(toks[ci * $width + 1 : ci * $width + $width], ' ') AS chunk FROM i)""".stripMargin
+
+  /** Chunk keep-first over c(doc_id, ci, n_tok, chunk): a chunk is kept iff
+    * it comes first in its `partition` group by `order`; per doc the chunk
+    * count, the duplicate count and the kept tokens. */
+  def chunkKeepFirstSql(partition: String, order: String): String =
+    s"""r AS (SELECT doc_id, ci, n_tok,
+       |  row_number() OVER (PARTITION BY $partition ORDER BY $order) AS rn
+       | FROM c)
+       |SELECT doc_id, count(*) AS n_chunks,
+       | CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_chunks,
+       | CAST(sum(CASE WHEN rn > 1 THEN 0 ELSE n_tok END) AS BIGINT) AS n_tokens_kept
+       |FROM r GROUP BY 1""".stripMargin
+
+  /** MinHash signature query over shingle rows sh(keys…, sh): mh_i = the
+    * min over a group's shingles of h60(i || ':' || sh), i < nHashes. */
+  def minhashSql(keys: Seq[String], nHashes: Int): String = {
+    val mins = (0 until nHashes).map(i => s"min(${h60(s"'$i:' || sh")}) AS mh_$i").mkString(", ")
+    s"SELECT ${keys.mkString(", ")}, $mins FROM sh GROUP BY ${keys.mkString(", ")}"
+  }
+
+  /** Exact Jaccard of candidate pairs cand(doc_a, doc_b) over shingle rows
+    * sh(doc_id, sh): (doc_a, doc_b, jaccard_num, jaccard_den) at
+    * num ≥ den · minJaccard. */
+  def jaccardVerifySql(minJaccard: Double): String =
+    s"""sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+       |inter AS (
+       | SELECT c.doc_a, c.doc_b, count(*) AS n_common
+       | FROM cand c
+       | JOIN sh sa ON sa.doc_id = c.doc_a
+       | JOIN sh sb ON sb.doc_id = c.doc_b AND sb.sh = sa.sh
+       | GROUP BY 1, 2)
+       |SELECT i.doc_a, i.doc_b, i.n_common AS jaccard_num,
+       | na.n + nb.n - i.n_common AS jaccard_den
+       |FROM inter i
+       |JOIN sizes na ON na.doc_id = i.doc_a
+       |JOIN sizes nb ON nb.doc_id = i.doc_b
+       |WHERE i.n_common >= (na.n + nb.n - i.n_common) * $minJaccard""".stripMargin
+
+  /** Token simhash CTEs: `tok` (each doc's distinct tokens), `tokh` (their
+    * h60), `bits` (each bit's ±1 vote sum) and `sig` (doc_id[, th], h): bit
+    * b of h is set iff its vote is positive. `withTh` carries th = md5(text). */
+  def simhashSql(withTh: Boolean): String = {
+    val keys = if (withTh) "doc_id, th" else "doc_id"
+    val th = if (withTh) ", md5(text) AS th" else ""
+    s"""tok AS (
+       | SELECT DISTINCT doc_id$th, unnest(string_split(text, ' ')) AS tok FROM documents),
+       |tokh AS (SELECT $keys, ${h60("tok")} AS h FROM tok),
+       |bits AS (
+       | SELECT $keys, b.b AS b, SUM(((h >> b.b) & 1) * 2 - 1) AS s
+       | FROM tokh, range(0, 60) b(b) GROUP BY $keys, b.b),
+       |sig AS (
+       | SELECT $keys, CAST(SUM(CASE WHEN s > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS h
+       | FROM bits GROUP BY $keys)""".stripMargin
+  }
+
+  /** Hamming near-dup pairs over fingerprint rows `fp`(doc_id, h, …): block
+    * on the four 15-bit quarters of h, drop quarter keys shared by more than
+    * `cap` distinct `th` values, keep pairs at Hamming ≤ maxHamming;
+    * (doc_a, doc_b, hamming) with doc_a < doc_b. */
+  def quarterPairsSql(fp: String, th: String, cap: Int, maxHamming: Int): String =
+    s"""blocks AS (SELECT doc_id, $th AS th, h, q.q AS q, (h >> (q.q * 15)) & 32767 AS qk
+       | FROM $fp, range(0, 4) q(q)),
+       |hot AS (SELECT q, qk FROM (
+       |  SELECT q, qk, count(DISTINCT th) AS df FROM blocks GROUP BY 1, 2)
+       | WHERE df > $cap),
+       |blk AS (SELECT b.doc_id, b.h, b.q, b.qk
+       | FROM blocks b ANTI JOIN hot t ON b.q = t.q AND b.qk = t.qk),
+       |cand AS (SELECT DISTINCT x.doc_id AS doc_a, x.h AS ha,
+       |  y.doc_id AS doc_b, y.h AS hb
+       | FROM blk x JOIN blk y
+       |  ON x.q = y.q AND x.qk = y.qk AND x.doc_id < y.doc_id)
+       |SELECT doc_a, doc_b, bit_count(xor(ha, hb))::INT AS hamming
+       |FROM cand WHERE bit_count(xor(ha, hb)) <= $maxHamming""".stripMargin
+
+  /** Connected components by min-label walk (under WITH RECURSIVE): CTEs
+    * `edges` (the pairs a–b of `pairs`, both ways), `walk` and
+    * `comp`(node, rep), rep = the least node of the component. */
+  def componentsSql(pairs: String, a: String, b: String): String =
+    s"""edges AS (
+       | SELECT $a AS u, $b AS v FROM $pairs
+       | UNION ALL SELECT $b, $a FROM $pairs),
+       |walk(node, label) AS (
+       | SELECT u, u FROM edges
+       | UNION
+       | SELECT e.u, w.label FROM edges e JOIN walk w ON w.node = e.v),
+       |comp AS (SELECT node, min(label) AS rep FROM walk GROUP BY node)""".stripMargin
+
+  /** Sequence-packing bins over t(doc_id, n_tokens): the exclusive prefix
+    * sum of the tokens in doc_id order, bin = prefix div `capacity`, and
+    * each bin's doc count, tokens and first/last doc. */
+  def packBinsSql(capacity: Int): String =
+    s"""p AS (
+       | SELECT doc_id, n_tokens,
+       |  COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix
+       | FROM t)
+       |SELECT CAST(prefix // $capacity AS BIGINT) AS bin, count(*) AS n_docs,
+       | CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
+       | min(doc_id) AS first_doc, max(doc_id) AS last_doc
+       |FROM p GROUP BY 1""".stripMargin
+
+  // ---------------------------------------------------------------------
+  // vector search rules
+  // ---------------------------------------------------------------------
+
+  /** IVF coarse assignment CTEs: `v`(vec_id, e), `cent` (the first 16
+    * vectors as centroids d), `ad` and `assign`(vec_id, bucket): the argmax
+    * of the dot over the centroid norm, tie → lowest d. */
+  val ivfAssignSql: String =
+    """v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+      |cent AS (
+      | SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS d, e
+      | FROM v ORDER BY vec_id LIMIT 16),
+      |ad AS (
+      | SELECT v.vec_id, c.d,
+      |  list_dot_product(v.e, c.e) / sqrt(list_dot_product(c.e, c.e)) AS dot
+      | FROM v, cent c),
+      |assign AS (
+      | SELECT vec_id, d AS bucket FROM (
+      |  SELECT vec_id, d, row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, d) AS rn
+      |  FROM ad) WHERE rn = 1)""".stripMargin
+
+  /** IVF probe CTEs over [[ivfAssignSql]]: `q` (the first 5 vectors as
+    * queries qid, qe), `qd` and `qprobe`(qid, bucket): each query's 4 best
+    * centroids, tie → highest d. */
+  val ivfProbeSql: String =
+    """q AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < 5),
+      |qd AS (
+      | SELECT q.qid, c.d,
+      |  list_dot_product(q.qe, c.e) / sqrt(list_dot_product(c.e, c.e)) AS dot
+      | FROM q, cent c),
+      |qprobe AS (
+      | SELECT qid, d AS bucket FROM (
+      |  SELECT qid, d, row_number() OVER (PARTITION BY qid ORDER BY dot DESC, d DESC) AS rn
+      |  FROM qd) WHERE rn <= 4)""".stripMargin
+
+  /** Exact kNN of the queries q(qid, qlat, qlon) over the documents at
+    * (`lat`, `lon`): rank by squared distance, tie → id; the top k. */
+  def knnSql(lat: String, lon: String, k: Int): String =
+    s"""pts AS (SELECT doc_id AS id, $lat AS lat, $lon AS lon FROM documents),
+       |d AS (SELECT qid, id,
+       |  (qlat - lat)*(qlat - lat) + (qlon - lon)*(qlon - lon) AS dist2,
+       |  row_number() OVER (PARTITION BY qid ORDER BY
+       |    (qlat - lat)*(qlat - lat) + (qlon - lon)*(qlon - lon), id) AS rank
+       | FROM q, pts)
+       |SELECT qid, rank, id, CAST(FLOOR(dist2*1000000.0) AS BIGINT) AS dist2_fp
+       |FROM d WHERE rank <= $k""".stripMargin
+
+  // ---------------------------------------------------------------------
+  // lux pixel rules
+  // ---------------------------------------------------------------------
+
+  /** CTEs `grid` (the lux1 whole_overlap 128 grid) and `px`(i, j, band, v):
+    * every pixel of every grid window in bands 1..`bands`, the lux value
+    * formula cast to `tpe`. */
+  def luxPixelsSql(bands: Int, tpe: String): String =
+    s"""grid AS (${sqlTileGrid(128, 128, "whole_overlap")}),
+       |px AS (
+       | SELECT i, j, b.b AS band,
+       |  CAST(CAST((b.b * 7 + (row_off + y.y) * 13 + (col_off + x.x)) % 256 AS REAL) / CAST(850 AS REAL) AS $tpe) AS v
+       | FROM grid, range(0, 128) y(y), range(0, 128) x(x), range(1, ${bands + 1}) b(b))""".stripMargin
+
+  /** A pixel `v` clipped to [lo, hi] and rescaled to uint8 1..255. */
+  def u8Sql(lo: String, hi: String): String =
+    s"CAST(trunc(((CASE WHEN v < $lo THEN $lo WHEN v > $hi THEN $hi ELSE v END) - $lo) / ($hi - $lo) * 254.0 + 1.0) AS BIGINT)"
+
+  /** The numpy-linear percentile `q` of a 128² chip band, as an aggregate
+    * over [[percentileRescaleSql]]'s `ranked` grouped by chip band: the
+    * order statistics at floor(pos) and floor(pos) + 1, pos = 16383·q/100,
+    * lerped. */
+  def percentileSql(q: Int): String = {
+    val lo = 16383 * q / 100
+    s"MAX(CASE WHEN rn = $lo THEN v END) + (MAX(CASE WHEN rn = ${lo + 1} THEN v END) - " +
+      s"MAX(CASE WHEN rn = $lo THEN v END)) * (16383 * $q.0 / 100.0 - $lo)"
+  }
+
+  /** Per-chip-band uint8 sums of the lux pixels rescaled from the
+    * per-chip-band window [lo, hi] (aggregates over `ranked`, the pixels
+    * numbered from 0 by value within each chip band). */
+  def percentileRescaleSql(lo: String, hi: String): String =
+    s"""WITH ${luxPixelsSql(4, "DOUBLE")},
+       |ranked AS (
+       | SELECT i, j, band, v,
+       |  row_number() OVER (PARTITION BY i, j, band ORDER BY v) - 1 AS rn
+       | FROM px),
+       |rng AS (SELECT i, j, band, $lo AS lo, $hi AS hi FROM ranked GROUP BY 1, 2, 3)
+       |SELECT p.i, p.j, p.band::INT AS band, CAST(SUM(${u8Sql("lo", "hi")}) AS BIGINT) AS sum_u8
+       |FROM px p JOIN rng USING (i, j, band)
+       |GROUP BY 1, 2, 3""".stripMargin
+
+  /** extract_chips oracle: the whole_overlap windows whose extent mask over
+    * `polys` is non-empty and whose world bounds intersect the AOI box
+    * (minx, miny, maxx, maxy) — or lie within it — numbered in (i, j)
+    * order. */
+  def chipsInAoi(polys: Seq[Seq[(Double, Double)]], aoi: (Double, Double, Double, Double),
+                 within: Boolean): String = {
+    val (x0, y0, x1, y1) = aoi
+    val inAoi =
+      if (within) s"g.minx >= $x0 AND g.maxx <= $x1 AND g.miny >= $y0 AND g.maxy <= $y1"
+      else s"g.minx <= $x1 AND g.maxx >= $x0 AND g.miny <= $y1 AND g.maxy >= $y0"
+    s"""WITH grid AS (${sqlTileGrid(128, 128, "whole_overlap")}),
+       |${extentCountCte(polys)},
+       |kept AS (
+       | SELECT g.i, g.j, g.minx, g.miny, g.maxx, g.maxy
+       | FROM grid g JOIN extcnt e ON e.i = g.i AND e.j = g.j
+       | WHERE e.n_ext > 0 AND $inAoi)
+       |SELECT CAST(row_number() OVER (ORDER BY i, j) - 1 AS BIGINT) AS id,
+       | CAST(i AS INT) AS x, CAST(j AS INT) AS y, minx, miny, maxx, maxy,
+       | 'lux1_' || CAST(i AS VARCHAR) || '_' || CAST(j AS VARCHAR) || '.tif' AS filename
+       |FROM kept""".stripMargin
+  }
 
   // ---------------------------------------------------------------------
   // unsigned-64 splitmix64 in SQL (pages_chips oracle)
@@ -270,12 +567,7 @@ object OracleSql {
   def chaikinStats: String = {
     def mx(lon: String) = s"(radians($lon) * 6378137.0)"
     def my(lat: String) = s"(ln(tan(${math.Pi / 4.0} + radians($lat) / 2.0)) * 6378137.0)"
-    val blobs = Seq(
-      (0, s"($C + 100 * $A)", s"($F + 60 * ($E))",
-        s"(($C + 128 * $A) + 32 * $A)", s"($F + 20 * ($E))"),
-      (1, s"(($C + 256 * $A) + 44 * $A)", s"(($F + 88 * ($E)) + 112 * ($E))",
-        s"(($C + 355 * $A) + 45 * $A)", s"(($F + 88 * ($E)) + 62 * ($E))"))
-    val baseRows = blobs.flatMap { case (b, lnMn, ltMn, lnMx, ltMx) =>
+    val baseRows = blobBounds.zipWithIndex.flatMap { case ((lnMn, ltMn, lnMx, ltMx), b) =>
       val x0 = mx(lnMn); val x1 = mx(lnMx); val y0 = my(ltMn); val y1 = my(ltMx)
       Seq((x1, y0), (x0, y0), (x0, y1), (x1, y1), (x1, y0)).zipWithIndex.map {
         case ((x, y), idx) => s"($b, $idx, $x, $y)"

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.{Window => WExpr}
 
 import graft.core.Geom
 import graft.functions.{CellFunctions, TileWindowsGenerator}
+import graft.OracleSql.h60
 import graft.operators._
 import graft.sources.Fixtures
 
@@ -178,18 +179,7 @@ object QueryCatalog {
     * ADC lut with the sub-0 |r_q|² bias, scored + ranked as `rk`) — the
     * ivfpq_topk and ivfpq_rerank oracles both build on it. */
   private val ivfpqCoreCtes: String =
-    s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         |cent AS (
-         | SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS d, e
-         | FROM v ORDER BY vec_id LIMIT 16),
-         |ad AS (
-         | SELECT v.vec_id, c.d,
-         |  list_dot_product(v.e, c.e) / sqrt(list_dot_product(c.e, c.e)) AS dot
-         | FROM v, cent c),
-         |assign AS (
-         | SELECT vec_id, d AS bucket FROM (
-         |  SELECT vec_id, d, row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, d) AS rn
-         |  FROM ad) WHERE rn = 1),
+    s"""WITH ${OracleSql.ivfAssignSql},
          |resid AS (
          | SELECT v.vec_id, a.bucket,
          |  list_transform(list_zip(v.e, c.e), p -> p[1] - p[2]) AS r
@@ -209,15 +199,7 @@ object QueryCatalog {
          |  SELECT vec_id, sub, j, row_number() OVER (
          |    PARTITION BY vec_id, sub ORDER BY score DESC, j) AS rn
          |  FROM scoredv) WHERE rn = 1),
-         |q AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < 5),
-         |qd AS (
-         | SELECT q.qid, c.d,
-         |  list_dot_product(q.qe, c.e) / sqrt(list_dot_product(c.e, c.e)) AS dot
-         | FROM q, cent c),
-         |qprobe AS (
-         | SELECT qid, d AS bucket FROM (
-         |  SELECT qid, d, row_number() OVER (PARTITION BY qid ORDER BY dot DESC, d DESC) AS rn
-         |  FROM qd) WHERE rn <= 4),
+         |${OracleSql.ivfProbeSql},
          |qres AS (
          | SELECT p.qid, p.bucket,
          |  list_transform(list_zip(q.qe, c.e), pp -> pp[1] - pp[2]) AS rq
@@ -319,6 +301,13 @@ object QueryCatalog {
   private def cust(s: SparkSession, dir: String) = s.read.parquet(s"$dir/customer.parquet")
   private def events(s: SparkSession, dir: String) = s.read.parquet(s"$dir/events.parquet")
 
+  /** The deterministic 80/10/10 train/val/test split of a document by its
+    * h60(doc_id) mod 100 bucket (pipeline_e2e, dataset_split). */
+  private val docSplit: Column = {
+    val bucket = pmod(TextOps.fingerprintCol(col("doc_id").cast("string")), lit(100))
+    when(bucket < 80, lit("train")).when(bucket < 90, lit("val")).otherwise(lit("test"))
+  }
+
   /** floor(x·1e6) as bigint — the cross-engine-stable fixed-point encode. */
   private def fp6(c: Column): Column = floor(c * lit(1000000.0)).cast("long")
 
@@ -348,15 +337,10 @@ object QueryCatalog {
   private val sqlQLat = "(-80.0 + (doc_id * 92821 % 16000) / 100.0)"
   private val sqlQLon = "(-175.0 + (doc_id * 54881 % 35000) / 100.0)"
 
-  // lux1 constants (FIXTURES.md §2)
-  private val LW = 483; private val LH = 216
-  private val A = 8.983152795e-5; private val E = -8.983152778e-5
-  private val C = 5.979635689; private val F = 50.118985995
-
   // points mapped into the lux raster extent (for the tile join / knn-in-extent)
-  private val lLon: Column = lit(C) + (col("doc_id") * lit(7919L) % lit(10000L)).cast("double") / lit(10000.0) * lit(0.043388628)
+  private val lLon: Column = lit(Fixtures.LuxOriginX) + (col("doc_id") * lit(7919L) % lit(10000L)).cast("double") / lit(10000.0) * lit(0.043388628)
   private val lLat: Column = lit(50.099582385) + (col("doc_id") * lit(104729L) % lit(10000L)).cast("double") / lit(10000.0) * lit(0.019403610)
-  private val sqlLLon = s"($C + (doc_id * 7919 % 10000) / 10000.0 * 0.043388628)"
+  private val sqlLLon = s"(${OracleSql.C} + (doc_id * 7919 % 10000) / 10000.0 * 0.043388628)"
   private val sqlLLat = "(50.099582385 + (doc_id * 104729 % 10000) / 10000.0 * 0.019403610)"
 
   /** DuckDB query: the lux1 whole_overlap 128/128 grid with world bounds. */
@@ -429,13 +413,15 @@ object QueryCatalog {
     // ---- W1/W2: sliding-window grid + window→geometry ---------------------
     "tile_grid" -> ((s, _) => {
       import s.implicits._
-      val meta = Seq((LW, LH)).toDF("w", "h")
+      val (c, a) = (lit(Fixtures.LuxOriginX), lit(Fixtures.LuxPxX))
+      val (f, e) = (lit(Fixtures.LuxOriginY), lit(Fixtures.LuxPxY))
+      val meta = Seq((Fixtures.LuxWidth, Fixtures.LuxHeight)).toDF("w", "h")
       meta.select(TileWindowsGenerator.tile_windows(
           col("w"), col("h"), lit(128), lit(128), lit("whole_overlap")))
-        .withColumn("minx", lit(C) + col("col_off") * lit(A))
-        .withColumn("miny", lit(F) + (col("row_off") + col("win_height")) * lit(E))
-        .withColumn("maxx", lit(C) + (col("col_off") + col("win_width")) * lit(A))
-        .withColumn("maxy", lit(F) + col("row_off") * lit(E))
+        .withColumn("minx", c + col("col_off") * a)
+        .withColumn("miny", f + (col("row_off") + col("win_height")) * e)
+        .withColumn("maxx", c + (col("col_off") + col("win_width")) * a)
+        .withColumn("maxy", f + col("row_off") * e)
     }),
 
     // ---- G6: cell id / cover / kring -------------------------------------
@@ -816,11 +802,7 @@ object QueryCatalog {
       val clean = TextOps.redactPii(noisy)
       val counted = clean.withColumn("n_tokens", size(split(col("text"), " ")))
         .where(col("n_tokens") >= 20)
-      val bucket = pmod(conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long"), lit(100))
-      counted.withColumn("split",
-          when(bucket < 80, lit("train")).when(bucket < 90, lit("val"))
-            .otherwise(lit("test")))
+      counted.withColumn("split", docSplit)
         .groupBy("split", "lang")
         .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("sum_tokens"))
     }),
@@ -873,12 +855,7 @@ object QueryCatalog {
     // assignment is reproducible across engines, runs, and partitionings;
     // 80/10/10 by bucket. Split sizes and id-sums are the audit surface.
     "dataset_split" -> ((s, dir) => {
-      val bucket = pmod(conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long"), lit(100))
-      docs(s, dir).select(col("doc_id"), bucket.as("bucket"))
-        .withColumn("split",
-          when(col("bucket") < 80, lit("train"))
-            .when(col("bucket") < 90, lit("val")).otherwise(lit("test")))
+      docs(s, dir).select(col("doc_id"), docSplit.as("split"))
         .groupBy("split")
         .agg(count(lit(1)).as("n_docs"), sum("doc_id").as("sum_ids"))
     }),
@@ -1594,9 +1571,6 @@ object QueryCatalog {
   // DuckDB oracles
   // ======================================================================
 
-  private def h60sql(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
-
   /** Shared CTE body replaying [[TextOps.bpeEncode]] in DuckDB: derive the
     * top-k merges table (bpe_pair_counts statistics, rank = (n DESC, pair)),
     * then apply each merge in rank order with a recursive CTE over a
@@ -1655,6 +1629,17 @@ object QueryCatalog {
     s"WITH ${(init +: rounds).mkString(",\n")}\n$out"
   }
 
+  private def crossCorpusSql: String =
+    s"""WITH nf AS (SELECT doc_id, ${h60("text")} AS fp FROM documents),
+       |pf AS (SELECT DISTINCT ${h60("text")} AS fp FROM documents WHERE doc_id % 5 = 0)
+       |SELECT doc_id, fp FROM nf
+       | WHERE NOT EXISTS (SELECT 1 FROM pf WHERE pf.fp = nf.fp)""".stripMargin
+
+  private def hourlyEventsSql: String =
+    """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
+      | CAST(FLOOR(sum(value)*1000000.0) AS BIGINT) AS sum_value_fp
+      |FROM events GROUP BY 1, 2""".stripMargin
+
   lazy val oracleSql: Map[String, String] = Map(
     "q1_agg" ->
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
@@ -1676,10 +1661,7 @@ object QueryCatalog {
         |  row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS rn
         | FROM orders) WHERE rn <= 2""".stripMargin,
 
-    "q_events_hourly" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-        | CAST(FLOOR(sum(value)*1000000.0) AS BIGINT) AS sum_value_fp
-        |FROM events GROUP BY 1, 2""".stripMargin,
+    "q_events_hourly" -> hourlyEventsSql,
 
     // Spark's session-window boundary is gap >= (an event exactly at
     // session end opens a NEW session), vs sessionize's strict >; append
@@ -1785,26 +1767,12 @@ object QueryCatalog {
     "knn" -> {
       val qvals = knnQueryPoints.map { case (q, la, lo) => s"($q, $la, $lo)" }.mkString(", ")
       s"""WITH q(qid, qlat, qlon) AS (VALUES $qvals),
-         |pts AS (SELECT doc_id AS id, $sqlLat AS lat, $sqlLon AS lon FROM documents),
-         |d AS (SELECT qid, id,
-         |  (qlat - lat)*(qlat - lat) + (qlon - lon)*(qlon - lon) AS dist2,
-         |  row_number() OVER (PARTITION BY qid ORDER BY
-         |    (qlat - lat)*(qlat - lat) + (qlon - lon)*(qlon - lon), id) AS rank
-         | FROM q, pts)
-         |SELECT qid, rank, id, CAST(FLOOR(dist2*1000000.0) AS BIGINT) AS dist2_fp
-         |FROM d WHERE rank <= 5""".stripMargin
+         |${OracleSql.knnSql(sqlLat, sqlLon, 5)}""".stripMargin
     },
 
     "knn_large" ->
       s"""WITH q AS (SELECT doc_id AS qid, $sqlQLat AS qlat, $sqlQLon AS qlon FROM documents),
-         |pts AS (SELECT doc_id AS id, $sqlLat AS lat, $sqlLon AS lon FROM documents),
-         |d AS (SELECT qid, id,
-         |  (qlat - lat)*(qlat - lat) + (qlon - lon)*(qlon - lon) AS dist2,
-         |  row_number() OVER (PARTITION BY qid ORDER BY
-         |    (qlat - lat)*(qlat - lat) + (qlon - lon)*(qlon - lon), id) AS rank
-         | FROM q, pts)
-         |SELECT qid, rank, id, CAST(FLOOR(dist2*1000000.0) AS BIGINT) AS dist2_fp
-         |FROM d WHERE rank <= 3""".stripMargin,
+         |${OracleSql.knnSql(sqlLat, sqlLon, 3)}""".stripMargin,
 
     "reproject_3857" ->
       s"""SELECT doc_id,
@@ -1821,63 +1789,33 @@ object QueryCatalog {
     // NOT IN over a subquery inverts to all-false the moment either side
     // holds a NULL — the one SQL idiom whose null semantics silently
     // diverge from the anti-join on a fixture with NULL text
-    "cross_corpus_dedup" ->
-      s"""WITH nf AS (SELECT doc_id, ${h60sql("text")} AS fp FROM documents),
-         |pf AS (SELECT DISTINCT ${h60sql("text")} AS fp FROM documents WHERE doc_id % 5 = 0)
-         |SELECT doc_id, fp FROM nf
-         | WHERE NOT EXISTS (SELECT 1 FROM pf WHERE pf.fp = nf.fp)""".stripMargin,
+    "cross_corpus_dedup" -> crossCorpusSql,
 
     // the streaming form must reproduce the batch anti-join exactly
-    "streaming_crosscorpus" ->
-      s"""WITH nf AS (SELECT doc_id, ${h60sql("text")} AS fp FROM documents),
-         |pf AS (SELECT DISTINCT ${h60sql("text")} AS fp FROM documents WHERE doc_id % 5 = 0)
-         |SELECT doc_id, fp FROM nf
-         | WHERE NOT EXISTS (SELECT 1 FROM pf WHERE pf.fp = nf.fp)""".stripMargin,
+    "streaming_crosscorpus" -> crossCorpusSql,
 
     "chunk_dedup" ->
-      s"""WITH d AS (SELECT doc_id,
-         |  CASE WHEN doc_id % 3 = 0 THEN '$ChunkFooter ' || text ELSE text END AS text
-         | FROM documents),
-         |t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM d),
-         |i AS (SELECT doc_id, toks,
-         |  unnest(range(0, CAST(ceil(len(toks) / 10.0) AS BIGINT))) AS ci FROM t),
-         |c AS (SELECT doc_id, ci,
-         |  least(len(toks) - ci * 10, 10) AS n_tok,
-         |  array_to_string(toks[ci * 10 + 1 : ci * 10 + 10], ' ') AS chunk FROM i),
-         |r AS (SELECT doc_id, ci, n_tok,
-         |  row_number() OVER (PARTITION BY ${h60sql("chunk")} ORDER BY doc_id, ci) AS rn
-         | FROM c)
-         |SELECT doc_id, count(*) AS n_chunks,
-         | CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_chunks,
-         | CAST(sum(CASE WHEN rn > 1 THEN 0 ELSE n_tok END) AS BIGINT) AS n_tokens_kept
-         |FROM r GROUP BY 1""".stripMargin,
+      s"""WITH ${OracleSql.plantedTokensSql("doc_id % 3 = 0", ChunkFooter)},
+         |${OracleSql.fixedChunksSql(10)},
+         |${OracleSql.chunkKeepFirstSql(h60("chunk"), "doc_id, ci")}""".stripMargin,
 
     // CDC boundaries as a pure per-position window predicate, chunk index
     // = running boundary count (excluding own flag), chunks reassembled
     // with an ordered string_agg — an independent relational formulation
     // of the engine's sequential per-doc scan
     "cdc_chunk_dedup" ->
-      s"""WITH d AS (SELECT doc_id,
-         |  CASE WHEN doc_id % 3 = 0 THEN '$ChunkFooter ' || text ELSE text END AS text
-         | FROM documents),
-         |t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM d),
+      s"""WITH ${OracleSql.plantedTokensSql("doc_id % 3 = 0", ChunkFooter)},
          |p AS (SELECT doc_id, toks, unnest(range(0, len(toks))) AS i FROM t),
          |bf AS (SELECT doc_id, toks, i,
          |  CASE WHEN i >= 2 AND
-         |    ${h60sql("toks[i-1] || ' ' || toks[i] || ' ' || toks[i+1]")} % 8 = 0
+         |    ${h60("toks[i-1] || ' ' || toks[i] || ' ' || toks[i+1]")} % 8 = 0
          |   THEN 1 ELSE 0 END AS bflag
          | FROM p),
-         |ci AS (SELECT doc_id, toks, i,
-         |  SUM(bflag) OVER (PARTITION BY doc_id ORDER BY i) - bflag AS cidx FROM bf),
-         |c AS (SELECT doc_id, cidx, count(*) AS n_tok,
-         |  string_agg(toks[i+1], ' ' ORDER BY i) AS chunk FROM ci GROUP BY 1, 2),
-         |r AS (SELECT doc_id, cidx, n_tok,
-         |  row_number() OVER (PARTITION BY ${h60sql("chunk")} ORDER BY doc_id, cidx) AS rn
-         | FROM c)
-         |SELECT doc_id, count(*) AS n_chunks,
-         | CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_chunks,
-         | CAST(sum(CASE WHEN rn > 1 THEN 0 ELSE n_tok END) AS BIGINT) AS n_tokens_kept
-         |FROM r GROUP BY 1""".stripMargin,
+         |ix AS (SELECT doc_id, toks, i,
+         |  SUM(bflag) OVER (PARTITION BY doc_id ORDER BY i) - bflag AS ci FROM bf),
+         |c AS (SELECT doc_id, ci, count(*) AS n_tok,
+         |  string_agg(toks[i+1], ' ' ORDER BY i) AS chunk FROM ix GROUP BY 1, 2),
+         |${OracleSql.chunkKeepFirstSql(h60("chunk"), "doc_id, ci")}""".stripMargin,
 
     // chi-square drift: identical IEEE tree per (source, bucket) term —
     // the integer count/total divisions, the scientific-notation epsilon
@@ -1885,7 +1823,7 @@ object QueryCatalog {
     // DECIMAL-typed in DuckDB), and the per-bucket floor BEFORE the sum
     "token_drift" ->
       s"""WITH tok AS (SELECT source, unnest(string_split(text, ' ')) AS tok FROM documents),
-         |sb AS (SELECT source, ${h60sql("tok")} % 64 AS bucket, count(*) AS n_sb
+         |sb AS (SELECT source, ${h60("tok")} % 64 AS bucket, count(*) AS n_sb
          | FROM tok GROUP BY 1, 2),
          |g AS (SELECT bucket, SUM(n_sb) AS n_gb FROM sb GROUP BY 1),
          |t AS (SELECT source, SUM(n_sb) AS n_s FROM sb GROUP BY 1),
@@ -1913,7 +1851,7 @@ object QueryCatalog {
       s"""WITH t AS (SELECT doc_id, source,
          |  len(string_split(text, ' ')) AS w FROM documents),
          |u AS (SELECT doc_id, source, w,
-         |  (${h60sql("doc_id::VARCHAR || ':wsample'")} % 1073741824) + 1 AS u FROM t),
+         |  (${h60("doc_id::VARCHAR || ':wsample'")} % 1073741824) + 1 AS u FROM t),
          |r AS (SELECT doc_id, source, w,
          |  row_number() OVER (PARTITION BY source
          |    ORDER BY CAST(w AS DOUBLE) / u DESC, doc_id) AS rank
@@ -1923,7 +1861,7 @@ object QueryCatalog {
 
     "stratified_sample" ->
       s"""WITH b AS (SELECT doc_id, lang, source,
-         |  ${h60sql("doc_id::VARCHAR || ':strat'")} % 10000 AS bucket
+         |  ${h60("doc_id::VARCHAR || ':strat'")} % 10000 AS bucket
          | FROM documents)
          |SELECT doc_id, lang, source, bucket FROM b
          |WHERE bucket < (CASE lang WHEN 'en' THEN 4000 WHEN 'zh' THEN 8000 ELSE 10000 END)""".stripMargin,
@@ -1962,7 +1900,7 @@ object QueryCatalog {
     "lm_perplexity" ->
       s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
          |tk AS (SELECT doc_id, unnest(l) AS t FROM d),
-         |hb AS (SELECT doc_id, ${h60sql("t")} % 4096 AS bucket FROM tk),
+         |hb AS (SELECT doc_id, ${h60("t")} % 4096 AS bucket FROM tk),
          |tgt AS (SELECT bucket, count(*) AS c FROM hb
          |  JOIN documents USING (doc_id) WHERE source = 'src0' GROUP BY 1),
          |tot AS (SELECT CAST(coalesce(sum(c), 0) + 4096 AS BIGINT) AS num FROM tgt),
@@ -1978,7 +1916,7 @@ object QueryCatalog {
          |bg AS (SELECT doc_id,
          |  unnest(list_filter(list_transform(list_zip(l, l[2:]), s -> s[1] || ' ' || s[2]),
          |    x -> x IS NOT NULL)) AS bg FROM d),
-         |hb AS (SELECT doc_id, ${h60sql("bg")} % 64 AS bucket FROM bg),
+         |hb AS (SELECT doc_id, ${h60("bg")} % 64 AS bucket FROM bg),
          |tgt AS (SELECT bucket, count(*) AS c FROM hb
          |  JOIN documents USING (doc_id) WHERE source = 'src0' GROUP BY 1),
          |sc AS (SELECT hb.doc_id, count(*) AS n_bigrams,
@@ -1989,19 +1927,15 @@ object QueryCatalog {
          |FROM documents d0 LEFT JOIN sc ON d0.doc_id = sc.doc_id""".stripMargin,
 
     "domain_stats" ->
-      """WITH t AS (SELECT source, lang, string_split(text, ' ') AS toks,
-        |  length(text) AS n_chars,
-        |  length(text) - length(replace(text, ' ', '')) AS n_spaces
-        | FROM documents),
-        |q AS (SELECT source, lang, len(toks) AS n_tokens,
-        |  (len(toks) >= 15 AND (n_chars - n_spaces) / len(toks)::DOUBLE >= 2.0
-        |   AND len(list_filter(toks, x -> x IN ('the','and','a','of','to','in','over'))) * 20 >= len(toks)) AS ok
-        | FROM t)
-        |SELECT source, count(*) AS n_docs,
-        | CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-        | CAST(sum(CASE WHEN ok THEN 1 ELSE 0 END) AS BIGINT) AS n_pass,
-        | count(DISTINCT lang) AS n_langs
-        |FROM q GROUP BY 1""".stripMargin,
+      s"""WITH t AS (SELECT source, lang, ${OracleSql.qualitySignalsSql}
+         | FROM documents),
+         |q AS (SELECT source, lang, len(toks) AS n_tokens, ${OracleSql.qualityOkSql} AS ok
+         | FROM t)
+         |SELECT source, count(*) AS n_docs,
+         | CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
+         | CAST(sum(CASE WHEN ok THEN 1 ELSE 0 END) AS BIGINT) AS n_pass,
+         | count(DISTINCT lang) AS n_langs
+         |FROM q GROUP BY 1""".stripMargin,
 
     "token_histogram" ->
       """SELECT token, count(*) AS n_occ, count(DISTINCT doc_id) AS n_docs
@@ -2070,7 +2004,7 @@ object QueryCatalog {
 
     "ngram_novelty" ->
       s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-         |tg AS (SELECT DISTINCT doc_id, ${h60sql("tg")} AS h FROM (
+         |tg AS (SELECT DISTINCT doc_id, ${h60("tg")} AS h FROM (
          |  SELECT doc_id, unnest(list_filter(list_transform(
          |    list_zip(l, l[2:], l[3:]), s -> s[1] || ' ' || s[2] || ' ' || s[3]),
          |    x -> x IS NOT NULL)) AS tg FROM d)),
@@ -2082,7 +2016,7 @@ object QueryCatalog {
     "token_budget_mix" ->
       s"""WITH base AS (SELECT doc_id, source,
          |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-         |  ${h60sql("doc_id::VARCHAR || ':mix'")} % 4096 AS bucket
+         |  ${h60("doc_id::VARCHAR || ':mix'")} % 4096 AS bucket
          | FROM documents),
          |mass AS (SELECT source, bucket, CAST(sum(n_tokens) AS BIGINT) AS btoks
          | FROM base GROUP BY 1, 2),
@@ -2117,13 +2051,7 @@ object QueryCatalog {
       s"""WITH RECURSIVE ${bpeRecSql(30)},
          |t AS (SELECT doc_id,
          |  CAST(len(rep) - len(replace(rep, chr(1), '')) AS BIGINT) AS n_tokens FROM fin),
-         |p AS (SELECT doc_id, n_tokens,
-         |  COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix FROM t)
-         |SELECT CAST(prefix // 256 AS BIGINT) AS bin, count(*) AS n_docs,
-         | CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-         | min(doc_id) AS first_doc, max(doc_id) AS last_doc
-         |FROM p GROUP BY 1""".stripMargin,
+         |${OracleSql.packBinsSql(256)}""".stripMargin,
 
     "length_percentiles" ->
       """WITH l AS (SELECT len(string_split(text, ' ')) AS len FROM documents),
@@ -2135,14 +2063,11 @@ object QueryCatalog {
         |UNION ALL SELECT 0.99, CAST(FLOOR(q99 * 1000000.0) AS BIGINT) FROM q""".stripMargin,
 
     "substring_dedup" ->
-      s"""WITH d AS (SELECT doc_id,
-         |  CASE WHEN doc_id % 3 = 0 THEN '$ChunkFooter ' || text ELSE text END AS text
-         | FROM documents),
-         |t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM d),
+      s"""WITH ${OracleSql.plantedTokensSql("doc_id % 3 = 0", ChunkFooter)},
          |w AS (SELECT doc_id, toks,
          |  unnest(range(0, greatest(len(toks) - 8 + 1, 0))) AS i FROM t),
          |g AS (SELECT DISTINCT doc_id,
-         |  ${h60sql("array_to_string(toks[i + 1 : i + 8], ' ')")} AS h FROM w),
+         |  ${h60("array_to_string(toks[i + 1 : i + 8], ' ')")} AS h FROM w),
          |c AS (SELECT h, count(*) AS nd FROM g GROUP BY 1),
          |s AS (SELECT g.doc_id, count(*) AS n_windows,
          |  CAST(sum(CASE WHEN c.nd > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared
@@ -2154,35 +2079,12 @@ object QueryCatalog {
          |FROM documents d0 LEFT JOIN s ON d0.doc_id = s.doc_id""".stripMargin,
 
     "intradoc_dedup" ->
-      s"""WITH d AS (SELECT doc_id,
-         |  CASE WHEN doc_id % 4 = 0 THEN '$IntraPhrase $IntraPhrase ' || text ELSE text END AS text
-         | FROM documents),
-         |t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM d),
-         |i AS (SELECT doc_id, toks,
-         |  unnest(range(0, CAST(ceil(len(toks) / 10.0) AS BIGINT))) AS ci FROM t),
-         |c AS (SELECT doc_id, ci,
-         |  least(len(toks) - ci * 10, 10) AS n_tok,
-         |  array_to_string(toks[ci * 10 + 1 : ci * 10 + 10], ' ') AS chunk FROM i),
-         |r AS (SELECT doc_id, ci, n_tok,
-         |  row_number() OVER (PARTITION BY doc_id, chunk ORDER BY ci) AS rn FROM c)
-         |SELECT doc_id, count(*) AS n_chunks,
-         | CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_chunks,
-         | CAST(sum(CASE WHEN rn > 1 THEN 0 ELSE n_tok END) AS BIGINT) AS n_tokens_kept
-         |FROM r GROUP BY 1""".stripMargin,
+      s"""WITH ${OracleSql.plantedTokensSql("doc_id % 4 = 0", s"$IntraPhrase $IntraPhrase")},
+         |${OracleSql.fixedChunksSql(10)},
+         |${OracleSql.chunkKeepFirstSql("doc_id, chunk", "ci")}""".stripMargin,
 
     "semdedup" ->
-      s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         |cent AS (
-         | SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS d, e
-         | FROM v ORDER BY vec_id LIMIT 16),
-         |ad AS (
-         | SELECT v.vec_id, c.d,
-         |  list_dot_product(v.e, c.e) / sqrt(list_dot_product(c.e, c.e)) AS dot
-         | FROM v, cent c),
-         |assign AS (
-         | SELECT vec_id, d AS bucket FROM (
-         |  SELECT vec_id, d, row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, d) AS rn
-         |  FROM ad) WHERE rn = 1),
+      s"""WITH ${OracleSql.ivfAssignSql},
          |capped AS (SELECT vec_id, bucket FROM (
          |  SELECT vec_id, bucket, count(*) OVER (PARTITION BY bucket) AS bsz
          |  FROM assign) WHERE bsz <= 4096),
@@ -2203,29 +2105,18 @@ object QueryCatalog {
         |FROM documents""".stripMargin,
 
     "doc_fingerprint" ->
-      s"SELECT doc_id, ${h60sql("text")} AS fingerprint FROM documents",
+      s"SELECT doc_id, ${h60("text")} AS fingerprint FROM documents",
 
     "doc_fingerprint_rolling" ->
       s"""WITH ${sqlShingleCte(3).replace("SELECT DISTINCT", "SELECT")},
-         |h AS (SELECT doc_id, ${h60sql("sh")} AS h FROM sh)
+         |h AS (SELECT doc_id, ${h60("sh")} AS h FROM sh)
          |SELECT doc_id, min(h) AS fp_min, max(h) AS fp_max,
          | CAST(SUM(h % 1000000007) % 1000000007 AS BIGINT) AS fp_fold,
          | count(*) AS n_windows
          |FROM h GROUP BY 1""".stripMargin,
 
     "dedup_simhash" ->
-      s"""WITH tok AS (
-         | SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-         |), h AS (
-         | SELECT doc_id, ${h60sql("tok")} AS h FROM tok
-         |), bits AS (
-         | SELECT doc_id, b.b AS b,
-         |  SUM(((h >> b.b) & 1) * 2 - 1) AS s
-         | FROM h, range(0, 60) b(b) GROUP BY 1, 2
-         |)
-         |SELECT doc_id,
-         | CAST(SUM(CASE WHEN s > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS simhash
-         |FROM bits GROUP BY 1""".stripMargin,
+      s"WITH ${OracleSql.simhashSql(withTh = false)}\nSELECT doc_id, h AS simhash FROM sig",
 
     "multimodal_extract" ->
       """SELECT doc_id,
@@ -2250,20 +2141,15 @@ object QueryCatalog {
     },
 
     "text_quality" ->
-      """WITH t AS (
-        | SELECT doc_id, text, string_split(text, ' ') AS toks,
-        |  length(text) AS n_chars,
-        |  length(text) - length(replace(text, ' ', '')) AS n_spaces
-        | FROM documents)
-        |SELECT doc_id, n_chars,
-        | len(toks)::INT AS n_tokens,
-        | len(list_filter(toks, x -> x IN ('the','and','a','of','to','in','over')))::INT AS n_stopwords,
-        | len(list_filter(toks, x -> length(x) <= 2))::INT AS n_short_tokens,
-        | n_spaces,
-        | CAST(FLOOR((n_chars - n_spaces) / len(toks)::DOUBLE * 1000000.0) AS BIGINT) AS mean_token_len_fp,
-        | (len(toks) >= 15 AND (n_chars - n_spaces) / len(toks)::DOUBLE >= 2.0
-        |   AND len(list_filter(toks, x -> x IN ('the','and','a','of','to','in','over'))) * 20 >= len(toks)) AS quality_ok
-        |FROM t""".stripMargin,
+      s"""WITH t AS (SELECT doc_id, ${OracleSql.qualitySignalsSql} FROM documents)
+         |SELECT doc_id, n_chars,
+         | len(toks)::INT AS n_tokens,
+         | len(list_filter(toks, x -> x IN ${OracleSql.QualityStopwords}))::INT AS n_stopwords,
+         | len(list_filter(toks, x -> length(x) <= 2))::INT AS n_short_tokens,
+         | n_spaces,
+         | CAST(FLOOR((n_chars - n_spaces) / len(toks)::DOUBLE * 1000000.0) AS BIGINT) AS mean_token_len_fp,
+         | ${OracleSql.qualityOkSql} AS quality_ok
+         |FROM t""".stripMargin,
 
     // hashed-bigram linear classifier: weights = Σ (±1 per labeled-doc
     // bigram occurrence) per 4096-bucket, trained on the doc_id%5 slice
@@ -2272,28 +2158,28 @@ object QueryCatalog {
     // score = Σ w[h(bigram)] over every doc's bigram occurrences. All
     // integers — the engine's h60Jvm is the same md5-15-hex fingerprint.
     "model_quality" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS l FROM documents),
-        |lab AS (SELECT doc_id, l,
-        |  (len(l) >= 15 AND length(replace(text, ' ', '')) >= 2 * len(l)
-        |    AND len(list_filter(l, x -> x IN ('the','and','a','of','to','in','over'))) * 20 >= len(l)) AS y_pos
-        | FROM t WHERE doc_id % 5 = 0),
-        |lbg AS (SELECT y_pos,
-        |  unnest(list_transform(list_zip(l, l[2:]), s -> s[1] || ' ' || s[2])) AS bg
-        | FROM lab),
-        |w AS (SELECT CAST(('0x' || substring(md5(bg), 1, 15)) AS BIGINT) % 4096 AS h,
-        |  SUM(CASE WHEN y_pos THEN 1 ELSE -1 END) AS w
-        | FROM lbg WHERE bg IS NOT NULL GROUP BY 1),
-        |sbg AS (SELECT doc_id,
-        |  unnest(list_transform(list_zip(l, l[2:]), s -> s[1] || ' ' || s[2])) AS bg
-        | FROM t),
-        |sco AS (SELECT s.doc_id, SUM(w.w) AS sc
-        | FROM sbg s JOIN w
-        |  ON w.h = CAST(('0x' || substring(md5(s.bg), 1, 15)) AS BIGINT) % 4096
-        | WHERE s.bg IS NOT NULL
-        | GROUP BY 1)
-        |SELECT t.doc_id, CAST(COALESCE(sco.sc, 0) AS BIGINT) AS score,
-        | COALESCE(sco.sc, 0) >= 0 AS model_ok
-        |FROM t LEFT JOIN sco ON sco.doc_id = t.doc_id""".stripMargin,
+      s"""WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS l FROM documents),
+         |lab AS (SELECT doc_id, l,
+         |  (len(l) >= 15 AND length(replace(text, ' ', '')) >= 2 * len(l)
+         |    AND len(list_filter(l, x -> x IN ${OracleSql.QualityStopwords})) * 20 >= len(l)) AS y_pos
+         | FROM t WHERE doc_id % 5 = 0),
+         |lbg AS (SELECT y_pos,
+         |  unnest(list_transform(list_zip(l, l[2:]), s -> s[1] || ' ' || s[2])) AS bg
+         | FROM lab),
+         |w AS (SELECT ${h60("bg")} % 4096 AS h,
+         |  SUM(CASE WHEN y_pos THEN 1 ELSE -1 END) AS w
+         | FROM lbg WHERE bg IS NOT NULL GROUP BY 1),
+         |sbg AS (SELECT doc_id,
+         |  unnest(list_transform(list_zip(l, l[2:]), s -> s[1] || ' ' || s[2])) AS bg
+         | FROM t),
+         |sco AS (SELECT s.doc_id, SUM(w.w) AS sc
+         | FROM sbg s JOIN w
+         |  ON w.h = ${h60("s.bg")} % 4096
+         | WHERE s.bg IS NOT NULL
+         | GROUP BY 1)
+         |SELECT t.doc_id, CAST(COALESCE(sco.sc, 0) AS BIGINT) AS score,
+         | COALESCE(sco.sc, 0) >= 0 AS model_ok
+         |FROM t LEFT JOIN sco ON sco.doc_id = t.doc_id""".stripMargin,
 
     "domain_pagerank" -> pageRankSql(10),
 
@@ -2320,19 +2206,7 @@ object QueryCatalog {
          |hh AS (SELECT doc_id,
          |  SUM(CASE WHEN bset THEN (1::BIGINT << bit) ELSE 0 END)::BIGINT AS h
          | FROM bits GROUP BY 1),
-         |blocks AS (SELECT doc_id, h, q.q AS q, (h >> (q.q * 15)) & 32767 AS qk
-         | FROM hh, range(0, 4) q(q)),
-         |hot AS (SELECT q, qk FROM (
-         |  SELECT q, qk, count(DISTINCT h) AS df FROM blocks GROUP BY 1, 2)
-         | WHERE df > ${Dedup.QuarterDfCap}),
-         |blk AS (SELECT b.doc_id, b.h, b.q, b.qk
-         | FROM blocks b ANTI JOIN hot t ON b.q = t.q AND b.qk = t.qk),
-         |cand AS (SELECT DISTINCT x.doc_id AS doc_a, x.h AS ha,
-         |  y.doc_id AS doc_b, y.h AS hb
-         | FROM blk x JOIN blk y
-         |  ON x.q = y.q AND x.qk = y.qk AND x.doc_id < y.doc_id)
-         |SELECT doc_a, doc_b, bit_count(xor(ha, hb))::INT AS hamming
-         |FROM cand WHERE bit_count(xor(ha, hb)) <= 4""".stripMargin,
+         |${OracleSql.quarterPairsSql("hh", "h", Dedup.QuarterDfCap, 4)}""".stripMargin,
 
     // bigram list via zip-with-shifted-self; the zip's NULL-padded tail is
     // filtered before the distinct. Bigrams are hashed to the 60-bit md5
@@ -2341,36 +2215,18 @@ object QueryCatalog {
     // Pass-flag thresholds are the Spark side's integer comparisons
     // verbatim.
     "text_quality_gopher" ->
-      """WITH d AS (SELECT doc_id, text, string_split(text, ' ') AS l FROM documents),
-        |w AS (
-        | SELECT doc_id,
-        |  len(l) AS n_words,
-        |  length(replace(text, ' ', '')) AS n_letters,
-        |  len(list_filter(l, x -> regexp_matches(x, '[a-z]'))) AS n_alpha_words,
-        |  len(list_filter(l, x -> x IN ('the','be','to','of','and','that','have','with'))) AS n_stop,
-        |  (length(text) - length(replace(text, '#', '')))
-        |   + (length(text) - length(replace(text, '...', ''))) // 3 AS n_symbols,
-        |  greatest(len(l) - 1, 0) AS n_bigrams,
-        |  greatest(len(l) - 1, 0) - len(list_distinct(list_transform(list_filter(
-        |    list_transform(list_zip(l, l[2:]), s -> s[1] || ' ' || s[2]),
-        |    x -> x IS NOT NULL),
-        |    x -> CAST(('0x' || substring(md5(x), 1, 15)) AS BIGINT)))) AS n_dup_bigrams
-        | FROM d)
-        |SELECT doc_id,
-        | CAST(n_words AS BIGINT) AS n_words,
-        | CAST(n_letters AS BIGINT) AS n_letters,
-        | CAST(n_alpha_words AS BIGINT) AS n_alpha_words,
-        | CAST(n_stop AS BIGINT) AS n_stop,
-        | CAST(n_symbols AS BIGINT) AS n_symbols,
-        | CAST(n_bigrams AS BIGINT) AS n_bigrams,
-        | CAST(n_dup_bigrams AS BIGINT) AS n_dup_bigrams,
-        | (n_words >= 15 AND n_words <= 100000
-        |  AND n_letters >= n_words * 3 AND n_letters <= n_words * 10
-        |  AND n_symbols * 10 <= n_words
-        |  AND n_alpha_words * 5 >= n_words * 4
-        |  AND n_stop >= 1
-        |  AND n_dup_bigrams * 5 <= n_bigrams) AS gopher_ok
-        |FROM w""".stripMargin,
+      s"""WITH d AS (SELECT doc_id, text, string_split(text, ' ') AS l FROM documents),
+         |w AS (SELECT doc_id, ${OracleSql.gopherSignalsSql} FROM d)
+         |SELECT doc_id,
+         | CAST(n_words AS BIGINT) AS n_words,
+         | CAST(n_letters AS BIGINT) AS n_letters,
+         | CAST(n_alpha_words AS BIGINT) AS n_alpha_words,
+         | CAST(n_stop AS BIGINT) AS n_stop,
+         | CAST(n_symbols AS BIGINT) AS n_symbols,
+         | CAST(n_bigrams AS BIGINT) AS n_bigrams,
+         | CAST(n_dup_bigrams AS BIGINT) AS n_dup_bigrams,
+         | ${OracleSql.gopherOkSql} AS gopher_ok
+         |FROM w""".stripMargin,
 
     // per-doc shingles are DISTINCT, so the hit count equals the Spark
     // side's distinct-matched-grams accounting
@@ -2385,14 +2241,14 @@ object QueryCatalog {
         | COALESCE(h.n, 0) > 0 AS contaminated
         |FROM documents d LEFT JOIN hits h USING (doc_id)""".stripMargin,
 
-    "dedup_minhash" -> sqlMinhashSig,
+    "dedup_minhash" -> s"WITH ${sqlShingleCte(3)} ${OracleSql.minhashSql(Seq("doc_id"), 8)}",
 
     "dedup_minhash_lsh" -> {
       val bandKeys = (0 until 4).map(b =>
         s"SELECT doc_id, th, $b AS band, md5(mh_${2 * b}::VARCHAR || '_' || mh_${2 * b + 1}::VARCHAR) AS band_key FROM m")
         .mkString(" UNION ALL ")
       s"""WITH ${sqlShingleCte(3)},
-         |m AS (${sqlMinhashFromShTh}),
+         |m AS (${OracleSql.minhashSql(Seq("doc_id", "th"), 8)}),
          |bands AS ($bandKeys),
          |hot AS (
          | SELECT band, band_key FROM (
@@ -2405,19 +2261,7 @@ object QueryCatalog {
          | SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
          | FROM blk x JOIN blk y
          |  ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-         |inter AS (
-         | SELECT c.doc_a, c.doc_b, count(*) AS n_common
-         | FROM cand c
-         | JOIN sh sa ON sa.doc_id = c.doc_a
-         | JOIN sh sb ON sb.doc_id = c.doc_b AND sb.sh = sa.sh
-         | GROUP BY 1, 2)
-         |SELECT i.doc_a, i.doc_b, i.n_common AS jaccard_num,
-         | na.n + nb.n - i.n_common AS jaccard_den
-         |FROM inter i
-         |JOIN sizes na ON na.doc_id = i.doc_a
-         |JOIN sizes nb ON nb.doc_id = i.doc_b
-         |WHERE i.n_common >= (na.n + nb.n - i.n_common) * 0.4""".stripMargin
+         |${OracleSql.jaccardVerifySql(0.4)}""".stripMargin
     },
 
     "dedup_ngram_jaccard" ->
@@ -2429,19 +2273,7 @@ object QueryCatalog {
          |cand AS (
          | SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
          | FROM blk x JOIN blk y ON x.sh = y.sh AND x.doc_id < y.doc_id),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-         |inter AS (
-         | SELECT c.doc_a, c.doc_b, count(*) AS n_common
-         | FROM cand c
-         | JOIN sh sa ON sa.doc_id = c.doc_a
-         | JOIN sh sb ON sb.doc_id = c.doc_b AND sb.sh = sa.sh
-         | GROUP BY 1, 2)
-         |SELECT i.doc_a, i.doc_b, i.n_common AS jaccard_num,
-         | na.n + nb.n - i.n_common AS jaccard_den
-         |FROM inter i
-         |JOIN sizes na ON na.doc_id = i.doc_a
-         |JOIN sizes nb ON nb.doc_id = i.doc_b
-         |WHERE i.n_common >= (na.n + nb.n - i.n_common) * 0.25""".stripMargin,
+         |${OracleSql.jaccardVerifySql(0.25)}""".stripMargin,
 
     "dedup_simhash_pairs" -> sqlSimhashPairs,
 
@@ -2474,19 +2306,7 @@ object QueryCatalog {
          |hh AS (SELECT doc_id,
          |  SUM(CASE WHEN bset THEN (1::BIGINT << bit) ELSE 0 END)::BIGINT AS h
          | FROM bits GROUP BY 1),
-         |blocks AS (SELECT doc_id, h, q.q AS q, (h >> (q.q * 15)) & 32767 AS qk
-         | FROM hh, range(0, 4) q(q)),
-         |hot AS (SELECT q, qk FROM (
-         |  SELECT q, qk, count(DISTINCT h) AS df FROM blocks GROUP BY 1, 2)
-         | WHERE df > ${Dedup.QuarterDfCap}),
-         |blk AS (SELECT b.doc_id, b.h, b.q, b.qk
-         | FROM blocks b ANTI JOIN hot t ON b.q = t.q AND b.qk = t.qk),
-         |cand AS (SELECT DISTINCT x.doc_id AS doc_a, x.h AS ha,
-         |  y.doc_id AS doc_b, y.h AS hb
-         | FROM blk x JOIN blk y
-         |  ON x.q = y.q AND x.qk = y.qk AND x.doc_id < y.doc_id)
-         |SELECT doc_a, doc_b, bit_count(xor(ha, hb))::INT AS hamming
-         |FROM cand WHERE bit_count(xor(ha, hb)) <= 6""".stripMargin,
+         |${OracleSql.quarterPairsSql("hh", "h", Dedup.QuarterDfCap, 6)}""".stripMargin,
 
     // connected components over the simhash near-dup pairs: transitive
     // closure by recursive CTE (every node collects all reachable labels,
@@ -2494,14 +2314,7 @@ object QueryCatalog {
     // Spark min-label propagation converges to)
     "dedup_clusters" ->
       s"""WITH RECURSIVE pairs AS ($sqlSimhashPairs),
-         |edges AS (
-         | SELECT doc_a AS u, doc_b AS v FROM pairs
-         | UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |walk(node, label) AS (
-         | SELECT u, u FROM edges
-         | UNION
-         | SELECT e.u, w.label FROM edges e JOIN walk w ON w.node = e.v),
-         |comp AS (SELECT node, min(label) AS rep FROM walk GROUP BY node)
+         |${OracleSql.componentsSql("pairs", "doc_a", "doc_b")}
          |SELECT d.doc_id, CAST(coalesce(c.rep, d.doc_id) AS BIGINT) AS cluster_rep
          |FROM documents d LEFT JOIN comp c ON c.node = d.doc_id""".stripMargin,
 
@@ -2509,14 +2322,7 @@ object QueryCatalog {
     // recursive-walk clustering (the Spark side is a min-struct groupBy)
     "dedup_keep_best" ->
       s"""WITH RECURSIVE pairs AS ($sqlSimhashPairs),
-         |edges AS (
-         | SELECT doc_a AS u, doc_b AS v FROM pairs
-         | UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |walk(node, label) AS (
-         | SELECT u, u FROM edges
-         | UNION
-         | SELECT e.u, w.label FROM edges e JOIN walk w ON w.node = e.v),
-         |comp AS (SELECT node, min(label) AS rep FROM walk GROUP BY node),
+         |${OracleSql.componentsSql("pairs", "doc_a", "doc_b")},
          |cl AS (SELECT d.doc_id, coalesce(c.rep, d.doc_id) AS cluster_rep,
          |   length(d.text) AS n_chars
          | FROM documents d LEFT JOIN comp c ON c.node = d.doc_id),
@@ -2603,27 +2409,8 @@ object QueryCatalog {
     },
 
     "ann_ivf" ->
-      s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         |cent AS (
-         | SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS d, e
-         | FROM v ORDER BY vec_id LIMIT 16),
-         |ad AS (
-         | SELECT v.vec_id, c.d,
-         |  list_dot_product(v.e, c.e) / sqrt(list_dot_product(c.e, c.e)) AS dot
-         | FROM v, cent c),
-         |assign AS (
-         | SELECT vec_id, d AS bucket FROM (
-         |  SELECT vec_id, d, row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, d) AS rn
-         |  FROM ad) WHERE rn = 1),
-         |q AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < 5),
-         |qd AS (
-         | SELECT q.qid, c.d,
-         |  list_dot_product(q.qe, c.e) / sqrt(list_dot_product(c.e, c.e)) AS dot
-         | FROM q, cent c),
-         |qprobe AS (
-         | SELECT qid, d AS bucket FROM (
-         |  SELECT qid, d, row_number() OVER (PARTITION BY qid ORDER BY dot DESC, d DESC) AS rn
-         |  FROM qd) WHERE rn <= 4),
+      s"""WITH ${OracleSql.ivfAssignSql},
+         |${OracleSql.ivfProbeSql},
          |cand AS (
          | SELECT q.qid, v.vec_id, $sqlCosine AS cos
          | FROM qprobe p
@@ -2723,22 +2510,13 @@ object QueryCatalog {
          |   AND col_off < 400 AND col_off + win_width > 300)""".stripMargin,
 
     "jpg_chips" ->
-      s"""WITH grid AS ($sqlTileGrid),
-         |px AS (
-         | SELECT i, j,
-         |  CAST(CAST((b.b * 7 + (row_off + y.y) * 13 + (col_off + x.x)) % 256 AS REAL) / CAST(850 AS REAL) AS DOUBLE) AS v
-         | FROM grid, range(0, 128) y(y), range(0, 128) x(x), range(1, 4) b(b))
+      s"""WITH ${OracleSql.luxPixelsSql(3, "DOUBLE")}
          |SELECT i, j, 'lux1_' || i || '_' || j || '.jpg' AS filename, 3 AS n_bands,
-         | CAST(SUM(CAST(trunc(((CASE WHEN v < 0.05 THEN 0.05 WHEN v > 0.25 THEN 0.25 ELSE v END) - 0.05)
-         |   / (0.25 - 0.05) * 254.0 + 1.0) AS BIGINT)) AS BIGINT) AS sum_u8
+         | CAST(SUM(${OracleSql.u8Sql("0.05", "0.25")}) AS BIGINT) AS sum_u8
          |FROM px GROUP BY 1, 2""".stripMargin,
 
     "mosaic_sum" ->
-      s"""WITH grid AS ($sqlTileGrid),
-         |px AS (
-         | SELECT i, j,
-         |  CAST(CAST((b.b * 7 + (row_off + y.y) * 13 + (col_off + x.x)) % 256 AS REAL) / CAST(850 AS REAL) AS DOUBLE) AS v
-         | FROM grid, range(0, 128) y(y), range(0, 128) x(x), range(1, 5) b(b))
+      s"""WITH ${OracleSql.luxPixelsSql(4, "DOUBLE")}
          |SELECT i, j, CAST(FLOOR(SUM(v) * 100.0) AS BIGINT) AS sum_fp
          |FROM px GROUP BY 1, 2""".stripMargin,
 
@@ -2754,47 +2532,11 @@ object QueryCatalog {
         |SELECT 'pending_asof_s1', r.range, CAST(-1 AS BIGINT)
         |FROM range(0, 60) r WHERE r.range % 3 <> 0 OR r.range >= 30""".stripMargin,
 
-    "extract_chips" ->
-      s"""WITH grid AS ($sqlTileGrid),
-         |${OracleSql.extentCountCte(labelRings)},
-         |kept AS (
-         | SELECT g.i, g.j,
-         |  $C + g.col_off * $A AS minx,
-         |  $F + (g.row_off + g.win_height) * ($E) AS miny,
-         |  $C + (g.col_off + g.win_width) * $A AS maxx,
-         |  $F + g.row_off * ($E) AS maxy
-         | FROM grid g JOIN extcnt e ON e.i = g.i AND e.j = g.j
-         | WHERE e.n_ext > 0
-         |  AND $C + g.col_off * $A <= ${aoiB._3}
-         |  AND $C + (g.col_off + g.win_width) * $A >= ${aoiB._1}
-         |  AND $F + (g.row_off + g.win_height) * ($E) <= ${aoiB._4}
-         |  AND $F + g.row_off * ($E) >= ${aoiB._2})
-         |SELECT CAST(row_number() OVER (ORDER BY i, j) - 1 AS BIGINT) AS id,
-         | CAST(i AS INT) AS x, CAST(j AS INT) AS y, minx, miny, maxx, maxy,
-         | 'lux1_' || CAST(i AS VARCHAR) || '_' || CAST(j AS VARCHAR) || '.tif' AS filename
-         |FROM kept""".stripMargin,
+    "extract_chips" -> OracleSql.chipsInAoi(labelRings, aoiB, within = false),
 
     // within = the AOI box contains the tile bbox: all four bound
     // inequalities flip direction relative to the intersects form above
-    "extract_chips_within" ->
-      s"""WITH grid AS ($sqlTileGrid),
-         |${OracleSql.extentCountCte(labelRings)},
-         |kept AS (
-         | SELECT g.i, g.j,
-         |  $C + g.col_off * $A AS minx,
-         |  $F + (g.row_off + g.win_height) * ($E) AS miny,
-         |  $C + (g.col_off + g.win_width) * $A AS maxx,
-         |  $F + g.row_off * ($E) AS maxy
-         | FROM grid g JOIN extcnt e ON e.i = g.i AND e.j = g.j
-         | WHERE e.n_ext > 0
-         |  AND $C + g.col_off * $A >= ${aoiB._1}
-         |  AND $C + (g.col_off + g.win_width) * $A <= ${aoiB._3}
-         |  AND $F + (g.row_off + g.win_height) * ($E) >= ${aoiB._2}
-         |  AND $F + g.row_off * ($E) <= ${aoiB._4})
-         |SELECT CAST(row_number() OVER (ORDER BY i, j) - 1 AS BIGINT) AS id,
-         | CAST(i AS INT) AS x, CAST(j AS INT) AS y, minx, miny, maxx, maxy,
-         | 'lux1_' || CAST(i AS VARCHAR) || '_' || CAST(j AS VARCHAR) || '.tif' AS filename
-         |FROM kept""".stripMargin,
+    "extract_chips_within" -> OracleSql.chipsInAoi(labelRings, aoiB, within = true),
 
     // slot s holds original band bands[bands[s]] — the self-join composes
     // the permutation twice, re-deriving the chips.py:337 quirk
@@ -2817,17 +2559,9 @@ object QueryCatalog {
     "generalize_3857_dp" -> {
       def mx(lon: String) = s"CAST(FLOOR(radians($lon) * 6378137.0 * 100.0) AS BIGINT)"
       def my(lat: String) = s"CAST(FLOOR(ln(tan(${math.Pi / 4.0} + radians($lat) / 2.0)) * 6378137.0 * 100.0) AS BIGINT)"
-      s"""SELECT 255 AS dn,
-         | ${mx(s"($C + 100 * $A)")} AS minx_fp,
-         | ${my(s"($F + 60 * ($E))")} AS miny_fp,
-         | ${mx(s"(($C + 128 * $A) + 32 * $A)")} AS maxx_fp,
-         | ${my(s"($F + 20 * ($E))")} AS maxy_fp
-         |UNION ALL
-         |SELECT 255,
-         | ${mx(s"(($C + 256 * $A) + 44 * $A)")},
-         | ${my(s"(($F + 88 * ($E)) + 112 * ($E))")},
-         | ${mx(s"(($C + 355 * $A) + 45 * $A)")},
-         | ${my(s"(($F + 88 * ($E)) + 62 * ($E))")}""".stripMargin
+      OracleSql.blobBounds.map { case (x0, y0, x1, y1) =>
+        s"SELECT 255 AS dn, ${mx(x0)} AS minx_fp, ${my(y0)} AS miny_fp, ${mx(x1)} AS maxx_fp, ${my(y1)} AS maxy_fp"
+      }.mkString("\nUNION ALL\n")
     },
 
     "streaming_join" ->
@@ -2842,58 +2576,29 @@ object QueryCatalog {
          | SELECT doc_id, lang,
          |  CAST(len(string_split(text, ' ')) + 3
          |       + CASE WHEN doc_id % 4 = 0 THEN 2 ELSE 0 END AS INT) AS n_tokens,
-         |  ${h60sql("CAST(doc_id AS VARCHAR)")} % 100 AS bucket
+         |  ${OracleSql.docSplitSql} AS split
          | FROM documents)
-         |SELECT CASE WHEN bucket < 80 THEN 'train'
-         |            WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split,
-         | lang, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
+         |SELECT split, lang, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
          |FROM t WHERE n_tokens >= 20 GROUP BY 1, 2""".stripMargin,
 
     "pipeline_llm" ->
-      s"""WITH pf AS (SELECT DISTINCT ${h60sql("text")} AS fp FROM documents WHERE doc_id % 5 = 0),
-         |fresh AS (SELECT d0.* FROM (SELECT *, ${h60sql("text")} AS fp0 FROM documents) d0
+      s"""WITH pf AS (SELECT DISTINCT ${h60("text")} AS fp FROM documents WHERE doc_id % 5 = 0),
+         |fresh AS (SELECT d0.* FROM (SELECT *, ${h60("text")} AS fp0 FROM documents) d0
          |  WHERE NOT EXISTS (SELECT 1 FROM pf WHERE pf.fp = d0.fp0)),
          |d AS (SELECT doc_id, lang, source, text, string_split(text, ' ') AS l FROM fresh),
-         |w AS (
-         | SELECT doc_id, lang, source,
-         |  len(l) AS n_words,
-         |  length(replace(text, ' ', '')) AS n_letters,
-         |  len(list_filter(l, x -> regexp_matches(x, '[a-z]'))) AS n_alpha_words,
-         |  len(list_filter(l, x -> x IN ('the','be','to','of','and','that','have','with'))) AS n_stop,
-         |  (length(text) - length(replace(text, '#', '')))
-         |   + (length(text) - length(replace(text, '...', ''))) // 3 AS n_symbols,
-         |  greatest(len(l) - 1, 0) AS n_bigrams,
-         |  greatest(len(l) - 1, 0) - len(list_distinct(list_transform(list_filter(
-         |    list_transform(list_zip(l, l[2:]), s -> s[1] || ' ' || s[2]),
-         |    x -> x IS NOT NULL),
-         |    x -> CAST(('0x' || substring(md5(x), 1, 15)) AS BIGINT)))) AS n_dup_bigrams
-         | FROM d),
-         |ok AS (SELECT doc_id, lang, source, n_words FROM w
-         | WHERE n_words >= 15 AND n_words <= 100000
-         |  AND n_letters >= n_words * 3 AND n_letters <= n_words * 10
-         |  AND n_symbols * 10 <= n_words
-         |  AND n_alpha_words * 5 >= n_words * 4
-         |  AND n_stop >= 1
-         |  AND n_dup_bigrams * 5 <= n_bigrams),
+         |w AS (SELECT doc_id, lang, source, ${OracleSql.gopherSignalsSql} FROM d),
+         |ok AS (SELECT doc_id, lang, source, n_words FROM w WHERE ${OracleSql.gopherOkSql}),
          |samp AS (SELECT doc_id, source, n_words FROM ok
-         | WHERE ${h60sql("doc_id::VARCHAR || ':strat'")} % 10000 <
+         | WHERE ${h60("doc_id::VARCHAR || ':strat'")} % 10000 <
          |  (CASE lang WHEN 'en' THEN 5000 ELSE 10000 END))
          |SELECT source, count(*) AS n_docs, CAST(sum(n_words) AS BIGINT) AS sum_words
          |FROM samp GROUP BY 1""".stripMargin,
 
     "sequence_pack" ->
-      """WITH t AS (
-        | SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        | FROM documents),
-        |p AS (
-        | SELECT doc_id, n_tokens,
-        |  COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix
-        | FROM t)
-        |SELECT CAST(prefix // 256 AS BIGINT) AS bin, count(*) AS n_docs,
-        | CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-        | min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        |FROM p GROUP BY 1""".stripMargin,
+      s"""WITH t AS (
+         | SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+         | FROM documents),
+         |${OracleSql.packBinsSql(256)}""".stripMargin,
 
     // the redacted length is pure arithmetic: ' contact user<a>@mail<b>.com
     // now' collapses to ' contact <EMAIL> now' (+20 over the base text) and
@@ -2906,13 +2611,8 @@ object QueryCatalog {
         |FROM documents""".stripMargin,
 
     "dataset_split" ->
-      s"""WITH d AS (
-         | SELECT doc_id,
-         |  ${h60sql("CAST(doc_id AS VARCHAR)")} % 100 AS bucket
-         | FROM documents)
-         |SELECT CASE WHEN bucket < 80 THEN 'train'
-         |            WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split,
-         | count(*) AS n_docs, CAST(sum(doc_id) AS BIGINT) AS sum_ids
+      s"""WITH d AS (SELECT doc_id, ${OracleSql.docSplitSql} AS split FROM documents)
+         |SELECT split, count(*) AS n_docs, CAST(sum(doc_id) AS BIGINT) AS sum_ids
          |FROM d GROUP BY 1""".stripMargin,
 
     // the canonical form is predicted analytically (the casing/port/utm/
@@ -2949,18 +2649,12 @@ object QueryCatalog {
 
     "multimodal_frames" -> OracleSql.multimodalFrames,
 
-    "polygonize_dissolve" ->
-      s"""SELECT 255 AS dn, CAST(2400 AS BIGINT) AS n_px,
-         | CAST(FLOOR(($C + 100 * $A) * 1000000.0) AS BIGINT) AS minx_fp,
-         | CAST(FLOOR(($F + 60 * ($E)) * 1000000.0) AS BIGINT) AS miny_fp,
-         | CAST(FLOOR((($C + 128 * $A) + 32 * $A) * 1000000.0) AS BIGINT) AS maxx_fp,
-         | CAST(FLOOR(($F + 20 * ($E)) * 1000000.0) AS BIGINT) AS maxy_fp
-         |UNION ALL
-         |SELECT 255, CAST(5000 AS BIGINT),
-         | CAST(FLOOR((($C + 256 * $A) + 44 * $A) * 1000000.0) AS BIGINT),
-         | CAST(FLOOR((($F + 88 * ($E)) + 112 * ($E)) * 1000000.0) AS BIGINT),
-         | CAST(FLOOR((($C + 355 * $A) + 45 * $A) * 1000000.0) AS BIGINT),
-         | CAST(FLOOR((($F + 88 * ($E)) + 62 * ($E)) * 1000000.0) AS BIGINT)""".stripMargin,
+    "polygonize_dissolve" -> {
+      def fp(v: String) = s"CAST(FLOOR($v * 1000000.0) AS BIGINT)"
+      OracleSql.blobBounds.zip(Seq(2400, 5000)).map { case ((x0, y0, x1, y1), nPx) =>
+        s"SELECT 255 AS dn, CAST($nPx AS BIGINT) AS n_px, ${fp(x0)} AS minx_fp, ${fp(y0)} AS miny_fp, ${fp(x1)} AS maxx_fp, ${fp(y1)} AS maxy_fp"
+      }.mkString("\nUNION ALL\n")
+    },
 
     "cell_compact" -> cellCompactSql(8, 4),
 
@@ -2978,9 +2672,7 @@ object QueryCatalog {
     // Spark-side overflow guard certifies the BIGINT casts are lossless
     "moran_i" -> {
       val res = 5
-      s"""WITH pts AS (SELECT ${sqlXIndex(sqlLon, res)} AS xi,
-         |   ${sqlYIndex(sqlLat, res)} AS yi FROM documents),
-         |h AS (SELECT xi, yi, count(*) AS x FROM pts GROUP BY 1, 2),
+      s"""WITH ${cellCountsSql(res)},
          |st AS (SELECT count(*) AS n, sum(x) AS s FROM h),
          |d AS (SELECT xi, yi, st.n * h.x - st.s AS d FROM h CROSS JOIN st),
          |offs(dx, dy) AS (VALUES (-1,-1),(-1,0),(-1,1),(0,-1),(0,1),(1,-1),(1,0),(1,1)),
@@ -2997,9 +2689,7 @@ object QueryCatalog {
     // focal statistics: 9-offset scatter-gather over occupied cells only
     "cell_focal" -> {
       val res = 5
-      s"""WITH pts AS (SELECT ${sqlXIndex(sqlLon, res)} AS xi,
-         |   ${sqlYIndex(sqlLat, res)} AS yi FROM documents),
-         |h AS (SELECT xi, yi, count(*) AS x FROM pts GROUP BY 1, 2),
+      s"""WITH ${cellCountsSql(res)},
          |offs(dx, dy) AS (VALUES (-1,-1),(-1,0),(-1,1),(0,-1),(0,0),(0,1),(1,-1),(1,0),(1,1)),
          |c AS (SELECT h.xi + o.dx AS nxi, h.yi + o.dy AS nyi,
          |   sum(h.x) AS focal_sum, count(*) AS focal_n
@@ -3015,21 +2705,14 @@ object QueryCatalog {
     // ids via the interleave twin
     "cell_clusters" -> {
       val res = 4; val minCount = 3
-      s"""WITH RECURSIVE pts AS (SELECT ${sqlXIndex(sqlLon, res)} AS xi,
-         |   ${sqlYIndex(sqlLat, res)} AS yi FROM documents),
-         |h AS (SELECT xi, yi, count(*) AS x FROM pts GROUP BY 1, 2),
+      s"""WITH RECURSIVE ${cellCountsSql(res)},
          |dn AS (SELECT xi, yi, x, ${sqlInterleave("xi", "yi", res)} AS cell
          | FROM h WHERE x >= $minCount),
          |offs(dx, dy) AS (VALUES (1,-1),(1,0),(1,1),(0,1)),
          |e0 AS (SELECT a.cell AS u, b.cell AS v
          | FROM dn a CROSS JOIN offs o
          | JOIN dn b ON b.xi = a.xi + o.dx AND b.yi = a.yi + o.dy),
-         |edges AS (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
-         |walk(node, label) AS (
-         | SELECT u, u FROM edges
-         | UNION
-         | SELECT e.u, w.label FROM edges e JOIN walk w ON w.node = e.v),
-         |comp AS (SELECT node, min(label) AS rep FROM walk GROUP BY node),
+         |${OracleSql.componentsSql("e0", "u", "v")},
          |lab AS (SELECT coalesce(c.rep, d.cell) AS cluster, d.x
          | FROM dn d LEFT JOIN comp c ON c.node = d.cell)
          |SELECT CAST(cluster AS BIGINT) AS cluster,
@@ -3070,21 +2753,14 @@ object QueryCatalog {
     },
 
     "raster_minmax" ->
-      s"""WITH grid AS ($sqlTileGrid),
-         |px AS (
-         | SELECT b.b AS band,
-         |  CAST(CAST((b.b * 7 + (row_off + y.y) * 13 + (col_off + x.x)) % 256 AS REAL) / CAST(850 AS REAL) AS REAL) AS v
-         | FROM grid, range(0, 128) y(y), range(0, 128) x(x), range(1, 5) b(b))
+      s"""WITH ${OracleSql.luxPixelsSql(4, "REAL")}
          |SELECT band::INT AS band,
          | CAST(FLOOR(min(v)::DOUBLE * 1000000.0) AS BIGINT) AS min_fp,
          | CAST(FLOOR(max(v)::DOUBLE * 1000000.0) AS BIGINT) AS max_fp,
          | count(*) AS n_px
          |FROM px GROUP BY 1""".stripMargin,
 
-    "streaming_counts" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-        | CAST(FLOOR(sum(value)*1000000.0) AS BIGINT) AS sum_value_fp
-        |FROM events GROUP BY 1, 2""".stripMargin,
+    "streaming_counts" -> hourlyEventsSql,
 
     "streaming_dedup" ->
       "SELECT md5(text) AS text_hash, min(doc_id) AS keeper_id FROM documents GROUP BY 1",
@@ -3117,14 +2793,9 @@ object QueryCatalog {
          |FROM px GROUP BY 2, 3 HAVING max(v) >= 13""".stripMargin,
 
     "rescale_values" ->
-      s"""WITH grid AS ($sqlTileGrid),
-         |px AS (
-         | SELECT i, j, b.b AS band,
-         |  CAST(CAST((b.b * 7 + (row_off + y.y) * 13 + (col_off + x.x)) % 256 AS REAL) / CAST(850 AS REAL) AS DOUBLE) AS v
-         | FROM grid, range(0, 128) y(y), range(0, 128) x(x), range(1, 5) b(b))
+      s"""WITH ${OracleSql.luxPixelsSql(4, "DOUBLE")}
          |SELECT i, j, band::INT AS band,
-         | CAST(SUM(CAST(trunc(((CASE WHEN v < 0.05 THEN 0.05 WHEN v > 0.25 THEN 0.25 ELSE v END) - 0.05)
-         |   / (0.25 - 0.05) * 254.0 + 1.0) AS BIGINT)) AS BIGINT) AS sum_u8
+         | CAST(SUM(${OracleSql.u8Sql("0.05", "0.25")}) AS BIGINT) AS sum_u8
          |FROM px GROUP BY 1, 2, 3""".stripMargin,
 
     // numpy-linear percentile = order statistics rn=floor(pos) and
@@ -3132,55 +2803,16 @@ object QueryCatalog {
     // pos = (16384 − 1)·q/100 a literal (fixed 128² chips); identical
     // double trees on both sides ahead of the uint8 truncation
     "rescale_percentiles" ->
-      s"""WITH grid AS ($sqlTileGrid),
-         |px AS (
-         | SELECT i, j, b.b AS band,
-         |  CAST(CAST((b.b * 7 + (row_off + y.y) * 13 + (col_off + x.x)) % 256 AS REAL) / CAST(850 AS REAL) AS DOUBLE) AS v
-         | FROM grid, range(0, 128) y(y), range(0, 128) x(x), range(1, 5) b(b)),
-         |ranked AS (
-         | SELECT i, j, band, v,
-         |  row_number() OVER (PARTITION BY i, j, band ORDER BY v) - 1 AS rn
-         | FROM px),
-         |rng AS (
-         | SELECT i, j, band,
-         |  MAX(CASE WHEN rn = 327 THEN v END) + (MAX(CASE WHEN rn = 328 THEN v END) - MAX(CASE WHEN rn = 327 THEN v END)) * (16383 * 2.0 / 100.0 - 327) AS lo,
-         |  MAX(CASE WHEN rn = 16055 THEN v END) + (MAX(CASE WHEN rn = 16056 THEN v END) - MAX(CASE WHEN rn = 16055 THEN v END)) * (16383 * 98.0 / 100.0 - 16055) AS hi
-         | FROM ranked GROUP BY 1, 2, 3)
-         |SELECT p.i, p.j, p.band::INT AS band,
-         | CAST(SUM(CAST(trunc(((CASE WHEN v < lo THEN lo WHEN v > hi THEN hi ELSE v END) - lo) / (hi - lo) * 254.0 + 1.0) AS BIGINT)) AS BIGINT) AS sum_u8
-         |FROM px p JOIN rng USING (i, j, band)
-         |GROUP BY 1, 2, 3""".stripMargin,
+      OracleSql.percentileRescaleSql(OracleSql.percentileSql(2), OracleSql.percentileSql(98)),
 
     // same order statistics, but bands 1–3 get the forced (0, 0.3) window
     // (utils.py:122-127); only band 4 keeps the (2,98) percentile lerp
-    "rescale_s2_rgb_extra" ->
-      s"""WITH grid AS ($sqlTileGrid),
-         |px AS (
-         | SELECT i, j, b.b AS band,
-         |  CAST(CAST((b.b * 7 + (row_off + y.y) * 13 + (col_off + x.x)) % 256 AS REAL) / CAST(850 AS REAL) AS DOUBLE) AS v
-         | FROM grid, range(0, 128) y(y), range(0, 128) x(x), range(1, 5) b(b)),
-         |ranked AS (
-         | SELECT i, j, band, v,
-         |  row_number() OVER (PARTITION BY i, j, band ORDER BY v) - 1 AS rn
-         | FROM px),
-         |rng AS (
-         | SELECT i, j, band,
-         |  CASE WHEN band <= 3 THEN 0.0 ELSE
-         |   MAX(CASE WHEN rn = 327 THEN v END) + (MAX(CASE WHEN rn = 328 THEN v END) - MAX(CASE WHEN rn = 327 THEN v END)) * (16383 * 2.0 / 100.0 - 327) END AS lo,
-         |  CASE WHEN band <= 3 THEN 0.3 ELSE
-         |   MAX(CASE WHEN rn = 16055 THEN v END) + (MAX(CASE WHEN rn = 16056 THEN v END) - MAX(CASE WHEN rn = 16055 THEN v END)) * (16383 * 98.0 / 100.0 - 16055) END AS hi
-         | FROM ranked GROUP BY 1, 2, 3)
-         |SELECT p.i, p.j, p.band::INT AS band,
-         | CAST(SUM(CAST(trunc(((CASE WHEN v < lo THEN lo WHEN v > hi THEN hi ELSE v END) - lo) / (hi - lo) * 254.0 + 1.0) AS BIGINT)) AS BIGINT) AS sum_u8
-         |FROM px p JOIN rng USING (i, j, band)
-         |GROUP BY 1, 2, 3""".stripMargin,
+    "rescale_s2_rgb_extra" -> OracleSql.percentileRescaleSql(
+      s"CASE WHEN band <= 3 THEN 0.0 ELSE ${OracleSql.percentileSql(2)} END",
+      s"CASE WHEN band <= 3 THEN 0.3 ELSE ${OracleSql.percentileSql(98)} END"),
 
     "scale_minmax" ->
-      s"""WITH grid AS ($sqlTileGrid),
-         |px AS (
-         | SELECT i, j, b.b AS band,
-         |  CAST(CAST((b.b * 7 + (row_off + y.y) * 13 + (col_off + x.x)) % 256 AS REAL) / CAST(850 AS REAL) AS REAL) AS v
-         | FROM grid, range(0, 128) y(y), range(0, 128) x(x), range(1, 5) b(b)),
+      s"""WITH ${OracleSql.luxPixelsSql(4, "REAL")},
          |st AS (SELECT band, min(v)::DOUBLE AS mn, max(v)::DOUBLE AS mx FROM px GROUP BY 1)
          |SELECT p.i, p.j, p.band::INT AS band,
          | CAST(FLOOR(SUM(CAST(CAST((v::DOUBLE - mn) / (mx - mn) AS REAL) AS DOUBLE)) * 100.0) AS BIGINT) AS sum_fp
@@ -3204,51 +2836,18 @@ object QueryCatalog {
        | SELECT DISTINCT doc_id, th, array_to_string(toks[i:i + ${w - 1}], ' ') AS sh
        | FROM shidx)""".stripMargin
 
-  private def sqlMinhashFromSh: String = {
-    val mins = (0 until 8).map(i =>
-      s"min(${h60sql(s"'$i:' || sh")}) AS mh_$i").mkString(", ")
-    s"SELECT doc_id, $mins FROM sh GROUP BY doc_id"
-  }
-
-  // variant carrying th for the band-key DF cap (th is 1:1 with doc_id)
-  private def sqlMinhashFromShTh: String = {
-    val mins = (0 until 8).map(i =>
-      s"min(${h60sql(s"'$i:' || sh")}) AS mh_$i").mkString(", ")
-    s"SELECT doc_id, th, $mins FROM sh GROUP BY doc_id, th"
-  }
-
-  private def sqlMinhashSig: String =
-    s"WITH ${sqlShingleCte(3)} $sqlMinhashFromSh"
-
   /** Full simhash near-dup pair oracle (also the edge source for the
     * `dedup_clusters` recursive-CTE closure). */
   private def sqlSimhashPairs: String =
-    s"""WITH tok AS (
-       | SELECT DISTINCT doc_id, md5(text) AS th, unnest(string_split(text, ' ')) AS tok FROM documents
-       |), h AS (SELECT doc_id, th, ${h60sql("tok")} AS h FROM tok),
-       |bits AS (
-       | SELECT doc_id, th, b.b AS b, SUM(((h >> b.b) & 1) * 2 - 1) AS s
-       | FROM h, range(0, 60) b(b) GROUP BY 1, 2, 3),
-       |sig AS (
-       | SELECT doc_id, th, SUM(CASE WHEN s > 0 THEN (1::BIGINT << b) ELSE 0 END)::BIGINT AS simhash
-       | FROM bits GROUP BY 1, 2),
-       |blocks AS (
-       | SELECT doc_id, th, simhash, q.q AS q, (simhash >> (q.q * 15)) & 32767 AS qk
-       | FROM sig, range(0, 4) q(q)),
-       |hot AS (
-       | SELECT q, qk FROM (
-       |  SELECT q, qk, count(DISTINCT th) AS df FROM blocks GROUP BY 1, 2)
-       | WHERE df > ${Dedup.QuarterDfCap}),
-       |blk AS (
-       | SELECT b.doc_id, b.simhash, b.q, b.qk
-       | FROM blocks b ANTI JOIN hot h ON b.q = h.q AND b.qk = h.qk),
-       |cand AS (
-       | SELECT DISTINCT x.doc_id AS doc_a, x.simhash AS sim_a,
-       |   y.doc_id AS doc_b, y.simhash AS sim_b
-       | FROM blk x JOIN blk y
-       |  ON x.q = y.q AND x.qk = y.qk AND x.doc_id < y.doc_id)
-       |SELECT doc_a, doc_b, bit_count(xor(sim_a, sim_b))::INT AS hamming
-       |FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= 12""".stripMargin
+    s"""WITH ${OracleSql.simhashSql(withTh = true)},
+       |${OracleSql.quarterPairsSql("sig", "th", Dedup.QuarterDfCap, 12)}""".stripMargin
+
+  /** CTEs `pts` (each doc's res-`res` cell indices) and `h`(xi, yi, x):
+    * the documents per occupied cell. */
+  private def cellCountsSql(res: Int): String =
+    s"""pts AS (SELECT ${sqlXIndex(sqlLon, res)} AS xi,
+       |   ${sqlYIndex(sqlLat, res)} AS yi FROM documents),
+       |h AS (SELECT xi, yi, count(*) AS x FROM pts GROUP BY 1, 2)""".stripMargin
 
   private def sqlCosine =
     "round(list_dot_product(v.e, q.qe) / sqrt(list_dot_product(v.e, v.e)) / sqrt(list_dot_product(q.qe, q.qe)), 6)"

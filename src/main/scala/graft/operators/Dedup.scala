@@ -53,10 +53,6 @@ object Dedup {
     * shuffles the collapse costs. */
   val CollapsePairsPerDoc = 4.0
 
-  /** Engine-portable 60-bit hash: md5 → 15 hex chars → bigint. */
-  private def h60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
   private def toks(c: Column): Column = split(c, " ")
 
   /** Exact dedup: group by content hash, keep the smallest doc_id.
@@ -288,11 +284,17 @@ object Dedup {
 
   /** MinHash signatures: nHashes permutations approximated by salted md5;
     * minhash_i(doc) = min over shingles of h60(i || ':' || shingle). */
-  def minhashSignatures(docs: DataFrame, w: Int = 3, nHashes: Int = 8): DataFrame = {
-    val sh = shingleTableTh(docs, w) // shingle *sets* (distinct)
+  def minhashSignatures(docs: DataFrame, w: Int = 3, nHashes: Int = 8): DataFrame =
+    signatures(shingleTableTh(docs, w), Seq("doc_id"), nHashes)
+
+  /** The MinHash signature of each `keys` group of shingle rows (`sh`):
+    * mh_i = min of h60(i || ':' || sh), i < nHashes, then `extra`
+    * aggregates. */
+  private def signatures(sh: DataFrame, keys: Seq[String], nHashes: Int,
+                         extra: Seq[Column] = Nil): DataFrame = {
     val aggs = (0 until nHashes).map(i =>
-      min(h60(concat(lit(s"$i:"), col("sh")))).as(s"mh_$i"))
-    sh.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
+      min(TextOps.fingerprintCol(concat(lit(s"$i:"), col("sh")))).as(s"mh_$i")) ++ extra
+    sh.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
   /** MinHash LSH candidate pairs → verified Jaccard over shingle sets.
@@ -310,10 +312,8 @@ object Dedup {
       // doc's shingle-set size, so the verify stage reuses it instead of
       // re-scanning the shingle table for a separate count
       val sh3 = shingleTableTh(base, w)
-      val aggs = (0 until nHashes).map(i =>
-        min(h60(concat(lit(s"$i:"), col("sh")))).as(s"mh_$i")) :+
-        count(lit(1)).as("n_sh")
-      val sig = Owned.persist(sh3.groupBy("doc_id", "th").agg(aggs.head, aggs.tail: _*))
+      val sig = Owned.persist(signatures(sh3, Seq("doc_id", "th"), nHashes,
+        Seq(count(lit(1)).as("n_sh"))))
       // every band's rows in ONE pass over the signature, not a per-band union
       val bands = sig.select(col("doc_id").as("id"), col("th"),
           explode(array((0 until nHashes / rowsPerBand).map { b =>
@@ -516,7 +516,7 @@ object Dedup {
   private def simhashOf(docs: DataFrame): DataFrame = {
     val tok = docs.select(col("doc_id"), explode(toks(col("text"))).as("tok"))
       .distinct()
-      .withColumn("h", h60(col("tok")))
+      .withColumn("h", TextOps.fingerprintCol(col("tok")))
     val bitSums = (0 until 60).map(b =>
       sum(shiftright(col("h"), b).bitwiseAND(lit(1L)) * 2 - 1).as(s"s_$b"))
     val agg = tok.groupBy("doc_id").agg(bitSums.head, bitSums.tail: _*)
@@ -640,11 +640,11 @@ object Dedup {
   def crossCorpus(newDocs: DataFrame, prior: DataFrame,
       fpp: Double = 0.01): DataFrame = {
     val spark = newDocs.sparkSession
-    val nf = newDocs.select(col("doc_id"), h60(col("text")).as("fp"))
+    val nf = newDocs.select(col("doc_id"), TextOps.fingerprintCol(col("text")).as("fp"))
     // the prior fingerprints are read up to three times (count for
     // expectedNumItems, bloomFilter build, exact verify anti-join) —
     // persist so the prior corpus is scanned+hashed once, not per action
-    val pf = Owned.persist(prior.select(h60(col("text")).as("fp")))
+    val pf = Owned.persist(prior.select(TextOps.fingerprintCol(col("text")).as("fp")))
     // expectedNumItems from a cheap hash-only count; never collect the fps
     lazy val nPrior = math.max(pf.count(), 1L)
     // measured-small prior: broadcast anti-join, no Bloom build, no UDF

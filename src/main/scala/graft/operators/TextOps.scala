@@ -47,27 +47,43 @@ object TextOps {
       predicted.as("predicted_lang"): _*)
   }
 
+  /** Stopwords of the heuristic quality gate (and of the model scorer's
+    * weak labels). */
+  private val QualityStopwords = Seq("the", "and", "a", "of", "to", "in", "over")
+
+  /** The heuristic quality gate: at least 15 tokens, a mean of at least 2.0
+    * non-space chars per token, and stopwords on at least 1/20 of the
+    * tokens, over the columns n_chars, n_tokens, n_stopwords and n_spaces
+    * that [[qualitySignals]] names. */
+  private val qualityOk: Column =
+    col("n_tokens") >= 15 &&
+      (col("n_chars") - col("n_spaces")).cast("double") / col("n_tokens") >= 2.0 &&
+      col("n_stopwords") * 20 >= col("n_tokens")
+
+  /** The quality gate's per-doc signals over `text` and its tokens `toks`. */
+  private def qualitySignals(toks: Column): Seq[Column] = Seq(
+    length(col("text")).as("n_chars"),
+    size(toks).as("n_tokens"),
+    size(filter(toks, t => t.isin(QualityStopwords.map(lit(_)): _*))).as("n_stopwords"),
+    (length(col("text")) - length(regexp_replace(col("text"), " ", ""))).as("n_spaces"))
+
   /** Quality scoring: length, mean token length, stopword ratio,
     * all-caps/punct ratios — the standard webtext quality heuristics,
     * integer/rational outputs for cross-engine determinism. */
   def qualityScore(docs: DataFrame): DataFrame = {
     val toks = tokens(col("text"))
-    val stop = Seq("the", "and", "a", "of", "to", "in", "over")
-    docs.select(col("doc_id"),
-      length(col("text")).as("n_chars"),
-      size(toks).as("n_tokens"),
-      size(filter(toks, t => t.isin(stop.map(lit(_)): _*))).as("n_stopwords"),
-      size(filter(toks, t => length(t) <= lit(2))).as("n_short_tokens"),
-      (length(col("text")) - length(regexp_replace(col("text"), " ", ""))).as("n_spaces"))
+    val Seq(nChars, nTokens, nStopwords, nSpaces) = qualitySignals(toks)
+    docs.select(col("doc_id"), nChars, nTokens, nStopwords,
+        size(filter(toks, t => length(t) <= lit(2))).as("n_short_tokens"), nSpaces)
       .withColumn("mean_token_len",
         (col("n_chars") - col("n_spaces")).cast("double") / col("n_tokens"))
-      .withColumn("quality_ok",
-        col("n_tokens") >= 15 && col("mean_token_len") >= 2.0 &&
-          col("n_stopwords") * 20 >= col("n_tokens"))
+      .withColumn("quality_ok", qualityOk)
   }
 
   /** 64-bit-ish document fingerprint: md5 → first 15 hex chars → bigint.
-    * Identical in any engine with a standard md5. */
+    * Identical in any engine with a standard md5. The engine's one Column
+    * form of it ([[h60Jvm]] is the JVM form, `OracleSql.h60` the SQL one;
+    * TextOpsSpec guards that no other copy appears). */
   def fingerprintCol(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
@@ -379,13 +395,22 @@ object TextOps {
     * caps exist to prevent. The two forms are output-identical (keeper =
     * min (doc_id, chunk_idx) either way; pinned by PipelineOpsSpec and
     * the oracle). */
-  def chunkDedup(docs: DataFrame, chunk: Int = 10): DataFrame = {
+  def chunkDedup(docs: DataFrame, chunk: Int = 10): DataFrame =
+    keepFirstChunks(docs)(_.grouped(chunk))
+
+  /** The corpus-global keep-first [[chunkDedup]] and [[cdcChunkDedup]]
+    * share: `chunker` cuts one document's tokens into its chunks in order,
+    * inside one typed flatMap; only (doc_id, chunk_idx, n_tok, h60) rows
+    * reach the keeper aggregation, whose keeper is the min (doc_id,
+    * chunk_idx) struct per hash. Output: (doc_id, n_chunks, n_dup_chunks,
+    * n_tokens_kept). */
+  private def keepFirstChunks(docs: DataFrame)(
+      chunker: Array[String] => Iterator[Array[String]]): DataFrame = {
     import docs.sparkSession.implicits._
     val chunks = docs.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
-        val t = text.split(" ", -1)
-        t.grouped(chunk).zipWithIndex.map { case (c, i) =>
+        chunker(text.split(" ", -1)).zipWithIndex.map { case (c, i) =>
           (id, i.toLong, c.length.toLong, c.mkString(" "))
         }
       }
@@ -418,47 +443,19 @@ object TextOps {
     * stateful scan).
     *
     * Scale shape: boundary detection and chunk assembly are per-doc local
-    * work inside one typed flatMap (zero shuffle); only (doc_id,
-    * chunk_idx, n_tok, h60) rows reach the keeper aggregation — the
-    * [[chunkDedup]] exchange discipline. Keep-first = min (doc_id,
-    * chunk_idx) struct per hash, hot-chunk safe (no window over the
-    * corpus). Output: (doc_id, n_chunks, n_dup_chunks, n_tokens_kept). */
-  def cdcChunkDedup(docs: DataFrame, mask: Long = 8L): DataFrame = {
-    import docs.sparkSession.implicits._
-    val chunks = docs.select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
-      .flatMap { case (id, text) =>
-        val t = text.split(" ", -1)
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, String)]
-        val cur = scala.collection.mutable.ArrayBuffer.empty[String]
-        var cidx = 0L
-        var j = 0
-        while (j < t.length) {
-          cur += t(j)
-          val flag = j >= 2 &&
-            h60Jvm(t(j - 2) + " " + t(j - 1) + " " + t(j)) % mask == 0
-          if (flag) {
-            out += ((id, cidx, cur.length.toLong, cur.mkString(" ")))
-            cur.clear()
-            cidx += 1
-          }
-          j += 1
-        }
-        if (cur.nonEmpty) out += ((id, cidx, cur.length.toLong, cur.mkString(" ")))
-        out.iterator
-      }
-      .toDF("doc_id", "chunk_idx", "n_tok", "chunk")
-      .select(col("doc_id"), col("chunk_idx"), col("n_tok"),
-        fingerprintCol(col("chunk")).as("h"))
-    val keepers = chunks.groupBy("h")
-      .agg(min(struct(col("doc_id"), col("chunk_idx"))).as("keeper"))
-    chunks.join(keepers, Seq("h"))
-      .withColumn("dup",
-        struct(col("doc_id"), col("chunk_idx")) =!= col("keeper"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_chunks"),
-        sum(when(col("dup"), 1L).otherwise(0L)).as("n_dup_chunks"),
-        sum(when(col("dup"), 0L).otherwise(col("n_tok"))).as("n_tokens_kept"))
+    * work, and keep-first is [[chunkDedup]]'s: both run through
+    * [[keepFirstChunks]]. Output: (doc_id, n_chunks, n_dup_chunks,
+    * n_tokens_kept). */
+  def cdcChunkDedup(docs: DataFrame, mask: Long = 8L): DataFrame =
+    keepFirstChunks(docs)(cdcChunks(_, mask))
+
+  /** The content-defined chunks of one document's tokens: a chunk ends
+    * after token j ≥ 2 iff h60 of tokens j-2..j is 0 mod `mask`. */
+  private def cdcChunks(t: Array[String], mask: Long): Iterator[Array[String]] = {
+    val ends = (2 until t.length).filter(j =>
+      h60Jvm(t(j - 2) + " " + t(j - 1) + " " + t(j)) % mask == 0).map(_ + 1)
+    val cuts = (0 +: ends :+ t.length).distinct
+    cuts.sliding(2).collect { case Seq(a, b) if b > a => t.slice(a, b) }
   }
 
   /** Corpus drift monitor: chi-square divergence of each source's hashed
@@ -773,10 +770,7 @@ object TextOps {
       .select("doc_id", "source", "bucket", "n_tokens")
   }
 
-  /** Stopword list shared by the heuristic quality score and the model
-    * scorer's weak labels. */
-  private val ModelStopwords: Set[String] =
-    Set("the", "and", "a", "of", "to", "in", "over")
+  private val ModelStopwords: Set[String] = QualityStopwords.toSet
 
   /** Integer weak label for [[modelQuality]] — the [[qualityScore]]
     * heuristic in exact integer form (mean_token_len ≥ 2.0 ⟺ non-space
@@ -1266,22 +1260,12 @@ object TextOps {
     * whole funnel is one map-side-combined groupBy whose shuffle carries
     * one partial row per (partition, domain). Thresholds are verbatim
     * [[qualityScore]]'s `quality_ok`. */
-  def domainStats(docs: DataFrame): DataFrame = {
-    val toks = tokens(col("text"))
-    val stop = Seq("the", "and", "a", "of", "to", "in", "over")
-    val base = docs.select(col("source"), col("lang"),
-      length(col("text")).as("n_chars"),
-      size(toks).as("n_tokens"),
-      size(filter(toks, t => t.isin(stop.map(lit(_)): _*))).as("n_stopwords"),
-      (length(col("text")) - length(regexp_replace(col("text"), " ", ""))).as("n_spaces"))
-      .withColumn("quality_ok",
-        col("n_tokens") >= 15 &&
-          (col("n_chars") - col("n_spaces")).cast("double") / col("n_tokens") >= 2.0 &&
-          col("n_stopwords") * 20 >= col("n_tokens"))
-    base.groupBy("source")
+  def domainStats(docs: DataFrame): DataFrame =
+    docs.select(col("source") +: col("lang") +: qualitySignals(tokens(col("text"))): _*)
+      .withColumn("quality_ok", qualityOk)
+      .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum("n_tokens").as("sum_tokens"),
         sum(when(col("quality_ok"), 1L).otherwise(0L)).as("n_pass"),
         countDistinct("lang").as("n_langs"))
-  }
 }

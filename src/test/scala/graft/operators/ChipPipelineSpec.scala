@@ -62,14 +62,16 @@ class ChipPipelineSpec extends AnyFunSuite {
   test("whole-raster mask, classes=[A]: 1 extent mask (test_make_masks.py:15-30)") {
     // make_masks = extract on the full-extent single window (S3)
     val meta = Fixtures.luxMeta()
-    // full-extent single tile: synthesize directly
+    // full-extent single tile: synthesized inside its one task (as a local
+    // relation its 1.6 MB of pixels would ship with the task)
     import spark.implicits._
-    val full = spark.createDataset(Seq(graft.sources.Model.Tile(
-      "lux1", 0, 0, 0, 0, meta.width, meta.height,
-      Array.tabulate(meta.bands) { bi =>
-        Array.tabulate(meta.width * meta.height)(k =>
-          Fixtures.luxValue(bi + 1, k / meta.width, k % meta.width))
-      })))
+    val (w, h, nBands) = (meta.width, meta.height, meta.bands)
+    val full = spark.range(0, 1, 1, 1).map { _ =>
+      graft.sources.Model.Tile("lux1", 0, 0, 0, 0, w, h,
+        Array.tabulate(nBands) { bi =>
+          Array.tabulate(w * h)(k => Fixtures.luxValue(bi + 1, k / w, k % w))
+        })
+    }
     val labels = Fixtures.labelGeoms().map { case (g, c) => (Geom.toWkb(g), c) }
     val chips = extractChips(spark, full, meta, labels = Some(labels),
       cfg = ChipConfig(bands = Some(Seq(1, 2, 3, 4)), classes = Some(Seq("A"))))

@@ -81,10 +81,13 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterEach {
       val base = (0 until 25).map(t => s"w${(i * 7 + t) % 40}").mkString(" ")
       (i, if (i % 3 == 0) "s1 s2 s3 s4 s5 s6 s7 s8 s9 s10 " + base else base)
     }.toDF("doc_id", "text")
-    def run(parts: Int) =
-      TextOps.chunkDedup(docs.repartition(parts), chunk = 10)
-        .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    assert(run(2) == run(13))
+    // both chunkers share one keep-first operator
+    Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+        TextOps.chunkDedup(_, chunk = 10), TextOps.cdcChunkDedup(_)).foreach { op =>
+      def run(parts: Int) =
+        op(docs.repartition(parts)).orderBy("doc_id").collect().map(_.toSeq).toSeq
+      assert(run(2) == run(13))
+    }
   }
 
   test("stratifiedSample: rate 1 keeps every row, rate 0 keeps none, selection is stable") {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, concat, lit}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.attribute.FileTime
 import java.nio.file.{Files, Path, Paths}
@@ -38,7 +39,6 @@ class StateStoreSpec extends AnyFunSuite {
   }
 
   test("rocksdb carries dedup state across micro-batches (20k keys, 3 batches); restart emits nothing") {
-    import spark.implicits._
     val tmp = Files.createTempDirectory("graft-rocksdb").toString
     val in = Files.createDirectories(Paths.get(tmp, "in"))
     // 20,000 distinct texts, REPEATED in each of 3 files under ever-higher
@@ -47,9 +47,12 @@ class StateStoreSpec extends AnyFunSuite {
     // total) — only state carried between batches yields 20k keepers, all
     // from the first file.
     val base = System.currentTimeMillis() / 1000 - 100
+    // rows are built inside the tasks (a 20k-row local relation would
+    // ship ~1 MB with every task)
     (0 until 3).foreach { part =>
-      val docs = (0 until 20000).map(k => (part * 100000L + k, s"doc text $k"))
-        .toDF("doc_id", "text")
+      val docs = spark.range(20000).select(
+        (col("id") + part * 100000L).as("doc_id"),
+        concat(lit("doc text "), col("id").cast("string")).as("text"))
       writeOneFile(docs, in.resolve(s"d$part.parquet"), base + part * 10)
     }
     Streaming.dedupStream(spark, in.toString, s"$tmp/ckpt", s"$tmp/out",

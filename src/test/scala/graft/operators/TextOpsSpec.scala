@@ -9,6 +9,25 @@ import org.scalatest.funsuite.AnyFunSuite
 class TextOpsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.get
 
+  test("the 60-bit md5 fingerprint is written once per side in src/main") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // one Column form (TextOps.fingerprintCol) and one SQL form
+    // (OracleSql.h60): every other engine or oracle site calls them
+    val owner = raw"\bdef\s+(\w+)".r
+    val sites = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { p =>
+        val lines = Files.readAllLines(p).asScala.toSeq
+        lines.indices.filter(lines(_).contains("substring(md5(")).map { i =>
+          val d = lines.take(i + 1).reverse.flatMap(owner.findFirstMatchIn(_)).headOption
+          s"${p.getFileName}:${d.fold("?")(_.group(1))}:${i + 1}"
+        }
+      }
+    assert(sites.map(_.split(":").take(2).mkString(":")).sorted ==
+      Seq("OracleSql.scala:h60", "TextOps.scala:fingerprintCol"), sites.mkString("\n"))
+  }
+
   test("canonicalizeUrl: case, default port, fragment, tracking params, param order") {
     assert(TextOps.canonicalizeUrl("HTTPS://WWW.Example.COM:443/a/b?utm_source=x&z=1&a=2#frag")
       == "https://www.example.com/a/b?a=2&z=1")
